@@ -397,12 +397,14 @@ def merge_upsert(
             )
             .collect()
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # writer-scoped dynamic overwrite: the session conf stays untouched,
+        # so concurrent writers on the same session never see the flip
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_by)
+            .parquet(path)
+        )
         if emptied:
             fs, _ = _hadoop_fs(spark, path)
             jvm_path = spark._jvm.org.apache.hadoop.fs.Path

@@ -8,9 +8,9 @@ Per incoming batch of documents:
    corpus CONTENT-HASH index (text/incremental.py::incremental_exact_dedup)
    — corpus text is never re-read, the join key is a 32-byte md5;
 2. **within-batch near-dup**: MinHash-LSH band pairs among the batch's
-   survivors → connected components → min-id droplist
-   (text/dedup.py::minhash_near_dup_pairs + text/clusters.py::
-   near_dup_droplist);
+   survivors → connected components → every component member but the
+   minimum id drops (text/dedup.py::pairs_from_cells +
+   text/clusters.py::connected_components);
 3. **cross-corpus near-dup**: any LSH band landing in an occupied corpus
    cell flags the doc (text/incremental.py::incremental_near_dup_flags);
    ``policy='drop'`` removes flagged docs, ``policy='flag'`` keeps them
@@ -19,6 +19,24 @@ Per incoming batch of documents:
    (io.py::merge_upsert — idempotent on micro-batch replay), and the two
    compact indices (hashes; (band, bucket) cells) extend by the survivors
    only.
+
+Stage shape of one :func:`ingest_batch`: each stage is materialized once,
+as a named ``stage_barrier`` pin, and every later stage reads the pin:
+
+- ``ingest-exact``: the step-1 survivors (full rows, batch-bounded);
+- ``ingest-cells``: their (id, band, bucket) LSH cells — the ONE signature
+  pass; steps 2 and 3 and the bucket-index append all read it;
+- ``cc-edges0``: the within-batch pair graph, which a batch-sized graph
+  collects and labels on the driver (text/clusters.py);
+- ``ingest-survivors``: the accepted rows, read by the corpus upsert and
+  both index appends.
+
+The two index tables are read with declared schemas, so neither read runs
+a parquet footer-inference job. Measured on the ``incremental_ingest``
+benchmark (500 documents in two batches, local[4]): 20.5 Spark jobs per
+batch (16 for the batch that builds the state, 25 for one that merges into
+it), down from 37.5 when each stage re-ran its upstream shuffles and the
+pair graph went through the distributed CC loop.
 
 State layout under ``base_dir``: ``corpus/`` (full rows), ``hash_index/``
 (one md5 per doc ever accepted), ``bucket_index/`` (distinct LSH cells).
@@ -40,10 +58,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.io import merge_upsert, path_exists
-from pharmacodi_spark.text.clusters import near_dup_droplist
+from pharmacodi_spark.text.clusters import connected_components
 from pharmacodi_spark.text.dedup import (
     band_cells,
+    exact_dedup,
     minhash_signatures,
     pairs_from_cells,
 )
@@ -55,6 +75,86 @@ from pharmacodi_spark.text.incremental import (
 )
 
 _LSH = dict(num_hashes=16, bands=4, shingle_len=5)
+
+# the two engine-owned index tables: read with their declared schemas, so
+# no scan pays a parquet footer-inference job (the corpus table is NOT
+# read this way: its columns are the caller's)
+_HASH_SCHEMA = "h STRING"
+_BUCKET_SCHEMA = "band INT, bucket BIGINT"
+
+
+def _dedup_stages(
+    new: DataFrame,
+    corpus_hashes: DataFrame | None,
+    corpus_buckets: DataFrame | None,
+    content_col: str,
+    id_col: str,
+    policy: str,
+    max_cell_size: int | None = None,
+    **lsh,
+) -> tuple[DataFrame, DataFrame]:
+    """Steps 1-3 of :func:`dedup_batch`, plus the pinned (id, band, bucket)
+    cells of the exact survivors — a superset of the accepted rows' cells,
+    which :func:`ingest_batch` semi-joins into its bucket-index append."""
+    if policy not in ("drop", "flag"):
+        raise ValueError(f"policy must be 'drop' or 'flag', got {policy!r}")
+    lsh = {**_LSH, **lsh}
+
+    # 1. exact, within batch then vs corpus index. Pinned: the signature
+    # pass and the step-2/3 anti-joins all read it, and unpinned each
+    # re-ran the keeper-window shuffle (one of them hidden in
+    # spread_small_scan's partition-count peek, which executes upstream
+    # shuffle stages under AQE)
+    if corpus_hashes is not None:
+        survivors = incremental_exact_dedup(new, corpus_hashes, content_col, id_col)
+    else:
+        survivors = exact_dedup(new, content_col, id_col)
+    survivors = stage_barrier(survivors, name="ingest-exact")
+
+    # ONE signature pass feeds both LSH stages: the shingle+hash subplan is
+    # the expensive term, and steps 2 and 3 otherwise each re-run it.
+    # Pinned cells are bounded: |batch| × bands rows of (id, 2 longs).
+    sig = minhash_signatures(
+        survivors, content_col, id_col, lsh["num_hashes"], lsh["shingle_len"]
+    )
+    cells = stage_barrier(
+        band_cells(sig, id_col, lsh["num_hashes"], lsh["bands"]),
+        name="ingest-cells",
+    )
+
+    # 2. within-batch near-dup: pairs → components → min-id keeper. The
+    # dropped ids are the non-minimum members of each component; ids with
+    # no pair are singletons and keep themselves.
+    pairs = pairs_from_cells(cells, id_col, max_cell_size)
+    comp = connected_components(pairs, edges_canonical=True)
+    dropped = comp.where(F.col("node") != F.col("component"))
+    survivors = survivors.join(
+        dropped.select(F.col("node").alias(id_col)), id_col, "left_anti"
+    )
+
+    # 3. cross-corpus near-dup candidates: a doc is one iff any of its
+    # cells is occupied in the corpus; the cells of every survivor are in
+    # ``cells`` (signatures depend only on text). The hit ids are at most
+    # one batch: broadcast them rather than shuffle both sides.
+    if corpus_buckets is None:
+        if policy == "flag":
+            survivors = survivors.withColumn("near_dup_candidate", F.lit(False))
+    elif policy == "drop":
+        hits = cells.join(corpus_buckets, ["band", "bucket"], "left_semi")
+        survivors = survivors.join(
+            F.broadcast(hits.select(id_col)), id_col, "left_anti"
+        )
+    else:
+        flags = incremental_near_dup_flags(
+            survivors,
+            corpus_buckets,
+            content_col,
+            id_col,
+            cells=cells.join(survivors.select(id_col), id_col, "left_semi"),
+            **lsh,
+        )
+        survivors = survivors.join(flags, id_col, "left")
+    return survivors, cells
 
 
 def dedup_batch(
@@ -68,65 +168,16 @@ def dedup_batch(
     **lsh,
 ) -> DataFrame:
     """Steps 1-3: the batch's accepted rows (plus ``near_dup_candidate``
-    under ``policy='flag'``). Pure transform — no state I/O.
+    under ``policy='flag'``). No state I/O; pins two batch-bounded stages
+    (exact survivors, LSH cells) on the way.
 
     ``max_cell_size`` arms the exact hot-bucket skew guard on the
     within-batch pair expansion (text/dedup.py::pairs_from_cells) — same
     accepted set, bounded per-task work when one LSH bucket is degenerate."""
-    if policy not in ("drop", "flag"):
-        raise ValueError(f"policy must be 'drop' or 'flag', got {policy!r}")
-    lsh = {**_LSH, **lsh}
-
-    # 1. exact, within batch then vs corpus index
-    if corpus_hashes is not None:
-        survivors = incremental_exact_dedup(new, corpus_hashes, content_col, id_col)
-    else:
-        from pharmacodi_spark.text.dedup import exact_dedup
-
-        survivors = exact_dedup(new, content_col, id_col)
-
-    # ONE signature pass feeds both LSH stages: the shingle+hash subplan is
-    # the expensive term, and steps 2 and 3 otherwise each re-run it.
-    # Checkpointed cells are bounded: |batch| × bands rows of (id, 2 longs);
-    # step 3's cells are step 2's survivors' cells (signatures depend only
-    # on text), so a semi-join replaces a second derivation.
-    sig = minhash_signatures(
-        survivors, content_col, id_col, lsh["num_hashes"], lsh["shingle_len"]
-    )
-    cells = band_cells(
-        sig, id_col, lsh["num_hashes"], lsh["bands"]
-    ).localCheckpoint()
-
-    # 2. within-batch near-dup: pairs → components → min-id keeper
-    pairs = pairs_from_cells(cells, id_col, max_cell_size)
-    keep = near_dup_droplist(
-        survivors.select(id_col), pairs, id_col=id_col, edges_canonical=True
-    )
-    survivors = survivors.join(
-        keep.where(F.col("keep")).select(id_col), id_col, "left_semi"
-    )
-
-    # 3. cross-corpus near-dup candidates
-    if corpus_buckets is not None:
-        flags = incremental_near_dup_flags(
-            survivors,
-            corpus_buckets,
-            content_col,
-            id_col,
-            cells=cells.join(survivors.select(id_col), id_col, "left_semi"),
-            **lsh,
-        )
-        if policy == "drop":
-            survivors = survivors.join(
-                flags.where(~F.col("near_dup_candidate")).select(id_col),
-                id_col,
-                "left_semi",
-            )
-        else:
-            survivors = survivors.join(flags, id_col, "left")
-    elif policy == "flag":
-        survivors = survivors.withColumn("near_dup_candidate", F.lit(False))
-    return survivors
+    return _dedup_stages(
+        new, corpus_hashes, corpus_buckets, content_col, id_col, policy,
+        max_cell_size, **lsh,
+    )[0]
 
 
 def _state_paths(base_dir: str) -> tuple[str, str, str]:
@@ -151,18 +202,25 @@ def ingest_batch(
     index appends anti-join the current index first."""
     corpus_path, hash_path, bucket_path = _state_paths(base_dir)
     have_corpus = path_exists(spark, corpus_path)
-    hashes = spark.read.parquet(hash_path) if have_corpus else None
-    buckets = spark.read.parquet(bucket_path) if have_corpus else None
+    hashes = buckets = None
+    if have_corpus:
+        hashes = spark.read.schema(_HASH_SCHEMA).parquet(hash_path)
+        buckets = spark.read.schema(_BUCKET_SCHEMA).parquet(bucket_path)
 
-    survivors = dedup_batch(
+    survivors, cells = _dedup_stages(
         new, hashes, buckets, content_col, id_col, policy="drop", **lsh
     )
     # three consumers (corpus write + two index writes): materialize once,
     # bounded by batch size
-    survivors = survivors.localCheckpoint()
+    survivors = stage_barrier(survivors, name="ingest-survivors")
 
     new_hashes = content_hashes(survivors, content_col, id_col)
-    new_cells = band_buckets(survivors, content_col, id_col, **lsh)
+    # the survivors' cells are already pinned: no second signature pass
+    new_cells = (
+        cells.join(F.broadcast(survivors.select(id_col)), id_col, "left_semi")
+        .select("band", "bucket")
+        .distinct()
+    )
     if have_corpus:
         merge_upsert(spark, corpus_path, survivors, [id_col])
         # replay-safe compact indices: only genuinely new entries append
@@ -241,7 +299,7 @@ def reprocess_snapshot(
 
     corpus = spark.read.parquet(corpus_path)
     diff = corpus_diff(corpus, new_snapshot, content_col, id_col)
-    diff = diff.localCheckpoint()  # consumed 3x; id+status only
+    diff = stage_barrier(diff, name="reprocess-diff")  # consumed 3x; id+status only
     counts = {
         r["status"]: r["n"]
         for r in diff.groupBy("status").agg(F.count("*").alias("n")).collect()
@@ -271,13 +329,15 @@ def _retire_ids(
     """Drop ``ids`` from the corpus table and REBUILD both compact indices
     from the survivors (hashes / LSH cells can be shared across documents,
     so per-row index deletion would corrupt dedup state). The survivor
-    frame is ``localCheckpoint``-pinned because Spark cannot overwrite
+    frame is ``stage_barrier``-pinned because Spark cannot overwrite
     files still feeding the running plan; the rewrite shuffles ids/hashes,
     never bodies (at cluster scale the corpus table is partitioned and the
     rewrite prunes to touched partitions)."""
     corpus_path, hash_path, bucket_path = _state_paths(base_dir)
     corpus = spark.read.parquet(corpus_path)
-    survivors = corpus.join(ids.select(id_col), id_col, "left_anti").localCheckpoint()
+    survivors = stage_barrier(
+        corpus.join(ids.select(id_col), id_col, "left_anti"), name="retire-survivors"
+    )
     survivors.write.mode("overwrite").parquet(corpus_path)
     content_hashes(survivors, content_col, id_col).write.mode(
         "overwrite"
@@ -332,10 +392,12 @@ def reprocess_stream_batch(
     seen_path, quarantine_path = _run_paths(run_dir)
 
     corpus = spark.read.parquet(corpus_path)
-    diff = (
-        corpus_diff(corpus, batch, content_col, id_col)
-        .where(F.col("status") != "removed")
-        .localCheckpoint()  # consumed 3x; id+status only, shard-bounded
+    # consumed 3x; id+status only, shard-bounded
+    diff = stage_barrier(
+        corpus_diff(corpus, batch, content_col, id_col).where(
+            F.col("status") != "removed"
+        ),
+        name="shard-diff",
     )
     counts = {
         r["status"]: r["n"]
@@ -353,13 +415,17 @@ def reprocess_stream_batch(
         )
 
     if counts.get("added", 0) or counts.get("changed", 0):
-        todo = batch.join(
-            diff.where(F.col("status").isin("added", "changed")).select(id_col),
-            id_col,
-        ).localCheckpoint()  # read against pre- and post-ingest state below
+        # read against pre- and post-ingest state below
+        todo = stage_barrier(
+            batch.join(
+                diff.where(F.col("status").isin("added", "changed")).select(id_col),
+                id_col,
+            ),
+            name="shard-todo",
+        )
         # corpus-collision split against the POST-retirement indices
-        hashes = spark.read.parquet(hash_path)
-        buckets = spark.read.parquet(bucket_path)
+        hashes = spark.read.schema(_HASH_SCHEMA).parquet(hash_path)
+        buckets = spark.read.schema(_BUCKET_SCHEMA).parquet(bucket_path)
         exact_hit = (
             todo.select(id_col, F.md5(F.col(content_col)).alias("h"))
             .join(hashes, "h", "left_semi")
@@ -370,7 +436,9 @@ def reprocess_stream_batch(
             .where(F.col("near_dup_candidate"))
             .select(id_col)
         )
-        colliders = exact_hit.unionByName(near_hit).distinct().localCheckpoint()
+        colliders = stage_barrier(
+            exact_hit.unionByName(near_hit).distinct(), name="shard-colliders"
+        )
         quarantine = todo.join(colliders, id_col, "left_semi")
         clean = todo.join(colliders, id_col, "left_anti")
         if not quarantine.isEmpty():
@@ -384,9 +452,9 @@ def reprocess_stream_batch(
     ids = batch.select(id_col).distinct()
     if path_exists(spark, seen_path):
         seen = spark.read.parquet(seen_path)
-        ids.join(seen, id_col, "left_anti").localCheckpoint().write.mode(
-            "append"
-        ).parquet(seen_path)
+        stage_barrier(
+            ids.join(seen, id_col, "left_anti"), name="shard-seen"
+        ).write.mode("append").parquet(seen_path)
     else:
         ids.write.parquet(seen_path)
 
@@ -460,8 +528,9 @@ def finalize_reprocess(
 
     corpus = spark.read.parquet(corpus_path)
     seen = spark.read.parquet(seen_path)
-    removed = (
-        corpus.select(id_col).join(seen, id_col, "left_anti").localCheckpoint()
+    removed = stage_barrier(
+        corpus.select(id_col).join(seen, id_col, "left_anti"),
+        name="finalize-removed",
     )
     n_removed = removed.count()
     if n_removed:
@@ -469,7 +538,9 @@ def finalize_reprocess(
 
     n_requeued = 0
     if path_exists(spark, quarantine_path):
-        quarantine = spark.read.parquet(quarantine_path).localCheckpoint()
+        quarantine = stage_barrier(
+            spark.read.parquet(quarantine_path), name="finalize-quarantine"
+        )
         n_requeued = quarantine.count()
         if n_requeued:
             ingest_batch(spark, base_dir, quarantine, content_col, id_col, **lsh)

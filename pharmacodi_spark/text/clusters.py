@@ -12,7 +12,9 @@ Rounds = O(max component diameter), which for near-dup clusters is tiny
 (they are dense almost-cliques). Each round is two broadcast-free shuffle
 joins on (node) plus a metadata-scale count; ``localCheckpoint`` truncates
 the lineage every round so the plan does not grow with iterations (the
-classic iterative-DataFrame hazard at scale).
+classic iterative-DataFrame hazard at scale). Graphs of at most
+``CC_LOCAL_MAX_EDGES`` edges (one ingest batch's near-dup pairs) skip the
+loop: their edges are collected and finished by union-find on the driver.
 
 At 100 TB: the edge list is the LSH output (|pairs| ≪ |docs|), labels are
 (node, long) tuples — the shuffles never carry document bodies.
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pharmacodi_spark.barrier import stage_barrier
 
@@ -31,6 +34,19 @@ from pharmacodi_spark.barrier import stage_barrier
 #: bound comes from the edge count the convergence check already pays for.
 #: At corpus scale round 0 exceeds it and keeps the shuffle_hash path.
 CC_BROADCAST_MAX_ROWS = 1_000_000
+
+#: a directed edge set with at most this many rows is collected and
+#: finished on the driver (union-find, min-id root) instead of running the
+#: round loop. The loop costs a near-constant ~10 Spark jobs per call
+#: (round counts, broadcast builds, the fold); the driver finish costs one
+#: bounded collect and an Arrow-built LocalRelation, linear in edges.
+#: Measured warm on local[4] (4 vCPU), near_dup_droplist over 5-node
+#: cliques, loop vs driver finish: 1.7 vs 0.8 s at 10k edges, 1.7 vs 1.1 s
+#: at 50k, 1.7 vs 1.4 s at 100k, 2.4 vs 2.8 s at 200k. The bound sits at
+#: half the last winning size, so the collected rows stay a few MB of
+#: driver memory. One ingest batch's near-dup graph is far under it;
+#: corpus-scale graphs keep the loop.
+CC_LOCAL_MAX_EDGES = 50_000
 
 #: pointer-jumping depth (r12): from round CC_COMPOSE_AFTER on, the round's
 #: contraction map is composed with itself this many times (upd → upd∘upd →
@@ -101,7 +117,15 @@ def connected_components(
     blocks. The per-round label fold is also deferred (r12): each round
     only pins its contraction map; the |V|-row label table is folded
     through the ≤rounds maps ONCE at the end instead of paying a
-    |V|-shuffle + materialization every round."""
+    |V|-shuffle + materialization every round.
+
+    Small-graph finish: when the pinned directed edge set has at most
+    ``CC_LOCAL_MAX_EDGES`` rows, the edges are collected and labelled by
+    union-find with a min-id root on the driver, and the labels come back
+    as a LocalRelation typed from the edge schema — one bounded collect
+    (which also materializes the pin) instead of the loop's ~10 jobs. Same
+    labels: the root of each union-find tree is the minimum id of its
+    component. Larger graphs take the round loop above."""
     _b = lambda df, name: stage_barrier(
         df, mode=barrier, name=name, barrier_dir=barrier_dir
     )
@@ -109,12 +133,23 @@ def connected_components(
     # traverses its input twice, and the caller's edge frame is usually an
     # expensive unpinned subplan (the within-cell cosine pair join) — the
     # r11 sf1 profile measured the un-pinned version re-paying the 12s
-    # pair stage twice inside this function
+    # pair stage twice inside this function. Lazy: the bounded collect
+    # below is its first consumer, a synchronous driver action.
     sel = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ded = _b(sel if edges_canonical else sel.distinct(), "cc-edges0")
+    ded = stage_barrier(
+        sel if edges_canonical else sel.distinct(),
+        mode=barrier, name="cc-edges0", barrier_dir=barrier_dir,
+        eager=False,
+    )
     mirrored = ded.union(
         ded.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
+    # one bounded collect both sizes the graph and fetches a small one
+    head = ded.limit(CC_LOCAL_MAX_EDGES + 1).collect()
+    if len(head) <= CC_LOCAL_MAX_EDGES:
+        return _local_components(
+            edges.sparkSession, head, mirrored.schema["u"].dataType
+        )
     sym = mirrored if edges_canonical else _b(mirrored.distinct(), "cc-edges")
 
     # lazy pin (r13): the label table is consumed exactly once, by the
@@ -263,6 +298,44 @@ def connected_components(
             "left",
         ).select("node", F.coalesce("new", "lab").alias("lab"))
     return labels.select("node", F.col("lab").alias("component"))
+
+
+def _local_components(spark, edges: list, node_type: T.DataType) -> DataFrame:
+    """Driver finish of :func:`connected_components` for a small collected
+    (u, v) edge list: union-find whose root is always the smaller id, so
+    every node's root is the minimum id of its component. A null endpoint
+    joins nothing and keeps a null label, as in the round loop."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        if u is None or v is None:
+            continue
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    schema = T.StructType(
+        [T.StructField("node", node_type), T.StructField("component", node_type)]
+    )
+    table = pa.Table.from_pydict(
+        {"node": nodes, "component": [find(x) for x in nodes]},
+        schema=to_arrow_schema(schema),
+    )
+    # an Arrow table becomes a LocalRelation: no tasks, exact row-count stats
+    return spark.createDataFrame(table)
 
 
 def near_dup_droplist(

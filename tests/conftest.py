@@ -22,3 +22,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(params=["local", "loop"])
+def cc_path(request, monkeypatch):
+    """Run a connected-components test on both of its paths: the driver
+    finish that small graphs take by default, and the round loop, forced
+    by a bound no edge count is under (so even an empty graph loops)."""
+    from pharmacodi_spark.text import clusters
+
+    if request.param == "loop":
+        monkeypatch.setattr(clusters, "CC_LOCAL_MAX_EDGES", -1)
+    return request.param

@@ -85,7 +85,7 @@ def test_surrogate_key_fact_durable_matches_local(spark, tmp_path):
     assert _rows(a.select("k", "orig", "id")) == _rows(b.select("k", "orig", "id"))
 
 
-def test_connected_components_durable_matches_local(spark, tmp_path):
+def test_connected_components_durable_matches_local(spark, tmp_path, cc_path):
     from pharmacodi_spark.text.clusters import connected_components
 
     edges = spark.createDataFrame(

@@ -90,6 +90,30 @@ def test_batch_sequential_ingest(spark, tmp_path):
     assert cells.count() == cells.select("band", "bucket").distinct().count()
 
 
+# Spark jobs one ingest_batch may run on these fixtures: the first batch
+# builds the state, the second runs the full gauntlet against it. A hidden
+# job (an AQE shuffle re-run, a schemaless index read, a CC round) added
+# by a later change pushes a batch over.
+INGEST_JOB_BUDGET = (15, 23)
+
+
+def test_ingest_batch_job_budget(spark, tmp_path):
+    sc = spark.sparkContext
+    base = str(tmp_path / "state")
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    jobs = []
+    try:
+        for i, rows in enumerate([BATCH1, BATCH2]):
+            group = f"ingest-budget-{os.getpid()}-{i}"
+            sc.setJobGroup(group, f"ingest_batch {i}")
+            ingest_batch(spark, base, _df(spark, rows))
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert all(n <= cap for n, cap in zip(jobs, INGEST_JOB_BUDGET)), jobs
+
+
 def _write_stream_files(spark, src_dir):
     """Two json files = two micro-batches (maxFilesPerTrigger=1), mtime-
     ordered so the file source replays them in batch order."""

@@ -137,9 +137,9 @@ def test_salted_join_keyset_invariant(spark, salts):
 )
 @SETTINGS
 @pytest.mark.slow
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, cc_path, edges):
     """Label-propagation CC over arbitrary small graphs ≡ a driver-side
-    union-find referee (min label per component)."""
+    union-find referee (min label per component), on both CC paths."""
     from pharmacodi_spark.text.clusters import connected_components
 
     edges = [(a, b) for a, b in edges if a != b]

@@ -148,6 +148,37 @@ def test_merge_upsert_partitioned(spark, tmp_path):
     assert files("DS1") == ds1_before  # partition not rewritten
 
 
+def test_merge_upsert_partitioned_keeps_session_conf(spark, tmp_path):
+    """The partitioned upsert asks for dynamic overwrite on its own writer:
+    the session-wide overwrite mode is the same before and after, and the
+    partitions the batch never touches still hold their rows (a static
+    overwrite would have deleted them)."""
+    from pharmacodi_spark.io import merge_upsert
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        [(1, "DS0", 10.0), (2, "DS0", 20.0), (3, "DS1", 30.0)], ["k", "ds", "v"]
+    ).write.partitionBy("ds").parquet(path)
+
+    before = spark.conf.get(conf)
+    merge_upsert(
+        spark,
+        path,
+        spark.createDataFrame([(2, "DS0", 99.0), (4, "DS2", 40.0)], ["k", "ds", "v"]),
+        key_cols=["k"],
+        partition_by="ds",
+    )
+    assert spark.conf.get(conf) == before
+    rows = {r.k: (r.ds, r.v) for r in spark.read.parquet(path).collect()}
+    assert rows == {
+        1: ("DS0", 10.0),
+        2: ("DS0", 99.0),
+        3: ("DS1", 30.0),
+        4: ("DS2", 40.0),
+    }
+
+
 def test_merge_upsert_moved_key(spark, tmp_path):
     """A key whose update CHANGES its partition value must not leave its old
     row behind: the stale source partition is detected by key semi-join and

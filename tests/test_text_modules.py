@@ -96,7 +96,7 @@ def test_simhash_default_64_bits(spark):
         simhash_near_pairs(sim, prefix_bits=64, bits=64)
 
 
-def test_connected_components_and_droplist(spark):
+def test_connected_components_and_droplist(spark, cc_path):
     from pharmacodi_spark.text.clusters import connected_components, near_dup_droplist
 
     # components: {1,2,3,4} (chain), {10,11,12} (triangle), {20,21}; 30 isolated
@@ -115,13 +115,14 @@ def test_connected_components_and_droplist(spark):
     assert sum(1 for c, k in dl.values() if k) == 4  # one keeper per cluster + singleton
 
 
-def test_connected_components_long_path(spark):
+def test_connected_components_long_path(spark, cc_path):
     """Pointer-jumping (r12): a PATH graph contracts by only ~1 node per
     plain min-contraction round, so any >max_iter-long transitive chain
     used to raise "not converged" — the composed contraction maps
     (CC_POINTER_JUMPS from round CC_COMPOSE_AFTER) make the residual
     round count O(log diameter). 24-node path under max_iter=12: raises
-    without composition, converges with it, labels = component min."""
+    without composition, converges with it, labels = component min. The
+    driver finish labels it in one pass."""
     from pyspark.sql import functions as F
 
     from pharmacodi_spark.text.clusters import connected_components
@@ -136,6 +137,49 @@ def test_connected_components_long_path(spark):
         ).collect()
     }
     assert comp == {i: 0 for i in range(24)}
+
+
+@pytest.mark.parametrize(
+    "edges,expect",
+    [
+        # two cliques (K5, K4), edges listed in both directions
+        (
+            [(a, b) for a in range(5) for b in range(5) if a != b]
+            + [(a, b) for a in range(10, 14) for b in range(a + 1, 14)],
+            {**{i: 0 for i in range(5)}, **{i: 10 for i in range(10, 14)}},
+        ),
+        # disjoint components; the minimum id is not an edge's first field
+        (
+            [(7, 3), (3, 9), (40, 41), (100, 50), (50, 60)],
+            {7: 3, 3: 3, 9: 3, 40: 40, 41: 40, 100: 50, 50: 50, 60: 50},
+        ),
+        # string ids: labels order like Spark's min over strings
+        (
+            [("b", "a"), ("c", "b"), ("x", "y"), ("é", "z")],
+            {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z", "é": "z"},
+        ),
+    ],
+    ids=["cliques", "disjoint", "string_ids"],
+)
+def test_connected_components_shapes(spark, cc_path, edges, expect):
+    from pharmacodi_spark.text.clusters import connected_components
+
+    df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+    out = connected_components(df)
+    assert out.schema["node"].dataType == df.schema["doc_a"].dataType
+    assert {r.node: r.component for r in out.collect()} == expect
+
+
+def test_connected_components_empty(spark, cc_path):
+    from pharmacodi_spark.text.clusters import connected_components, near_dup_droplist
+
+    edges = spark.createDataFrame([], "doc_a string, doc_b string")
+    out = connected_components(edges, edges_canonical=True)
+    assert out.collect() == []
+    assert [f.dataType.simpleString() for f in out.schema] == ["string", "string"]
+    ids = spark.createDataFrame([("a",), ("b",)], "doc_id string")
+    dl = sorted(tuple(r) for r in near_dup_droplist(ids, edges).collect())
+    assert dl == [("a", "a", True), ("b", "b", True)]
 
 
 def test_cosine_topk_and_lsh(spark):
