@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pharmacodi_spark.barrier import stage_barrier
+
 _EXT_FMT = [
     (re.compile(r"\.csv(\.gz)?$", re.I), "csv"),
     (re.compile(r"\.parquet$", re.I), "parquet"),
@@ -328,12 +330,17 @@ def merge_upsert(
     a path, so it is out of this path-based helper's scope (use
     ``spark.sql("MERGE INTO cat.tbl ...")`` directly there).
 
+    An absent parquet target is seeded: ``updates`` is written as the
+    table (partitioned by ``partition_by`` when set), so a stream's first
+    micro-batch needs no separate write path.
+
     Scale path: with ``partition_by`` + dynamic partition overwrite, ONLY
     partitions containing updated keys are read, merged, and rewritten —
-    touch 1 of 10 000 partitions and 9 999 stay as-is. Without
-    ``partition_by`` the whole target rewrites (documented cost); the
-    transactional formats additionally prune by file-level key stats.
-    The merged frame is ``localCheckpoint``-materialized before the write
+    touch 1 of 10 000 partitions and 9 999 stay as-is. Partition values
+    match null-safely, so the null partition merges like any other.
+    Without ``partition_by`` the whole target rewrites (documented cost);
+    the transactional formats additionally prune by file-level key stats.
+    The merged frame is pinned (``stage_barrier``) before the write
     because Spark cannot overwrite files that are still an input of the
     running plan."""
     if table_format == "delta":
@@ -355,6 +362,15 @@ def merge_upsert(
             f"merge_upsert supports table_format 'parquet' or 'delta', "
             f"got {table_format!r}"
         )
+    # Hadoop-FS existence check, not os.path: on hdfs:// or s3a:// the
+    # local-disk answer is always False, which would make every call after
+    # the first fail with errorifexists instead of merging.
+    if not path_exists(spark, path):
+        writer = updates.write
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(path)
+        return
     target = spark.read.parquet(path)
     if partition_by:
         new_parts = updates.select(partition_by).distinct()
@@ -379,11 +395,13 @@ def merge_upsert(
                 .distinct()
             )
             affected_parts = new_parts.unionByName(old_parts).distinct()
-        affected = target.join(F.broadcast(affected_parts), partition_by, "left_semi")
+        affected = _join_partitions(target, affected_parts, partition_by, "left_semi")
         keep = affected.join(
             updates.select(*key_cols).distinct(), key_cols, "left_anti"
         )
-        merged = keep.unionByName(updates).localCheckpoint()
+        merged = stage_barrier(
+            keep.unionByName(updates), name="merge-upsert-partitions"
+        )
         # Dynamic overwrite only rewrites partitions PRESENT in `merged`: a
         # source partition whose every row belonged to moved keys ends up
         # with zero surviving rows, is absent from the write, and would keep
@@ -392,9 +410,13 @@ def merge_upsert(
         # directories afterwards. Evaluated pre-write so nothing re-reads
         # the target after its files are replaced.
         emptied = (
-            affected_parts.join(
-                merged.select(partition_by).distinct(), partition_by, "left_anti"
+            _join_partitions(
+                affected_parts,
+                merged.select(partition_by).distinct(),
+                partition_by,
+                "left_anti",
             )
+            .select(F.col(partition_by).cast("string"))
             .collect()
         )
         # writer-scoped dynamic overwrite: the session conf stays untouched,
@@ -407,15 +429,55 @@ def merge_upsert(
         )
         if emptied:
             fs, _ = _hadoop_fs(spark, path)
-            jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+            jvm = spark._jvm
+            # Spark's own directory name for a partition value: it escapes
+            # "/" and "=" and names the null partition
+            # __HIVE_DEFAULT_PARTITION__
+            part_dir_name = (
+                jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                .getPartitionPathString
+            )
             for row in emptied:
-                part_dir = jvm_path(f"{path}/{partition_by}={row[0]}")
+                part_dir = jvm.org.apache.hadoop.fs.Path(
+                    f"{path}/{part_dir_name(partition_by, row[0])}"
+                )
                 if fs.exists(part_dir):
                     fs.delete(part_dir, True)
     else:
         keep = target.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
-        merged = keep.unionByName(updates).localCheckpoint()
+        merged = stage_barrier(keep.unionByName(updates), name="merge-upsert")
         merged.write.mode("overwrite").parquet(path)
+
+
+def _join_partitions(
+    df: DataFrame, parts: DataFrame, col: str, how: str
+) -> DataFrame:
+    """``df`` semi/anti-joined to the partition values in ``parts`` on
+    ``col``, null-safely: ``=`` never matches the null partition, which
+    would leave it out of a merge and then overwrite it with only the
+    update rows."""
+    vals = F.broadcast(parts.select(F.col(col).alias("__part")))
+    return df.join(vals, df[col].eqNullSafe(vals["__part"]), how)
+
+
+def write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``batch_id=N`` partition of the table at
+    ``path`` — the per-micro-batch state write of the streaming twins. A
+    replayed batch REWRITES its own partition with identical content
+    instead of appending a duplicate, so the sink is replay-idempotent by
+    construction.
+
+    Overwrite mode is scoped to THIS writer via
+    ``.option("partitionOverwriteMode", "dynamic")`` — never by mutating
+    session conf, which would leak dynamic semantics into any concurrent
+    write in the same SparkSession mid-batch (ADVICE r6)."""
+    (
+        df.withColumn("batch_id", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def read_pset_catalog(

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.io import write_batch_partition
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
+
 
 def profile_table(
     df: DataFrame,
@@ -289,30 +292,17 @@ def streaming_bucket_snapshots(
     """Maintain per-micro-batch bucket histograms under ``base_dir`` — the
     state :func:`psi_series_from_snapshots` folds into a drift series at
     question time (the counts analogue is sketches.streaming_cm_sketch).
-    Each batch writes its own ``batch_id=N`` partition via a
-    writer-scoped dynamic partition overwrite, so a replayed batch
-    REWRITES its partition with identical content instead of appending a
-    duplicate — replay-idempotent by construction. State size: #buckets
-    rows per batch (KB-scale metadata regardless of stream volume).
-    availableNow drain, as the repo's other sinks."""
-
+    Each batch writes its own ``batch_id=N`` partition via
+    io.py::write_batch_partition, so a replayed batch REWRITES its
+    partition with identical content instead of appending a duplicate —
+    replay-idempotent by construction. State size: #buckets rows per batch
+    (KB-scale metadata regardless of stream volume). Drained by
+    streaming/ops.py::drain_foreach_batch."""
     def do_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.groupBy(bucket_col)
-            .agg(F.count("*").cast("long").alias("c_cur"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{base_dir}/bucket_hist")
-        )
+        hist = batch.groupBy(bucket_col).agg(F.count("*").cast("long").alias("c_cur"))
+        write_batch_partition(hist, f"{base_dir}/bucket_hist", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_bucket_snapshots(spark, base_dir: str) -> DataFrame:

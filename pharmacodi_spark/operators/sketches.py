@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.io import write_batch_partition
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
+
 
 def distinct_sketch(
     df: DataFrame,
@@ -170,30 +173,17 @@ def streaming_cm_sketch(
     batch rewrites the same partition instead of double-counting), and
     :func:`read_cm_sketch` folds the partitions with :func:`cm_merge` at
     question time.  State size: ≤ depth·width rows per batch — KB-scale
-    regardless of stream volume.  availableNow drain, as the repo's other
-    sinks.
-
-    Overwrite mode is scoped to THIS writer via
-    ``.option("partitionOverwriteMode", "dynamic")`` — never by mutating
-    session conf, which would leak dynamic semantics into any concurrent
-    write in the same SparkSession mid-batch (ADVICE r6)."""
-
+    regardless of stream volume.  Each partition is written by
+    io.py::write_batch_partition and the stream is drained by
+    streaming/ops.py::drain_foreach_batch."""
     def do_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            cm_sketch(batch, col, depth, width, salt)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{base_dir}/cm_sketch")
+        write_batch_partition(
+            cm_sketch(batch, col, depth, width, salt),
+            f"{base_dir}/cm_sketch",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_cm_sketch(spark, base_dir: str) -> DataFrame:
@@ -589,21 +579,11 @@ def streaming_log2_hist_sketch(
     keys = by or []
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            log2_hist_sketch(batch, col, by=keys)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{base_dir}/log2_hist")
+        write_batch_partition(
+            log2_hist_sketch(batch, col, by=keys), f"{base_dir}/log2_hist", batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_log2_hist_sketch(
@@ -894,21 +874,11 @@ def streaming_kmv_sketch(
     keys = by or []
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            kmv_sketch(batch, col, k=k, by=keys)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{base_dir}/kmv")
+        write_batch_partition(
+            kmv_sketch(batch, col, k=k, by=keys), f"{base_dir}/kmv", batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_kmv_sketch(

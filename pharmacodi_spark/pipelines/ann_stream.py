@@ -36,7 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.io import merge_upsert, path_exists
+from pharmacodi_spark.io import merge_upsert
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.similarity import ivf_assign, train_ivf_centroids
 
 
@@ -89,33 +90,21 @@ def streaming_ivf_upserts(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ):
-    """Maintain the IVF index from an embedding stream (availableNow drain
-    — the repo's upsert_sink convention). Returns the started query."""
+    """Maintain the IVF index from an embedding stream (drained by
+    streaming/ops.py::drain_foreach_batch; the first batch seeds the index
+    if it is absent). Returns the started query."""
     cents = load_centroids(stream.sparkSession, base_dir)
 
     def do_batch(batch: DataFrame, _batch_id: int) -> None:
         assigned = ivf_assign(batch, cents, vec_col=vec_col).select(
             id_col, vec_col, "centroid_id"
         )
-        spark = batch.sparkSession
         path = os.path.join(base_dir, "index")
-        if not path_exists(spark, path):
-            assigned.write.partitionBy("centroid_id").parquet(path)
-        else:
-            merge_upsert(
-                spark,
-                path,
-                assigned,
-                key_cols=[id_col],
-                partition_by="centroid_id",
-            )
+        merge_upsert(
+            batch.sparkSession, path, assigned, [id_col], partition_by="centroid_id"
+        )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def batch_ivf_index(

@@ -47,7 +47,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.io import merge_upsert, path_exists
+from pharmacodi_spark.barrier import stage_barrier
+from pharmacodi_spark.io import merge_upsert, path_exists, write_batch_partition
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.analysis import repetition_metrics
 from pharmacodi_spark.text.dedup import passage_first_owner_stats
 
@@ -257,7 +259,7 @@ def curate_stream_batch(
     hash_index = _strictly_earlier(spark, p["hash_index"], batch_id)
 
     entrants = _gates_1_to_3(new, lm, eval_grams, content_col, id_col)
-    q3 = new.join(entrants, id_col).localCheckpoint()
+    q3 = stage_barrier(new.join(entrants, id_col), name="curation-entrants")
 
     # stage 4: first-owner passage dedup vs index + within batch
     keep4 = (
@@ -278,7 +280,9 @@ def curate_stream_batch(
     )
     if hash_index is not None:
         keeper = keeper.join(hash_index, "h", "left_anti")
-    survivors = q4.join(keeper.select(id_col), id_col).localCheckpoint()
+    survivors = stage_barrier(
+        q4.join(keeper.select(id_col), id_col), name="curation-survivors"
+    )
 
     # state updates — every entrant claims its passages (accepted or not:
     # the batch twin's owner is the min id among ENTRANTS); content hashes
@@ -326,18 +330,9 @@ def curate_stream_batch(
         new_owned = new_owned.join(prior_owned, "h", "left_anti")
     if hash_index is not None:
         new_hashes = new_hashes.join(hash_index, "h", "left_anti")
-    for df, path in ((new_owned, p["passage_owner"]), (new_hashes, p["hash_index"])):
-        (
-            df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    if path_exists(spark, p["curated"]):
-        merge_upsert(spark, p["curated"], survivors, [id_col])
-    else:
-        survivors.write.parquet(p["curated"])
+    write_batch_partition(new_owned, p["passage_owner"], batch_id)
+    write_batch_partition(new_hashes, p["hash_index"], batch_id)
+    merge_upsert(spark, p["curated"], survivors, [id_col])
 
 
 def streaming_curation(
@@ -347,8 +342,9 @@ def streaming_curation(
     content_col: str = "text",
     id_col: str = "doc_id",
 ):
-    """Gates 1-5 under Structured Streaming (availableNow drain — the
-    repo's upsert_sink convention). Returns the started StreamingQuery."""
+    """Gates 1-5 under Structured Streaming (drained by
+    streaming/ops.py::drain_foreach_batch). Returns the started
+    StreamingQuery."""
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
         curate_stream_batch(
@@ -356,12 +352,7 @@ def streaming_curation(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def incremental_curation_batch(
@@ -388,16 +379,16 @@ def incremental_curation_batch(
     )
     eval_grams = _gram_hashes(eval_docs, content_col, id_col).select("gh").distinct()
     entrants = _gates_1_to_3(docs, lm, eval_grams, content_col, id_col)
-    q3 = docs.join(entrants, id_col).localCheckpoint()
+    q3 = stage_barrier(docs.join(entrants, id_col), name="curation-entrants")
     # keep4 is metadata-scale (ids) but its subplan carries the passage
     # chunk-hash pass; q4 is consumed twice (keeper build + final join),
     # so unpinned this evaluated the passage stats TWICE (r13 profile:
     # two twin 3.7s-cpu chunk-md5 stages). Pin the id set once.
-    keep4 = (
+    keep4 = stage_barrier(
         passage_first_owner_stats(q3, _WINDOW, content_col, id_col)
         .where("keep")
-        .select(id_col)
-        .localCheckpoint()
+        .select(id_col),
+        name="curation-passage-keepers",
     )
     q4 = q3.join(keep4, id_col)
     keeper = (

@@ -25,8 +25,9 @@ are (id, matched_eval_id, est_ppm, keep) metadata.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from pharmacodi_spark.io import write_batch_partition
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.cleaning import fuzzy_decontaminate
 
 
@@ -70,7 +71,8 @@ def decontam_stream_batch(
     """One micro-batch of train docs gated against the frozen sidecar —
     also the ``foreachBatch`` body of :func:`streaming_fuzzy_decontam`.
     Verdicts land under ``verdicts/batch_id=N`` via a writer-scoped
-    dynamic partition overwrite (replay rewrites identical content)."""
+    dynamic partition overwrite (io.py::write_batch_partition — replay
+    rewrites identical content)."""
     frozen = spark.read.parquet(_sig_path(base_dir))
     out = fuzzy_decontaminate(
         batch,
@@ -84,13 +86,7 @@ def decontam_stream_batch(
         sig_fn=sig_fn,
         eval_signatures=frozen,
     )
-    (
-        out.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{base_dir}/verdicts")
-    )
+    write_batch_partition(out, f"{base_dir}/verdicts", batch_id)
 
 
 def streaming_fuzzy_decontam(
@@ -100,7 +96,7 @@ def streaming_fuzzy_decontam(
     **kwargs,
 ):
     """Gate a document stream against the frozen benchmark sidecar
-    (availableNow drain, the repo's sink convention). Returns the started
+    (drained by streaming/ops.py::drain_foreach_batch). Returns the started
     StreamingQuery."""
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
@@ -108,12 +104,7 @@ def streaming_fuzzy_decontam(
             batch.sparkSession, base_dir, batch, batch_id=batch_id, **kwargs
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_decontam_verdicts(spark: SparkSession, base_dir: str) -> DataFrame:

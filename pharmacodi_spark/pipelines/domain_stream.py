@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.io import write_batch_partition
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.urls import url_host
 
 #: read schema — explicit so an index dir whose batches were all empty
@@ -46,8 +48,8 @@ def host_stats_batch(
     """One micro-batch of per-host gate-verdict counts into the state dir
     — also the ``foreachBatch`` body of :func:`streaming_host_quality`.
     One map-side-collapsing aggregation keyed by host; bodies never
-    shuffle; the write is a per-batch-id dynamic partition overwrite."""
-    (
+    shuffle; the write is io.py::write_batch_partition."""
+    stats = (
         batch.select(
             url_host(url_col).alias("host"),
             F.col(fail_col).cast("boolean").alias("__fail"),
@@ -57,12 +59,8 @@ def host_stats_batch(
             F.count("*").cast("long").alias("n"),
             F.sum(F.col("__fail").cast("long")).cast("long").alias("nf"),
         )
-        .withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{base_dir}/host_stats")
     )
+    write_batch_partition(stats, f"{base_dir}/host_stats", batch_id)
 
 
 def streaming_host_quality(
@@ -73,20 +71,16 @@ def streaming_host_quality(
     fail_col: str = "failed",
 ):
     """Maintain the per-batch host-stats state under ``base_dir`` from a
-    stream of (url, per-page gate verdict) rows. availableNow drain, as
-    the repo's other sinks. Returns the started StreamingQuery."""
+    stream of (url, per-page gate verdict) rows, drained by
+    streaming/ops.py::drain_foreach_batch. Returns the started
+    StreamingQuery."""
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
         host_stats_batch(
             batch, base_dir, batch_id, url_col=url_col, fail_col=fail_col
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_host_stats(

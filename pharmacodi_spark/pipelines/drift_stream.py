@@ -46,6 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.io import write_batch_partition
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.similarity import (
     _trunc_div,
     top_component_projection,
@@ -156,10 +158,10 @@ def streaming_embedding_drift(
     vec_col: str = "qe",
 ):
     """Reduce an incoming embedding stream against the frozen reference
-    sidecar (availableNow drain — the repo's sink convention). Each batch
+    sidecar (drained by streaming/ops.py::drain_foreach_batch). Each batch
     appends ONE row ``(batch_id, n, sum_proj_q, sum_abs_proj_q,
-    mean_shift2)`` via a batch_id-partition dynamic overwrite
-    (replay-idempotent). Returns the started StreamingQuery."""
+    mean_shift2)`` via io.py::write_batch_partition (replay-idempotent).
+    Returns the started StreamingQuery."""
     mu, v = load_drift_reference(stream.sparkSession, base_dir)
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
@@ -167,21 +169,13 @@ def streaming_embedding_drift(
             batch, mu, v, scale_bits=scale_bits, vec_col=vec_col
         )
         shift2 = batch_mean_shift2(batch, mu, vec_col=vec_col)
-        (
-            stats.withColumn("mean_shift2", F.lit(int(shift2)).cast("long"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(base_dir, "drift"))
+        write_batch_partition(
+            stats.withColumn("mean_shift2", F.lit(int(shift2)).cast("long")),
+            os.path.join(base_dir, "drift"),
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_drift_series(spark: SparkSession, base_dir: str) -> DataFrame:

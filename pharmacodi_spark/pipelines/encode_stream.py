@@ -32,7 +32,8 @@ from collections.abc import Callable, Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 
-from pharmacodi_spark.io import merge_upsert, path_exists
+from pharmacodi_spark.io import merge_upsert
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.embeddings import encode_documents
 
 
@@ -46,24 +47,15 @@ def streaming_encode(
     id_col: str = "doc_id",
 ):
     """Encode an incoming document stream into the embedding store
-    (availableNow drain — the repo's upsert_sink convention). Returns the
-    started StreamingQuery."""
+    (drained by streaming/ops.py::drain_foreach_batch). Returns the started
+    StreamingQuery."""
 
     def do_batch(batch: DataFrame, _batch_id: int) -> None:
         vecs = encode_documents(
             batch, encoder=encoder, dim=dim,
             content_col=content_col, id_col=id_col,
         )
-        spark = batch.sparkSession
         path = os.path.join(base_dir, "embeddings")
-        if not path_exists(spark, path):
-            vecs.write.parquet(path)  # first batch seeds the store
-        else:
-            merge_upsert(spark, path, vecs, key_cols=[id_col])
+        merge_upsert(batch.sparkSession, path, vecs, key_cols=[id_col])
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)

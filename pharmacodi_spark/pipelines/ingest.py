@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.io import merge_upsert, path_exists
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.clusters import connected_components
 from pharmacodi_spark.text.dedup import (
     band_cells,
@@ -244,20 +245,15 @@ def streaming_ingest(
 ):
     """Steps 1-4 under Structured Streaming: each micro-batch runs the full
     dedup gauntlet against the CURRENT corpus state, then upserts. Returns
-    the started StreamingQuery (availableNow trigger — drain-the-backlog
-    semantics, same as streaming/ops.py::upsert_sink)."""
+    the started StreamingQuery (streaming/ops.py::drain_foreach_batch —
+    drain-the-backlog semantics)."""
 
     def do_ingest(batch: DataFrame, _batch_id: int) -> None:
         ingest_batch(
             batch.sparkSession, base_dir, batch, content_col, id_col, **lsh
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_ingest, checkpoint_dir)
 
 
 def reprocess_snapshot(
@@ -442,10 +438,7 @@ def reprocess_stream_batch(
         quarantine = todo.join(colliders, id_col, "left_semi")
         clean = todo.join(colliders, id_col, "left_anti")
         if not quarantine.isEmpty():
-            if path_exists(spark, quarantine_path):
-                merge_upsert(spark, quarantine_path, quarantine, [id_col])
-            else:
-                quarantine.write.parquet(quarantine_path)
+            merge_upsert(spark, quarantine_path, quarantine, [id_col])
         if not clean.isEmpty():
             ingest_batch(spark, base_dir, clean, content_col, id_col, **lsh)
 
@@ -492,12 +485,7 @@ def streaming_reprocess(
             batch.sparkSession, base_dir, run_dir, batch, content_col, id_col, **lsh
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def finalize_reprocess(

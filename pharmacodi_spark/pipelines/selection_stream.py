@@ -35,7 +35,8 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from pharmacodi_spark.io import merge_upsert, path_exists
+from pharmacodi_spark.io import merge_upsert
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.selection import dsir_score, dsir_train_weights
 
 
@@ -82,8 +83,8 @@ def streaming_dsir_scores(
     id_col: str = "doc_id",
 ):
     """Score an incoming document stream against the frozen λ sidecar
-    (availableNow drain — the repo's upsert_sink convention). Returns the
-    started StreamingQuery."""
+    (drained by streaming/ops.py::drain_foreach_batch). Returns the started
+    StreamingQuery."""
     lam = load_selection_weights(stream.sparkSession, base_dir, dim)
 
     def do_batch(batch: DataFrame, _batch_id: int) -> None:
@@ -91,19 +92,10 @@ def streaming_dsir_scores(
             batch, lam, dim=dim, salt=salt, content_col=content_col,
             id_col=id_col,
         )
-        spark = batch.sparkSession
         path = os.path.join(base_dir, "scores")
-        if not path_exists(spark, path):
-            scored.write.parquet(path)  # first batch seeds the table
-        else:
-            merge_upsert(spark, path, scored, key_cols=[id_col])
+        merge_upsert(batch.sparkSession, path, scored, key_cols=[id_col])
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def batch_dsir_scores(

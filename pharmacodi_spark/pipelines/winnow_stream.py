@@ -34,7 +34,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.io import merge_upsert, path_exists
+from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.winnow import (
     winnow_fingerprints,
     winnow_incremental_flags,
@@ -83,16 +85,20 @@ def streaming_winnow_ingest(
     id_col: str = "doc_id",
 ):
     """Flag-then-admit each micro-batch against the maintained index
-    (availableNow drain). Flags land in ``base_dir/flags`` (keyed upsert —
-    replay-idempotent); fingerprints upsert into ``base_dir/index``."""
+    (drained by streaming/ops.py::drain_foreach_batch). Flags land in
+    ``base_dir/flags`` (keyed upsert — replay-idempotent); fingerprints
+    upsert into ``base_dir/index``, which the first batch seeds."""
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        fp = winnow_fingerprints(
-            batch, content_col=content_col, id_col=id_col, k=k, w=w
-        ).localCheckpoint()  # consumed by flag join AND index upsert
+        # consumed by flag join AND index upsert
+        fp = stage_barrier(
+            winnow_fingerprints(
+                batch, content_col=content_col, id_col=id_col, k=k, w=w
+            ),
+            name="winnow-fingerprints",
+        )
         idx_path = os.path.join(base_dir, "index")
-        flags_path = os.path.join(base_dir, "flags")
         if path_exists(spark, idx_path):
             # strictly-earlier view: a replayed batch (same batch_id) sees
             # the index exactly as it did on first delivery
@@ -102,28 +108,16 @@ def streaming_winnow_ingest(
             flags = winnow_incremental_flags(
                 fp, idx, id_col=id_col, min_shared=min_shared
             )
-            if path_exists(spark, flags_path):
-                merge_upsert(spark, flags_path, flags, [id_col])
-            else:
-                flags.write.parquet(flags_path)
-            merge_upsert(
-                spark,
-                idx_path,
-                _with_bucket(fp, batch_id),
-                key_cols=[id_col, "pos"],
-                partition_by="h_bucket",
-            )
-        else:
-            _with_bucket(fp, batch_id).write.partitionBy("h_bucket").parquet(
-                idx_path
-            )
+            merge_upsert(spark, os.path.join(base_dir, "flags"), flags, [id_col])
+        merge_upsert(
+            spark,
+            idx_path,
+            _with_bucket(fp, batch_id),
+            key_cols=[id_col, "pos"],
+            partition_by="h_bucket",
+        )
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_batch, checkpoint_dir)
 
 
 def read_flags(spark: SparkSession, base_dir: str) -> DataFrame:

@@ -16,6 +16,8 @@ only in-horizon keys. All operators here avoid Python UDFs entirely.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -404,6 +406,22 @@ def dedup_within_watermark(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def drain_foreach_batch(
+    stream: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint_dir: str
+):
+    """Start ``fn(batch, batch_id)`` as the ``foreachBatch`` sink of
+    ``stream``, checkpointed under ``checkpoint_dir``, with the
+    ``availableNow`` trigger: drain the backlog, then stop. Every streaming
+    sink in the engine runs through here. Returns the started
+    StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def upsert_sink(
     stream: DataFrame,
     path: str,
@@ -414,10 +432,11 @@ def upsert_sink(
 ):
     """Streaming keyed sink: maintain a parquet table as the LATEST row per
     key (CDC-style materialized upsert) via ``foreachBatch`` + the batch
-    merge (io.py::merge_upsert). Each micro-batch is first collapsed to one
-    row per key (max ``order_col`` wins — arrival order inside an
-    unordered batch is not a merge policy), then merged; with
-    ``partition_by`` only affected partitions rewrite.
+    merge (io.py::merge_upsert, which also seeds the table on the first
+    batch). Each micro-batch is first collapsed to one row per key (max
+    ``order_col`` wins — arrival order inside an unordered batch is not a
+    merge policy), then merged; with ``partition_by`` only affected
+    partitions rewrite.
 
     Checkpointing gives effectively-once table maintenance: replayed
     batches re-merge the same keys idempotently. Returns the started
@@ -436,27 +455,11 @@ def upsert_sink(
             )
         else:
             batch = batch.dropDuplicates(key_cols)
-        from pharmacodi_spark.io import path_exists
-
-        # Hadoop-FS existence check, not os.path: on hdfs:///s3a:// the
-        # local-disk answer is always False, which would make every batch
-        # after the first fail with errorifexists instead of merging.
-        if not path_exists(batch.sparkSession, path):
-            writer = batch.write
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(path)
-            return
         merge_upsert(
             batch.sparkSession, path, batch, key_cols, partition_by=partition_by
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_foreach_batch(stream, do_merge, checkpoint_dir)
 
 
 def interval_stream_join(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.functions.scalar import (
     double_array_lit,
     double_matrix_lit,
@@ -1024,7 +1025,9 @@ def mmr_topk(
         F.col(vec_col),
         lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
     )
-    base = df.select(F.col(id_col), v.alias("__v")).localCheckpoint()
+    base = stage_barrier(
+        df.select(F.col(id_col), v.alias("__v")), name="mmr-candidates"
+    )
 
     def dot(a, b) -> Column:
         return F.aggregate(
@@ -1146,8 +1149,6 @@ def _referee_topk(
 
     import pandas as pd
     from pyspark.sql import Window
-
-    from pharmacodi_spark.barrier import stage_barrier
 
     assert content_col is not None, "scorer referee needs content_col"
     assert pool_factor >= 1
@@ -1472,8 +1473,6 @@ def top_component_projection(
     dim rows). Raise ``shift_bits`` as n grows — the headroom bound above gives
     the exact bound.
     """
-    from pharmacodi_spark.barrier import stage_barrier
-
     scale = 1 << scale_bits
     shift = 1 << shift_bits
 

@@ -1,0 +1,137 @@
+"""Static guard for the engine's sink and pin discipline.
+
+Every pin goes through ``barrier.stage_barrier``, every streaming sink
+through ``streaming/ops.py::drain_foreach_batch``, every writer-scoped
+dynamic overwrite through ``io.py``, and no caller forks "write the table
+if the path is absent, else ``merge_upsert``" (``merge_upsert`` seeds an
+absent target itself). The scan walks the AST, so it matches calls and
+string constants, never docstring or comment text.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ENGINE = Path(__file__).resolve().parent.parent / "pharmacodi_spark"
+
+
+def _modules():
+    for path in sorted(ENGINE.rglob("*.py")):
+        yield path.relative_to(ENGINE).as_posix(), ast.parse(path.read_text())
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(
+                body[0].value, ast.Constant
+            ):
+                out.add(id(body[0].value))
+    return out
+
+
+def _method_calls(tree: ast.AST, name: str):
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+        ):
+            yield node
+
+
+def _path_arg(call: ast.Call) -> str | None:
+    """ast dump of the ``path`` argument of ``f(spark, path, ...)``."""
+    return ast.dump(call.args[1]) if len(call.args) >= 2 else None
+
+
+def _called(node: ast.AST, fn: str):
+    for sub in ast.walk(node):
+        if (
+            isinstance(sub, ast.Call)
+            and isinstance(sub.func, ast.Name)
+            and sub.func.id == fn
+        ):
+            yield sub
+
+
+def _seed_or_merge_forks(tree: ast.AST) -> list[int]:
+    """Line numbers of ``if path_exists(spark, P)`` statements that write
+    P with a plain ``.parquet(P)`` (any writer, not a read) while the same
+    function also ``merge_upsert``-s P."""
+    lines = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        merged = {_path_arg(c) for c in _called(fn, "merge_upsert")}
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.If):
+                continue
+            checked = {_path_arg(c) for c in _called(node.test, "path_exists")}
+            for write in _method_calls(node, "parquet"):
+                target = ast.dump(write.args[0]) if write.args else None
+                is_read = "attr='read'" in ast.dump(write.func.value)
+                if target in checked & merged and not is_read:
+                    lines.append(node.lineno)
+    return sorted(set(lines))
+
+
+def test_no_raw_local_checkpoint_outside_barrier():
+    hits = [
+        f"{mod}:{call.lineno}"
+        for mod, tree in _modules()
+        if mod != "barrier.py"
+        for call in _method_calls(tree, "localCheckpoint")
+    ]
+    assert hits == [], "pin through barrier.stage_barrier(..., name=...)"
+
+
+def test_foreach_batch_only_in_drain_helper():
+    hits = []
+    for mod, tree in _modules():
+        helper = {
+            id(node)
+            for fn in ast.walk(tree)
+            if mod == "streaming/ops.py"
+            and isinstance(fn, ast.FunctionDef)
+            and fn.name == "drain_foreach_batch"
+            for node in ast.walk(fn)
+        }
+        hits += [
+            f"{mod}:{node.lineno} .{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr in ("foreachBatch", "writeStream")
+            and id(node) not in helper
+        ]
+    assert hits == [], "start sinks with streaming.ops.drain_foreach_batch"
+
+
+def test_partition_overwrite_mode_only_in_io():
+    hits = []
+    for mod, tree in _modules():
+        docs = _docstrings(tree)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "partitionOverwriteMode" in node.value
+                and id(node) not in docs
+                and mod != "io.py"
+            ):
+                hits.append(f"{mod}:{node.lineno}")
+    assert hits == [], "write per-batch state with io.write_batch_partition"
+
+
+def test_no_seed_or_merge_forks():
+    hits = [
+        f"{mod}:{line}"
+        for mod, tree in _modules()
+        for line in _seed_or_merge_forks(tree)
+    ]
+    assert hits == [], "merge_upsert seeds an absent target itself"

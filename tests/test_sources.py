@@ -210,6 +210,78 @@ def test_merge_upsert_moved_key(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "ds=DS1"))
 
 
+@pytest.mark.parametrize(
+    "base, updates, expected, gone",
+    [
+        pytest.param(
+            [(1, None, 1.0), (2, None, 2.0), (3, "x", 3.0)],
+            [(1, None, 9.0)],
+            {1: (None, 9.0), 2: (None, 2.0), 3: ("x", 3.0)},
+            None,
+            id="update_in_null_partition",
+        ),
+        pytest.param(
+            [(1, None, 1.0), (3, "x", 3.0)],
+            [(1, "x", 9.0)],
+            {1: ("x", 9.0), 3: ("x", 3.0)},
+            "ds=__HIVE_DEFAULT_PARTITION__",
+            id="move_out_of_null_partition",
+        ),
+        pytest.param(
+            [(1, "a/b", 1.0), (3, "x", 3.0)],
+            [(1, "x", 9.0)],
+            {1: ("x", 9.0), 3: ("x", 3.0)},
+            "ds=a%2Fb",
+            id="move_out_of_escaped_partition",
+        ),
+    ],
+)
+def test_merge_upsert_partition_values(spark, tmp_path, base, updates, expected, gone):
+    """Partition values that Spark stores under a different directory name
+    than their plain text: the null partition (written as
+    ``__HIVE_DEFAULT_PARTITION__``) and a value holding "/" (escaped to
+    ``%2F``). The null partition merges like any other, and a partition
+    emptied by a moved key is dropped under Spark's own directory name."""
+    import os
+
+    from pharmacodi_spark.io import merge_upsert
+
+    schema = "k int, ds string, v double"
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame(base, schema).write.partitionBy("ds").parquet(path)
+    merge_upsert(
+        spark,
+        path,
+        spark.createDataFrame(updates, schema),
+        key_cols=["k"],
+        partition_by="ds",
+    )
+    rows = spark.read.parquet(path).collect()
+    assert len(rows) == len(expected)
+    assert {r.k: (r.ds, r.v) for r in rows} == expected
+    if gone is not None:
+        assert not os.path.exists(os.path.join(path, gone))
+
+
+@pytest.mark.parametrize("partition_by", [None, "ds"])
+def test_merge_upsert_seeds_absent_path(spark, tmp_path, partition_by):
+    """On an absent path the upsert writes ``updates`` as the table."""
+    import os
+
+    from pharmacodi_spark.io import merge_upsert
+
+    path = str(tmp_path / "new")
+    updates = spark.createDataFrame(
+        [(1, "DS0", 10.0), (2, "DS1", 20.0)], ["k", "ds", "v"]
+    )
+    merge_upsert(spark, path, updates, key_cols=["k"], partition_by=partition_by)
+
+    rows = {r.k: (r.ds, r.v) for r in spark.read.parquet(path).collect()}
+    assert rows == {1: ("DS0", 10.0), 2: ("DS1", 20.0)}
+    dirs = {d for d in os.listdir(path) if "=" in d}
+    assert dirs == ({"ds=DS0", "ds=DS1"} if partition_by else set())
+
+
 def test_merge_upsert_unpartitioned(spark, tmp_path):
     from pharmacodi_spark.io import merge_upsert
 
