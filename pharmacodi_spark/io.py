@@ -516,10 +516,3 @@ def read_pset_catalog(
             infer_sampling=infer_sampling,
         )
     return catalog
-
-
-def with_source_file(df: DataFrame, col_name: str = "_source_file") -> DataFrame:
-    """P7 companion: expose the originating file for regex row filters over
-    multi-file scans (combine_pset_tables.py:227-228) without a driver-side
-    file loop."""
-    return df.withColumn(col_name, F.input_file_name())

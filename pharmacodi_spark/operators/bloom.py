@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.functions.scalar import int_array_lit
+from pharmacodi_spark.functions.scalar import int_array_lit, local_df
 
 
 def build_bloom_bitmap(
@@ -101,9 +101,11 @@ def save_bloom_bitmap(
     table it guards — build once at write time, load at probe time (the
     file-level sidecar pattern transactional formats keep in their
     manifests)."""
-    spark.createDataFrame(
+    local_df(
+        spark,
         [(len(words) * 64, n_hashes, words)],
-        "n_bits long, n_hashes int, words array<long>",
+        ["n_bits", "n_hashes", "words"],
+        types=["long", "int", "array<long>"],
     ).write.mode("overwrite").parquet(path)
 
 

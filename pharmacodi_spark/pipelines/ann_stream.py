@@ -15,9 +15,9 @@ rebuilds; re-training per batch would silently re-shard the whole index)
   PARTITIONED BY ``centroid_id`` — probes prune to the probed cells'
   partitions, the IVF scale story;
 - **stream** (``foreachBatch``): centroids load once at stream definition
-  (bounded collect, the ANN-seed budget class), each micro-batch runs the
-  literal-argmin ``ivf_assign`` (zero-shuffle: centroid matrix rides as
-  plan literals) and MERGE-upserts into the index keyed by id — dynamic
+  (bounded collect, the ANN-seed budget class), each micro-batch runs
+  ``ivf_assign`` (zero-shuffle: the centroid matrix rides as a broadcast
+  one-row table) and MERGE-upserts into the index keyed by id — dynamic
   partition overwrite rewrites ONLY the cells the batch touched;
   re-delivered ids land in their (deterministic) cell again, so replay is
   idempotent.
@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.functions.scalar import local_df
 from pharmacodi_spark.io import merge_upsert
 from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.similarity import ivf_assign, train_ivf_centroids
@@ -57,9 +58,11 @@ def prepare_ann_index(
     cents = train_ivf_centroids(
         corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed
     )
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "centroid_id int, centroid array<double>",
+    local_df(
+        spark,
+        list(enumerate(cents)),
+        ["centroid_id", "centroid"],
+        types=["int", "array<double>"],
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(base_dir, "centroids")
     )
@@ -73,7 +76,7 @@ def prepare_ann_index(
 
 
 def load_centroids(spark: SparkSession, base_dir: str) -> list[list[float]]:
-    """Read the frozen quantizer back into the literal form ``ivf_assign``
+    """Read the frozen quantizer back into the centroid list ``ivf_assign``
     consumes (bounded collect: n_centroids rows)."""
     rows = spark.read.parquet(os.path.join(base_dir, "centroids")).collect()
     cents: list[list[float]] = [[] for _ in range(len(rows))]

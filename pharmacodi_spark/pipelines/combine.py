@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pharmacodi_spark.operators.joins import clamp
-from pharmacodi_spark.operators.keys import remap_fk_cascade, surrogate_key
+from pharmacodi_spark.operators.keys import (
+    remap_fk_cascade,
+    rename_and_key,
+    surrogate_key,
+)
 from pharmacodi_spark.operators.sets import union_all
 
 IC50_CLAMP = 1e54  # combine_pset_tables.py:173
@@ -32,23 +36,6 @@ def combine_dim(per_pset: list[DataFrame], name_col: str = "name") -> DataFrame:
     (:345-348)."""
     unioned = union_all(per_pset).dropDuplicates([name_col])
     return surrogate_key(unioned, order_by=[name_col])
-
-
-def keyed(dim: DataFrame, fk: str, name_col: str = "name") -> DataFrame:
-    """rename_and_key (combine_pset_tables.py:275-292): project (id, fk)."""
-    return dim.select("id", F.col(name_col).alias(fk))
-
-
-def combine_secondary(
-    table: DataFrame, fk_dims: dict[str, DataFrame], sort_and_id: bool = True
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """load_join_write (combine_pset_tables.py:183-210): FK-remap cascade
-    over the declared FKs, sort by the new FK columns, assign id."""
-    remapped, audits = remap_fk_cascade(table, fk_dims, on_miss="drop")
-    if sort_and_id:
-        fk_cols = [f"{fk}_id" for fk in fk_dims]
-        remapped = surrogate_key(remapped, order_by=fk_cols)
-    return remapped, audits
 
 
 def combine_experiment(
@@ -95,7 +82,7 @@ def keyed_or_self(dim: DataFrame, fk: str) -> DataFrame:
     """Accept either a raw dim (id, name) or a pre-keyed (id, fk) frame."""
     if fk in dim.columns:
         return dim
-    return keyed(dim, fk)
+    return rename_and_key(dim, fk)
 
 
 def remap_fact_to_experiment(

@@ -46,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.functions.scalar import local_df
 from pharmacodi_spark.io import write_batch_partition
 from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.similarity import (
@@ -67,9 +68,11 @@ def prepare_drift_reference(
     _proj, v, mu = top_component_projection(
         ref_vecs, iterations=iterations, vec_col=vec_col, id_col=id_col
     )
-    spark.createDataFrame(
+    local_df(
+        spark,
         [(p, int(m), int(x)) for p, (m, x) in enumerate(zip(mu, v))],
-        "pos int, mu long, v long",
+        ["pos", "mu", "v"],
+        types=["int", "long", "long"],
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(base_dir, "reference")
     )

@@ -35,6 +35,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from pharmacodi_spark.functions.scalar import local_df
 from pharmacodi_spark.io import merge_upsert
 from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.selection import dsir_score, dsir_train_weights
@@ -53,8 +54,8 @@ def prepare_selection_state(
     lam = dsir_train_weights(
         ref_docs, target, dim=dim, salt=salt, content_col=content_col
     )
-    spark.createDataFrame(
-        list(enumerate(lam)), "bucket int, lam long"
+    local_df(
+        spark, list(enumerate(lam)), ["bucket", "lam"], types=["int", "long"]
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(base_dir, "weights")
     )

@@ -98,7 +98,7 @@ _DRIVER_WINDOW_R11 = [
     # the mergeable-sketch family).
     # ------------------------------------------------------------------
     # r11 flagships: the broadcast-centroid-table IVF assign at k=200
-    # (past the literal ceiling) and the CJK decontamination E2E (the
+    # (centroids as a DataFrame) and the CJK decontamination E2E (the
     # tokens_col seam on the highest-stakes space-split op)
     "ivf_table_assign", "unicode_decontam",
     # r10-late registrations (the never-driver-verified tail):

@@ -2998,18 +2998,15 @@ def semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the argmin: cell_cosine_pairs consumes its input three
     # times (dim probe, triangle-guard cell counts, pair expansion) — see
     # the text_semantic_dedup twin for the r10 sf1 profile.
-    # seeded_cell_assign keeps driver traffic BOUNDED: k ≤ 128 collects
-    # the seed rows into the literal argmin (this oracle's recorded
-    # plan); past ~33k docs (k = n div 256 > 128) the seed frame feeds
-    # the broadcast-centroid-table path and nothing is collected (r11,
-    # VERDICT r10 item 1 — the k-literal ceiling and the growing seed
-    # collect close together)
+    # seeded_cell_assign feeds the seed frame to the broadcast-centroid-
+    # table path: nothing is collected to the driver at any k (r11,
+    # VERDICT r10 item 1)
     assigned = stage_barrier(
         seeded_cell_assign(qe, n_k, vec_col="qe", out_col="cid"),
         name="semdedup_assigned",
     )
     # pair scoring: cell_cosine_pairs picks the flattened straight-line-
-    # codegen dot at 64-dim (its high-dim zip_with path kicks in past 128)
+    # codegen dot at 64-dim (its Arrow GEMM path takes over past 128)
     pairs = cell_cosine_pairs(
         assigned,
         vec_col="qe",

@@ -4309,18 +4309,16 @@ def text_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf1 pair measured the fixed-16 version at 25× wall for 10× data,
     # exactly that quadratic term. At sf0.01 (the driver's correctness
     # scale) the expression still yields 16, so oracle rows are unchanged;
-    # sf0.1 gets 19 centroids. (Assignment dispatches physically on k:
-    # literal argmin to IVF_LITERAL_MAX=128, broadcast centroid TABLE
-    # past it — cell_cosine_pairs is unchanged either way.)
+    # sf0.1 gets 19 centroids. (Assignment is the broadcast centroid
+    # TABLE at every k, so its plan does not grow with n_k.)
     n_k = max(16, qe.count() // 256)
-    # seeded_cell_assign bounds driver traffic: k ≤ 128 collects the seed
-    # rows into the literal argmin (this oracle's recorded plan); past
-    # ~33k docs (k = n div 256 > 128) the seed frame feeds the
-    # broadcast-centroid-table path and NOTHING is collected (r11,
-    # VERDICT r10 item 1). Production runs trained_cell_assign instead
-    # (k-means|| seeds — cell balance bounds the quadratic within-cell
-    # term; r12, tests/test_trained_blocking.py); lowest-id seeding
-    # stays here because it is the SQL-reproducible oracle recipe.
+    # seeded_cell_assign feeds the seed frame to the broadcast-centroid-
+    # table path as a DataFrame: NOTHING is collected to the driver at
+    # any k (r11, VERDICT r10 item 1). Production runs
+    # trained_cell_assign instead (k-means|| seeds — cell balance bounds
+    # the quadratic within-cell term; r12, tests/test_trained_blocking.py);
+    # lowest-id seeding stays here because it is the SQL-reproducible
+    # oracle recipe.
     assigned = seeded_cell_assign(qe, n_k, vec_col="qe", out_col="cid")
     # the argmin is the E2E's CPU-heavy projection and
     # cell_cosine_pairs consumes its input THREE times (dim probe, the

@@ -1015,12 +1015,12 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Broadcast-centroid-table IVF assignment at k > IVF_LITERAL_MAX
-# (round 11: the driver-facing proof that the k-literal ceiling is gone)
+# Broadcast-centroid-table IVF assignment from a centroid DataFrame
+# (round 11: the driver-facing proof that assignment has no k ceiling)
 # ---------------------------------------------------------------------------
 
-_IVF_TBL_K = 200  # > IVF_LITERAL_MAX=128, so this query CANNOT take the
-# literal path — the driver row certifies the constant-plan table path
+_IVF_TBL_K = 200  # production-shaped k; the driver row certifies the
+# constant-plan table path fed by a never-collected centroid DataFrame
 
 
 def _ivf_table_sql() -> str:
@@ -1051,11 +1051,9 @@ def _ivf_table_sql() -> str:
 @q("ivf_table_assign", _ivf_table_sql())
 def ivf_table_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF assignment through the broadcast-centroid-TABLE path
-    (text/similarity.py::ivf_assign_table) at k=200 — deliberately past
-    IVF_LITERAL_MAX=128, so the plan-literal argmin CANNOT express it and
-    the driver row certifies the production path that removes the
-    VERDICT-r10 structural ceiling (k = n div 256 exceeds the k≈1e3
-    janino limit at ~256k docs). The centroid set is the lowest-200-id
+    (text/similarity.py::ivf_assign) at k=200 — the driver row certifies
+    the production path whose plan stays constant-size in k (k = n div
+    256 passes 1e3 at ~256k docs). The centroid set is the lowest-200-id
     quantized vectors passed as a k-row DATAFRAME — never collected to
     the driver: the 1-row array-of-structs collapse, the broadcast, and
     the constant-size argmin all happen engine-side.
@@ -1067,7 +1065,7 @@ def ivf_table_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's row_number-over-distance agree bit-for-bit; ties break
     to the lower cid via the (d2, cid) struct ordering in Spark and the
     ORDER BY distance, cid in SQL."""
-    from pharmacodi_spark.text.similarity import ivf_assign_table
+    from pharmacodi_spark.text.similarity import ivf_assign
 
     e = _t(spark, sf_dir, "embeddings")
     qe = e.select(
@@ -1079,7 +1077,7 @@ def ivf_table_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = qe.where(F.col("vec_id") < _IVF_TBL_K).select(
         F.col("vec_id").alias("cid"), F.col("qe").alias("cqe")
     )
-    assigned = ivf_assign_table(
+    assigned = ivf_assign(
         qe, cdf, vec_col="qe", out_col="cid", cid_col="cid", cvec_col="cqe"
     )
     return assigned.groupBy("cid").agg(
@@ -1678,7 +1676,7 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cell_pairs_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-cell cosine pairs through the Arrow GEMM tier
     (text/similarity.py::cell_cosine_pairs_arrow, r12) — the
-    wide-embedding path where the per-pair zip_with fold loses to one
+    path cell_cosine_pairs picks past the 128-dim flatten ceiling: one
     numpy matmul per triangle block. This driver row certifies the
     tier's EXACTNESS contract cross-engine: quantized integer-valued
     vectors make every GEMM dot and norm an exact float64 integer, and

@@ -79,14 +79,3 @@ def col_q(name: str) -> Column:
     (``.rownames``, ``.exp_id``, ``.features`` — e.g. read_pset.py slot
     tables): backtick-quote so Spark doesn't parse a struct path."""
     return F.col(f"`{name}`")
-
-
-def assert_columns(df: DataFrame, required: list[str], context: str = "") -> None:
-    """Hard error when a required column is missing.
-
-    Mirrors the reference's fail-fast guards (build_experiment_tables.py:
-    172-173, combine_pset_tables.py:203-205) — unlike its ``@logger.catch``
-    swallowing, we raise (SURVEY §7.3 item 7)."""
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        raise ValueError(f"missing required columns {missing} {context}; have {df.columns}")

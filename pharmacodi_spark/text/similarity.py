@@ -23,6 +23,7 @@ from pharmacodi_spark.functions.scalar import (
     double_array_lit,
     double_matrix_lit,
     int_array_lit,
+    local_df,
     long_matrix_lit,
 )
 from pharmacodi_spark.operators.partitioning import (
@@ -41,6 +42,14 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+
+
+def _sq_l2(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
 
 
 def _as_double(col: Column) -> Column:
@@ -96,8 +105,8 @@ def train_ivf_centroids(
     driver-resident by design, like any ANN index's coarse quantizer).
 
     At 100 TB: the training itself is distributed; only the centroid matrix
-    (a few MB) comes back to the driver, then ships to executors as plan
-    literals in ``ivf_assign``."""
+    (a few MB) comes back to the driver, then ships to executors as the
+    broadcast one-row centroid table of ``ivf_assign``."""
     from pyspark.ml.clustering import KMeans  # ships with pyspark
     from pyspark.ml.functions import array_to_vector
 
@@ -108,71 +117,7 @@ def train_ivf_centroids(
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
-#: above this many centroids :func:`ivf_assign` switches from plan-literal
-#: argmin expressions (whose tree grows O(k) and hits the janino /
-#: analyzer ceiling around k≈1e3) to the broadcast-centroid-TABLE path,
-#: whose plan is CONSTANT-size regardless of k. 128 keeps every existing
-#: oracle query (k=16–19 at driver scales) on the byte-identical literal
-#: plan while removing the scale ceiling for production k = n/256.
-IVF_LITERAL_MAX = 128
-
-
 def ivf_assign(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "centroid_id",
-    literal_max: int = IVF_LITERAL_MAX,
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (squared L2, ties → lower
-    centroid index). Two physical paths, same result:
-
-    - ``k <= literal_max``: ``array_min`` over an array of (distance,
-      index) struct EXPRESSIONS — native argmin, no UDF, no join; the
-      expression tree grows O(k·dim), which self-bounds at k≈1e3;
-    - larger k: delegate to :func:`ivf_assign_table` — the centroids ride
-      as a broadcast 1-row array-of-structs (DATA, not plan), so the plan
-      stays constant-size at any k (the 100 TB path: k = n div 256 passes
-      1e3 at ~256k docs, i.e. every production corpus).
-
-    At scale, write the table partitioned by ``out_col``: probes then
-    prune partitions.
-
-    Exactness note: with integer-valued inputs (e.g. quantized embeddings)
-    every distance is an exact integer-valued double (< 2⁵³), so the argmin
-    is engine-deterministic — the property the oracle query relies on —
-    and the two paths are bit-identical (pytest-proven literal≡table)."""
-    if len(centroids) > literal_max:
-        return ivf_assign_table(df, centroids, vec_col=vec_col, out_col=out_col)
-    # k·dim multiplies per row, scan-side: spread a single-split scan
-    # before the argmin (no-op at corpus scale / on pinned frames that
-    # already carry >= defaultParallelism partitions, r12 §2.5)
-    df = spread_small_scan(df)
-    v = _as_double(F.col(vec_col))
-    # r12 (guide §1.2): the centroid matrix is ONE folded literal and the
-    # per-centroid (d2, i) structs come from a transform index lambda —
-    # the previous shape built k separate CreateArray(dim)-literal
-    # subtrees (one py4j round trip per centroid, k·dim Literal nodes
-    # re-walked by every analyzer/optimizer rule on every plan build;
-    # measured ~0.9 s of pure driver time per ivf_assign call at k=8,
-    # dim=64 — kmeans builds THREE such plans per query). Math, tie-break
-    # (lower index wins the struct ordering) and results are identical.
-    mat = double_matrix_lit([[float(x) for x in c] for c in centroids])
-    pairs = F.transform(
-        mat,
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ).alias("d2"),
-            i.alias("i"),
-        ),
-    )
-    return df.withColumn(out_col, F.array_min(pairs)["i"])
-
-
-def ivf_assign_table(
     df: DataFrame,
     centroids: "list[list[float]] | DataFrame",
     vec_col: str = "embedding",
@@ -180,36 +125,38 @@ def ivf_assign_table(
     cid_col: str = "cid",
     cvec_col: str = "cvec",
 ) -> DataFrame:
-    """Nearest-centroid assignment with the centroid matrix as DATA: the
-    k-row centroid table collapses to ONE row carrying
-    ``array<struct<i,c>>``, broadcast-cross-joined onto the corpus, and
-    the argmin is ``array_min`` over a ``transform`` of that array column
-    — the plan has a FIXED handful of expression nodes no matter how
-    large k is (vs the O(k)-literal tree of :func:`ivf_assign`, which
-    janino caps at k≈1e3). Removes the VERDICT-r10 structural ceiling:
-    with the k = n div 256 blocking rule, production corpora need
-    k in the 1e4–1e6 range.
+    """Assign each vector to its nearest centroid (squared L2, ties → lower
+    centroid id) with the centroid matrix as DATA: the k-row centroid
+    table collapses to ONE row carrying ``array<struct<i,c>>``,
+    broadcast-cross-joined onto the corpus, and the argmin is
+    ``array_min`` over a ``transform`` of that array column — the plan
+    has a FIXED handful of expression nodes no matter how large k is
+    (with the k = n div 256 blocking rule, production corpora need k in
+    the 1e4–1e6 range).
 
-    ``centroids``: a driver list (``train_ivf_centroids`` output) or a
-    k-row DataFrame ``(cid int, cvec array)`` — e.g. centroids maintained
-    as a table by an index-build job, never collected to the driver.
+    ``centroids``: a driver list (``train_ivf_centroids`` output; cid =
+    list index) or a k-row DataFrame ``(cid int, cvec array)`` — e.g.
+    centroids maintained as a table by an index-build job, never
+    collected to the driver.
 
     Physical shape (100 TB): BroadcastNestedLoopJoin against a 1-row
     relation — one broadcast of k·dim doubles (index metadata, the same
     bytes every ANN engine ships to every search node), zero shuffle of
-    the corpus, all columns preserved, no groupBy/join-back. Ties break
-    to the lower centroid id via the (d2, cid) struct ordering, exactly
-    like the literal path.
+    the corpus, all columns preserved, no groupBy/join-back. At scale,
+    write the result partitioned by ``out_col``: probes then prune
+    partitions.
 
-    Measured tiers (r12, SCALING.md "IVF assignment tiers"): per-row
-    cost here is k·dim interpreted HOF multiplies, so wall grows ~8.5×
-    per decade of k (5.65s @ k=1e3 → 48.1s @ k=1e4 on 20k×32-dim);
-    :func:`ivf_assign_arrow` TIES this path at k=128 and wins ~9× from
-    k≈1e3 — prefer the GEMM tier whenever its integer-exactness
-    contract (or a don't-care on last-ULP float ties) applies; this
-    path's niche is plan-native assignment (no Python workers) with a
-    never-collected centroid DataFrame at moderate k."""
-    spark = df.sparkSession
+    Exactness note: with integer-valued inputs (e.g. quantized embeddings)
+    every distance is an exact integer-valued double (< 2⁵³), so the argmin
+    is engine-deterministic — the property the oracle queries rely on.
+
+    Measured (r12, SCALING.md "IVF assignment tiers"): per-row cost is
+    k·dim interpreted HOF multiplies, so wall grows ~8.5× per decade of
+    k (5.65s @ k=1e3 → 48.1s @ k=1e4 on 20k×32-dim);
+    :func:`ivf_assign_arrow` ties this path at k=128 and wins ~9× from
+    k≈1e3 — call the GEMM tier whenever its integer-exactness contract
+    (or a don't-care on last-ULP float ties) applies; this path needs
+    no Python workers and accepts a never-collected centroid DataFrame."""
     if isinstance(centroids, DataFrame):
         cdf = centroids.select(
             F.col(cid_col).cast("int").alias("__i"),
@@ -219,34 +166,28 @@ def ivf_assign_table(
         # yield array_min over an empty array = silent NULL out_col, which
         # downstream join-backs would silently DROP instead of failing.
         if cdf.limit(1).count() == 0:
-            raise ValueError(
-                "ivf_assign_table: centroid DataFrame is empty"
-            )
+            raise ValueError("ivf_assign: centroid DataFrame is empty")
+        one = cdf.agg(
+            F.collect_list(F.struct("__i", "__c")).alias("__cents")
+        )
     else:
         if not centroids:
-            raise ValueError("ivf_assign_table: centroid list is empty")
-        from pharmacodi_spark.functions.scalar import local_df
-
-        cdf = local_df(
-            spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            ["__i", "__c"],
-            types=["int", "array<double>"],
+            raise ValueError("ivf_assign: centroid list is empty")
+        # a driver list is already the one row: a one-row VALUES relation
+        # holding the matrix, numbered by the transform index — no
+        # aggregate, no shuffle
+        mat = [[float(x) for x in c] for c in centroids]
+        one = local_df(
+            df.sparkSession, [(mat,)], ["__m"], types=["array<array<double>>"]
+        ).select(
+            F.transform(
+                "__m", lambda c, i: F.struct(i.alias("__i"), c.alias("__c"))
+            ).alias("__cents")
         )
-    one = cdf.agg(
-        F.collect_list(F.struct("__i", "__c")).alias("__cents")
-    )
     v = _as_double(F.col(vec_col))
     pairs = F.transform(
         F.col("__cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(v, c["__c"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ).alias("d2"),
-            c["__i"].alias("i"),
-        ),
+        lambda c: F.struct(_sq_l2(v, c["__c"]).alias("d2"), c["__i"].alias("i")),
     )
     # k·dim multiplies per row, scan-side: spread a single-split scan
     # before the argmin (no-op at corpus scale, r12 §2.5)
@@ -263,42 +204,18 @@ def seeded_cell_assign(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     out_col: str = "centroid_id",
-    literal_max: int = IVF_LITERAL_MAX,
 ) -> DataFrame:
-    """Lowest-id-seeded cell assignment with BOUNDED driver traffic —
-    the blocking stage of the semantic-dedup E2Es (seeds = rows with
-    ``id < n_k``, cid = seed id; SQL-reproducible, hence oracle-gated):
+    """Lowest-id-seeded cell assignment with NO driver traffic — the
+    blocking stage of the semantic-dedup E2Es (seeds = rows with
+    ``id < n_k``, cid = seed id; SQL-reproducible, hence oracle-gated).
+    The seed frame feeds :func:`ivf_assign` as a centroid DataFrame, so
+    nothing returns to the driver at any ``n_k``.
 
-    - ``n_k <= literal_max``: collect the ≤128 seed rows (bounded index
-      metadata) into the plan-literal argmin — the byte-identical plan
-      every existing driver oracle was recorded against;
-    - larger ``n_k`` (the k = n div 256 rule passes 128 at ~33k docs):
-      the seed frame feeds :func:`ivf_assign_table` directly — NOTHING
-      returns to the driver, closing the VERDICT-r10 "seed collect grows
-      with n" defect alongside the plan-size ceiling.
-
-    Both paths emit cid = seed id (contiguity checked loudly in the
-    literal branch, where cid is a list INDEX; the table branch carries
-    the id itself, so the check is what keeps the paths equivalent)."""
+    cid is the seed id itself, so the ids must run contiguously from 0:
+    a gapped or short id space raises instead of silently proceeding
+    with fewer cells. One count on the id-filtered seed frame —
+    engine-side, never collected."""
     seeds = df.where(F.col(id_col) < n_k)
-    if n_k <= literal_max:
-        rows = seeds.select(id_col, vec_col).collect()
-        if len(rows) != n_k:
-            raise ValueError(
-                f"seeded_cell_assign needs ids contiguous from 0: expected "
-                f"{n_k} seed rows with {id_col} < {n_k}, found {len(rows)}"
-            )
-        cents = [
-            list(r[vec_col]) for r in sorted(rows, key=lambda r: r[id_col])
-        ]
-        return ivf_assign(
-            df, cents, vec_col=vec_col, out_col=out_col,
-            literal_max=literal_max,
-        )
-    # Same contiguity contract as the literal branch (ADVICE r11): a
-    # gapped or short id space must raise on BOTH sides of the dispatch
-    # threshold, not silently proceed with fewer cells past it. One
-    # count on the id-filtered seed frame — engine-side, never collected.
     n_seeds = seeds.count()
     if n_seeds != n_k:
         raise ValueError(
@@ -309,7 +226,7 @@ def seeded_cell_assign(
         F.col(id_col).cast("int").alias("__cid"),
         F.col(vec_col).alias("__cvec"),
     )
-    return ivf_assign_table(
+    return ivf_assign(
         df, cdf, vec_col=vec_col, out_col=out_col,
         cid_col="__cid", cvec_col="__cvec",
     )
@@ -326,7 +243,7 @@ def trained_cell_assign(
     """The PRODUCTION blocking recipe for semantic dedup (r12, VERDICT
     r11 item 4): k-means||-trained centroids (:func:`train_ivf_centroids`)
     feeding the constant-plan broadcast-centroid-table assignment
-    (:func:`ivf_assign_table`). Drop-in for :func:`seeded_cell_assign`
+    (:func:`ivf_assign`). Drop-in for :func:`seeded_cell_assign`
     in the semantic-dedup cascade (assign → cell_cosine_pairs →
     near_dup_droplist) — the lowest-id-seed path stays the ORACLE recipe
     (SQL-reproducible by construction); this one is what you run at
@@ -349,7 +266,7 @@ def trained_cell_assign(
     cents = train_ivf_centroids(
         df, n_centroids=n_k, vec_col=vec_col, seed=seed, max_iter=max_iter
     )
-    return ivf_assign_table(df, cents, vec_col=vec_col, out_col=out_col)
+    return ivf_assign(df, cents, vec_col=vec_col, out_col=out_col)
 
 
 def ivf_assign_arrow(
@@ -359,20 +276,21 @@ def ivf_assign_arrow(
     out_col: str = "centroid_id",
 ) -> DataFrame:
     """Nearest-centroid assignment as one vectorized GEMM per Arrow batch
-    — the tier above :func:`ivf_assign_table` wherever evaluating
-    k·dim interpreted higher-order-function multiplies per ROW loses to
-    BLAS — measured r12 (SCALING.md): that is already k ≈ 1e3 (9×
-    faster), with a tie at k=128; the table path keeps only the
-    no-Python-workers / never-collected-centroid-frame niches. The centroid matrix ships once per executor via
-    ``SparkContext.broadcast`` (torrent protocol, NOT per-task
-    serialization) and each batch computes
+    — the caller-picked alternative to :func:`ivf_assign` wherever
+    evaluating k·dim interpreted higher-order-function multiplies per ROW
+    loses to BLAS — measured r12 (SCALING.md): that is already k ≈ 1e3
+    (9× faster), with a tie at k=128; :func:`ivf_assign` keeps the
+    no-Python-workers / never-collected-centroid-frame niches. Nothing
+    dispatches here automatically. The centroid matrix ships once per
+    executor via ``SparkContext.broadcast`` (torrent protocol, NOT
+    per-task serialization) and each batch computes
     ``argmin_k(|c_k|² − 2·X·Cᵀ)`` — dropping the per-row ``|x|²`` term,
     which is constant within a row and cannot change the argmin.
 
     Exactness contract: for INTEGER-valued vectors/centroids with
     ``dim · max|x|² < 2⁵³`` every product and partial sum in the GEMM is
-    an exact float64 integer, so the result is bit-identical to the
-    literal/table paths (pytest-proven); ``np.argmin`` takes the first
+    an exact float64 integer, so the result is bit-identical to
+    :func:`ivf_assign` (pytest-proven); ``np.argmin`` takes the first
     minimum = lowest centroid id, matching the (d2, cid) struct
     ordering. Float centroids may differ in the last ULP across paths —
     quantize first (int8_quantize / the qe convention) when
@@ -415,7 +333,9 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF probe: score only vectors assigned to the ``nprobe`` centroids
     nearest the query (picked driver-side from the index metadata — exact
-    integer/float math over n_centroids rows). The centroid filter is a
+    integer/float math over n_centroids rows). The corpus side is one
+    :func:`ivf_assign` pass against the broadcast centroid table, the
+    same constant-size plan at every k. The centroid filter is a
     pushable predicate → partition pruning when the corpus is stored
     partitioned by centroid_id. ``metric``: "cosine" (float) or "dot"
     (exact for integer-valued vectors)."""
@@ -435,14 +355,6 @@ def ivf_topk(
             .limit(k)
         )
     return cosine_topk(cand, query, k, vec_col, id_col)
-
-
-def _sq_l2(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
 
 
 def train_pq_codebooks(
@@ -619,15 +531,13 @@ def lsh_bucket_topk(
     return cosine_topk(candidates, query, k, vec_col, id_col)
 
 
-#: auto-dispatch floor for the Arrow GEMM pair-scoring tier: vectors at
-#: least this wide route to cell_cosine_pairs_arrow. Set just above the
-#: flatten ceiling (128) so auto NEVER picks the zip_with fold — the
-#: fold pays dim interpreted lambda steps PER PAIR and loses to BLAS
-#: everywhere measured (SCALING.md r12: 2.1x at dim 256, 3.4x at 512 on
-#: 780k candidate dots), while the flattened <=128 path keeps the hot
-#: loop whole-stage codegen and JVM-only (no Python workers). The fold
-#: remains reachable via method="codegen" for >128-dim.
-CELL_PAIRS_ARROW_MIN_DIM = 129
+#: widest vector :func:`cell_cosine_pairs` flattens into JVM codegen;
+#: wider vectors score in :func:`cell_cosine_pairs_arrow`. Janino-compiled
+#: straight-line dots degrade (and eventually fall back to interpreted) in
+#: the thousands of operators (VERDICT r4), while BLAS beat the per-pair
+#: zip_with fold at every width measured (SCALING.md r12: 2.1x at dim 256,
+#: 3.4x at 512 on 780k candidate dots).
+CELL_PAIRS_FLATTEN_MAX_DIM = 128
 
 
 def cell_cosine_pairs(
@@ -637,48 +547,29 @@ def cell_cosine_pairs(
     cell_col: str = "centroid_id",
     threshold: float = 0.8,
     max_cell_size: int | None = None,
-    flatten_max_dim: int = 128,
-    method: str | None = None,
 ) -> DataFrame:
     """Within-cell cosine-similar pairs (doc_a < doc_b, cosine >= threshold)
     — the scoring stage of SemDeDup-style blocking (assign cells with
     :func:`ivf_assign`, then only same-cell pairs are compared).
 
-    Three physical paths for the hot loop (pairs x dim multiplies), picked
+    Two physical paths for the hot loop (pairs x dim multiplies), picked
     by the vector width:
 
-    - dim <= ``flatten_max_dim``: the vector is flattened to scalar columns
-      so the dot product is straight-line whole-stage codegen (~2x over the
-      per-element path at 64-dim);
-    - dim >= ``CELL_PAIRS_ARROW_MIN_DIM`` (auto): one numpy GEMM per cell
-      block (:func:`cell_cosine_pairs_arrow`) — measured 2.1x/3.4x over
-      the fold at dim 256/512 (SCALING.md r12);
-    - ``method="codegen"`` above the flatten ceiling: stay on the array
-      column with ``zip_with`` + ``aggregate`` — janino-compiled
-      straight-line expressions degrade (and eventually fail to compile /
-      fall back to interpreted) in the thousands of operators, so 1k+-dim
-      embeddings must NOT be flattened (VERDICT r4). Auto no longer picks
-      this fold (it loses to BLAS everywhere measured); it remains the
-      JVM-only fallback when Python workers are unavailable.
+    - dim <= ``CELL_PAIRS_FLATTEN_MAX_DIM``: the vector is flattened to
+      scalar columns so the dot product is straight-line whole-stage
+      codegen — JVM-only, no Python workers;
+    - wider: one numpy GEMM per cell block
+      (:func:`cell_cosine_pairs_arrow`). The Arrow path is bit-identical
+      for integer-valued vectors (the ivf_assign_arrow exactness
+      contract) and may differ in the last ULP for float inputs —
+      quantize first when cross-engine determinism matters.
 
     ``max_cell_size`` arms the exact triangle-block hot-cell guard
     (text/dedup.py::triangle_blocks): same pair set, per-task work bounded
     under cell skew. Both paths and both guard settings produce identical
     results; only the physical plan differs.
-
-    ``method``: None (auto) / "codegen" / "arrow". Auto routes vectors at
-    least ``CELL_PAIRS_ARROW_MIN_DIM`` wide to
-    :func:`cell_cosine_pairs_arrow` (one numpy GEMM per cell block instead
-    of a dim-step interpreted fold per pair); narrower vectors keep the
-    JVM codegen paths above. The Arrow tier is bit-identical for
-    integer-valued vectors (the ivf_assign_arrow exactness contract) and
-    may differ in the last ULP for float inputs — quantize first when
-    cross-engine determinism matters.
     """
     from pharmacodi_spark.text.dedup import triangle_blocks, triangle_pair_cond
-
-    if method not in (None, "codegen", "arrow"):
-        raise ValueError(f"method must be None/'codegen'/'arrow', got {method!r}")
 
     dim = df.select(F.size(F.col(vec_col)).alias("d")).first()
     if dim is None:
@@ -689,9 +580,7 @@ def cell_cosine_pairs(
             )
         )
     dim = dim.d
-    if method == "arrow" or (
-        method is None and dim >= CELL_PAIRS_ARROW_MIN_DIM
-    ):
+    if dim > CELL_PAIRS_FLATTEN_MAX_DIM:
         return cell_cosine_pairs_arrow(
             df,
             vec_col=vec_col,
@@ -701,7 +590,7 @@ def cell_cosine_pairs(
             max_cell_size=max_cell_size,
         )
     v = _as_double(F.col(vec_col))
-    withn = df.select(
+    base = df.select(
         F.col(id_col),
         F.col(cell_col),
         v.alias("__v"),
@@ -711,17 +600,12 @@ def cell_cosine_pairs(
     # default — raises DIVIDE_BY_ZERO on the pair expression; legacy
     # mode yields NULL and silently drops). Both tiers share this rule,
     # so the arrow path is equivalent row-for-row (r12).
-    ).where(F.col("__n2") > 0)
-    flatten = dim <= flatten_max_dim
-    if flatten:
-        base = withn.select(
-            id_col,
-            cell_col,
-            "__n2",
-            *[F.element_at("__v", i + 1).alias(f"__x{i}") for i in range(dim)],
-        )
-    else:
-        base = withn
+    ).where(F.col("__n2") > 0).select(
+        id_col,
+        cell_col,
+        "__n2",
+        *[F.element_at("__v", i + 1).alias(f"__x{i}") for i in range(dim)],
+    )
     if max_cell_size is not None:
         blk = triangle_blocks(base, [cell_col], id_col, max_cell_size)
         # pin the pair-join exchange to defaultParallelism: AQE coalesces
@@ -737,17 +621,10 @@ def cell_cosine_pairs(
             F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
         )
     a, b = blk.alias("a"), blk.alias("b")
-    if flatten:
-        dot = None
-        for i in range(dim):
-            term = F.col(f"a.__x{i}") * F.col(f"b.__x{i}")
-            dot = term if dot is None else dot + term
-    else:
-        dot = F.aggregate(
-            F.zip_with(F.col("a.__v"), F.col("b.__v"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    dot = None
+    for i in range(dim):
+        term = F.col(f"a.__x{i}") * F.col(f"b.__x{i}")
+        dot = term if dot is None else dot + term
     return (
         a.join(b, cond)
         .where(dot / F.sqrt(F.col("a.__n2") * F.col("b.__n2")) >= threshold)
@@ -768,12 +645,12 @@ def cell_cosine_pairs_arrow(
     slab_rows: int = 1024,
 ) -> DataFrame:
     """Within-cell cosine pairs scored as ONE numpy GEMM per cell block —
-    the wide-embedding tier of :func:`cell_cosine_pairs` (auto-dispatched
-    past ``CELL_PAIRS_ARROW_MIN_DIM``). The zip_with fold pays ``dim``
-    interpreted lambda steps per candidate PAIR; at 1k-dim embeddings
-    that is the semantic-dedup floor (ROADMAP r11: 12 s for 6.4M candidate
-    dots at sf1). Here each cell block becomes one ``applyInPandas`` group
-    and all its pair dots are a single BLAS matmul.
+    the wide-embedding path of :func:`cell_cosine_pairs` (picked for
+    vectors wider than ``CELL_PAIRS_FLATTEN_MAX_DIM``). Each cell block
+    becomes one ``applyInPandas`` group and all its pair dots are a
+    single BLAS matmul, where a per-pair JVM fold would pay ``dim``
+    interpreted lambda steps per candidate PAIR (ROADMAP r11: 12 s for
+    6.4M candidate dots at sf1).
 
     Same pair set as the join path, both guard settings:
 
@@ -793,7 +670,7 @@ def cell_cosine_pairs_arrow(
     ``dot / sqrt(n2_a · n2_b) >= threshold`` with the norm product
     multiplied in float64 BEFORE the sqrt — so for INTEGER-valued vectors
     with ``dim · max|x|² < 2⁵³`` every dot and norm is an exact float64
-    integer and the emitted pairs are bit-identical to the codegen paths
+    integer and the emitted pairs are bit-identical to the codegen path
     (pytest-proven). Float inputs may differ in the last ULP across paths
     (GEMM reassociates the sum); quantize first (int8_quantize / the qe
     convention) when cross-engine determinism matters.
@@ -1404,26 +1281,10 @@ def kmeans_lloyd_int(
             for i in range(k)
         ]
     assigned = ivf_assign(df, cents, vec_col=vec_col, out_col=out_col)
-    if k <= IVF_LITERAL_MAX:
-        # r12: one folded matrix literal (was k·dim F.lit py4j calls —
-        # measured ~1.6 s of pure driver plan-build time at k=8, dim=64)
-        cent_arr = long_matrix_lit(cents)
-        chosen = F.element_at(cent_arr, (F.col(out_col) + 1).cast("int"))
-    else:
-        # large k: the k·dim literal array is the same O(k) plan tree
-        # ivf_assign_table exists to avoid — ship the centroids as a
-        # broadcast k-row frame and join on the assignment instead
-        # (ivf_assign already dispatched to the table path above this k)
-        from pharmacodi_spark.functions.scalar import local_df
-
-        cdf = local_df(
-            df.sparkSession,
-            [(i, [int(x) for x in c]) for i, c in enumerate(cents)],
-            [out_col, "__cqe"],
-            types=["int", "array<long>"],
-        )
-        assigned = assigned.join(F.broadcast(cdf), out_col)
-        chosen = F.col("__cqe")
+    # long_matrix_lit folds the k×dim matrix into ONE plan node at every k
+    chosen = F.element_at(
+        long_matrix_lit(cents), (F.col(out_col) + 1).cast("int")
+    )
     d2 = F.aggregate(
         F.zip_with(
             F.transform(F.col(vec_col), lambda x: x.cast("long")),
@@ -1433,7 +1294,7 @@ def kmeans_lloyd_int(
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    return assigned.withColumn("d2", d2).drop("__cqe"), cents
+    return assigned.withColumn("d2", d2), cents
 
 
 def top_component_projection(

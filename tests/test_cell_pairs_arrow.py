@@ -1,15 +1,15 @@
-"""Arrow GEMM pair-scoring tier (r12): cell_cosine_pairs_arrow must emit
-the EXACT pair set of the codegen join paths — including under the
-triangle-block hot-cell guard, where off-diagonal blocks score only
-cross-subgroup pairs (the diagonal rule) — and the auto-dispatch must
-route dim ≥ CELL_PAIRS_ARROW_MIN_DIM to it and keep narrow vectors on
-the JVM paths."""
+"""Arrow GEMM pair-scoring path (r12): cell_cosine_pairs_arrow must emit
+the EXACT pair set of the flattened codegen join path — including under
+the triangle-block hot-cell guard, where off-diagonal blocks score only
+cross-subgroup pairs (the diagonal rule) — and cell_cosine_pairs must
+route dim > CELL_PAIRS_FLATTEN_MAX_DIM to it and keep narrow vectors on
+the JVM path."""
 
 import numpy as np
 import pytest
 
 from pharmacodi_spark.text.similarity import (
-    CELL_PAIRS_ARROW_MIN_DIM,
+    CELL_PAIRS_FLATTEN_MAX_DIM,
     cell_cosine_pairs,
     cell_cosine_pairs_arrow,
 )
@@ -67,7 +67,6 @@ def test_arrow_matches_codegen_and_brute_force(spark):
             id_col="vec_id",
             cell_col="cell",
             threshold=0.8,
-            method="codegen",
         ).collect()
     }
     assert codegen == want
@@ -85,30 +84,21 @@ def test_arrow_triangle_guard_exact_and_slabbed(spark):
 
 
 def test_auto_dispatch_by_width(spark):
-    """dim ≥ CELL_PAIRS_ARROW_MIN_DIM routes to the Arrow tier
-    (FlatMapGroupsInPandas in the physical plan); narrow vectors stay on
-    the JVM join paths (no Python node)."""
-    assert CELL_PAIRS_ARROW_MIN_DIM == 129  # just above the flatten ceiling
-    df, _ = _fixture(spark, dim=8, n=12)
-    narrow = cell_cosine_pairs(
-        df, vec_col="embedding", id_col="vec_id", cell_col="cell"
-    )
-    nplan = narrow._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in nplan
+    """dim > CELL_PAIRS_FLATTEN_MAX_DIM routes to the Arrow path
+    (FlatMapGroupsInPandas in the physical plan); vectors up to the
+    ceiling stay on the flattened JVM join path (no Python node)."""
+    assert CELL_PAIRS_FLATTEN_MAX_DIM == 128
 
-    wide, _ = _fixture(spark, dim=CELL_PAIRS_ARROW_MIN_DIM, n=12)
-    routed = cell_cosine_pairs(
-        wide, vec_col="embedding", id_col="vec_id", cell_col="cell"
-    )
-    wplan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in wplan
+    def plan(dim):
+        df, _ = _fixture(spark, dim=dim, n=12)
+        out = cell_cosine_pairs(
+            df, vec_col="embedding", id_col="vec_id", cell_col="cell"
+        )
+        return out._jdf.queryExecution().executedPlan().toString()
 
-    forced = cell_cosine_pairs(
-        df, vec_col="embedding", id_col="vec_id", cell_col="cell",
-        method="arrow",
-    )
-    fplan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in fplan
+    assert "FlatMapGroupsInPandas" not in plan(8)
+    assert "FlatMapGroupsInPandas" not in plan(CELL_PAIRS_FLATTEN_MAX_DIM)
+    assert "FlatMapGroupsInPandas" in plan(CELL_PAIRS_FLATTEN_MAX_DIM + 1)
 
 
 def test_arrow_empty_result_schema(spark):
@@ -123,11 +113,11 @@ def test_arrow_empty_result_schema(spark):
 
 
 def test_zero_norm_vectors_excluded_identically(spark):
-    """Cosine is undefined for zero vectors: both tiers must EXCLUDE
+    """Cosine is undefined for zero vectors: both paths must EXCLUDE
     them explicitly (r12) — under Spark 4's default ANSI session the
     unguarded pair expression would raise DIVIDE_BY_ZERO on the codegen
     path while numpy silently NaN-drops; the shared n2 > 0 rule makes
-    the tiers equivalent and ANSI-safe."""
+    the paths equivalent and ANSI-safe."""
     df, want = _fixture(spark, n=24)
     dim = 16
     zeros = spark.createDataFrame(
@@ -135,42 +125,40 @@ def test_zero_norm_vectors_excluded_identically(spark):
         "vec_id long, cell int, embedding array<double>",
     )
     noisy = df.unionByName(zeros)
-    for kw in ({"method": "codegen"}, {"method": "arrow"},
-               {"method": "arrow", "max_cell_size": 8}):
-        got = {
-            (r.doc_a, r.doc_b)
-            for r in cell_cosine_pairs(
-                noisy, vec_col="embedding", id_col="vec_id",
-                cell_col="cell", threshold=0.8, **kw,
-            ).collect()
-        }
-        assert got == want, kw
+    for fn in (cell_cosine_pairs, cell_cosine_pairs_arrow):
+        for kw in ({}, {"max_cell_size": 8}):
+            got = {
+                (r.doc_a, r.doc_b)
+                for r in fn(
+                    noisy, vec_col="embedding", id_col="vec_id",
+                    cell_col="cell", threshold=0.8, **kw,
+                ).collect()
+            }
+            assert got == want, (fn.__name__, kw)
 
 
 def test_method_validation(spark):
+    # the path is picked by width alone: there is no method= to pass
     df, _ = _fixture(spark, n=4)
-    with pytest.raises(ValueError, match="method"):
+    with pytest.raises(TypeError, match="method"):
         cell_cosine_pairs(
             df, vec_col="embedding", id_col="vec_id", cell_col="cell",
-            method="gemm",
+            method="arrow",
         )
 
 
 @pytest.mark.slow
 def test_semantic_dedup_e2e_path_invariant_at_wide_dim(spark):
     """The full semantic-dedup cascade (seeded blocking → pair scoring →
-    connected components → droplist) at dim 300 — where the auto
-    dispatch routes scoring to the Arrow tier — must produce the
-    IDENTICAL droplist as the forced-codegen path: the tier swap is a
-    physical decision, invisible end-to-end."""
+    connected components → droplist) at dim 300 — where scoring routes
+    to the Arrow path — must produce the IDENTICAL droplist as one built
+    from the NumPy brute-force within-cell pair set: the path choice is
+    physical, invisible end-to-end."""
     from pharmacodi_spark.text.clusters import near_dup_droplist
-    from pharmacodi_spark.text.similarity import (
-        cell_cosine_pairs,
-        seeded_cell_assign,
-    )
+    from pharmacodi_spark.text.similarity import seeded_cell_assign
 
     rng = np.random.default_rng(11)
-    dim, n = 300, 200
+    dim, n, thr = 300, 200, 0.40
     protos = rng.integers(-15, 15, size=(8, dim))
     vecs = [
         (protos[i % 8] + rng.integers(-1, 2, size=dim)).tolist()
@@ -181,17 +169,18 @@ def test_semantic_dedup_e2e_path_invariant_at_wide_dim(spark):
         "vec_id long, qe array<double>",
     )
     assigned = seeded_cell_assign(df, 4, vec_col="qe", out_col="cid")
+    cid = {r.vec_id: r.cid for r in assigned.select("vec_id", "cid").collect()}
+    a = np.array(vecs, dtype=np.float64)
+    norm = np.sqrt((a * a).sum(axis=1))
+    cos = (a @ a.T) / np.outer(norm, norm)
+    brute = [
+        (i, j)
+        for i in range(n)
+        for j in range(i + 1, n)
+        if cid[i] == cid[j] and cos[i, j] >= thr
+    ]
 
-    def droplist(method):
-        pairs = cell_cosine_pairs(
-            assigned,
-            vec_col="qe",
-            id_col="vec_id",
-            cell_col="cid",
-            threshold=0.40,
-            max_cell_size=64,
-            method=method,
-        )
+    def droplist(pairs):
         return {
             (r.vec_id, r.component, r.keep)
             for r in near_dup_droplist(
@@ -199,7 +188,18 @@ def test_semantic_dedup_e2e_path_invariant_at_wide_dim(spark):
             ).collect()
         }
 
-    auto = droplist(None)  # dim 300 ≥ 256 → arrow tier
-    codegen = droplist("codegen")
-    assert auto == codegen
-    assert any(not keep for _, _, keep in auto)  # real dups were dropped
+    arrow = droplist(
+        cell_cosine_pairs(
+            assigned,
+            vec_col="qe",
+            id_col="vec_id",
+            cell_col="cid",
+            threshold=thr,
+            max_cell_size=64,
+        )
+    )
+    expect = droplist(
+        spark.createDataFrame(brute, "doc_a long, doc_b long")
+    )
+    assert arrow == expect
+    assert any(not keep for _, _, keep in arrow)  # real dups were dropped

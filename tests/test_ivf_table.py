@@ -1,8 +1,7 @@
 """Broadcast-centroid-table IVF assignment (text/similarity.py::
-ivf_assign_table / ivf_assign_arrow): literal ≡ table ≡ arrow
-equivalence on integer-quantized vectors, the constant-plan-size claim
-that removes the k≈1e3 literal ceiling (VERDICT r10 item 1), the
-k > literal_max dispatch inside ivf_assign, the DataFrame-centroids
+ivf_assign / ivf_assign_arrow): ivf_assign ≡ arrow ≡ Python replay on
+integer-quantized vectors, the constant-plan-size claim (no k ceiling,
+VERDICT r10 item 1), the table path at every k, the DataFrame-centroids
 input path, and tie-breaking to the lower centroid id on every path."""
 
 from __future__ import annotations
@@ -13,12 +12,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.text.similarity import (
-    IVF_LITERAL_MAX,
-    ivf_assign,
-    ivf_assign_arrow,
-    ivf_assign_table,
-)
+from pharmacodi_spark.text.similarity import ivf_assign, ivf_assign_arrow
 
 
 def _vectors(spark, n, dim, seed, lo=-1000, hi=1000):
@@ -42,28 +36,21 @@ def _py_assign(rows, cents):
     return out
 
 
+def _cids(out):
+    return {r["vec_id"]: r["cid"] for r in out.collect()}
+
+
 def test_literal_table_arrow_agree_k16(spark):
     rows, df = _vectors(spark, n=240, dim=16, seed=3)
     cents = [v for _, v in rows[:16]]
-    lit = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign(df, cents, out_col="cid").collect()
-    }
-    tab = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign_table(df, cents, out_col="cid").collect()
-    }
-    arw = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign_arrow(df, cents, out_col="cid").collect()
-    }
-    assert lit == tab == arw == _py_assign(rows, cents)
+    tab = _cids(ivf_assign(df, cents, out_col="cid"))
+    arw = _cids(ivf_assign_arrow(df, cents, out_col="cid"))
+    assert tab == arw == _py_assign(rows, cents)
 
 
 def test_table_arrow_agree_k2048(spark):
-    # the scale the literal path CANNOT express (k·dim expression nodes
-    # blow the janino/analyzer ceiling past k~1e3): table and arrow agree
-    # with each other and with the python replay
+    # production-shaped k: ivf_assign and arrow agree with each other
+    # and with the python replay
     rows, df = _vectors(spark, n=300, dim=8, seed=11)
     rng = random.Random(12)
     cents = [
@@ -71,22 +58,13 @@ def test_table_arrow_agree_k2048(spark):
         for _ in range(2048)
     ]
     expect = _py_assign(rows, cents)
-    tab = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign_table(df, cents, out_col="cid").collect()
-    }
-    arw = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign_arrow(df, cents, out_col="cid").collect()
-    }
-    assert tab == expect
-    assert arw == expect
+    assert _cids(ivf_assign(df, cents, out_col="cid")) == expect
+    assert _cids(ivf_assign_arrow(df, cents, out_col="cid")) == expect
 
 
 def test_table_plan_size_constant_in_k(spark):
-    # the whole point: the table plan carries the centroids as DATA, so
-    # its expression tree does not grow with k (the literal plan grows
-    # O(k·dim) and is the documented ceiling)
+    # the whole point: the plan carries the centroids as DATA, so its
+    # expression tree does not grow with k
     rows, df = _vectors(spark, n=20, dim=8, seed=5)
     rng = random.Random(6)
 
@@ -96,7 +74,7 @@ def test_table_plan_size_constant_in_k(spark):
         ]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            ivf_assign_table(df, cents, out_col="cid").explain(True)
+            ivf_assign(df, cents, out_col="cid").explain(True)
         return len(buf.getvalue())
 
     small, big = plan_len(16), plan_len(1024)
@@ -104,20 +82,21 @@ def test_table_plan_size_constant_in_k(spark):
 
 
 def test_ivf_assign_dispatches_above_literal_max(spark):
+    # one path at every k: small and large centroid sets both ride the
+    # broadcast 1-row centroid table
     rows, df = _vectors(spark, n=40, dim=4, seed=7)
     rng = random.Random(8)
-    k = IVF_LITERAL_MAX + 8
-    cents = [
-        [float(rng.randint(-50, 50)) for _ in range(4)] for _ in range(k)
-    ]
-    out = ivf_assign(df, cents, out_col="cid")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastNestedLoopJoin" in plan, "did not take the table path"
-    got = {r["vec_id"]: r["cid"] for r in out.collect()}
-    assert got == _py_assign(rows, cents)
+    for k in (4, 136):
+        cents = [
+            [float(rng.randint(-50, 50)) for _ in range(4)] for _ in range(k)
+        ]
+        out = ivf_assign(df, cents, out_col="cid")
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain("formatted")
+        plan = buf.getvalue()
+        assert "BroadcastNestedLoopJoin" in plan, k
+        assert _cids(out) == _py_assign(rows, cents), k
 
 
 def test_table_accepts_centroid_dataframe(spark):
@@ -128,11 +107,7 @@ def test_table_accepts_centroid_dataframe(spark):
     cdf = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], "cid int, cvec array<double>"
     )
-    via_df = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign_table(df, cdf, out_col="cid").collect()
-    }
-    assert via_df == _py_assign(rows, cents)
+    assert _cids(ivf_assign(df, cdf, out_col="cid")) == _py_assign(rows, cents)
 
 
 def test_all_paths_tie_break_to_lower_cid(spark):
@@ -141,42 +116,35 @@ def test_all_paths_tie_break_to_lower_cid(spark):
         "vec_id long, embedding array<double>",
     )
     cents = [[5.0, 5.0], [5.0, 5.0], [0.0, 0.0]]  # 0 and 1 identical
-    for fn in (ivf_assign, ivf_assign_table, ivf_assign_arrow):
-        got = {
-            r["vec_id"]: r["cid"]
-            for r in fn(df, cents, out_col="cid").collect()
-        }
-        assert got == {0: 0, 1: 2}, fn.__name__
+    cdf = spark.createDataFrame(
+        list(enumerate(cents)), "cid int, cvec array<double>"
+    )
+    for name, out in (
+        ("list", ivf_assign(df, cents, out_col="cid")),
+        ("frame", ivf_assign(df, cdf, out_col="cid")),
+        ("arrow", ivf_assign_arrow(df, cents, out_col="cid")),
+    ):
+        assert _cids(out) == {0: 0, 1: 2}, name
 
 
 def test_seeded_assign_paths_agree_and_guard_gaps(spark):
-    # the E2E blocking helper: literal (k<=literal_max, bounded collect)
-    # and table (no collect at all) branches must emit IDENTICAL
-    # (vec_id, cid) — cid = seed id on both — and a gapped id space must
-    # raise in the literal branch rather than silently renumber
+    # the E2E blocking helper feeds the seed FRAME to ivf_assign (nothing
+    # collected): it must emit the same (vec_id, cid) as the driver-list
+    # call over the same seeds — cid = seed id — and a gapped id space
+    # must raise rather than silently renumber
     from pharmacodi_spark.text.similarity import seeded_cell_assign
 
     rows, df = _vectors(spark, n=200, dim=8, seed=17)
-    lit = {
-        r["vec_id"]: r["cid"]
-        for r in seeded_cell_assign(
-            df, 24, out_col="cid", literal_max=128
-        ).collect()
-    }
-    tab = {
-        r["vec_id"]: r["cid"]
-        for r in seeded_cell_assign(
-            df, 24, out_col="cid", literal_max=4  # force the table branch
-        ).collect()
-    }
-    assert lit == tab
-    assert lit == _py_assign(rows, [v for _, v in rows[:24]])
+    seeds = [v for _, v in rows[:24]]
+    seeded = _cids(seeded_cell_assign(df, 24, out_col="cid"))
+    assert seeded == _cids(ivf_assign(df, seeds, out_col="cid"))
+    assert seeded == _py_assign(rows, seeds)
 
     import pytest
 
     gapped = df.where(F.col("vec_id") != 3)
     with pytest.raises(ValueError, match="contiguous"):
-        seeded_cell_assign(gapped, 24, out_col="cid", literal_max=128)
+        seeded_cell_assign(gapped, 24, out_col="cid")
 
 
 def test_table_preserves_columns_and_kmeans_seeds_feed_it(spark):
@@ -186,19 +154,19 @@ def test_table_preserves_columns_and_kmeans_seeds_feed_it(spark):
     from pharmacodi_spark.text.similarity import train_ivf_centroids
 
     cents = train_ivf_centroids(df, n_centroids=4, max_iter=3)
-    out = ivf_assign_table(df, cents, out_col="cid")
+    out = ivf_assign(df, cents, out_col="cid")
     assert set(out.columns) == {"vec_id", "embedding", "extra", "cid"}
     cids = {r["cid"] for r in out.select("cid").distinct().collect()}
     assert cids <= set(range(4)) and len(cids) >= 2
 
 
 def test_guards_raise_loudly_on_both_dispatch_sides(spark):
-    # ADVICE r11 closures: (a) the table branch of seeded_cell_assign
-    # enforces the SAME seed-contiguity ValueError as the literal branch
-    # (previously it silently proceeded with fewer cells past the
-    # threshold); (b) ivf_assign_table rejects empty centroid inputs
-    # (previously array_min over an empty array -> silent NULL cid that
-    # a downstream join-back would silently drop).
+    # ADVICE r11 closures: (a) seeded_cell_assign raises the
+    # seed-contiguity ValueError instead of silently proceeding with
+    # fewer cells — here on a small seed set whose LAST id is missing;
+    # (b) ivf_assign rejects empty centroid inputs (array_min over an
+    # empty array would be a silent NULL cid that a downstream join-back
+    # would silently drop).
     import pytest
 
     from pharmacodi_spark.text.similarity import seeded_cell_assign
@@ -206,10 +174,10 @@ def test_guards_raise_loudly_on_both_dispatch_sides(spark):
     _, df = _vectors(spark, n=60, dim=4, seed=41)
     gapped = df.where(F.col("vec_id") != 3)
     with pytest.raises(ValueError, match="contiguous"):
-        seeded_cell_assign(gapped, 24, out_col="cid", literal_max=4)
+        seeded_cell_assign(gapped, 4, out_col="cid")
 
     with pytest.raises(ValueError, match="empty"):
-        ivf_assign_table(df, [])
+        ivf_assign(df, [])
     empty_cdf = spark.createDataFrame([], "cid int, cvec array<double>")
     with pytest.raises(ValueError, match="empty"):
-        ivf_assign_table(df, empty_cdf)
+        ivf_assign(df, empty_cdf)

@@ -12,10 +12,9 @@ from pharmacodi_spark.pipelines.combine import (
     IC50_CLAMP,
     combine_dim,
     combine_experiment,
-    keyed,
     remap_fact_to_experiment,
 )
-from pharmacodi_spark.operators.keys import remap_fk
+from pharmacodi_spark.operators.keys import remap_fk, rename_and_key
 
 
 def _catalog_a(spark):
@@ -225,10 +224,10 @@ def test_combine_experiment_and_fact_remap(spark, built):
     exp_all = a["experiment"].unionByName(b["experiment"])
     exp, audits = combine_experiment(
         exp_all,
-        keyed(cell, "cell_id"),
-        keyed(compound, "compound_id"),
-        keyed(tissue, "tissue_id"),
-        keyed(dataset, "dataset_id"),
+        rename_and_key(cell, "cell_id"),
+        rename_and_key(compound, "compound_id"),
+        rename_and_key(tissue, "tissue_id"),
+        rename_and_key(dataset, "dataset_id"),
     )
     exp_rows = exp.collect()
     # e3 (cMISSING) dropped by on_miss="drop"; audit surfaces it

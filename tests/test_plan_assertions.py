@@ -191,7 +191,8 @@ CASES = [
      "the quantized frame is pinned; the final assignment + rollup "
      "read the pin, never re-scanning (or re-quantizing) the corpus"),
     ("kmeans_topics", r"SortMergeJoin", False,
-     "centroids are broadcast literals — no join anywhere in Lloyd's"),
+     "centroids are broadcast literals — no sort-merge join anywhere in "
+     "Lloyd's"),
     ("retrieval_ndcg", r"SortMergeJoin", False,
      "the bounded probe sample broadcasts against the corpus scan — "
      "the corpus never shuffles to form pairs"),

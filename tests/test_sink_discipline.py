@@ -2,9 +2,11 @@
 
 Every pin goes through ``barrier.stage_barrier``, every streaming sink
 through ``streaming/ops.py::drain_foreach_batch``, every writer-scoped
-dynamic overwrite through ``io.py``, and no caller forks "write the table
+dynamic overwrite through ``io.py``, no caller forks "write the table
 if the path is absent, else ``merge_upsert``" (``merge_upsert`` seeds an
-absent target itself). The scan walks the AST, so it matches calls and
+absent target itself), and driver-side sidecar frames are
+``functions/scalar.py::local_df`` VALUES relations, not
+``createDataFrame``. The scan walks the AST, so it matches calls and
 string constants, never docstring or comment text.
 """
 
@@ -135,3 +137,16 @@ def test_no_seed_or_merge_forks():
         for line in _seed_or_merge_forks(tree)
     ]
     assert hits == [], "merge_upsert seeds an absent target itself"
+
+
+def test_create_dataframe_only_for_arrow_tables():
+    # createDataFrame(rows) parallelizes through a Python-serialized RDD;
+    # sidecars go through local_df. The one allowed call turns an Arrow
+    # table into a frame in text/clusters.py.
+    hits = [
+        f"{mod}:{call.lineno}"
+        for mod, tree in _modules()
+        for call in _method_calls(tree, "createDataFrame")
+    ]
+    others = [h for h in hits if not h.startswith("text/clusters.py:")]
+    assert others == [] and len(hits) == 1, "build frames with local_df"

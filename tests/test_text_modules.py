@@ -559,13 +559,17 @@ def test_contamination_safe_splits(spark):
 
 @pytest.mark.slow
 def test_cell_cosine_pairs_high_dim_path_matches_flattened(spark):
-    """VERDICT r4 item 6: past flatten_max_dim the dot must route through
-    the zip_with/aggregate path (straight-line codegen degrades at 1k+
-    operators). Both paths, and the triangle-block guard, must produce the
-    identical pair set — checked at dim 256 against a NumPy brute force."""
+    """VERDICT r4 item 6: past the flatten ceiling the dot must NOT be
+    flattened (straight-line codegen degrades at 1k+ operators); it
+    routes to the Arrow GEMM path. That path, with and without the
+    triangle-block guard, must produce the pair set of a NumPy brute
+    force — checked at dim 256."""
     import numpy as np
 
-    from pharmacodi_spark.text.similarity import cell_cosine_pairs
+    from pharmacodi_spark.text.similarity import (
+        cell_cosine_pairs,
+        cell_cosine_pairs_arrow,
+    )
 
     rng = np.random.default_rng(7)
     dim, n = 256, 90
@@ -581,23 +585,18 @@ def test_cell_cosine_pairs_high_dim_path_matches_flattened(spark):
         "vec_id long, cell int, embedding array<double>",
     )
 
-    def pairs(**kw):
+    def pairs(fn=cell_cosine_pairs, **kw):
         return {
             (r.doc_a, r.doc_b)
-            for r in cell_cosine_pairs(
+            for r in fn(
                 df, vec_col="embedding", id_col="vec_id", cell_col="cell",
                 threshold=0.8, **kw,
             ).collect()
         }
 
-    # dim 256 ≥ CELL_PAIRS_ARROW_MIN_DIM auto-routes to the Arrow GEMM
-    # tier (r12); pin method="codegen" to keep exercising the zip_with
-    # path this test exists for, and assert the auto (= arrow) path too
-    hof = pairs(method="codegen")  # dim 256 > flatten_max_dim → zip_with
-    flat = pairs(flatten_max_dim=512, method="codegen")  # flattened path
-    guarded = pairs(max_cell_size=8, method="codegen")  # + triangle guard
-    arrow = pairs()  # auto → Arrow GEMM tier at dim 256
-    arrow_guarded = pairs(max_cell_size=8, method="arrow")
+    auto = pairs()  # dim 256 > 128 → Arrow GEMM path
+    guarded = pairs(max_cell_size=8)  # + triangle guard
+    direct = pairs(cell_cosine_pairs_arrow, max_cell_size=8)
     # NumPy oracle
     a = np.array(vecs, dtype=np.float64)
     norm = np.sqrt((a * a).sum(axis=1))
@@ -608,11 +607,9 @@ def test_cell_cosine_pairs_high_dim_path_matches_flattened(spark):
         for j in range(i + 1, n)
         if i % 2 == j % 2 and cos[i, j] >= 0.8
     }
-    assert want and hof == want
-    assert flat == want
+    assert want and auto == want
     assert guarded == want
-    assert arrow == want
-    assert arrow_guarded == want
+    assert direct == want
 
 
 def test_repetition_metrics_hand_fixture(spark):

@@ -107,12 +107,10 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
 
 
 def test_kmeans_large_k_uses_constant_plan_paths(spark):
-    # k > IVF_LITERAL_MAX: assignment dispatches to the broadcast
-    # centroid table AND the final d2 joins a broadcast k-row frame
-    # instead of building the k·dim literal array — replay-exact
-    from pharmacodi_spark.text.similarity import IVF_LITERAL_MAX
-
-    k = IVF_LITERAL_MAX + 4
+    # a large k stays on the constant-size plan: assignment rides the
+    # broadcast centroid table and the final d2 picks the winner out of
+    # ONE folded matrix literal — replay-exact
+    k = 132
     rows = _int_vectors(seed=23, n=k + 60, dim=3, lo=-30, hi=30)
     df = spark.createDataFrame(rows, "vec_id long, qe array<long>")
     assigned, cents = kmeans_lloyd_int(df, k=k, iterations=1)

@@ -783,7 +783,8 @@ AUDITS: dict[str, list[tuple[str, bool, str]]] = {
          "plan — the encode ran exactly once, at pin time"),
         (r"SortMergeJoin", False,
          "cell-blocked pair expansion under the triangle guard + "
-         "broadcast centroid literals — no corpus-scale sort join"),
+         "the broadcast one-row centroid table — no corpus-scale sort "
+         "join"),
     ],
     "token_budget_report": [
         (r"hashpartitioning\(__k#", True,
@@ -815,7 +816,8 @@ AUDITS: dict[str, list[tuple[str, bool, str]]] = {
          "assignment + per-cluster rollup read the pin — the corpus is "
          "scanned (and quantized) once, not once per plan consumer"),
         (r"SortMergeJoin", False,
-         "centroids are broadcast array literals — Lloyd's has no join"),
+         "centroids ride as one broadcast row — Lloyd's has no "
+         "sort-merge join"),
         (r"partial_count|partial_sum", True,
          "the per-cluster rollup combines map-side before the k-row "
          "exchange"),
@@ -881,7 +883,7 @@ AUDITS: dict[str, list[tuple[str, bool, str]]] = {
     "ivf_table_assign": [
         (r"BroadcastNestedLoopJoin", True,
          "k=200 centroids ride as ONE broadcast array-of-structs row — "
-         "the constant-plan table path past the literal ceiling"),
+         "the constant-plan table path at every k"),
         (r"SortMergeJoin", False,
          "no sort-based join: broadcast centroids, then one ≤k-row "
          "groupBy"),

@@ -655,17 +655,17 @@ def pruning(spark, mult: int) -> dict[str, float]:
 
 
 def ivf_tiers(spark) -> tuple[dict[str, float], dict[str, float]]:
-    """Measure the three IVF-assignment tiers at production k (VERDICT
+    """Measure the two IVF-assignment tiers at production k (VERDICT
     r11 item 2): the r11 flagship claimed "constant plan at any k"
     (broadcast-centroid-table) and "GEMM wins past k≈1e4" from plan
     shape alone — this times them. Two sweeps:
 
-    - k-sweep at fixed n: literal (k=128 cap), table and Arrow-GEMM at
-      k = 1e3 / 1e4 (+ arrow at 1e5). Per-row table cost is k·dim
+    - k-sweep at fixed n: table (ivf_assign) and Arrow-GEMM at
+      k = 128 / 1e3 / 1e4 (+ arrow at 1e5). Per-row table cost is k·dim
       interpreted higher-order-function multiplies, so its wall should
       grow ~linearly in k while arrow pays one BLAS matmul per batch +
       a fixed Arrow-transfer toll — the measured crossover is the
-      number the ivf_assign_table/ivf_assign_arrow docstrings assert.
+      number the ivf_assign/ivf_assign_arrow docstrings assert.
       table@1e5 is omitted DELIBERATELY: its projected wall (linear
       extrapolation from 1e3/1e4) is the blocker the GEMM tier exists
       for — recorded as a note, not silently skipped.
@@ -680,11 +680,7 @@ def ivf_tiers(spark) -> tuple[dict[str, float], dict[str, float]]:
     Vectors are integer-valued (xxhash64 % 2001), so every distance /
     GEMM partial sum is an exact float64 integer — the cross-tier
     equivalence contract (pytest-proven) holds for the probe data too."""
-    from pharmacodi_spark.text.similarity import (
-        ivf_assign,
-        ivf_assign_arrow,
-        ivf_assign_table,
-    )
+    from pharmacodi_spark.text.similarity import ivf_assign, ivf_assign_arrow
 
     dim = 32
 
@@ -720,28 +716,15 @@ def ivf_tiers(spark) -> tuple[dict[str, float], dict[str, float]]:
     # warm codegen/JIT on a throwaway table run
     timed(
         lambda: rollup(
-            ivf_assign_table(
-                corpus, cdf_of(cent_src, 128), vec_col="qe", out_col="cid"
-            )
-        )
-    )
-    lits = [
-        list(r["cvec"])
-        for r in sorted(
-            cdf_of(cent_src, 128).collect(), key=lambda r: r["cid"]
-        )
-    ]
-    sweep["literal_k128"] = timed(
-        lambda: rollup(
             ivf_assign(
-                corpus, lits, vec_col="qe", out_col="cid", literal_max=128
+                corpus, cdf_of(cent_src, 128), vec_col="qe", out_col="cid"
             )
         )
     )
     for k in (128, 1_000, 10_000):
         sweep[f"table_k{k}"] = timed(
             lambda: rollup(
-                ivf_assign_table(
+                ivf_assign(
                     corpus, cdf_of(cent_src, k), vec_col="qe", out_col="cid"
                 )
             )
@@ -776,7 +759,7 @@ def ivf_tiers(spark) -> tuple[dict[str, float], dict[str, float]]:
     small = synth(128_000, "128000")
     growth["table_n128000_k500"] = timed(
         lambda: rollup(
-            ivf_assign_table(
+            ivf_assign(
                 small, cdf_of(cent_src, 500), vec_col="qe", out_col="cid"
             )
         )
@@ -785,20 +768,23 @@ def ivf_tiers(spark) -> tuple[dict[str, float], dict[str, float]]:
 
 
 def cell_pair_tiers(spark) -> dict[str, float]:
-    """Measure the cell_cosine_pairs scoring tiers (r12): codegen
-    (zip_with fold / flattened scalar columns, picked by width) vs the
-    Arrow GEMM tier, at the widths that decide the auto-dispatch
-    constant CELL_PAIRS_ARROW_MIN_DIM. The fold pays dim interpreted
-    lambda steps per candidate PAIR; BLAS pays one fused multiply-add —
-    per-pair cost is where the semantic-dedup floor lives (ROADMAP r11:
-    12 s for 6.4M candidate dots at sf1, dim 64).
+    """Measure the cell_cosine_pairs scoring paths (r12): the flattened
+    whole-stage-codegen join (``flat``, dim <= CELL_PAIRS_FLATTEN_MAX_DIM)
+    vs the Arrow GEMM path (``arrow``, cell_cosine_pairs_arrow) at the
+    widths around the flatten ceiling. Per-pair cost is where the
+    semantic-dedup floor lives (ROADMAP r11: 12 s for 6.4M candidate
+    dots at sf1, dim 64).
 
     10k integer-valued vectors in 64 cells (~156 rows/cell → ~780k
     candidate pair dots), triangle guard armed at 256 on every leg
     (the production shape); threshold 0.8 keeps output tiny so the
-    wall is pure scoring. Integer vectors ⇒ the tiers are
+    wall is pure scoring. Integer vectors ⇒ the paths are
     bit-equivalent (the pytest contract) on the probe data too."""
-    from pharmacodi_spark.text.similarity import cell_cosine_pairs
+    from pharmacodi_spark.text.similarity import (
+        CELL_PAIRS_FLATTEN_MAX_DIM,
+        cell_cosine_pairs,
+        cell_cosine_pairs_arrow,
+    )
 
     n = 10_000
     out: dict[str, float] = {}
@@ -817,19 +803,21 @@ def cell_pair_tiers(spark) -> dict[str, float]:
             )
             df.repartition(32).write.mode("overwrite").parquet(path)
         src = spark.read.parquet(path)
-        for method in ("codegen", "arrow"):
+        legs = {"arrow": cell_cosine_pairs_arrow}
+        if dim <= CELL_PAIRS_FLATTEN_MAX_DIM:
+            legs = {"flat": cell_cosine_pairs, **legs}
+        for tier, fn in legs.items():
             # warm then measure (JIT / Python worker pool both amortize
             # in steady state)
-            for leg in ("warm", f"{method}_d{dim}"):
+            for leg in ("warm", f"{tier}_d{dim}"):
                 sec = timed(
-                    lambda m=method: cell_cosine_pairs(
+                    lambda fn=fn: fn(
                         src,
                         vec_col="qe",
                         id_col="vec_id",
                         cell_col="cell",
                         threshold=0.8,
                         max_cell_size=256,
-                        method=m,
                     )
                 )
                 if leg != "warm":
@@ -970,10 +958,10 @@ def main() -> None:
         "",
         "20,000 × 32-dim integer-valued vectors (xxhash64-synthesized, so",
         "every distance/GEMM partial sum is an exact float64 integer and",
-        "the three tiers are bit-equivalent — the pytest contract holds on",
-        "the probe data). literal = plan-literal argmin (k ≤ 128 by the",
-        "janino ceiling); table = broadcast-centroid-table (constant PLAN,",
-        "per-row cost k·dim interpreted HOF multiplies); arrow = one",
+        "the two tiers are bit-equivalent — the pytest contract holds on",
+        "the probe data). table = ivf_assign, the broadcast centroid",
+        "table (constant PLAN, per-row cost k·dim interpreted HOF",
+        "multiplies); arrow = ivf_assign_arrow, one",
         "float64 GEMM per Arrow batch. `table_k100000` is omitted",
         "deliberately: linear extrapolation from the measured 1e3/1e4 legs",
         "puts it 10× the k=1e4 wall — that projected cost IS the reason",
@@ -1021,35 +1009,20 @@ def main() -> None:
     cp = cell_pair_tiers(spark)
     lines += [
         "",
-        "## cell_cosine_pairs scoring tiers by vector width (r12)",
+        "## cell_cosine_pairs scoring paths by vector width (r12)",
         "",
         "10k integer-valued vectors, 64 cells (~780k candidate pair",
         "dots), triangle guard at 256 on every leg, warm min-of-2nd-run.",
-        "codegen = the JVM join paths (flattened scalars ≤128-dim,",
-        "zip_with fold above); arrow = one numpy GEMM per triangle block",
-        "(cell_cosine_pairs_arrow). Per-pair fold cost grows linearly in",
-        "dim; the GEMM amortizes it — the measured ratios set the",
-        "auto-dispatch floor CELL_PAIRS_ARROW_MIN_DIM.",
+        "flat = the JVM join path with the vector flattened to scalar",
+        "columns (dim ≤ CELL_PAIRS_FLATTEN_MAX_DIM = 128); arrow = one",
+        "numpy GEMM per triangle block (cell_cosine_pairs_arrow), the",
+        "path cell_cosine_pairs picks for wider vectors.",
         "",
-        "| tier @ dim (n=10k, 64 cells) | sec |",
+        "| path @ dim (n=10k, 64 cells) | sec |",
         "|---|---|",
     ]
     for name, sec in cp.items():
         lines.append(f"| {name} | {sec:.2f} |")
-    lines += [
-        "",
-        f"dim ≤128 rows are the flattened whole-stage-codegen path"
-        f" (JVM-only); dim 256: fold {cp['codegen_d256']:.2f}s vs arrow"
-        f" {cp['arrow_d256']:.2f}s"
-        f" ({cp['codegen_d256'] / cp['arrow_d256']:.1f}×);"
-        f" dim 512: fold {cp['codegen_d512']:.2f}s vs arrow"
-        f" {cp['arrow_d512']:.2f}s"
-        f" ({cp['codegen_d512'] / cp['arrow_d512']:.1f}×). The fold"
-        " loses to BLAS everywhere measured, so the auto dispatch floor"
-        " CELL_PAIRS_ARROW_MIN_DIM sits just above the flatten ceiling"
-        " (129): auto never picks the fold; ≤128-dim stays JVM-only"
-        " codegen, wider goes GEMM.",
-    ]
 
     lines += [
         "",
