@@ -37,8 +37,6 @@ def pagerank_int(
     dangling: str = "ignore",
     tol: int | None = None,
     info: dict | None = None,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """Integer PageRank over a directed edge list. Returns (v, r) with r
     the scaled-integer rank after ``iterations`` steps:
@@ -78,7 +76,7 @@ def pagerank_int(
         e.select(F.col("src").alias("v"))
         .union(e.select(F.col("dst").alias("v")))
         .distinct(),
-        mode=barrier, name="pagerank-nodes", barrier_dir=barrier_dir,
+        name="pagerank-nodes",
     )
     n = nodes.count()  # one metadata action; N is a plan literal after this
     base = (damping_den - damping_num) * scale // (damping_den * n)
@@ -87,10 +85,7 @@ def pagerank_int(
     # (materialized, partitioned by src) so each iteration is a single
     # edges⋈ranks join instead of two; the join key partitioning carries
     # straight into the contribution shuffle
-    e_deg = stage_barrier(
-        e.join(outdeg, "src"),
-        mode=barrier, name="pagerank-edges", barrier_dir=barrier_dir,
-    )
+    e_deg = stage_barrier(e.join(outdeg, "src"), name="pagerank-edges")
     # the sink NODE SET is static across iterations — pin it once (r13).
     # Unpinned, every iteration re-planned a src-distinct + anti-join of
     # the full e_deg pin just to restate the same set; the pinned frame
@@ -104,7 +99,7 @@ def pagerank_int(
                 "v",
                 "left_anti",
             ),
-            mode=barrier, name="pagerank-sinks", barrier_dir=barrier_dir,
+            name="pagerank-sinks",
         )
     ranks = nodes.withColumn("r", F.lit(scale // n).cast("long"))
     converged = False
@@ -156,10 +151,7 @@ def pagerank_int(
             )
         at_check = (i + 1) % checkpoint_every == 0
         if at_check and (tol is not None or (i + 1) < iterations):
-            ranks = stage_barrier(
-                ranks, mode=barrier, name=f"pagerank-iter{i + 1}",
-                barrier_dir=barrier_dir,
-            )
+            ranks = stage_barrier(ranks, name=f"pagerank-iter{i + 1}")
         if tol is not None and at_check:
             delta = (
                 ranks.alias("nw")
@@ -183,8 +175,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     checkpoint_every: int = 4,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
     undirected closure of ``edges``: every node starts labeled with its own
@@ -221,8 +211,5 @@ def label_propagation(
             "v", F.coalesce("new_label", F.col("v")).alias("label")
         )
         if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-            labels = stage_barrier(
-                labels, mode=barrier, name=f"lpa-iter{i + 1}",
-                barrier_dir=barrier_dir,
-            )
+            labels = stage_barrier(labels, name=f"lpa-iter{i + 1}")
     return labels

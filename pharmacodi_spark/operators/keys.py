@@ -19,8 +19,6 @@ def surrogate_key(
     order_by: list[str],
     id_col: str = "id",
     dense_global: bool = False,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """Assign a deterministic dense ``id = 1..n`` ranked by ``order_by``.
 
@@ -55,14 +53,14 @@ def surrogate_key(
     # if the exchange is not reused (e.g. under a composed plan AQE
     # re-plans), two evaluations see different boundaries and the
     # mid-derived ids collide. Freezing one materialized instance makes the
-    # (partition, ordinal) assignment single-valued. ``barrier="durable"``
-    # (pharmacodi_spark.barrier) makes the pin survive executor loss on
-    # preemptible clusters.
+    # (partition, ordinal) assignment single-valued. Under
+    # ``spark.pharmacodi.barrierDir`` (pharmacodi_spark.barrier) the pin
+    # survives executor loss on preemptible clusters.
     tagged = stage_barrier(
         df.repartitionByRange(n, *cols)
         .sortWithinPartitions(*cols)
         .select("*", F.monotonically_increasing_id().alias("__mid")),
-        mode=barrier, name="surrogate-key-tagged", barrier_dir=barrier_dir,
+        name="surrogate-key-tagged",
     )
     pid = F.shiftrightunsigned("__mid", 33)
     counts = tagged.groupBy(pid.alias("__pid")).agg(F.count("*").alias("__cnt"))

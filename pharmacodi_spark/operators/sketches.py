@@ -814,9 +814,7 @@ def _kmv_pair_estimates(j: DataFrame, k: int) -> DataFrame:
     )
 
 
-def kmv_overlap_matrix(
-    sketch: DataFrame, key: str, k: int = KMV_K, barrier: str | None = "local"
-) -> DataFrame:
+def kmv_overlap_matrix(sketch: DataFrame, key: str, k: int = KMV_K) -> DataFrame:
     """All-pairs overlap surface between per-group sketches — "which
     sources duplicate each other?" as one row per unordered group pair
     ``(key_a < key_b)`` with the :func:`kmv_set_ops` estimate columns.
@@ -828,13 +826,11 @@ def kmv_overlap_matrix(
     the sketch comes in as an unmaterialized plan over the corpus, it
     feeds BOTH self-join sides, so it is stage-barrier-pinned first
     (the consumed-twice rule): the corpus scan + sketch aggregate run
-    ONCE, both sides read the KB-scale pin. ``barrier=None`` opts out
-    (e.g. when the input is already a read-back parquet). The caller
-    contract is kmv_merge's: one sketch table, one (k, salt)."""
-    if barrier is not None:
-        from pharmacodi_spark.barrier import stage_barrier
+    ONCE, both sides read the KB-scale pin. The caller contract is
+    kmv_merge's: one sketch table, one (k, salt)."""
+    from pharmacodi_spark.barrier import stage_barrier
 
-        sketch = stage_barrier(sketch, mode=barrier, name="kmv_matrix")
+    sketch = stage_barrier(sketch, name="kmv_matrix")
     a = sketch.select(
         F.col(key).alias(f"{key}_a"), F.col("__kmv").alias("__ka")
     )

@@ -3717,8 +3717,6 @@ def skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
     docs: DataFrame | None = None,
     html_col: str | None = None,
 ) -> DataFrame:
@@ -3732,24 +3730,18 @@ def curation_pipeline(
 
     Stage boundary discipline (the thing that makes a multi-stage cascade
     survive 100 TB): each stage's SURVIVOR ID SET — metadata-scale, ids
-    only — is pinned with a stage barrier (``barrier='local'`` →
-    localCheckpoint; ``barrier='durable'`` → scratch parquet that survives
-    executor loss, see pharmacodi_spark.barrier), and the next stage joins
-    a FRESH pruned corpus scan against it.  Composing the DataFrames lazily instead
-    re-expands every upstream stage at every downstream reference: the
-    naive composition of this exact cascade compiled to 116 documents
-    scans and 44 sort-merge joins (combinatorial subtree replication);
+    only — is pinned with a stage barrier (localCheckpoint by default;
+    scratch parquet that survives executor loss when
+    ``spark.pharmacodi.barrierDir`` is set, see pharmacodi_spark.barrier),
+    and the next stage joins a FRESH pruned corpus scan against it.
+    Composing the DataFrames lazily instead re-expands every upstream
+    stage at every downstream reference: the naive composition of this
+    exact cascade compiled to 116 documents scans and 44 sort-merge joins
+    (combinatorial subtree replication);
     with the id-set barriers it is ~12 scans, each stage's shuffle keys
     (id) / (id, gram) / (hash) only, and bodies never shuffle."""
-    from pharmacodi_spark.barrier import stage_barrier
-    from pharmacodi_spark.operators.sampling import temperature_mixture_sample
-    from pharmacodi_spark.text.analysis import repetition_metrics
-    from pharmacodi_spark.text.cleaning import decontaminate_against
-    from pharmacodi_spark.text.corpus import unigram_surprisal
-    from pharmacodi_spark.text.dedup import exact_dedup, passage_dedup_stats
-
     _stages, final = _curation_cascade(
-        spark, sf_dir, barrier, barrier_dir, docs=docs, html_col=html_col
+        spark, sf_dir, docs=docs, html_col=html_col
     )
     return final
 
@@ -3757,8 +3749,6 @@ def curation_pipeline(
 def _curation_cascade(
     spark: SparkSession,
     sf_dir: str,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
     docs: DataFrame | None = None,
     html_col: str | None = None,
 ) -> tuple[list[tuple[str, DataFrame]], DataFrame]:
@@ -3774,9 +3764,6 @@ def _curation_cascade(
     from pharmacodi_spark.text.corpus import unigram_surprisal
     from pharmacodi_spark.text.dedup import exact_dedup, passage_dedup_stats
 
-    _b = lambda df, name: stage_barrier(
-        df, mode=barrier, name=name, barrier_dir=barrier_dir
-    )
     d = _t(spark, sf_dir, "documents") if docs is None else docs
     if html_col is not None:
         # optional stage 0 (VERDICT r7 item 2): crawled HTML → gate-ready
@@ -3794,27 +3781,27 @@ def _curation_cascade(
         .where(100 * F.col("sum_bits") <= 2405 * F.col("n_words"))
         .select("doc_id")
     )
-    s1 = _b(
+    s1 = stage_barrier(
         gop.join(sur, "doc_id").where(F.col("doc_id") % 97 != 0),
-        "curation-s1-quality",
+        name="curation-s1-quality",
     )
     q1 = d.join(s1, "doc_id")
     ev = d.where(F.col("doc_id") % 97 == 0)
-    s2 = _b(
+    s2 = stage_barrier(
         decontaminate_against(q1, ev, n=13)
         .where(~F.col("contaminated"))
         .select("doc_id"),
-        "curation-s2-decontam",
+        name="curation-s2-decontam",
     )
     q2 = d.join(s2, "doc_id")
-    s3 = _b(
-        passage_dedup_stats(q2, window=16)
-        .where("keep")
-        .select("doc_id"),
-        "curation-s3-passage",
+    s3 = stage_barrier(
+        passage_dedup_stats(q2, window=16).where("keep").select("doc_id"),
+        name="curation-s3-passage",
     )
     q3 = d.join(s3, "doc_id")
-    s4 = _b(exact_dedup(q3).select("doc_id"), "curation-s4-exact")
+    s4 = stage_barrier(
+        exact_dedup(q3).select("doc_id"), name="curation-s4-exact"
+    )
     q4 = d.join(s4, "doc_id")
     final = temperature_mixture_sample(
         q4.select("doc_id", "source"), "source",
@@ -3950,12 +3937,7 @@ def _curation_cascade(
     ) ORDER BY stage_idx
     """,
 )
-def curation_funnel(
-    spark: SparkSession,
-    sf_dir: str,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
-) -> DataFrame:
+def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stage audit table for the curation cascade (VERDICT r5 item 5):
     ``(stage_idx, stage, rows_in, rows_kept)`` for quality → decontam →
     passage-dedup → exact-dedup → mixture — the reference's row-count
@@ -3968,7 +3950,7 @@ def curation_funnel(
     every survivor set is stage-barrier-pinned), and the funnel's counts
     are 1-row aggregates over those pinned metadata-scale id sets, chained
     by broadcast-size cross joins."""
-    stages, _final = _curation_cascade(spark, sf_dir, barrier, barrier_dir)
+    stages, _final = _curation_cascade(spark, sf_dir)
     d = _t(spark, sf_dir, "documents")
     prev = d.select("doc_id")
     rows = []

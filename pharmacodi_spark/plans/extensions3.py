@@ -944,15 +944,14 @@ _CURATION_SQL = _Q["curation_pipeline"][1]
 def curation_select_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """The full training-data story in ONE cascade: five curation stages
     (Gopher ∧ surprisal → 13-gram decontam → passage dedup → exact dedup →
     temperature mixture, plans/extensions2.py::_curation_cascade) feeding
     DSIR importance selection TRAINED ON THE CURATED POOL (target
     lang='en') → the 100 most target-like curated documents.  Six
-    survivor-set stage barriers end to end (``barrier=`` threads through);
+    survivor-set stage barriers end to end (durable when
+    ``spark.pharmacodi.barrierDir`` is set, see pharmacodi_spark.barrier);
     each selection pass broadcast-joins a fresh pruned scan.  The oracle
     nests the curation SQL verbatim as a CTE and extends it with the DSIR
     chain — one source of truth per stage."""
@@ -960,11 +959,8 @@ def curation_select_pipeline(
     from pharmacodi_spark.plans.extensions2 import _curation_cascade
     from pharmacodi_spark.text.selection import dsir_score, dsir_train_weights
 
-    _stages, final = _curation_cascade(spark, sf_dir, barrier, barrier_dir)
-    ids = stage_barrier(
-        final.select("doc_id"), mode=barrier, name="curation-s6-select",
-        barrier_dir=barrier_dir,
-    )
+    _stages, final = _curation_cascade(spark, sf_dir)
+    ids = stage_barrier(final.select("doc_id"), name="curation-s6-select")
     d = _t(spark, sf_dir, "documents")
     surv = d.join(ids, "doc_id")  # AQE decides; see selection_pipeline
     lam = dsir_train_weights(

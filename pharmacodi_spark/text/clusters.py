@@ -82,8 +82,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 50,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component is
@@ -126,9 +124,6 @@ def connected_components(
     (which also materializes the pin) instead of the loop's ~10 jobs. Same
     labels: the root of each union-find tree is the minimum id of its
     component. Larger graphs take the round loop above."""
-    _b = lambda df, name: stage_barrier(
-        df, mode=barrier, name=name, barrier_dir=barrier_dir
-    )
     # pin the DIRECTED edge set before mirroring: ``union(e, reversed(e))``
     # traverses its input twice, and the caller's edge frame is usually an
     # expensive unpinned subplan (the within-cell cosine pair join) — the
@@ -138,8 +133,7 @@ def connected_components(
     sel = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     ded = stage_barrier(
         sel if edges_canonical else sel.distinct(),
-        mode=barrier, name="cc-edges0", barrier_dir=barrier_dir,
-        eager=False,
+        name="cc-edges0", eager=False,
     )
     mirrored = ded.union(
         ded.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -150,7 +144,11 @@ def connected_components(
         return _local_components(
             edges.sparkSession, head, mirrored.schema["u"].dataType
         )
-    sym = mirrored if edges_canonical else _b(mirrored.distinct(), "cc-edges")
+    sym = (
+        mirrored
+        if edges_canonical
+        else stage_barrier(mirrored.distinct(), name="cc-edges")
+    )
 
     # lazy pin (r13): the label table is consumed exactly once, by the
     # end-of-loop fold job — an eager pin here paid a standalone job per
@@ -160,8 +158,7 @@ def connected_components(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("lab", F.col("node")),
-        mode=barrier, name="cc-labels0", barrier_dir=barrier_dir,
-        eager=False,
+        name="cc-labels0", eager=False,
     )
     maps: list[tuple[DataFrame, int]] = []
     e = sym
@@ -225,10 +222,7 @@ def connected_components(
             # this metadata-scale deterministic map is cheaper than the
             # standalone checkpoint job the eager pin paid every
             # composing round
-            upd = stage_barrier(
-                upd, mode=barrier, name="cc-map", barrier_dir=barrier_dir,
-                eager=False,
-            )
+            upd = stage_barrier(upd, name="cc-map", eager=False)
         maps.append((upd, n_e))
         # contract: rewrite edges onto the new super-labels, drop
         # self-loops and duplicates (symmetry is preserved by the
@@ -273,8 +267,7 @@ def connected_components(
         # form paid a checkpoint job AND a count job per round
         e = stage_barrier(
             rel.where(F.col("u") != F.col("v")).distinct(),
-            mode=barrier, name="cc-contract", barrier_dir=barrier_dir,
-            eager=False,
+            name="cc-contract", eager=False,
         )
     if not done:
         raise RuntimeError(

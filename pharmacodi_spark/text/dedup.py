@@ -1052,7 +1052,6 @@ def sorted_neighborhood_pairs(
     id_col: str = "doc_id",
     window: int = 4,
     dense_global: bool = False,
-    barrier: str | None = "local",
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo, SIGMOD'95):
     sort the corpus by a blocking key and emit every pair of rows within
@@ -1076,9 +1075,10 @@ def sorted_neighborhood_pairs(
     shuffle, and the ``window−1`` offset explode is a bounded constant
     fan-out. The position frame feeds BOTH join sides, so it is
     stage-barrier-pinned (the r11 consumed-twice rule): the sort/window
-    pass runs once, both sides read the pin. ``barrier=None`` opts out;
-    "durable" survives executor preemption (barrier.py)."""
+    pass runs once, both sides read the pin (durable under
+    ``spark.pharmacodi.barrierDir``, see barrier.py)."""
     assert window >= 2, "window must cover at least adjacent rows"
+    from pharmacodi_spark.barrier import stage_barrier
     from pharmacodi_spark.operators.keys import surrogate_key
 
     pos = surrogate_key(
@@ -1087,10 +1087,7 @@ def sorted_neighborhood_pairs(
         id_col="__pos",
         dense_global=dense_global,
     ).select(id_col, "__pos")
-    if barrier is not None:
-        from pharmacodi_spark.barrier import stage_barrier
-
-        pos = stage_barrier(pos, mode=barrier, name="snm_positions")
+    pos = stage_barrier(pos, name="snm_positions")
     probes = pos.select(
         F.col(id_col).alias("doc_a"),
         F.explode(

@@ -25,8 +25,6 @@ def token_offsets(
     count_col: str = "n_tokens",
     id_col: str = "doc_id",
     order_cols: list[str] | None = None,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """Add ``token_start`` — the exclusive prefix sum of ``count_col`` in
     ``order_cols`` order (default: ``id_col``) — without a global
@@ -37,9 +35,10 @@ def token_offsets(
     The stage barrier mirrors surrogate_key's correctness note: the tagged
     frame feeds both the per-partition totals and the final assignment;
     repartitionByRange re-samples boundaries per evaluation, so the
-    materialization pins ONE partition assignment. ``barrier="durable"``
-    (pharmacodi_spark.barrier) writes the pin to scratch storage so it
-    survives executor loss on preemptible clusters."""
+    materialization pins ONE partition assignment. Under
+    ``spark.pharmacodi.barrierDir`` (pharmacodi_spark.barrier) the pin is
+    written to scratch storage so it survives executor loss on
+    preemptible clusters."""
     from pharmacodi_spark.barrier import stage_barrier
 
     order_cols = [id_col] if order_cols is None else list(order_cols)
@@ -48,7 +47,7 @@ def token_offsets(
         df.repartitionByRange(n, *[F.asc(c) for c in order_cols])
         .sortWithinPartitions(*[F.asc(c) for c in order_cols])
         .select("*", F.monotonically_increasing_id().alias("__mid")),
-        mode=barrier, name="token-offsets-tagged", barrier_dir=barrier_dir,
+        name="token-offsets-tagged",
     )
     pid = F.shiftrightunsigned("__mid", 33)
     totals = tagged.groupBy(pid.alias("__pid")).agg(
@@ -79,8 +78,6 @@ def pack_sequences(
     seq_len: int,
     count_col: str = "n_tokens",
     id_col: str = "doc_id",
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """(id, n_tokens, token_start, first_example, last_example, n_examples):
     which fixed-length training example(s) each document occupies when the
@@ -91,9 +88,7 @@ def pack_sequences(
     tokens contributed — flagged via n_tokens)."""
     assert seq_len == int(seq_len) and seq_len >= 1
     seq_len = int(seq_len)
-    out = token_offsets(
-        df, count_col, id_col, barrier=barrier, barrier_dir=barrier_dir
-    )
+    out = token_offsets(df, count_col, id_col)
     start = F.col("token_start")
     cnt = F.col(count_col)
     # Integer `div` everywhere (same ~1e14-offset ulp hazard as
@@ -124,8 +119,6 @@ def shuffle_shards(
     size_col: str = "n_chars",
     id_col: str = "doc_id",
     salt: str = "shuf",
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """Deterministic global training shuffle + byte-budget shard layout.
 
@@ -158,7 +151,6 @@ def shuffle_shards(
     out = token_offsets(
         keyed, count_col=size_col, id_col=id_col,
         order_cols=["shuffle_key", id_col],
-        barrier=barrier, barrier_dir=barrier_dir,
     )
     return out.select(
         F.col(id_col),

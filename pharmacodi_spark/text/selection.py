@@ -310,8 +310,6 @@ def selection_pipeline(
     salt: str = "d",
     content_col: str = "text",
     id_col: str = "doc_id",
-    barrier: str = "local",
-    barrier_dir: str | None = None,
 ) -> DataFrame:
     """Two-stage targeted-selection E2E: the exact global percentile gate
     (drop the bottom ``100−keep_pct``% by ``score_col``) feeding DSIR
@@ -322,7 +320,7 @@ def selection_pipeline(
     Stage boundary discipline (the round-5 lesson): DSIR consumes the
     survivor set TWICE (λ training pass + scoring pass), so the gate's
     survivor-id set is pinned with :func:`pharmacodi_spark.barrier.
-    stage_barrier` (``barrier=`` / ``barrier_dir=`` thread through) and
+    stage_barrier` (durable under ``spark.pharmacodi.barrierDir``) and
     both passes broadcast-join a fresh pruned scan against it — lazily
     composing would re-expand the histogram-threshold subplan per pass.
 
@@ -334,10 +332,7 @@ def selection_pipeline(
         df.select(F.col(id_col), F.col(score_col)), score_col, keep_pct,
         id_col=id_col,
     )
-    ids = stage_barrier(
-        gated.select(id_col), mode=barrier, name="selection-gate",
-        barrier_dir=barrier_dir,
-    )
+    ids = stage_barrier(gated.select(id_col), name="selection-gate")
     # no broadcast hint: the survivor set is keep_pct% of the corpus —
     # metadata-scale locally but potentially billions of ids at 100 TB;
     # AQE picks broadcast when it fits (the curation-cascade discipline)

@@ -289,8 +289,6 @@ def train_bpe(
     num_merges: int = 200,
     max_batch: int = 16,
     max_word_len: int = 64,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
     tokens_col: str | None = None,
 ) -> list[tuple[str, str, int]]:
     """True merge-based BPE training: iteratively merge the corpus-wide
@@ -314,8 +312,8 @@ def train_bpe(
        another's symbols or output, hence no order ambiguity and no
        chained merges within a pass).
     3. The re-symbolized word table is stage-barrier-pinned per round
-       (metadata-scale; ``barrier='durable'`` for preemptible clusters),
-       keeping the loop's plan depth constant.
+       (metadata-scale; durable under ``spark.pharmacodi.barrierDir``
+       for preemptible clusters), keeping the loop's plan depth constant.
 
     Batching trades exact merge ORDER for ~``max_batch``× fewer rounds:
     with ``max_batch=1`` the output is exactly sequential BPE (the pytest
@@ -337,9 +335,7 @@ def train_bpe(
             "cnt",
         )
     )
-    words = stage_barrier(
-        words, mode=barrier, name="bpe-words", barrier_dir=barrier_dir
-    )
+    words = stage_barrier(words, name="bpe-words")
     merges: list[tuple[str, str, int]] = []
     while len(merges) < num_merges:
         counts = (
@@ -386,8 +382,7 @@ def train_bpe(
             ).otherwise(F.concat(acc, F.array(x))),
         )
         words = stage_barrier(
-            words.select(merged.alias("syms"), "cnt"),
-            mode=barrier, name="bpe-round", barrier_dir=barrier_dir,
+            words.select(merged.alias("syms"), "cnt"), name="bpe-round"
         )
     return merges
 
@@ -532,8 +527,6 @@ def train_unigram_lm(
     em_iters: int = 2,
     prune_frac: float = 0.2,
     max_word_len: int = 32,
-    barrier: str = "local",
-    barrier_dir: str | None = None,
     tokens_col: str | None = None,
 ) -> list[tuple[str, int, int]]:
     """Unigram-LM tokenizer training (Kudo 2018 — the SentencePiece
@@ -580,9 +573,7 @@ def train_unigram_lm(
         .select(F.substring("w", 1, max_word_len).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("c")),
-        mode=barrier,
         name="uni_words",
-        barrier_dir=barrier_dir,
     )
 
     # --- seed: frequent substrings (weighted by word count) + all chars

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -7,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pharmacodi_spark.barrier import BARRIER_DIR_CONF
 from pharmacodi_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -34,3 +36,23 @@ def cc_path(request, monkeypatch):
     if request.param == "loop":
         monkeypatch.setattr(clusters, "CC_LOCAL_MAX_EDGES", -1)
     return request.param
+
+
+@pytest.fixture
+def durable_barriers(spark, tmp_path):
+    """Context manager under which every ``stage_barrier`` pin is durable:
+    ``spark.pharmacodi.barrierDir`` points at a fresh scratch dir, which
+    the ``with`` yields. The conf is unset in a ``finally``, so it never
+    leaks into a later test (job budgets count local pins)."""
+
+    @contextlib.contextmanager
+    def durable():
+        root = tmp_path / "barriers"
+        root.mkdir(exist_ok=True)
+        spark.conf.set(BARRIER_DIR_CONF, str(root))
+        try:
+            yield root
+        finally:
+            spark.conf.unset(BARRIER_DIR_CONF)
+
+    return durable

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 import hashlib
+import os
 
 from pyspark.sql import functions as F
 
@@ -248,7 +249,7 @@ def test_source_overlap_minhash_detects_mirrors(spark):
 
 
 @pytest.mark.slow
-def test_selection_pipeline_durable_barrier_equivalence(spark, tmp_path):
+def test_selection_pipeline_durable_barrier_equivalence(spark, durable_barriers):
     from pyspark.sql import functions as SF
 
     from pharmacodi_spark.text.selection import selection_pipeline
@@ -263,10 +264,10 @@ def test_selection_pipeline_durable_barrier_equivalence(spark, tmp_path):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string, n_chars long")
     kw = dict(target=SF.col("lang") == "en", keep_pct=50, k=10, dim=128, salt="s")
     local = selection_pipeline(df, **kw).collect()
-    durable = selection_pipeline(
-        df, barrier="durable", barrier_dir=str(tmp_path), **kw
-    ).collect()
+    with durable_barriers() as root:
+        durable = selection_pipeline(df, **kw).collect()
     assert local == durable
+    assert any(f.startswith("selection-gate-") for f in os.listdir(root))
     # gate-then-train is visible: every selected doc survived the gate
     from pharmacodi_spark.text.selection import percentile_gate
 

@@ -1,6 +1,7 @@
 """Static guard for the engine's sink and pin discipline.
 
-Every pin goes through ``barrier.stage_barrier``, every streaming sink
+Every pin goes through ``barrier.stage_barrier`` (named, durable only by
+the ``spark.pharmacodi.barrierDir`` conf), every streaming sink
 through ``streaming/ops.py::drain_foreach_batch``, every writer-scoped
 dynamic overwrite through ``io.py``, no caller forks "write the table
 if the path is absent, else ``merge_upsert``" (``merge_upsert`` seeds an
@@ -91,6 +92,32 @@ def test_no_raw_local_checkpoint_outside_barrier():
         for call in _method_calls(tree, "localCheckpoint")
     ]
     assert hits == [], "pin through barrier.stage_barrier(..., name=...)"
+
+
+def test_barrier_mode_is_one_deployment_setting():
+    # no engine function takes a barrier mode or root, and every
+    # stage_barrier call names its pin and passes neither
+    hits = []
+    for mod, tree in _modules():
+        for fn in ast.walk(tree):
+            if isinstance(
+                fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+            ):
+                a = fn.args
+                hits += [
+                    f"{mod}:{fn.lineno} param {p.arg}"
+                    for p in a.posonlyargs + a.args + a.kwonlyargs
+                    if p.arg in ("barrier", "barrier_dir")
+                ]
+        for call in _called(tree, "stage_barrier"):
+            kws = {k.arg for k in call.keywords}
+            hits += [
+                f"{mod}:{call.lineno} {k}="
+                for k in sorted(kws & {"mode", "barrier_dir"})
+            ]
+            if "name" not in kws and len(call.args) < 2:
+                hits.append(f"{mod}:{call.lineno} unnamed")
+    assert hits == [], "durable via spark.pharmacodi.barrierDir; name each pin"
 
 
 def test_foreach_batch_only_in_drain_helper():

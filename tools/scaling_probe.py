@@ -1030,27 +1030,31 @@ def main() -> None:
         "",
         "Every multi-stage cascade (curation_pipeline, token_offsets /",
         "surrogate_key range-partition pinning, connected-components and",
-        "PageRank loops) pins stage boundaries via",
-        "`pharmacodi_spark.barrier.stage_barrier`:",
+        "PageRank loops, the ingest gauntlet, merge_upsert, the streaming",
+        "twins) pins stage boundaries via",
+        "`pharmacodi_spark.barrier.stage_barrier(df, name)`. Where every pin",
+        "lives is one deployment setting, the `spark.pharmacodi.barrierDir`",
+        "conf:",
         "",
-        '- `barrier="local"` (default): `localCheckpoint()` — eager,',
-        "  truncates lineage, executor-local unreplicated blocks. Correct",
-        "  and fastest on a single JVM / stable cluster, but a preempted",
-        "  executor loses its blocks with NO recompute path (lineage",
-        "  truncated).",
-        '- `barrier="durable"`: write the frame to `barrier_dir` (or the',
-        "  `spark.pharmacodi.barrierDir` conf) as parquet and read it back.",
-        "  Same plan containment (fresh scan ⇒ lineage truncated), but",
+        "- unset (default): `localCheckpoint()` — truncates lineage,",
+        "  executor-local unreplicated blocks. Correct and fastest on a single",
+        "  JVM / stable cluster, but a preempted executor loses its blocks",
+        "  with NO recompute path (lineage truncated).",
+        "- set: every pin is written as parquet under that root and read",
+        "  back. Same plan containment (fresh scan ⇒ lineage truncated), but",
         "  blocks live in the job's scratch filesystem (HDFS/S3) — executor",
-        "  loss recovers by re-reading. The pinned frames are",
-        "  metadata-scale (survivor-id sets, #partitions-row offset",
-        "  tables), so the write is noise at 100 TB relative to the stages",
-        "  it protects; barrier files are TTL'd job scratch.",
+        "  loss recovers by re-reading. Most pinned frames are metadata-scale",
+        "  (survivor-id sets, #partitions-row offset tables), so the write is",
+        "  noise at 100 TB relative to the stages it protects; `merge_upsert`",
+        "  pins the merged rows it is about to write, so there durable mode",
+        "  writes them twice. Barrier files are TTL'd job scratch.",
         "",
-        "`tests/test_durable_barrier.py` asserts row-identical results in",
-        "both modes for curation_pipeline, surrogate_key (fact path),",
-        "connected_components, and pagerank_int, plus the fail-fast when",
-        "durable mode has no scratch root.",
+        "`tests/test_durable_barrier.py` asserts row-identical results with",
+        "and without the conf for curation_pipeline, surrogate_key (fact",
+        "path), connected_components, pagerank_int, merge_upsert, two",
+        "ingest_batch batches and a curation_stream replay, that the named",
+        "pins land under the root, and that a pin with the conf unset writes",
+        "nothing.",
     ]
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"
