@@ -1,39 +1,53 @@
-"""Streaming curation twin (VERDICT r5 item 9): the curation gates run
-incrementally under Structured Streaming, reusing the ingest pipeline's
-state-dir machinery, with a BATCH twin the stream provably equals.
+"""The curation cascades: one set of gates, three paths.
 
-Production shape: quality models and decontamination indices are FROZEN
-sidecars (you don't retrain the LM per micro-batch), so curation splits
-into two phases:
+- **Batch cascade** (:func:`curation_cascade`; registry rows
+  ``curation_pipeline``, ``curation_funnel``, ``curation_select_pipeline``):
+  Gopher repetition ∧ unigram surprisal → 13-gram benchmark decontam
+  (``doc_id % 97 == 0`` is the eval slice) → count-distinct passage dedup
+  → min-id exact dedup → temperature mixture. Each stage's survivor id set
+  is a named stage barrier.
+- **Batch twin** (:func:`incremental_curation_batch`; registry row
+  ``incremental_curation``): the cascade's gates as the stream computes
+  them, over the whole corpus in one pass.
+- **Stream** (:func:`prepare_curation_state` once per corpus refresh,
+  then :func:`curate_stream_batch` per micro-batch, drained by
+  :func:`streaming_curation`): the twin's gates against frozen sidecars —
+  the unigram LM ``(token, c)`` and the eval 13-gram hash index — plus the
+  persisted passage-owner and content-hash indices.
 
-- **prepare** (batch, once per corpus refresh): persist the unigram LM
-  ``(token, c)`` and the eval-slice 13-gram hash index under ``base_dir``;
-- **stream** (``foreachBatch``): each micro-batch applies, in order,
-  (1) the Gopher repetition gate (pointwise), (2) the surprisal gate
-  against the frozen LM, (3) 13-gram decontamination against the frozen
-  eval index, (4) FIRST-OWNER passage dedup against the persisted
-  passage-owner index (text/dedup.py::passage_first_owner_stats — the
-  prefix-consistent semantics), (5) exact dedup (min-id keeper within
-  batch + anti-join of the persisted content-hash index), then upserts
-  survivors and extends the owner/hash indices. Index rows carry the
-  ``batch_id`` that wrote them; reads take the strictly-earlier view
-  (``batch_id < current``) and writes are per-batch-id dynamic partition
-  overwrites — so a replayed micro-batch recomputes bit-identical
-  verdicts and rewrites identical state, whatever partial writes the
-  crashed attempt left behind (the winnow_stream discipline).
+Every gate is one library operator: surprisal is
+text/corpus.py::unigram_surprisal (the stream passes the frozen LM; a
+token the LM lacks prices as c = 1), 13-gram hashes are
+text/cleaning.py::ngram_hash_rows, passage keys are
+text/dedup.py::passage_hashes, and the twin and the stream share one
+min-id keeper that shuffles only ``(id, md5)``.
 
-The temperature-mixture stage is deliberately ABSENT from the stream: its
-per-source rates depend on the FINAL curated counts, a corpus-global
-quantity — production re-samples the curated store per training run
-(operators/sampling.py::temperature_mixture_sample on the ``curated/``
-table), it doesn't sample mid-stream.
+Two differences between the cascade and the twin remain, both semantic:
 
-Equivalence contract (pytest-proven in tests/test_curation_stream.py):
-if micro-batches arrive as ascending ``doc_id`` ranges (file sources:
-order by mtime), the final ``curated/`` table is ROW-IDENTICAL to
-:func:`incremental_curation_batch` run once over the concatenated corpus
-— every gate is pointwise-given-frozen-state except passage/exact dedup,
-which are prefix-consistent by construction.
+- **Passage dedup.** The cascade drops passages shared by ≥2 DISTINCT
+  documents (text/dedup.py::passage_dedup_stats): a document's verdict
+  depends on later documents, so no stream can reproduce it. The twin
+  and the stream are FIRST-OWNER (passage_first_owner_stats): a passage
+  counts as duplicated iff a smaller id among the entrants (or an earlier
+  batch) holds it, which depends only on the id-order prefix.
+- **Mixture.** Only the cascade samples: the per-source rates depend on
+  the FINAL curated counts, a corpus-global quantity — production
+  re-samples the curated store per training run
+  (operators/sampling.py::temperature_mixture_sample on ``curated/``).
+
+So the cascade is not the stream run on one batch with an empty earlier
+view; the twin is.
+
+Stream equivalence contract (pytest-proven in
+tests/test_curation_stream.py): if micro-batches arrive as ascending
+``doc_id`` ranges (file sources: order by mtime), the final ``curated/``
+table is ROW-IDENTICAL to :func:`incremental_curation_batch` run once
+over the concatenated corpus. Index rows carry the ``batch_id`` that
+wrote them; reads take the strictly-earlier view (``batch_id <
+current``) and writes are per-batch-id dynamic partition overwrites — so
+a replayed micro-batch recomputes bit-identical verdicts and rewrites
+identical state, whatever partial writes the crashed attempt left behind
+(the winnow_stream discipline).
 
 State layout under ``base_dir``: ``lm/`` (token, c), ``eval_grams/``
 (gh), ``passage_owner/`` (h), ``hash_index/`` (h), ``curated/`` (rows).
@@ -49,11 +63,19 @@ from pyspark.sql import functions as F
 
 from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.io import merge_upsert, path_exists, write_batch_partition
+from pharmacodi_spark.operators.sampling import temperature_mixture_sample
 from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.analysis import repetition_metrics
-from pharmacodi_spark.text.dedup import passage_first_owner_stats
+from pharmacodi_spark.text.cleaning import decontaminate_against, ngram_hash_rows
+from pharmacodi_spark.text.corpus import unigram_lm, unigram_surprisal
+from pharmacodi_spark.text.dedup import (
+    exact_dedup,
+    passage_dedup_stats,
+    passage_first_owner_stats,
+    passage_hashes,
+)
+from pharmacodi_spark.text.incremental import content_hashes
 
-_SCALE_BITS = 20
 _MAX_MEAN_CENTIBITS = 2405  # 100 * sum_bits <= 2405 * n_words (mean <= 24.05)
 _NGRAM = 13
 _WINDOW = 16
@@ -66,27 +88,75 @@ def _paths(base_dir: str) -> dict[str, str]:
     }
 
 
-def _tokens(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    return (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.col(content_col), " ")).alias("token"),
-        )
-        .where(F.col("token") != "")
+def _quality_ids(
+    docs: DataFrame,
+    content_col: str = "text",
+    id_col: str = "doc_id",
+    lm: DataFrame | None = None,
+) -> DataFrame:
+    """Ids passing the Gopher repetition gate and the surprisal gate
+    (mean <= 24.05 bits against ``lm``, default the frame's own LM)."""
+    gop = repetition_metrics(docs, content_col, id_col).where("keep").select(id_col)
+    sur = (
+        unigram_surprisal(docs, content_col, id_col, lm=lm)
+        .where(100 * F.col("sum_bits") <= _MAX_MEAN_CENTIBITS * F.col("n_words"))
+        .select(id_col)
     )
+    return gop.join(sur, id_col)
 
 
-def _gram_hashes(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    toks = F.filter(F.split(F.col(content_col), " "), lambda x: x != "")
-    g = F.transform(
-        F.sequence(F.lit(1), F.size("__toks") - (_NGRAM - 1)),
-        lambda i: F.md5(F.array_join(F.slice("__toks", i, _NGRAM), " ")),
+def curation_cascade(
+    docs: DataFrame,
+) -> tuple[list[tuple[str, DataFrame]], DataFrame]:
+    """The five-stage batch cascade over a ``(doc_id, text, source)``
+    documents frame: quality → decontam → passage dedup (count-distinct)
+    → exact dedup → temperature mixture (alpha=0.5, budget 0.5, salt
+    'cur'). Returns ``([(stage_name, survivor_id_df), ...], final_df)``.
+
+    Stage boundary discipline (the thing that makes a multi-stage cascade
+    survive 100 TB): each stage's SURVIVOR ID SET — metadata-scale, ids
+    only — is a named stage barrier (pharmacodi_spark.barrier), and the
+    next stage joins a FRESH pruned corpus scan against it. Composing the
+    DataFrames lazily instead re-expands every upstream stage at every
+    downstream reference: the naive composition compiled to 116 documents
+    scans and 44 sort-merge joins; with the id-set barriers it is ~12
+    scans, each stage's shuffle keys (id) / (id, gram) / (hash) only, and
+    bodies never shuffle. A caller that audits the stages (the funnel)
+    re-reads the pinned id sets instead of re-running stages."""
+    s1 = stage_barrier(
+        _quality_ids(docs).where(F.col("doc_id") % 97 != 0),
+        name="curation-s1-quality",
     )
-    return (
-        df.select(F.col(id_col), toks.alias("__toks"))
-        .where(F.size("__toks") >= _NGRAM)
-        .select(id_col, F.explode(g).alias("gh"))
+    q1 = docs.join(s1, "doc_id")
+    ev = docs.where(F.col("doc_id") % 97 == 0)
+    s2 = stage_barrier(
+        decontaminate_against(q1, ev, n=_NGRAM)
+        .where(~F.col("contaminated"))
+        .select("doc_id"),
+        name="curation-s2-decontam",
     )
+    q2 = docs.join(s2, "doc_id")
+    s3 = stage_barrier(
+        passage_dedup_stats(q2, window=_WINDOW).where("keep").select("doc_id"),
+        name="curation-s3-passage",
+    )
+    q3 = docs.join(s3, "doc_id")
+    s4 = stage_barrier(
+        exact_dedup(q3).select("doc_id"), name="curation-s4-exact"
+    )
+    q4 = docs.join(s4, "doc_id")
+    final = temperature_mixture_sample(
+        q4.select("doc_id", "source"), "source",
+        budget_frac=0.5, alpha=0.5, key_cols=["doc_id"], salt="cur",
+    )
+    stages = [
+        ("quality", s1),
+        ("decontam", s2),
+        ("passage_dedup", s3),
+        ("exact_dedup", s4),
+        ("mixture", final.select("doc_id")),
+    ]
+    return stages, final
 
 
 def prepare_curation_state(
@@ -99,15 +169,11 @@ def prepare_curation_state(
 ) -> None:
     """Phase 1: freeze the corpus LM and the eval-slice gram index."""
     p = _paths(base_dir)
-    (
-        _tokens(stats_docs, content_col, id_col)
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("c"))
-        .write.mode("overwrite")
-        .parquet(p["lm"])
+    unigram_lm(stats_docs, content_col, id_col).write.mode("overwrite").parquet(
+        p["lm"]
     )
     (
-        _gram_hashes(eval_docs, content_col, id_col)
+        ngram_hash_rows(eval_docs, content_col, id_col, _NGRAM, None)
         .select("gh")
         .distinct()
         .write.mode("overwrite")
@@ -124,41 +190,34 @@ def _gates_1_to_3(
 ) -> DataFrame:
     """Pointwise-given-frozen-state gates: repetition ∧ surprisal ∧
     not-contaminated. Returns the entrant id set."""
-    gop = (
-        repetition_metrics(new, content_col, id_col)
-        .where("keep")
-        .select(id_col)
-    )
-    # surprisal vs the FROZEN LM: unseen tokens price as c=1 (max surprisal)
-    total = lm.agg(F.sum("c").alias("n"))
-    bits = (
-        _tokens(new, content_col, id_col)
-        .join(lm, "token", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            id_col,
-            # shift-free fixed point: floor(log2(n·2^s/c)) ==
-            # floor(log2(n div c)) + s for n >= c >= 1, so no pre-shift
-            # that would overflow int64 once the frozen LM exceeds
-            # ~2^43 tokens (ADVICE r6); matches unigram_surprisal
-            (
-                F.length(F.bin(F.expr("n div coalesce(c, 1L)")))
-                - 1
-                + _SCALE_BITS
-            ).alias("bits"),
-        )
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_words"), F.sum("bits").alias("sum_bits"))
-        .where(100 * F.col("sum_bits") <= _MAX_MEAN_CENTIBITS * F.col("n_words"))
-        .select(id_col)
-    )
     contam = (
-        _gram_hashes(new, content_col, id_col)
+        ngram_hash_rows(new, content_col, id_col, _NGRAM, None)
         .join(eval_grams, "gh", "left_semi")
         .select(id_col)
         .distinct()
     )
-    return gop.join(bits, id_col).join(contam, id_col, "left_anti")
+    return _quality_ids(new, content_col, id_col, lm).join(
+        contam, id_col, "left_anti"
+    )
+
+
+def _exact_survivors(
+    df: DataFrame,
+    content_col: str,
+    id_col: str,
+    seen: DataFrame | None = None,
+) -> DataFrame:
+    """Rows of ``df`` that keep their content: the min id per content md5,
+    minus hashes in ``seen`` (an ``h`` index). Only ``(id, md5)`` shuffles
+    for the keeper; the rows join back by id."""
+    keeper = (
+        df.select(F.col(id_col), F.md5(F.col(content_col)).alias("h"))
+        .groupBy("h")
+        .agg(F.min(id_col).alias(id_col))
+    )
+    if seen is not None:
+        keeper = keeper.join(seen, "h", "left_anti")
+    return df.join(keeper.select(id_col), id_col)
 
 
 #: read schema for the two index tables — explicit so an index directory
@@ -272,60 +331,18 @@ def curate_stream_batch(
     q4 = q3.join(keep4, id_col)
 
     # stage 5: exact dedup — min-id keeper within batch, then vs index
-    h = F.md5(F.col(content_col)).alias("h")
-    keeper = (
-        q4.select(F.col(id_col), h)
-        .groupBy("h")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    if hash_index is not None:
-        keeper = keeper.join(hash_index, "h", "left_anti")
     survivors = stage_barrier(
-        q4.join(keeper.select(id_col), id_col), name="curation-survivors"
+        _exact_survivors(q4, content_col, id_col, hash_index),
+        name="curation-survivors",
     )
 
     # state updates — every entrant claims its passages (accepted or not:
     # the batch twin's owner is the min id among ENTRANTS); content hashes
     # claimed by keepers only
-    new_owned = (
-        q3.select(
-            F.explode(
-                F.transform(
-                    F.sequence(
-                        F.lit(0),
-                        F.floor(
-                            (
-                                F.size(
-                                    F.filter(
-                                        F.split(F.col(content_col), " "),
-                                        lambda x: x != "",
-                                    )
-                                )
-                                - 1
-                            )
-                            / F.lit(float(_WINDOW))
-                        ).cast("int"),
-                    ),
-                    lambda i: F.md5(
-                        F.array_join(
-                            F.slice(
-                                F.filter(
-                                    F.split(F.col(content_col), " "),
-                                    lambda x: x != "",
-                                ),
-                                i * _WINDOW + 1,
-                                _WINDOW,
-                            ),
-                            " ",
-                        )
-                    ),
-                )
-            ).alias("h")
-        )
-        .where(F.col("h").isNotNull())
-        .distinct()
-    )
-    new_hashes = survivors.select(F.md5(F.col(content_col)).alias("h")).distinct()
+    new_owned = q3.select(
+        F.explode(passage_hashes(_WINDOW, content_col)).alias("h")
+    ).distinct()
+    new_hashes = content_hashes(survivors, content_col, id_col)
     if prior_owned is not None:
         new_owned = new_owned.join(prior_owned, "h", "left_anti")
     if hash_index is not None:
@@ -372,12 +389,12 @@ def incremental_curation_batch(
     if eval_docs is None:
         eval_docs = docs.where(F.col(id_col) % 97 == 0)
         docs = docs.where(F.col(id_col) % 97 != 0)
-    lm = (
-        _tokens(stats_docs, content_col, id_col)
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("c"))
+    lm = unigram_lm(stats_docs, content_col, id_col)
+    eval_grams = (
+        ngram_hash_rows(eval_docs, content_col, id_col, _NGRAM, None)
+        .select("gh")
+        .distinct()
     )
-    eval_grams = _gram_hashes(eval_docs, content_col, id_col).select("gh").distinct()
     entrants = _gates_1_to_3(docs, lm, eval_grams, content_col, id_col)
     q3 = stage_barrier(docs.join(entrants, id_col), name="curation-entrants")
     # keep4 is metadata-scale (ids) but its subplan carries the passage
@@ -390,10 +407,4 @@ def incremental_curation_batch(
         .select(id_col),
         name="curation-passage-keepers",
     )
-    q4 = q3.join(keep4, id_col)
-    keeper = (
-        q4.select(F.col(id_col), F.md5(F.col(content_col)).alias("h"))
-        .groupBy("h")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    return q4.join(keeper.select(id_col), id_col)
+    return _exact_survivors(q3.join(keep4, id_col), content_col, id_col)

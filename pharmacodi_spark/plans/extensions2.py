@@ -3725,96 +3725,23 @@ def curation_pipeline(
     13-gram benchmark decontamination (doc_id%97==0 as the eval slice) →
     cross-doc passage dedup among survivors → exact dedup (min-id per
     content hash) → temperature mixture (alpha=0.5, budget 0.5, salt
-    'cur').  Every stage is the library operator the standalone query
-    gates; the whole cascade value-matches the composed CTE oracle.
-
-    Stage boundary discipline (the thing that makes a multi-stage cascade
-    survive 100 TB): each stage's SURVIVOR ID SET — metadata-scale, ids
-    only — is pinned with a stage barrier (localCheckpoint by default;
-    scratch parquet that survives executor loss when
-    ``spark.pharmacodi.barrierDir`` is set, see pharmacodi_spark.barrier),
-    and the next stage joins a FRESH pruned corpus scan against it.
-    Composing the DataFrames lazily instead re-expands every upstream
-    stage at every downstream reference: the naive composition of this
-    exact cascade compiled to 116 documents scans and 44 sort-merge joins
-    (combinatorial subtree replication);
-    with the id-set barriers it is ~12 scans, each stage's shuffle keys
-    (id) / (id, gram) / (hash) only, and bodies never shuffle."""
-    _stages, final = _curation_cascade(
-        spark, sf_dir, docs=docs, html_col=html_col
-    )
-    return final
-
-
-def _curation_cascade(
-    spark: SparkSession,
-    sf_dir: str,
-    docs: DataFrame | None = None,
-    html_col: str | None = None,
-) -> tuple[list[tuple[str, DataFrame]], DataFrame]:
-    """The shared five-stage cascade behind ``curation_pipeline`` (final
-    mixture sample) and ``curation_funnel`` (per-stage audit counts).
-    Returns ``([(stage_name, survivor_id_df), ...], final_df)`` — every
-    survivor set is stage-barrier-pinned (metadata-scale), so the funnel's
-    extra aggregates re-read pinned id sets instead of re-running stages."""
-    from pharmacodi_spark.barrier import stage_barrier
-    from pharmacodi_spark.operators.sampling import temperature_mixture_sample
-    from pharmacodi_spark.text.analysis import repetition_metrics
-    from pharmacodi_spark.text.cleaning import decontaminate_against
-    from pharmacodi_spark.text.corpus import unigram_surprisal
-    from pharmacodi_spark.text.dedup import exact_dedup, passage_dedup_stats
+    'cur').  The cascade is pipelines/curation_stream.py::
+    curation_cascade: every stage is the library operator the standalone
+    query gates, each survivor id set is a named stage barrier, and the
+    whole cascade value-matches the composed CTE oracle.  ``html_col``
+    prepends stage 0: the native main-content extractor turns crawled
+    HTML into gate-ready prose in one zero-shuffle projection."""
+    from pharmacodi_spark.pipelines.curation_stream import curation_cascade
 
     d = _t(spark, sf_dir, "documents") if docs is None else docs
     if html_col is not None:
-        # optional stage 0 (VERDICT r7 item 2): crawled HTML → gate-ready
-        # prose via the native main-content extractor — one zero-shuffle
-        # projection prepended to the scan, then the cascade is unchanged
         from pharmacodi_spark.text.html import html_to_text
 
         d = html_to_text(d, html_col=html_col, out_col="text")
         if html_col != "text":  # html stored IN the text column: the
             # extraction replaced it in place — dropping would lose it
             d = d.drop(html_col)
-    gop = repetition_metrics(d).where("keep").select("doc_id")
-    sur = (
-        unigram_surprisal(d)
-        .where(100 * F.col("sum_bits") <= 2405 * F.col("n_words"))
-        .select("doc_id")
-    )
-    s1 = stage_barrier(
-        gop.join(sur, "doc_id").where(F.col("doc_id") % 97 != 0),
-        name="curation-s1-quality",
-    )
-    q1 = d.join(s1, "doc_id")
-    ev = d.where(F.col("doc_id") % 97 == 0)
-    s2 = stage_barrier(
-        decontaminate_against(q1, ev, n=13)
-        .where(~F.col("contaminated"))
-        .select("doc_id"),
-        name="curation-s2-decontam",
-    )
-    q2 = d.join(s2, "doc_id")
-    s3 = stage_barrier(
-        passage_dedup_stats(q2, window=16).where("keep").select("doc_id"),
-        name="curation-s3-passage",
-    )
-    q3 = d.join(s3, "doc_id")
-    s4 = stage_barrier(
-        exact_dedup(q3).select("doc_id"), name="curation-s4-exact"
-    )
-    q4 = d.join(s4, "doc_id")
-    final = temperature_mixture_sample(
-        q4.select("doc_id", "source"), "source",
-        budget_frac=0.5, alpha=0.5, key_cols=["doc_id"], salt="cur",
-    )
-    stages = [
-        ("quality", s1),
-        ("decontam", s2),
-        ("passage_dedup", s3),
-        ("exact_dedup", s4),
-        ("mixture", final.select("doc_id")),
-    ]
-    return stages, final
+    return curation_cascade(d)[1]
 
 
 @q(
@@ -3946,12 +3873,14 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-increasing down the funnel and each stage's ``rows_in`` equals the
     previous stage's ``rows_kept`` (pytest-guarded).
 
-    Cost shape: the cascade runs ONCE (shared ``_curation_cascade`` —
-    every survivor set is stage-barrier-pinned), and the funnel's counts
-    are 1-row aggregates over those pinned metadata-scale id sets, chained
-    by broadcast-size cross joins."""
-    stages, _final = _curation_cascade(spark, sf_dir)
+    Cost shape: the cascade runs ONCE (pipelines/curation_stream.py::
+    curation_cascade — every survivor set is stage-barrier-pinned), and
+    the funnel's counts are 1-row aggregates over those pinned
+    metadata-scale id sets, chained by broadcast-size cross joins."""
+    from pharmacodi_spark.pipelines.curation_stream import curation_cascade
+
     d = _t(spark, sf_dir, "documents")
+    stages, _final = curation_cascade(d)
     prev = d.select("doc_id")
     rows = []
     for idx, (name, ids) in enumerate(stages, start=1):
@@ -4085,16 +4014,18 @@ def auto_salted_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming-curation BATCH TWIN (pipelines/curation_stream.py::
-    incremental_curation_batch): gates 1-3 exactly as curation_pipeline,
-    then FIRST-OWNER passage dedup (text/dedup.py::
-    passage_first_owner_stats — a passage instance is duplicated iff its
-    hash's minimum-id owner among entrants precedes this doc; the
-    prefix-consistent semantics a micro-batched pass reproduces
-    byte-identically against a persisted owner index), then min-id exact
-    dedup.  The mixture stage is deliberately absent: its rates need the
-    corpus-global final counts (module docstring).  tests/
-    test_curation_stream.py proves availableNow streaming over ascending
-    id ranges ≡ this query."""
+    incremental_curation_batch): gates 1-3 run the same library operators
+    as curation_pipeline (repetition, unigram_surprisal against the
+    corpus LM, ngram_hash_rows decontam), then FIRST-OWNER passage dedup
+    (text/dedup.py::passage_first_owner_stats — a passage instance is
+    duplicated iff its hash's minimum-id owner among entrants precedes
+    this doc; the prefix-consistent semantics a micro-batched pass
+    reproduces byte-identically against a persisted owner index), then
+    min-id exact dedup.  Two differences from curation_pipeline remain:
+    the count-distinct passage stage cannot be reproduced by a stream,
+    and the mixture stage needs the corpus-global final counts (module
+    docstring).  tests/test_curation_stream.py proves availableNow
+    streaming over ascending id ranges ≡ this query."""
     from pharmacodi_spark.pipelines.curation_stream import (
         incremental_curation_batch,
     )

@@ -945,23 +945,23 @@ def curation_select_pipeline(
     spark: SparkSession,
     sf_dir: str,
 ) -> DataFrame:
-    """The full training-data story in ONE cascade: five curation stages
-    (Gopher ∧ surprisal → 13-gram decontam → passage dedup → exact dedup →
-    temperature mixture, plans/extensions2.py::_curation_cascade) feeding
-    DSIR importance selection TRAINED ON THE CURATED POOL (target
-    lang='en') → the 100 most target-like curated documents.  Six
-    survivor-set stage barriers end to end (durable when
+    """The full training-data story in ONE cascade: the five-stage batch
+    curation cascade (pipelines/curation_stream.py::curation_cascade —
+    Gopher ∧ surprisal → 13-gram decontam → passage dedup → exact dedup →
+    temperature mixture) feeding DSIR importance selection TRAINED ON THE
+    CURATED POOL (target lang='en') → the 100 most target-like curated
+    documents.  Six survivor-set stage barriers end to end (durable when
     ``spark.pharmacodi.barrierDir`` is set, see pharmacodi_spark.barrier);
-    each selection pass broadcast-joins a fresh pruned scan.  The oracle
-    nests the curation SQL verbatim as a CTE and extends it with the DSIR
-    chain — one source of truth per stage."""
+    the cascade and both selection passes join the same pruned documents
+    scan.  The oracle nests the curation SQL verbatim as a CTE and extends
+    it with the DSIR chain — one source of truth per stage."""
     from pharmacodi_spark.barrier import stage_barrier
-    from pharmacodi_spark.plans.extensions2 import _curation_cascade
+    from pharmacodi_spark.pipelines.curation_stream import curation_cascade
     from pharmacodi_spark.text.selection import dsir_score, dsir_train_weights
 
-    _stages, final = _curation_cascade(spark, sf_dir)
-    ids = stage_barrier(final.select("doc_id"), name="curation-s6-select")
     d = _t(spark, sf_dir, "documents")
+    _stages, final = curation_cascade(d)
+    ids = stage_barrier(final.select("doc_id"), name="curation-s6-select")
     surv = d.join(ids, "doc_id")  # AQE decides; see selection_pipeline
     lam = dsir_train_weights(
         surv, F.col("lang") == "en", dim=_DSIR_DIM, salt=_DSIR_SALT

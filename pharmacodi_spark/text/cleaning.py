@@ -240,7 +240,7 @@ def repeated_span_stats(
     )
 
 
-def _ngram_hash_rows(
+def ngram_hash_rows(
     df: DataFrame,
     content_col: str,
     id_col: str,
@@ -248,9 +248,10 @@ def _ngram_hash_rows(
     tokens_col: str | None,
     distinct_per_doc: bool = False,
 ) -> DataFrame:
-    """(id, gh) rows: one md5 hash per ``n``-gram window — the shared
-    gram stage of the decontamination family (bodies never leave the
-    projection; only 32-byte hashes flow downstream).
+    """(id, gh) rows: one md5 hash per ``n``-gram window over the
+    non-empty space-split tokens — the shared gram stage of the
+    decontamination family and the curation cascades' eval index (bodies
+    never leave the projection; only 32-byte hashes flow downstream).
 
     ``distinct_per_doc`` dedups the grams INSIDE the per-doc array
     (``array_distinct``) before the explode — row-for-row identical to
@@ -269,16 +270,32 @@ def _ngram_hash_rows(
     )
     if distinct_per_doc:
         g = F.array_distinct(g)
-    # the per-gram md5 stream is the family's dominant CPU term and sits
-    # directly on the scan — spread a single-split scan before it (no-op
-    # at corpus scale; guide §2.5, r12)
+    return (
+        df.select(F.col(id_col), toks.alias("__toks"))
+        .where(F.size("__toks") >= n)
+        .select(id_col, F.explode(g).alias("gh"))
+    )
+
+
+def _spread_gram_rows(
+    df: DataFrame,
+    content_col: str,
+    id_col: str,
+    n: int,
+    tokens_col: str | None,
+    distinct_per_doc: bool = False,
+) -> DataFrame:
+    """:func:`ngram_hash_rows` for the decontamination family: the
+    per-gram md5 stream is its dominant CPU term and sits directly on the
+    scan — spread a single-split scan before it (no-op at corpus scale;
+    guide §2.5, r12). The curation stream and its batch twin call
+    :func:`ngram_hash_rows` unspread: measured, the spread adds a job to
+    some micro-batches and saves none overall."""
     base = spread_small_scan(
         df.select(F.col(id_col), F.col(tokens_col or content_col)), id_col
     )
-    return (
-        base.select(F.col(id_col), toks.alias("__toks"))
-        .where(F.size("__toks") >= n)
-        .select(id_col, F.explode(g).alias("gh"))
+    return ngram_hash_rows(
+        base, content_col, id_col, n, tokens_col, distinct_per_doc
     )
 
 
@@ -308,7 +325,7 @@ def decontaminate_against(
     class; VERDICT r10 item 4 ranked this op highest-stakes).
     """
     def gram_rows(df: DataFrame) -> DataFrame:
-        return _ngram_hash_rows(df, content_col, id_col, n, tokens_col)
+        return _spread_gram_rows(df, content_col, id_col, n, tokens_col)
 
     # the eval gram set is benchmark-sized by definition — hint it so the
     # semi-join stays broadcast even when the eval frame has no stats
@@ -320,7 +337,7 @@ def decontaminate_against(
     # map-side and only ~1 partial-count row per colliding doc reaches
     # the groupBy exchange (guide §2.3/2.4)
     hits = (
-        _ngram_hash_rows(
+        _spread_gram_rows(
             train, content_col, id_col, n, tokens_col, distinct_per_doc=True
         )
         .join(eval_grams, "gh", "left_semi")
@@ -373,7 +390,7 @@ def bloom_decontaminate_against(
     of re-aggregating the eval grams per corpus refresh (build once
     when the benchmark suite changes, screen every refresh); it MUST
     have been built over the same ``n``-gram md5 hashes
-    (``_ngram_hash_rows`` of the same eval set), since a mismatched
+    (``ngram_hash_rows`` of the same eval set), since a mismatched
     bitmap silently filters the wrong key space."""
     from pharmacodi_spark.operators.bloom import (
         bloom_condition,
@@ -381,7 +398,7 @@ def bloom_decontaminate_against(
     )
 
     eval_grams = (
-        _ngram_hash_rows(eval_df, content_col, id_col, n, tokens_col)
+        _spread_gram_rows(eval_df, content_col, id_col, n, tokens_col)
         .select("gh")
         .distinct()
     )
@@ -392,7 +409,7 @@ def bloom_decontaminate_against(
     # r12: per-doc array_distinct replaces the corpus-wide candidate
     # distinct (same rows — the id rides every row), so under the bloom
     # prefilter NO full gram exchange remains at all
-    cand = _ngram_hash_rows(
+    cand = _spread_gram_rows(
         train, content_col, id_col, n, tokens_col, distinct_per_doc=True
     ).where(bloom_condition(words, F.col("gh"), n_hashes))
     hits = (

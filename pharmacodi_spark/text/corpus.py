@@ -123,12 +123,44 @@ def top_ngrams(
     return counts.orderBy(F.col("n_occurrences").desc(), F.col("ngram")).limit(k)
 
 
+def _unigram_tokens(
+    df: DataFrame, content_col: str, id_col: str, tokens_col: str | None
+) -> DataFrame:
+    """(id, token) rows of the surprisal LM's tokenizer: split on ``" "``
+    (or the ``tokens_col`` array), drop empty tokens."""
+    tok_src = (
+        F.col(tokens_col)
+        if tokens_col is not None
+        else F.split(F.col(content_col), " ")
+    )
+    # empty tokens from leading/trailing/repeated whitespace would inflate
+    # n_words and enter the unigram distribution (ADVICE r4) — drop them,
+    # matching the tokenizer module's split-then-filter convention
+    return df.select(
+        F.col(id_col), F.explode(tok_src).alias("token")
+    ).where(F.col("token") != "")
+
+
+def unigram_lm(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+    """The unigram LM table ``(token, c)`` of :func:`unigram_surprisal`,
+    with the same tokenizer — persist it to score later documents against
+    a frozen LM (pipelines/curation_stream.py). No spread guard: a
+    count-only walk is too light to pay for the exchange (see
+    :func:`_tokens`)."""
+    return _lm_counts(_unigram_tokens(df, content_col, id_col, None))
+
+
+def _lm_counts(toks: DataFrame) -> DataFrame:
+    return toks.groupBy("token").agg(F.count("*").alias("c"))
+
+
 def unigram_surprisal(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
     scale_bits: int = 20,
     tokens_col: str | None = None,
+    lm: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document unigram surprisal — the corpus-LM quality filter (the
     CCNet-style perplexity gate, with the corpus itself as the language
@@ -138,6 +170,11 @@ def unigram_surprisal(
     (n_words, sum_bits, mean_bits). High mean ⇒ rare-token-heavy documents
     (gibberish, boilerplate IDs); low mean ⇒ head-token repetition. Rank
     and cut at either tail.
+
+    ``lm`` scores against another ``(token, c)`` table (:func:`unigram_lm`
+    of a reference corpus, e.g. a frozen sidecar) instead of the frame's
+    own counts; ``N_tokens`` is then that table's total, and a token the
+    table lacks prices as c = 1 (maximum surprisal).
 
     Scale shape: token counts collapse map-side to a (token, count) table
     (the corpus vocabulary — Zipf-small next to the token stream); the
@@ -151,32 +188,26 @@ def unigram_surprisal(
     split-on-space default collapses a whole line to one token and the
     surprisal LM silently degenerates); the default keeps the
     fixture-oracle contract."""
-    tok_src = (
-        F.col(tokens_col)
-        if tokens_col is not None
-        else F.split(F.col(content_col), " ")
-    )
-    # spread guard KEPT here (r12, measured): unlike the count-only corpus
-    # walks (tfidf/vocab/top-ngrams — reverted), this token stream is
-    # consumed TWICE (count table + the scoring join probe) and the
-    # scoring side carries a broadcast-join probe + per-doc partial agg on
-    # the scan task — profiled 5.2 s single-task inside the curation s1
-    # pin without the guard (no-op at corpus scale, §2.5)
-    toks = spread_small_scan(
-        df.select(F.col(id_col), F.col(tokens_col or content_col)), id_col
-    ).select(
-        F.col(id_col), F.explode(tok_src).alias("token")
-    ).where(F.col("token") != "")
-    # empty tokens from leading/trailing/repeated whitespace would inflate
-    # n_words and enter the unigram distribution (ADVICE r4) — drop them,
-    # matching the tokenizer module's split-then-filter convention
-    counts = toks.groupBy("token").agg(F.count("*").alias("c"))
+    # spread guard KEPT on the own-LM path (r12, measured): unlike the
+    # count-only corpus walks (tfidf/vocab/top-ngrams/unigram_lm), that
+    # token stream is consumed TWICE (count table + the scoring join
+    # probe) and the scoring side carries a broadcast-join probe + per-doc
+    # partial agg on the scan task — profiled 5.2 s single-task inside the
+    # curation s1 pin without the guard (no-op at corpus scale, §2.5).
+    # Against a given ``lm`` the stream is walked once, like the
+    # count-only walks, and small micro-batches would pay the exchange
+    # per batch — no guard there.
+    src = df.select(F.col(id_col), F.col(tokens_col or content_col))
+    if lm is None:
+        src = spread_small_scan(src, id_col)
+    toks = _unigram_tokens(src, content_col, id_col, tokens_col)
+    counts = _lm_counts(toks) if lm is None else lm
     # r12: the corpus total is the sum of the vocabulary counts — derive it
     # from the (token, c) table instead of a second full tokenize+explode
     # pass over the corpus (guide §1.2: don't compute things twice)
     total = counts.agg(F.sum("c").alias("n"))
     scored = (
-        toks.join(counts, "token")
+        toks.join(counts, "token", "inner" if lm is None else "left")
         .crossJoin(F.broadcast(total))
         .select(
             id_col,
@@ -185,7 +216,9 @@ def unigram_surprisal(
             # floor∘log2 commutes with floor for x >= 1), so the pre-shift
             # that overflowed int64 at n >= 2^(63-s) is eliminated (ADVICE r6)
             (
-                F.length(F.bin(F.expr("n div c"))) - 1 + scale_bits
+                F.length(F.bin(F.expr("n div coalesce(c, 1L)")))
+                - 1
+                + scale_bits
             ).alias("bits"),
         )
     )

@@ -397,6 +397,52 @@ def simhash_near_pairs(
     ).where(F.col("hamming") <= max_hamming)
 
 
+def _nonempty_tokens(content_col: str, tokens_col: str | None) -> Column:
+    # tokens_col: pre-tokenized array seam (CJK via unicode_tokens) — on
+    # space-split an unspaced CJK doc is ONE token = one passage, so
+    # cross-document passage sharing degenerates silently (VERDICT r10
+    # item 4)
+    src = (
+        F.col(tokens_col)
+        if tokens_col is not None
+        else F.split(F.col(content_col), " ")
+    )
+    return F.filter(src, lambda x: x != "")
+
+
+def passage_hashes(
+    window: int, content_col: str, tokens_col: str | None = None
+) -> Column:
+    """Array of md5 hashes, one per consecutive ``window``-token passage
+    (last one partial) of the non-empty space-split tokens (or the
+    ``tokens_col`` array) — the passage key of :func:`passage_dedup_stats`,
+    :func:`passage_first_owner_stats` and the streaming curation owner
+    index. A document with no tokens yields ``[md5('')]``; the stats
+    drop such rows first (:func:`_nonempty_tokens`)."""
+    assert window >= 1
+    toks = _nonempty_tokens(content_col, tokens_col)
+    n = F.size(toks)
+    # the upper bound clamps at 0 so the expression stays TOTAL on n = 0
+    # rows: the stats' `where(n > 0)` filter removes them, but an
+    # optimizer-inferred predicate (InferFiltersFromGenerate on the
+    # downstream explode, with the chunks substituted) can evaluate the
+    # transform on such a row FIRST — and an unclamped bound of -1 makes
+    # sequence(0, -1) descend into i = -1, whose slice start of 0 is an
+    # ANSI error (caught by hypothesis: a single empty document raised
+    # INVALID_PARAMETER_VALUE.START). Real rows have n >= 1, bound >= 0:
+    # values unchanged.
+    idx = F.sequence(
+        F.lit(0),
+        F.greatest(
+            F.floor((n - 1) / F.lit(float(window))).cast("int"), F.lit(0)
+        ),
+    )
+    return F.transform(
+        idx,
+        lambda i: F.md5(F.array_join(F.slice(toks, i * window + 1, window), " ")),
+    )
+
+
 def passage_dedup_stats(
     df: DataFrame,
     window: int = 16,
@@ -419,36 +465,7 @@ def passage_dedup_stats(
     broadcasts it when small and skew-splits the hot empty-ish hashes
     when not.  Bodies never shuffle.
     """
-    assert window >= 1
-    # tokens_col: pre-tokenized array seam (CJK via unicode_tokens) — on
-    # space-split an unspaced CJK doc is ONE token = one passage, so
-    # cross-document passage sharing degenerates silently (VERDICT r10
-    # item 4)
-    toks = (
-        F.filter(F.col(tokens_col), lambda x: x != "")
-        if tokens_col is not None
-        else F.filter(F.split(F.col(content_col), " "), lambda x: x != "")
-    )
-    n = F.size(toks)
-    # the upper bound clamps at 0 so the expression stays TOTAL on n = 0
-    # rows: the `where(n > 0)` filter removes them, but an optimizer-
-    # inferred predicate (InferFiltersFromGenerate on the downstream
-    # explode, with `chunks` substituted) can evaluate the transform on
-    # such a row FIRST — and an unclamped bound of -1 makes
-    # sequence(0, -1) descend into i = -1, whose slice start of 0 is an
-    # ANSI error (caught by hypothesis: a single empty document raised
-    # INVALID_PARAMETER_VALUE.START). Real rows have n >= 1, bound >= 0:
-    # values unchanged.
-    idx = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.floor((n - 1) / F.lit(float(window))).cast("int"), F.lit(0)
-        ),
-    )
-    chunks = F.transform(
-        idx,
-        lambda i: F.md5(F.array_join(F.slice(toks, i * window + 1, window), " ")),
-    )
+    chunks = passage_hashes(window, content_col, tokens_col)
     # r12 (guide §2.3/2.4): the doc-frequency side dedups INSIDE the
     # per-doc chunk array, so one map-side-combined groupBy(h) replaces
     # the count_distinct two-phase aggregate; per-doc totals are row-local
@@ -466,6 +483,7 @@ def passage_dedup_stats(
     # evaluates per consumer, but in parallel — kept above deliberately:
     # below the exchange it would run once yet inside the single scan task
     # this guard exists to relieve (r12 §2.5)
+    n = F.size(_nonempty_tokens(content_col, tokens_col))
     base = spread_small_scan(
         df.where(n > 0).select(
             F.col(id_col), F.col(tokens_col or content_col)
@@ -535,31 +553,8 @@ def passage_first_owner_stats(
     equivalence pytest-proven). Same scale shape: only (id, 32-byte hash)
     rows shuffle, the owner table is boilerplate-sized.
     """
-    assert window >= 1
-    # tokens_col: pre-tokenized array seam (CJK via unicode_tokens) — on
-    # space-split an unspaced CJK doc is ONE token = one passage, so
-    # cross-document passage sharing degenerates silently (VERDICT r10
-    # item 4)
-    toks = (
-        F.filter(F.col(tokens_col), lambda x: x != "")
-        if tokens_col is not None
-        else F.filter(F.split(F.col(content_col), " "), lambda x: x != "")
-    )
-    n = F.size(toks)
-    # bound clamped at 0: total on n = 0 rows (see passage_dedup_stats —
-    # the same inferred-predicate reordering evaluates the transform on
-    # filtered-out empty docs; unclamped, sequence(0, -1) descends into a
-    # slice start of 0, an ANSI error)
-    idx = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.floor((n - 1) / F.lit(float(window))).cast("int"), F.lit(0)
-        ),
-    )
-    chunks = F.transform(
-        idx,
-        lambda i: F.md5(F.array_join(F.slice(toks, i * window + 1, window), " ")),
-    )
+    chunks = passage_hashes(window, content_col, tokens_col)
+    n = F.size(_nonempty_tokens(content_col, tokens_col))
     # r12: cheap-predicate gate before the projection (see
     # passage_dedup_stats — the pushed isNotNull re-ran the md5 transform);
     # spread a single-split scan below it (no-op at corpus scale, §2.5) —

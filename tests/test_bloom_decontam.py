@@ -90,11 +90,11 @@ def test_bloom_persisted_sidecar_roundtrip(spark, tmp_path):
         load_bloom_bitmap,
         save_bloom_bitmap,
     )
-    from pharmacodi_spark.text.cleaning import _ngram_hash_rows
+    from pharmacodi_spark.text.cleaning import ngram_hash_rows
 
     train, ev = _corpus(spark, seed=79)
     eval_grams = (
-        _ngram_hash_rows(ev, "text", "doc_id", 13, None)
+        ngram_hash_rows(ev, "text", "doc_id", 13, None)
         .select("gh")
         .distinct()
     )

@@ -54,6 +54,25 @@ def _setup(spark, tmp_path):
     return docs, base, rows
 
 
+def _split_batches(spark, rows):
+    half = len(rows) // 2
+    b1 = spark.createDataFrame(
+        [(r["doc_id"], r["text"], r["source"]) for r in rows[:half]], SCHEMA
+    )
+    b2 = spark.createDataFrame(
+        [(r["doc_id"], r["text"], r["source"]) for r in rows[half:]], SCHEMA
+    )
+    return b1, b2
+
+
+def _snap(spark, base):
+    return (
+        sorted(r.doc_id for r in spark.read.parquet(f"{base}/curated").collect()),
+        sorted(r.h for r in spark.read.parquet(f"{base}/passage_owner").collect()),
+        sorted(r.h for r in spark.read.parquet(f"{base}/hash_index").collect()),
+    )
+
+
 def test_stream_equals_batch_twin(spark, tmp_path):
     from pharmacodi_spark.pipelines.curation_stream import (
         incremental_curation_batch, streaming_curation,
@@ -87,26 +106,13 @@ def test_stream_batch_replay_idempotent(spark, tmp_path):
     from pharmacodi_spark.pipelines.curation_stream import curate_stream_batch
 
     docs, base, rows = _setup(spark, tmp_path)
-    half = len(rows) // 2
-    b1 = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["source"]) for r in rows[:half]], SCHEMA
-    )
-    b2 = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["source"]) for r in rows[half:]], SCHEMA
-    )
+    b1, b2 = _split_batches(spark, rows)
     curate_stream_batch(spark, base, b1, batch_id=0)
     curate_stream_batch(spark, base, b2, batch_id=1)
 
-    def snap():
-        return (
-            sorted(r.doc_id for r in spark.read.parquet(f"{base}/curated").collect()),
-            sorted(r.h for r in spark.read.parquet(f"{base}/passage_owner").collect()),
-            sorted(r.h for r in spark.read.parquet(f"{base}/hash_index").collect()),
-        )
-
-    before = snap()
+    before = _snap(spark, base)
     curate_stream_batch(spark, base, b2, batch_id=1)  # replayed micro-batch
-    assert snap() == before
+    assert _snap(spark, base) == before
 
 
 def test_stream_batch_stale_batch_id_rejected(spark, tmp_path):
@@ -119,38 +125,13 @@ def test_stream_batch_stale_batch_id_rejected(spark, tmp_path):
     from pharmacodi_spark.pipelines.curation_stream import curate_stream_batch
 
     docs, base, rows = _setup(spark, tmp_path)
-    half = len(rows) // 2
-    b1 = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["source"]) for r in rows[:half]], SCHEMA
-    )
-    b2 = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["source"]) for r in rows[half:]], SCHEMA
-    )
+    b1, b2 = _split_batches(spark, rows)
     curate_stream_batch(spark, base, b1, batch_id=0)
     curate_stream_batch(spark, base, b2, batch_id=1)
     with pytest.raises(ValueError, match="behind the index"):
         curate_stream_batch(spark, base, b1, batch_id=0)
     with pytest.raises(TypeError):
         curate_stream_batch(spark, base, b1)  # batch_id is keyword-required
-
-
-def _split_batches(spark, rows):
-    half = len(rows) // 2
-    b1 = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["source"]) for r in rows[:half]], SCHEMA
-    )
-    b2 = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["source"]) for r in rows[half:]], SCHEMA
-    )
-    return b1, b2
-
-
-def _snap(spark, base):
-    return (
-        sorted(r.doc_id for r in spark.read.parquet(f"{base}/curated").collect()),
-        sorted(r.h for r in spark.read.parquet(f"{base}/passage_owner").collect()),
-        sorted(r.h for r in spark.read.parquet(f"{base}/hash_index").collect()),
-    )
 
 
 def test_replay_after_crash_between_index_writes(spark, tmp_path):

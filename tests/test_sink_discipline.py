@@ -177,3 +177,43 @@ def test_create_dataframe_only_for_arrow_tables():
     ]
     others = [h for h in hits if not h.startswith("text/clusters.py:")]
     assert others == [] and len(hits) == 1, "build frames with local_df"
+
+
+def test_library_never_imports_the_registry():
+    # the engine lives in the library; the query registry (plans/) wraps
+    # it and nothing outside plans/ reaches back into it
+    hits = []
+    for mod, tree in _modules():
+        if mod.startswith("plans/"):
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            hits += [
+                f"{mod}:{node.lineno} {n}"
+                for n in names
+                if n == "pharmacodi_spark.plans"
+                or n.startswith("pharmacodi_spark.plans.")
+            ]
+    assert hits == [], "move the operator out of plans/ instead"
+
+
+def test_curation_gates_tokenize_in_the_library():
+    # every curation gate calls the library's tokenizing operator
+    # (unigram_surprisal, ngram_hash_rows, passage_hashes); a split or
+    # slice here would fork a gate from its batch twin
+    tree = ast.parse((ENGINE / "pipelines" / "curation_stream.py").read_text())
+    hits = [
+        f"{call.lineno} F.{call.func.attr}"
+        for call in ast.walk(tree)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr in ("split", "slice")
+        and isinstance(call.func.value, ast.Name)
+        and call.func.value.id == "F"
+    ]
+    assert hits == [], "call the library gate operator instead"

@@ -533,6 +533,40 @@ def test_unigram_surprisal_ranks_rarity(spark):
     assert out[2].sum_bits == 5 * 20 + 2 * 23
 
 
+def test_unigram_surprisal_own_lm_input_matches_default(spark):
+    from pharmacodi_spark.text.corpus import unigram_lm, unigram_surprisal
+
+    df = spark.createDataFrame(
+        [
+            (1, "common common  common rare"),
+            (2, " common zz zz "),
+            (3, ""),
+        ],
+        "doc_id long, text string",
+    )
+    default = sorted(unigram_surprisal(df).collect())
+    lm = unigram_lm(df, "text", "doc_id")
+    via_lm = sorted(unigram_surprisal(df, lm=lm).collect())
+    assert via_lm == default and default
+
+
+def test_unigram_surprisal_frozen_lm_prices_unseen_tokens(spark):
+    from pharmacodi_spark.text.corpus import unigram_lm, unigram_surprisal
+
+    ref = spark.createDataFrame(
+        [(1, "a a a b b")], "doc_id long, text string"
+    )
+    frozen = unigram_lm(ref, "text", "doc_id")  # {a: 3, b: 2}, n = 5
+    df = spark.createDataFrame(
+        [(10, "zz"), (11, "a zz")], "doc_id long, text string"
+    )
+    out = {r.doc_id: r for r in unigram_surprisal(df, lm=frozen).collect()}
+    # a token the frozen LM lacks prices as c = 1: floor(log2(n)) + 20
+    assert out[10].n_words == 1 and out[10].sum_bits == 2 + 20
+    # a: floor(log2(5 div 3)) + 20 = 20
+    assert out[11].n_words == 2 and out[11].sum_bits == 20 + 22
+
+
 @pytest.mark.slow
 def test_contamination_safe_splits(spark):
     from pharmacodi_spark.text.clusters import contamination_safe_splits
