@@ -60,3 +60,21 @@ def pin_pair_parallelism(df: DataFrame, keys: list) -> DataFrame:
     return df.repartition(
         par, *[F.col(k) if isinstance(k, str) else k for k in keys]
     )
+
+
+def fan_out(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition a narrow DataFrame by ``keys`` to the session's
+    default parallelism, for use right before CPU-dense per-row work
+    (shingle explode + md5, simhash bit sums).
+
+    Why: the fixture tables are single-row-group parquet files, so the scan
+    is ONE task and everything fused into it (explode, hashing, partial agg)
+    runs serially. Shuffling the narrow pre-explode rows (ids + text, no
+    derived data yet) costs ~MBs and buys full-width parallelism. On a real
+    cluster the scan already has thousands of splits, and partitioning by
+    the downstream aggregation key still pays: the groupBy reuses this
+    exchange (hashpartitioning(keys) satisfies the agg distribution) instead
+    of shuffling the much wider exploded rows. Unlike
+    :func:`spread_small_scan` it repartitions unconditionally."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *[F.col(k) for k in keys])

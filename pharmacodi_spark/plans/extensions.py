@@ -13,7 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.plans.queries import q, _t, _md5_long, _rnd, fan_out
+from pharmacodi_spark.plans.queries import (
+    q,
+    _t,
+    _md5_long,
+    _rnd,
+    _SHINGLE_SQL,
+    _minhash_sql_select,
+)
 
 # ---------------------------------------------------------------------------
 # Event-time windows (batch equivalents of the streaming ops — SURVEY §2.11)
@@ -136,71 +143,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingles(
-    df: DataFrame, n: int = 5, tokens_col: str | None = None
-) -> DataFrame:
-    """(doc_id, shingle) rows: n-gram word shingles via a single projection —
-    split → sequence of start positions → slice+join per position → explode.
-    All array functions, no UDF; a doc shorter than n tokens yields one
-    whole-doc shingle (both engines clip the slice identically).
-    ``tokens_col`` consumes an existing token-array column instead of
-    splitting ``text`` (the detector_agreement shared-stage seam; the
-    caller owns partitioning)."""
-    if tokens_col is not None:
-        toks = F.col(tokens_col)
-        base = df
-    else:
-        toks = F.split("text", " ")
-        base = fan_out(df, "doc_id")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    return base.select("doc_id", F.explode(sh).alias("shingle"))
-
-
-_SHINGLE_SQL = """
-      SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS shingle
-      FROM (SELECT doc_id, toks,
-                   unnest(generate_series(1, greatest(len(toks)-4, 1))) AS i
-            FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
-"""
-
-
-def _minhash_cols(n_hashes: int) -> list[F.Column]:
-    """k 32-bit hash families sliced from ONE md5 per shingle (hex digits
-    [1..8], [9..16], ... ) — 4x fewer digest computations than seeded
-    re-hashing, still independent bits, still oracle-expressible. Expects a
-    precomputed ``m = md5(shingle)`` column (see ``_signature``) so the
-    digest is evaluated once per shingle, not once per hash family."""
-    return [
-        F.min(F.conv(F.substring("m", 1 + 8 * i, 8), 16, 10).cast("long")).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-
-
-def _signature(
-    d: DataFrame, n_hashes: int = 4, tokens_col: str | None = None
-) -> DataFrame:
-    """(doc_id, h0..h{k-1}) MinHash signature: shingle → one md5 in an
-    explicit projection (guaranteed single digest per shingle — aggregate
-    subtrees don't share subexpressions) → k min-aggs over hex slices.
-    The groupBy reuses _shingles' fan_out partitioning (same key) so the
-    only exchange in the signature subplan carries pre-explode rows."""
-    return (
-        _shingles(d, tokens_col=tokens_col)
-        .select("doc_id", F.md5("shingle").alias("m"))
-        .groupBy("doc_id")
-        .agg(*_minhash_cols(n_hashes))
-    )
-
-
-def _minhash_sql_select(n_hashes: int) -> str:
-    hashes = ",\n           ".join(
-        f"min(CAST(('0x' || substr(md5(shingle), {1 + 8 * i}, 8)) AS BIGINT)) AS h{i}"
-        for i in range(n_hashes)
-    )
-    return hashes
-
-
 @q(
     "minhash_signature",
     f"""
@@ -218,8 +160,9 @@ def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     so unigram sets are near-identical across ALL documents and LSH buckets
     degenerate to quadratic blowup; 5-grams are discriminative. One explode +
     one groupBy: the shuffle carries (doc_id, 4 longs), not shingle text."""
-    d = _t(spark, sf_dir, "documents")
-    return _signature(d)
+    from pharmacodi_spark.text.dedup import md5_signature
+
+    return md5_signature(_t(spark, sf_dir, "documents"))
 
 
 @q(
@@ -244,59 +187,16 @@ def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs: band the k=4 signature into 2 bands of 2
-    rows, self-join on (band, values), emit distinct ordered pairs — the
-    scale path for near-dedup (shingle→minhash→band→bucket-join). The join
-    key is (band, two longs): cardinality-bounded buckets instead of an all-
-    pairs comparison (5-gram shingles keep buckets small — see
-    minhash_signature)."""
-    d = _t(spark, sf_dir, "documents")
-    return _band_pairs_from_sig(_signature(d))
+    rows and emit the distinct ordered pairs sharing a (band, values)
+    bucket — the scale path for near-dedup (shingle→minhash→band→bucket).
+    The bucket key is (band, two longs): cardinality-bounded buckets
+    instead of an all-pairs comparison (5-gram shingles keep buckets small
+    — see minhash_signature). The oracle self-joins the bands; the engine
+    expands pairs inside each bucket under the triangle hot-cell guard
+    (text/dedup.py::md5_band_pairs)."""
+    from pharmacodi_spark.text.dedup import md5_band_pairs, md5_signature
 
-
-def _band_pairs_from_sig(
-    sig: DataFrame, max_cell_size: int | None = 256
-) -> DataFrame:
-    """Distinct candidate pairs from a 4-hash signature frame (2 bands x 2
-    rows) — the body of minhash_band_pairs, factored out so shared-stage
-    plans (detector_agreement) can feed a signature derived from a pinned
-    token frame.
-
-    Bands via ONE explode (not a self-union, which would run the whole
-    shingle+md5+groupBy subplan once per branch); no self-join (it would
-    recompute the signature subplan per side and shuffle the full band
-    table twice): the pair expansion delegates to
-    ``text/dedup.py::pairs_from_cells`` with the triangle hot-cell guard
-    armed (r9 — the one band-bucket path that lacked it; the r9 sf1 probe
-    measured a degenerate-bucket fixture building 400k-pair arrays in
-    single tasks). Bucket sizes are the only quadratic term: LSH banding
-    keeps them small by construction, and buckets past ``max_cell_size``
-    are triangle-block re-split into bounded parallel tasks — the pair
-    SET is unchanged (oracle-exact), only the work distribution.
-
-    The signature frame is barrier-pinned first: the guard's cell-count
-    aggregate joins back against the cells, and lazily composed BOTH
-    sides would re-expand the shingle+md5+groupBy subplan (double scan —
-    the r5 lazy-composition lesson). The pin is id + 4 longs per doc."""
-    from pharmacodi_spark.barrier import stage_barrier
-    from pharmacodi_spark.text.dedup import pairs_from_cells
-
-    sig = stage_barrier(sig, name="minhash_sig_cells")
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), F.col("h0").alias("v1"), F.col("h1").alias("v2")),
-                F.struct(F.lit(1).alias("band"), F.col("h2").alias("v1"), F.col("h3").alias("v2")),
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id",
-        F.col("b.band").alias("band"),
-        F.struct(F.col("b.v1").alias("v1"), F.col("b.v2").alias("v2")).alias(
-            "bucket"
-        ),
-    )
-    return pairs_from_cells(bands, max_cell_size=max_cell_size)
+    return md5_band_pairs(md5_signature(_t(spark, sf_dir, "documents")))
 
 
 @q(

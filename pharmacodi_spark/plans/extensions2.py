@@ -15,78 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pharmacodi_spark.functions.scalar import local_df
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.plans.queries import q, _t, _rnd, fan_out
+from pharmacodi_spark.operators.partitioning import fan_out
+from pharmacodi_spark.plans.queries import q, _t, _rnd, _sim_sql
 
 # ---------------------------------------------------------------------------
 # SimHash (dedup family, SURVEY §7.1 step 7; library twin: text/dedup.py)
 # ---------------------------------------------------------------------------
-
-_SIM_BITS = 16
-
-
-def _simhash_spark(
-    d: DataFrame,
-    tokens_col: str | None = None,
-    bits: int = _SIM_BITS,
-    out_col: str = "simhash16",
-) -> DataFrame:
-    """``bits``-wide SimHash from md5-sliced 60-bit token hashes
-    (oracle-parity variant of text/dedup.py::simhash, which uses
-    xxhash64/64 bits; ``bits`` ≤ 60 — the md5-slice budget).
-    ``tokens_col`` consumes an existing token-array column (shared-stage
-    seam; the caller owns partitioning)."""
-    assert bits <= 60, "md5 15-hex-char slice provides 60 hash bits"
-    if tokens_col is not None:
-        base = d.select("doc_id", F.explode(F.col(tokens_col)).alias("tok"))
-    else:
-        base = fan_out(d, "doc_id").select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        )
-    toks = base.withColumn(
-        "th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    )
-    # r12 (guide §1.2): build the per-bit aggregates and the fingerprint
-    # fold as SQL strings — ONE py4j round trip per expression instead of
-    # ~7 Column-API calls per bit (cProfile: the 60-bit builder spent
-    # 2.2 s of pure driver time, ~90% of it py4j socket wait). Exactly the
-    # _sim_sql twin's text, so values are unchanged by construction.
-    bit_sums = [
-        F.expr(
-            f"sum(CASE WHEN (th & {1 << j}) != 0 THEN 1 ELSE -1 END)"
-        ).alias(f"b{j}")
-        for j in range(bits)
-    ]
-    sums = toks.groupBy("doc_id").agg(*bit_sums)
-    fp = F.expr(
-        " + ".join(
-            f"(CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(bits)
-        )
-    )
-    return sums.select("doc_id", fp.cast("long").alias(out_col))
-
-
-def _sim_sql(bits: int = _SIM_BITS, out_col: str = "simhash16") -> str:
-    """DuckDB twin of :func:`_simhash_spark` at any width ≤ 60."""
-    sums = ",\n             ".join(
-        f"sum(CASE WHEN (th & {1 << j}) != 0 THEN 1 ELSE -1 END) AS b{j}"
-        for j in range(bits)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(bits)
-    )
-    return f"""
-      SELECT doc_id, CAST({fp} AS BIGINT) AS {out_col}
-      FROM (
-        SELECT doc_id,
-             {sums}
-        FROM (SELECT doc_id,
-                     CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS th
-              FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                    FROM documents))
-        GROUP BY doc_id
-      )"""
-
 
 _SIM_SQL = _sim_sql()
 
@@ -98,8 +32,13 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ in few bits. One explode + one groupBy with 16 conditional sums —
     all codegen'd; the shuffle carries (doc_id, 16 ints), never text. The
     64-bit production variant (xxhash64) is text/dedup.py::simhash; this
-    16-bit md5 build exists so the whole fingerprint is oracle-checkable."""
-    return _simhash_spark(_t(spark, sf_dir, "documents"))
+    16-bit md5 build (text/dedup.py::md5_simhash) exists so the whole
+    fingerprint is oracle-checkable."""
+    from pharmacodi_spark.text.dedup import md5_simhash
+
+    return md5_simhash(_t(spark, sf_dir, "documents")).select(
+        "doc_id", F.col("simhash").alias("simhash16")
+    )
 
 
 @q(
@@ -126,11 +65,9 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall-clock, BENCH r5). The triangle-block re-split spreads that bucket
     over s(s+1)/2 bounded join tasks with the IDENTICAL pair set, so this
     oracle row also exercises the guard on naturally-skewed buckets."""
-    from pharmacodi_spark.text.dedup import simhash_near_pairs as _snp
+    from pharmacodi_spark.text.dedup import md5_simhash, simhash_near_pairs as _snp
 
-    sim = _simhash_spark(_t(spark, sf_dir, "documents")).select(
-        "doc_id", F.col("simhash16").alias("simhash")
-    )
+    sim = md5_simhash(_t(spark, sf_dir, "documents"))
     out = _snp(
         sim, max_hamming=3, prefix_bits=8, bits=16, max_cell_size=256
     )
@@ -1565,17 +1502,18 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fuzzy_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete fuzzy-dedup path a training-data pipeline runs, in one
     oracle-gated composition: 5-gram shingles → md5-sliced MinHash (k=4) →
-    LSH banding → bucket-local candidate pairs (plans/extensions.py::
-    minhash_band_pairs) → iterative connected components → min-id keeper
-    per cluster, singletons keeping themselves (text/clusters.py::
-    near_dup_droplist). Filter keep=false for the drop list; the DuckDB
-    oracle re-derives every stage including the transitive closure."""
-    from pharmacodi_spark.plans.extensions import minhash_band_pairs
+    LSH banding → bucket-local candidate pairs (text/dedup.py::
+    md5_band_pairs, the minhash_band_pairs plan) → iterative connected
+    components → min-id keeper per cluster, singletons keeping themselves
+    (text/clusters.py::near_dup_droplist). Filter keep=false for the drop
+    list; the DuckDB oracle re-derives every stage including the
+    transitive closure."""
     from pharmacodi_spark.text.clusters import near_dup_droplist
+    from pharmacodi_spark.text.dedup import md5_band_pairs, md5_signature
 
-    ids = _t(spark, sf_dir, "documents").select("doc_id")
-    pairs = minhash_band_pairs(spark, sf_dir)
-    return near_dup_droplist(ids, pairs, edges_canonical=True)
+    d = _t(spark, sf_dir, "documents")
+    pairs = md5_band_pairs(md5_signature(d))
+    return near_dup_droplist(d.select("doc_id"), pairs, edges_canonical=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2737,8 +2675,12 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     component labelling — is value-checked against the recursive-CTE
     oracle. The library path (xxhash64 cells, 16 hashes) + streaming upsert
     composition is pytest-proven in tests/test_ingest_pipeline.py."""
-    from pharmacodi_spark.plans.extensions import _signature
     from pharmacodi_spark.text.clusters import near_dup_droplist
+    from pharmacodi_spark.text.dedup import (
+        md5_band_cells,
+        md5_signature,
+        pairs_from_cells,
+    )
 
     d = _t(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") < 250)
@@ -2757,38 +2699,9 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def cells(sig: DataFrame) -> DataFrame:
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    F.struct(F.lit(0).alias("band"), F.col("h0").alias("v1"), F.col("h1").alias("v2")),
-                    F.struct(F.lit(1).alias("band"), F.col("h2").alias("v1"), F.col("h3").alias("v2")),
-                )
-            ).alias("c"),
-        ).select("doc_id", "c.band", "c.v1", "c.v2")
-
     # 2. within-batch near-dup: bucket-local pair expansion → CC → keeper
-    c1 = cells(_signature(s1))
-    buckets = (
-        c1.groupBy("band", "v1", "v2")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("members"))
-        .where(F.size("members") > 1)
-    )
-    ms = F.col("members")
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ms,
-                    lambda x, i: F.transform(
-                        F.slice(ms, i + 2, F.size(ms)),
-                        lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b").distinct()
+    c1 = md5_band_cells(md5_signature(s1))
+    pairs = pairs_from_cells(c1)
     keep = near_dup_droplist(
         s1.select("doc_id"), pairs, edges_canonical=True
     )
@@ -2806,10 +2719,12 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3. cross-corpus candidates: any band in an occupied corpus cell.
     # s2 ⊆ s1 and signatures depend only on text, so s2's cells are s1's
     # cells semi-joined by the surviving ids — no third signature pass
-    corpus_cells = cells(_signature(corpus)).select("band", "v1", "v2").distinct()
+    corpus_cells = md5_band_cells(md5_signature(corpus)).select(
+        "band", "bucket"
+    ).distinct()
     flagged = (
         c1.join(s2.select("doc_id").hint("shuffle_hash"), "doc_id", "left_semi")
-        .join(corpus_cells, ["band", "v1", "v2"], "left_semi")
+        .join(corpus_cells, ["band", "bucket"], "left_semi")
         .select("doc_id")
         .distinct()
     )
@@ -4564,45 +4479,14 @@ def minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     the band-bucket pair expansion and the two estimator joins — the lazy
     alternative re-runs the shingle+md5 subplan three times."""
     from pharmacodi_spark.barrier import stage_barrier
-    from pharmacodi_spark.plans.extensions import _signature
-    from pharmacodi_spark.text.dedup import estimate_jaccard
+    from pharmacodi_spark.text.dedup import (
+        estimate_jaccard,
+        md5_band_cells,
+        md5_signature,
+        pairs_from_cells,
+    )
 
     d = _t(spark, sf_dir, "documents")
-    sig = stage_barrier(_signature(d), name="jacc-sig")
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), F.col("h0").alias("v1"),
-                         F.col("h1").alias("v2")),
-                F.struct(F.lit(1).alias("band"), F.col("h2").alias("v1"),
-                         F.col("h3").alias("v2")),
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.v1", "b.v2")
-    buckets = (
-        bands.groupBy("band", "v1", "v2")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("members"))
-        .where(F.size("members") > 1)
-    )
-    ms = F.col("members")
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(
-                                x.alias("doc_a"), y.alias("doc_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    sig = stage_barrier(md5_signature(d), name="jacc-sig")
+    pairs = pairs_from_cells(md5_band_cells(sig))
     return estimate_jaccard(sig, pairs, num_hashes=4)

@@ -15,7 +15,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pharmacodi_spark.functions.scalar import local_df
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.plans.queries import q, _rnd, _t
+from pharmacodi_spark.operators.partitioning import fan_out
+from pharmacodi_spark.plans.queries import (
+    q,
+    _rnd,
+    _t,
+    _SHINGLE_SQL,
+    _minhash_sql_select,
+    _sim_sql,
+)
 
 _FP = 1 << 10  # 10 fractional bits, shared with retrieval.FP_BITS
 
@@ -1019,7 +1027,6 @@ def cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the mergeable per-slice frequency summary for corpus monitoring;
     the exact side doubles as the oracle's ground truth."""
     from pharmacodi_spark.operators.sketches import cm_estimate, cm_sketch
-    from pharmacodi_spark.plans.queries import fan_out
 
     d = _t(spark, sf_dir, "documents")
     # the x4-hash explode is CPU-dense; spread the single-split fixture
@@ -1436,7 +1443,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency HISTOGRAM (one row per distinct count — O(√tokens) by Zipf),
     not the term table, so the oracle's global window is metadata-scale in
     the engine; the corpus itself sees one map-side-combined count."""
-    from pharmacodi_spark.plans.queries import fan_out
     from pharmacodi_spark.text.corpus import vocab_coverage
 
     d = _t(spark, sf_dir, "documents")
@@ -1469,7 +1475,6 @@ def ngram_diversity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats the same n-grams corpus-wide and scores a low diversity_ppm).
     Grams collapse to md5 before the shuffle — the oracle re-derives by
     gram string, identical grouping (same contract as repeated_spans)."""
-    from pharmacodi_spark.plans.queries import fan_out
     from pharmacodi_spark.text.corpus import ngram_diversity
 
     d = _t(spark, sf_dir, "documents")
@@ -2384,12 +2389,6 @@ _AGREE_SIM_BITS = 60
 
 
 def _detector_agreement_sql(bits: int = _AGREE_SIM_BITS) -> str:
-    from pharmacodi_spark.plans.extensions import (
-        _minhash_sql_select,
-        _SHINGLE_SQL,
-    )
-    from pharmacodi_spark.plans.extensions2 import _sim_sql
-
     _SIM_SQL = _sim_sql(bits, "fp")
     shift = 1 << (bits - 8)
     return f"""
@@ -2472,13 +2471,12 @@ def detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     need pairs only). The tiny simhash fingerprint frame is pinned too
     (the triangle-guard self-join consumes it twice)."""
     from pharmacodi_spark.barrier import stage_barrier
-    from pharmacodi_spark.plans.extensions import (
-        _band_pairs_from_sig,
-        _signature,
+    from pharmacodi_spark.text.dedup import (
+        md5_band_pairs,
+        md5_signature,
+        md5_simhash,
+        simhash_near_pairs as _snp,
     )
-    from pharmacodi_spark.plans.extensions2 import _simhash_spark
-    from pharmacodi_spark.plans.queries import fan_out
-    from pharmacodi_spark.text.dedup import simhash_near_pairs as _snp
     from pharmacodi_spark.text.winnow import (
         winnow_fp_rows,
         winnow_fp_sets,
@@ -2492,14 +2490,12 @@ def detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         name="det_toks",
     )
-    mh = _band_pairs_from_sig(_signature(toks, tokens_col="__tk")).select(
+    mh = md5_band_pairs(md5_signature(toks, tokens_col="__tk")).select(
         "doc_a", "doc_b", F.lit(1).alias("m"), F.lit(0).alias("s"),
         F.lit(0).alias("w"),
     )
     sim = stage_barrier(
-        _simhash_spark(
-            toks, tokens_col="__tk", bits=_AGREE_SIM_BITS, out_col="simhash"
-        ),
+        md5_simhash(toks, tokens_col="__tk", bits=_AGREE_SIM_BITS),
         name="det_sim",
     )
     sh = _snp(
@@ -2745,8 +2741,8 @@ def fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard estimator joins signatures only for candidates, bodies never
     shuffle. md5-slice 4-hash signature for oracle parity (the library
     default is xxhash64)."""
-    from pharmacodi_spark.plans.extensions import _signature
     from pharmacodi_spark.text.cleaning import fuzzy_decontaminate
+    from pharmacodi_spark.text.dedup import md5_signature
 
     d = _t(spark, sf_dir, "documents")
     return fuzzy_decontaminate(
@@ -2755,7 +2751,7 @@ def fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=4,
         bands=2,
         min_est_ppm=500_000,
-        sig_fn=_signature,
+        sig_fn=md5_signature,
     )
 
 
@@ -3660,8 +3656,6 @@ _CJK_HEX_HAN = "零一二三四五六七八九甲乙丙丁戊己"
 
 
 def _unicode_minhash_sql() -> str:
-    from pharmacodi_spark.plans.extensions import _minhash_sql_select
-
     raw = (
         "'语料' || translate(md5(CAST(doc_id // 2 AS VARCHAR)), "
         f"'0123456789abcdef', '{_CJK_HEX_HAN}') || "
@@ -3717,11 +3711,8 @@ def unicode_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted pair count grows LINEARLY with the corpus (classes never
     share shingles), so the sf1 wall tracks data, not pairs². The oracle
     runs the identical normalization + pipeline in RE2/DuckDB syntax."""
-    from pharmacodi_spark.plans.extensions import (
-        _band_pairs_from_sig,
-        _signature,
-    )
     from pharmacodi_spark.text.analysis import normalize_spacefree
+    from pharmacodi_spark.text.dedup import md5_band_pairs, md5_signature
 
     d = _t(spark, sf_dir, "documents")
     body = F.concat(
@@ -3736,7 +3727,7 @@ def unicode_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture = d.select(
         "doc_id", normalize_spacefree(body).alias("text")
     )
-    return _band_pairs_from_sig(_signature(fixture))
+    return md5_band_pairs(md5_signature(fixture))
 
 
 # ---------------------------------------------------------------------------

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pharmacodi_spark.functions.scalar import local_df
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.plans.queries import q, _rnd, _t
+from pharmacodi_spark.plans.queries import q, _rnd, _t, _sim_sql
 from pharmacodi_spark.plans.extensions3 import (
     _DSIR_DIM,
     _DSIR_SALT,
@@ -1253,8 +1253,6 @@ _SIMW_HAMMING = 3
 
 
 def _simhash_wide_sql() -> str:
-    from pharmacodi_spark.plans.extensions2 import _sim_sql
-
     shift = 1 << (_SIMW_BITS - _SIMW_PREFIX)
     return f"""
     WITH sim AS ({_sim_sql(_SIMW_BITS, "fp")}),
@@ -1274,8 +1272,8 @@ def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (65,536 values → hamming ≤ 3 pair mass grew 21× for 10× docs); at 60
     bits the space is 2^60, collision mass tracks true near-duplicates at
     any realistic corpus size. Same machinery, just wide:
-    plans/extensions2.py::_simhash_spark (md5-sliced token hashes, per-bit
-    ±1 majority) at bits=60 feeding text/dedup.py::simhash_near_pairs
+    text/dedup.py::md5_simhash (md5-sliced token hashes, per-bit ±1
+    majority) at bits=60 feeding text/dedup.py::simhash_near_pairs
     (top-8-bit prefix blocking, exact bit_count(xor) Hamming referee,
     triangle hot-bucket guard at 256).
 
@@ -1284,11 +1282,10 @@ def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only thing that shuffles; 100 TB stores them partitioned by the
     prefix bucket so pair generation is partition-local. The oracle runs
     the identical 60-bit majority + prefix-join + popcount cascade."""
-    from pharmacodi_spark.plans.extensions2 import _simhash_spark
-    from pharmacodi_spark.text.dedup import simhash_near_pairs
+    from pharmacodi_spark.text.dedup import md5_simhash, simhash_near_pairs
 
     d = _t(spark, sf_dir, "documents")
-    sim = _simhash_spark(d, bits=_SIMW_BITS, out_col="simhash")
+    sim = md5_simhash(d, bits=_SIMW_BITS)
     return simhash_near_pairs(
         sim,
         max_hamming=_SIMW_HAMMING,
@@ -1688,9 +1685,10 @@ def cell_pairs_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     off-diagonal cross-block diagonal rule is exercised under the
     oracle gate, not just in pytest.
 
-    Scale shape: vectors shuffle once keyed by (cell, block) and pairs
-    materialize inside the Arrow worker — only id pairs leave; per-task
-    work is bounded at (2·max_cell_size)² under any cell skew."""
+    Scale shape: vectors shuffle once keyed by the cell (the guard's cell
+    count is a window on that same exchange) and pairs materialize inside
+    the Arrow worker — only id pairs leave; per-task work is bounded at
+    (2·max_cell_size)² under any cell skew."""
     from pharmacodi_spark.text.similarity import cell_cosine_pairs_arrow
 
     e = _t(spark, sf_dir, "embeddings")

@@ -96,23 +96,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition a narrow DataFrame by ``keys`` to the session's
-    default parallelism, for use right before CPU-dense per-row work
-    (shingle explode + md5, simhash bit sums).
-
-    Why: the fixture tables are single-row-group parquet files, so the scan
-    is ONE task and everything fused into it (explode, hashing, partial agg)
-    runs serially. Shuffling the narrow pre-explode rows (ids + text, no
-    derived data yet) costs ~MBs and buys full-width parallelism. On a real
-    cluster the scan already has thousands of splits, and partitioning by
-    the downstream aggregation key still pays: the groupBy reuses this
-    exchange (hashpartitioning(keys) satisfies the agg distribution) instead
-    of shuffling the much wider exploded rows."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(k) for k in keys])
-
-
 def _md5_long(col) -> F.Column:
     """60-bit integer hash from md5 hex — cross-engine deterministic."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
@@ -135,6 +118,47 @@ def _rnd(col, n: int = 0) -> F.Column:
 
 
 _MD5_LONG_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
+
+
+# DuckDB twins of the md5 near-dup family (text/dedup.py md5_shingles,
+# md5_signature, md5_simhash) — the oracle side of every MinHash/SimHash row
+
+_SHINGLE_SQL = """
+      SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS shingle
+      FROM (SELECT doc_id, toks,
+                   unnest(generate_series(1, greatest(len(toks)-4, 1))) AS i
+            FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
+"""
+
+
+def _minhash_sql_select(n_hashes: int) -> str:
+    hashes = ",\n           ".join(
+        f"min(CAST(('0x' || substr(md5(shingle), {1 + 8 * i}, 8)) AS BIGINT)) AS h{i}"
+        for i in range(n_hashes)
+    )
+    return hashes
+
+
+def _sim_sql(bits: int = 16, out_col: str = "simhash16") -> str:
+    """DuckDB twin of text/dedup.py::md5_simhash at any width ≤ 60."""
+    sums = ",\n             ".join(
+        f"sum(CASE WHEN (th & {1 << j}) != 0 THEN 1 ELSE -1 END) AS b{j}"
+        for j in range(bits)
+    )
+    fp = " + ".join(
+        f"(CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(bits)
+    )
+    return f"""
+      SELECT doc_id, CAST({fp} AS BIGINT) AS {out_col}
+      FROM (
+        SELECT doc_id,
+             {sums}
+        FROM (SELECT doc_id,
+                     CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS th
+              FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+                    FROM documents))
+        GROUP BY doc_id
+      )"""
 
 
 # ---------------------------------------------------------------------------

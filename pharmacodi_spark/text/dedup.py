@@ -1,7 +1,25 @@
 """Document deduplication library (north star): exact, MinHash-LSH, SimHash.
 
-These are the reusable, parameterized versions of the oracle-checked plans in
-plans/extensions.py — same algorithms, arbitrary column names / parameters.
+Two near-dup hash families live here, apart on purpose:
+
+- the production family — :func:`minhash_signatures`, :func:`band_cells`,
+  :func:`simhash` — hashes with xxhash64 (Spark's fastest 64-bit hash),
+  takes any column names, hash counts and widths, and feeds the ingest
+  gauntlet (pipelines/ingest.py) and the other library callers;
+- the md5 family — :func:`md5_signature`, :func:`md5_band_cells`,
+  :func:`md5_band_pairs`, :func:`md5_simhash` — slices md5 digests, which
+  DuckDB computes bit-identically, so it is the ORACLE-PARITY family: the
+  registry rows that the DuckDB oracle checks run it, and its SQL twins
+  are ``_SHINGLE_SQL``, ``_minhash_sql_select`` and ``_sim_sql`` in
+  plans/queries.py. It works on the fixture's ``doc_id``/``text`` columns
+  with k = 4 hashes (one md5 digest holds exactly four 32-bit slices).
+
+One function serving both would have to branch on its caller: oracle
+parity fixes the hash, the hash count and the column names that the
+production path leaves free. Both families share one pair kernel,
+:func:`cell_pair_rows`, through which every within-cell pair expansion
+(LSH band buckets, winnowing hashes) runs.
+
 All hashing stays JVM-side (md5/xxhash64 expressions); no Python UDFs.
 
 At 100 TB: every op here shuffles only (id, fixed-width hash) tuples, never
@@ -16,7 +34,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.operators.partitioning import (
+    fan_out,
     pin_pair_parallelism,
     spread_small_scan,
 )
@@ -88,9 +108,9 @@ def minhash_near_dup_pairs(
     """LSH candidate near-dup pairs (doc_a < doc_b): band the signature,
     bucket by (band, hash of the band's rows), expand ordered pairs within
     each bucket array — no self-join, one signature computation, one
-    shuffle (see plans/extensions.py::minhash_band_pairs for the physical
-    rationale). ``max_cell_size`` arms the exact hot-bucket guard (see
-    :func:`pairs_from_cells`)."""
+    shuffle (see :func:`md5_band_pairs` for the physical rationale).
+    ``max_cell_size`` arms the exact hot-bucket guard (see
+    :func:`cell_pair_rows`)."""
     assert num_hashes % bands == 0, "num_hashes must divide into bands"
     sig = minhash_signatures(df, content_col, id_col, num_hashes, shingle_len)
     return pairs_from_cells(
@@ -214,78 +234,74 @@ def triangle_pair_cond(key_cols: list[str], id_col: str) -> Column:
     )
 
 
-def pairs_from_cells(
-    cells: DataFrame, id_col: str = "doc_id", max_cell_size: int | None = None
+def cell_pair_rows(
+    cells: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    max_cell_size: int | None,
 ) -> DataFrame:
-    """Candidate pairs (doc_a < doc_b) from (id, band, bucket) cells:
-    group into buckets, expand ordered pairs WITHIN each bucket array — no
-    self-join; bucket size is the only quadratic term.
+    """The within-cell pair kernel: one ``(doc_a, doc_b)`` row, doc_a <
+    doc_b, per cell (group of rows sharing ``key_cols``) that holds both
+    ids. Each cell is collected into one sorted id array and its ordered
+    pairs are expanded inside the array — no self-join; cell size is the
+    only quadratic term. A pair sharing several cells appears once per
+    shared cell: :func:`pairs_from_cells` dedups them, winnowing counts
+    them as shared hashes.
 
-    ``max_cell_size`` (optional) arms the hot-bucket skew guard: buckets
-    larger than the cap are triangle-block re-split (:func:`triangle_blocks`)
-    so both the ``collect_list`` array per task and the per-task pair count
-    stay bounded by ~2*max_cell_size regardless of bucket skew. The pair SET
-    is unchanged — the guard redistributes work, it does not drop candidates
-    (results stay oracle-exact)."""
-    # pin the bucket-expansion exchange to defaultParallelism (r12, guide
-    # §2.5): AQE coalesces it by BYTES (ids + band/bucket ints) while the
-    # in-array pair expansion downstream is quadratic in rows per bucket —
-    # on small-byte inputs the whole expansion landed on ONE task. The
+    ``max_cell_size`` (None: unguarded) arms the hot-cell skew guard:
+    cells larger than the cap are triangle-block re-split
+    (:func:`triangle_blocks`) so both the ``collect_list`` array per task
+    and the per-task pair count stay bounded by ~2*max_cell_size
+    regardless of cell skew. The rows are unchanged — the guard
+    redistributes work, it does not drop candidates (results stay
+    oracle-exact)."""
+    # pin the cell-expansion exchange to defaultParallelism (r12, guide
+    # §2.5): AQE coalesces it by BYTES (ids + key ints) while the in-array
+    # pair expansion downstream is quadratic in rows per cell — on
+    # small-byte inputs the whole expansion landed on ONE task. The
     # repartition replaces the groupBy's own ENSURE_REQUIREMENTS exchange
     # 1:1 (same keys); per-key mass is bounded by the triangle guard when
     # armed, by the LSH bucket structure otherwise.
     if max_cell_size is None:
-        cells = pin_pair_parallelism(cells, ["band", "bucket"])
-        grouped = cells.groupBy("band", "bucket")
+        cells = pin_pair_parallelism(cells, key_cols)
+        grouped = cells.groupBy(*key_cols)
         member = F.col(id_col)
     else:
-        blk = triangle_blocks(cells, ["band", "bucket"], id_col, max_cell_size)
-        blk = pin_pair_parallelism(blk, ["band", "bucket", "__bi", "__bj"])
-        grouped = blk.groupBy("band", "bucket", "__bi", "__bj")
+        blk = triangle_blocks(cells, key_cols, id_col, max_cell_size)
+        blk = pin_pair_parallelism(blk, [*key_cols, "__bi", "__bj"])
+        grouped = blk.groupBy(*key_cols, "__bi", "__bj")
         member = F.struct(F.col(id_col).alias("id"), F.col("__g").alias("g"))
     buckets = grouped.agg(
         F.array_sort(F.collect_list(member)).alias("members")
     ).where(F.size("members") > 1)
     ms = F.col("members")
     if max_cell_size is None:
-        pairs = buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(
-                                x.alias("doc_a"), y.alias("doc_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
+        pair = lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))  # noqa: E731
+    else:
+        diag = F.col("__bi") == F.col("__bj")
+        pair = lambda x, y: F.struct(  # noqa: E731
+            x["id"].alias("doc_a"),
+            y["id"].alias("doc_b"),
+            (diag | (x["g"] != y["g"])).alias("ok"),
         )
-        return pairs.select("p.doc_a", "p.doc_b").distinct()
-    diag = F.col("__bi") == F.col("__bj")
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ms,
-                    lambda x, i: F.filter(
-                        F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(
-                                x["id"].alias("doc_a"),
-                                y["id"].alias("doc_b"),
-                                (diag | (x["g"] != y["g"])).alias("ok"),
-                            ),
-                        ),
-                        lambda p: p["ok"],
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.select("p.doc_a", "p.doc_b").distinct()
+
+    def later(x, i):
+        # the ids after x in the sorted cell array; the guarded path keeps
+        # a same-subgroup pair only in its diagonal block
+        ps = F.transform(F.slice(ms, i + 2, F.size(ms)), lambda y: pair(x, y))
+        return ps if max_cell_size is None else F.filter(ps, lambda p: p["ok"])
+
+    pairs = buckets.select(F.explode(F.flatten(F.transform(ms, later))).alias("p"))
+    return pairs.select("p.doc_a", "p.doc_b")
+
+
+def pairs_from_cells(
+    cells: DataFrame, id_col: str = "doc_id", max_cell_size: int | None = None
+) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) from (id, band, bucket)
+    LSH cells — :func:`cell_pair_rows` keyed by (band, bucket), deduped
+    across bands."""
+    return cell_pair_rows(cells, ["band", "bucket"], id_col, max_cell_size).distinct()
 
 
 def simhash(
@@ -354,7 +370,7 @@ def simhash_near_pairs(
     if max_cell_size is not None:
         blk = triangle_blocks(bucketed, ["bucket"], id_col, max_cell_size)
         # pin the pair-join exchange parallelism (r12, guide §2.5 — see
-        # pairs_from_cells); the bit_count Hamming work is per-PAIR
+        # cell_pair_rows); the bit_count Hamming work is per-PAIR
         blk = pin_pair_parallelism(blk, ["bucket", "__bi", "__bj"])
         a, b = blk.alias("a"), blk.alias("b")
         return (
@@ -395,6 +411,134 @@ def simhash_near_pairs(
             "hamming"
         ),
     ).where(F.col("hamming") <= max_hamming)
+
+
+# ---------------------------------------------------------------------------
+# md5 (oracle-parity) family: every value has a DuckDB twin in plans/queries.py
+# ---------------------------------------------------------------------------
+
+
+def md5_shingles(df: DataFrame, tokens_col: str | None = None) -> DataFrame:
+    """(doc_id, shingle) rows: 5-gram word shingles via a single projection —
+    split on " " → sequence of start positions → slice+join per position →
+    explode. All array functions, no UDF; a doc shorter than 5 tokens
+    yields one whole-doc shingle (both engines clip the slice identically).
+    ``tokens_col`` consumes an existing token-array column instead of
+    splitting ``text`` (the detector_agreement shared-stage seam; the
+    caller owns partitioning)."""
+    if tokens_col is not None:
+        toks = F.col(tokens_col)
+        base = df
+    else:
+        toks = F.split("text", " ")
+        base = fan_out(df, "doc_id")
+    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 4, F.lit(1)))
+    sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, 5), " "))
+    return base.select("doc_id", F.explode(sh).alias("shingle"))
+
+
+def md5_signature(d: DataFrame, tokens_col: str | None = None) -> DataFrame:
+    """(doc_id, h0..h3) MinHash signature: shingle → one md5 in an explicit
+    projection (guaranteed single digest per shingle — aggregate subtrees
+    don't share subexpressions) → four min-aggs over the digest's 32-bit
+    hex slices [1..8], [9..16], [17..24], [25..32] — 4x fewer digests than
+    seeded re-hashing, still independent bits, still oracle-expressible.
+    The groupBy reuses :func:`md5_shingles`' fan_out partitioning (same
+    key) so the only exchange in the signature subplan carries pre-explode
+    rows."""
+    return (
+        md5_shingles(d, tokens_col)
+        .select("doc_id", F.md5("shingle").alias("m"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min(
+                    F.conv(F.substring("m", 1 + 8 * i, 8), 16, 10).cast("long")
+                ).alias(f"h{i}")
+                for i in range(4)
+            ]
+        )
+    )
+
+
+def md5_band_cells(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) LSH cells of a :func:`md5_signature` frame:
+    2 bands × 2 rows, bucket = struct(v1, v2) of the band's two hashes.
+    Bands come from ONE explode (not a self-union, which would run the
+    whole signature subplan once per branch)."""
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                F.struct(F.lit(0).alias("band"), F.col("h0").alias("v1"), F.col("h1").alias("v2")),
+                F.struct(F.lit(1).alias("band"), F.col("h2").alias("v1"), F.col("h3").alias("v2")),
+            )
+        ).alias("b"),
+    ).select(
+        "doc_id",
+        F.col("b.band").alias("band"),
+        F.struct(F.col("b.v1").alias("v1"), F.col("b.v2").alias("v2")).alias(
+            "bucket"
+        ),
+    )
+
+
+def md5_band_pairs(sig: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) from a :func:`md5_signature`
+    frame, with the triangle hot-cell guard armed at 256 (r9 — the one
+    band-bucket path that lacked it; the r9 sf1 probe measured a
+    degenerate-bucket fixture building 400k-pair arrays in single tasks).
+    No self-join (it would recompute the signature subplan per side and
+    shuffle the full band table twice). Bucket sizes are the only
+    quadratic term: LSH banding keeps them small by construction, and
+    buckets past the cap are re-split into bounded parallel tasks — the
+    pair SET is unchanged (oracle-exact), only the work distribution.
+
+    The signature frame is barrier-pinned first (id + 4 longs per doc):
+    the shingle+md5+groupBy subplan runs at pin time and the band explode
+    reads the pin."""
+    sig = stage_barrier(sig, name="minhash_sig_cells")
+    return pairs_from_cells(md5_band_cells(sig), max_cell_size=256)
+
+
+def md5_simhash(
+    d: DataFrame, tokens_col: str | None = None, bits: int = 16
+) -> DataFrame:
+    """(doc_id, simhash): ``bits``-wide SimHash from md5-sliced 60-bit token
+    hashes — the oracle-parity variant of :func:`simhash` (xxhash64, 64
+    bits); ``bits`` ≤ 60, the md5-slice budget. Per token a 60-bit hash;
+    per bit j, sum(±1) over space-split tokens; fingerprint bit j = sign
+    of the sum. ``tokens_col`` consumes an existing token-array column
+    (shared-stage seam; the caller owns partitioning)."""
+    assert bits <= 60, "md5 15-hex-char slice provides 60 hash bits"
+    if tokens_col is not None:
+        base = d.select("doc_id", F.explode(F.col(tokens_col)).alias("tok"))
+    else:
+        base = fan_out(d, "doc_id").select(
+            "doc_id", F.explode(F.split("text", " ")).alias("tok")
+        )
+    toks = base.withColumn(
+        "th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
+    )
+    # r12 (guide §1.2): build the per-bit aggregates and the fingerprint
+    # fold as SQL strings — ONE py4j round trip per expression instead of
+    # ~7 Column-API calls per bit (cProfile: the 60-bit builder spent
+    # 2.2 s of pure driver time, ~90% of it py4j socket wait). Exactly the
+    # _sim_sql twin's text, so values are unchanged by construction.
+    bit_sums = [
+        F.expr(
+            f"sum(CASE WHEN (th & {1 << j}) != 0 THEN 1 ELSE -1 END)"
+        ).alias(f"b{j}")
+        for j in range(bits)
+    ]
+    sums = toks.groupBy("doc_id").agg(*bit_sums)
+    fp = F.expr(
+        " + ".join(
+            f"(CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END)"
+            for j in range(bits)
+        )
+    )
+    return sums.select("doc_id", fp.cast("long").alias("simhash"))
 
 
 def _nonempty_tokens(content_col: str, tokens_col: str | None) -> Column:
@@ -984,8 +1128,6 @@ def source_overlap_minhash(
     # the pair matrix references the signature table TWICE (a/b sides of
     # the self-join); pin the groups × k result — pure metadata — so the
     # fact-scale shingle+hash stage runs once, not per side
-    from pharmacodi_spark.barrier import stage_barrier
-
     slim = stage_barrier(
         sigs.select(F.col(group_col).alias("g"), harr.alias("hs")),
         name="source-overlap-sigs",
@@ -1073,7 +1215,6 @@ def sorted_neighborhood_pairs(
     pass runs once, both sides read the pin (durable under
     ``spark.pharmacodi.barrierDir``, see barrier.py)."""
     assert window >= 2, "window must cover at least adjacent rows"
-    from pharmacodi_spark.barrier import stage_barrier
     from pharmacodi_spark.operators.keys import surrogate_key
 
     pos = surrogate_key(

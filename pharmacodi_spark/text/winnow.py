@@ -144,10 +144,13 @@ def winnow_fingerprints(
     hashes keeps the minimum of what it has — the paper's guarantee that
     every document fingerprints at least once).
 
-    One per-doc sliding frame computes ``min(struct(h, -pos))`` — the
-    minimum-hash/rightmost-tie pair in a single window aggregate — then
-    the selected set is deduplicated (adjacent windows usually re-select
-    the same gram; that collapse IS the 2/(w+1) density win).
+    The selection is one row-local projection over the per-doc hash
+    array: per window start, ``array_min`` of ``struct(h, -pos)`` over
+    the window's slice — the minimum-hash/rightmost-tie pair in one
+    expression — then ``array_distinct`` of the selected set (adjacent
+    windows usually re-select the same gram; that collapse IS the
+    2/(w+1) density win). No Window operator; the only exchange is the
+    scan's id repartition guard, when it fires.
     """
     assert w >= 1
     # r12 optimization: the windows of the winnow are PER-DOCUMENT, and the
@@ -244,9 +247,10 @@ def winnow_overlap_pairs(
     ``min_shared`` distinct fingerprint HASHES — positional near-dup /
     plagiarism candidates ranked by overlap mass.
 
-    Bucket-local expansion: distinct (id, h) grouped by hash, ordered
-    pairs expanded within each bucket array, counted per pair — each pair
-    surfaces once per shared hash, so the count needs no second join.
+    Bucket-local expansion through ``dedup.cell_pair_rows`` keyed by
+    hash: distinct (id, h) grouped by hash, ordered pairs expanded within
+    each bucket array, counted per pair — each pair surfaces once per
+    shared hash, so the count needs no second join.
     ``max_cell_size`` arms the exact triangle-block guard for hot hashes
     (site boilerplate shared corpus-wide): the pair SET and counts are
     unchanged, the per-task quadratic term is bounded.
@@ -255,58 +259,14 @@ def winnow_overlap_pairs(
     (id, h) — e.g. the explode of :func:`winnow_fp_sets` — skipping the
     full (id, h) distinct exchange (r12, guide §2.4).
     """
-    from pharmacodi_spark.operators.partitioning import pin_pair_parallelism
-    from pharmacodi_spark.text.dedup import triangle_blocks
+    from pharmacodi_spark.text.dedup import cell_pair_rows
 
     d = fp.select(F.col(id_col), "h")
     if not hashes_distinct:
         d = d.distinct()
-    # pin the bucket-expansion exchange parallelism (r12, guide §2.5 —
-    # see dedup.pairs_from_cells): the in-array pair expansion is
-    # quadratic per bucket while the exchange bytes are tiny
-    if max_cell_size is None:
-        grouped = pin_pair_parallelism(d, ["h"]).groupBy("h")
-        member = F.col(id_col)
-    else:
-        blk = triangle_blocks(d, ["h"], id_col, max_cell_size)
-        blk = pin_pair_parallelism(blk, ["h", "__bi", "__bj"])
-        grouped = blk.groupBy("h", "__bi", "__bj")
-        member = F.struct(F.col(id_col).alias("id"), F.col("__g").alias("g"))
-    buckets = grouped.agg(
-        F.array_sort(F.collect_list(member)).alias("members")
-    ).where(F.size("members") > 1)
-    ms = F.col("members")
-    if max_cell_size is None:
-        pair = lambda x, y: F.struct(  # noqa: E731
-            x.alias("doc_a"), y.alias("doc_b"), F.lit(True).alias("ok")
-        )
-    else:
-        diag = F.col("__bi") == F.col("__bj")
-        pair = lambda x, y: F.struct(  # noqa: E731
-            x["id"].alias("doc_a"),
-            y["id"].alias("doc_b"),
-            (diag | (x["g"] != y["g"])).alias("ok"),
-        )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ms,
-                    lambda x, i: F.filter(
-                        F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: pair(x, y),
-                        ),
-                        lambda p: p["ok"],
-                    ),
-                )
-            )
-        ).alias("p")
-    )
     return (
-        pairs.groupBy(
-            F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
-        )
+        cell_pair_rows(d, ["h"], id_col, max_cell_size)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared"))
         .where(F.col("shared") >= min_shared)
     )

@@ -1,4 +1,4 @@
-"""60-bit SimHash (plans/extensions2.py::_simhash_spark(bits=60) +
+"""60-bit SimHash (text/dedup.py::md5_simhash(bits=60) +
 text/dedup.py::simhash_near_pairs at the production width): pure-Python
 replay equality, the width guard, and the saturation contrast the r11
 detector_agreement root-cause documented (16-bit collides on unrelated
@@ -26,7 +26,7 @@ def _py_simhash(text: str, bits: int) -> int:
 
 
 def test_wide_simhash_matches_python_replay(spark):
-    from pharmacodi_spark.plans.extensions2 import _simhash_spark
+    from pharmacodi_spark.text.dedup import md5_simhash
 
     rng = random.Random(7)
     rows = [
@@ -35,19 +35,18 @@ def test_wide_simhash_matches_python_replay(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
-        r["doc_id"]: r["fp"]
-        for r in _simhash_spark(df, bits=60, out_col="fp").collect()
+        r["doc_id"]: r["simhash"]
+        for r in md5_simhash(df, bits=60).collect()
     }
     for i, t in rows:
         assert got[i] == _py_simhash(t, 60), i
 
 
 def test_width_guard_and_pair_equivalence(spark):
-    from pharmacodi_spark.plans.extensions2 import _simhash_spark
-    from pharmacodi_spark.text.dedup import simhash_near_pairs
+    from pharmacodi_spark.text.dedup import md5_simhash, simhash_near_pairs
 
     with pytest.raises(AssertionError, match="60"):
-        _simhash_spark(spark.range(1), bits=61)
+        md5_simhash(spark.range(1), bits=61)
 
     # planted near-dups: doc 2k+1 = doc 2k with one token changed; the
     # 60-bit pipeline must pair exactly the planted twins (brute-force
@@ -64,7 +63,7 @@ def test_width_guard_and_pair_equivalence(spark):
         toks[5] = "CHANGED"  # 1 of 120 tokens: expected bit flips ~60*P(|sum|<=2) ~ 5
         rows.append((2 * k + 1, " ".join(toks)))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    sim = _simhash_spark(df, bits=60, out_col="simhash")
+    sim = md5_simhash(df, bits=60)
     got = {
         (r["doc_a"], r["doc_b"])
         for r in simhash_near_pairs(
@@ -91,8 +90,7 @@ def test_width_guard_and_pair_equivalence(spark):
 def test_16bit_saturates_where_60bit_does_not(spark):
     # the r11 root-cause in miniature: unrelated random docs collide at
     # hamming<=3 in a 16-bit space but essentially never in 60 bits
-    from pharmacodi_spark.plans.extensions2 import _simhash_spark
-    from pharmacodi_spark.text.dedup import simhash_near_pairs
+    from pharmacodi_spark.text.dedup import md5_simhash, simhash_near_pairs
 
     rng = random.Random(99)
     rows = [
@@ -101,11 +99,11 @@ def test_16bit_saturates_where_60bit_does_not(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     narrow = simhash_near_pairs(
-        _simhash_spark(df, bits=16, out_col="simhash"),
+        md5_simhash(df, bits=16),
         max_hamming=3, prefix_bits=8, bits=16, max_cell_size=256,
     ).count()
     wide = simhash_near_pairs(
-        _simhash_spark(df, bits=60, out_col="simhash"),
+        md5_simhash(df, bits=60),
         max_hamming=3, prefix_bits=8, bits=60, max_cell_size=256,
     ).count()
     assert narrow > 0  # 300 unrelated docs already collide at 16 bits

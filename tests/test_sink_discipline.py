@@ -217,3 +217,69 @@ def test_curation_gates_tokenize_in_the_library():
         and call.func.value.id == "F"
     ]
     assert hits == [], "call the library gate operator instead"
+
+
+def test_pair_expansion_only_in_dedup_library():
+    # the in-array ordered pair expansion, F.slice(ms, i + 2, ...), is the
+    # cell pair kernel (text/dedup.py::cell_pair_rows); a copy elsewhere
+    # forks the LSH decision and drops the kernel's parallelism pin
+    hits = []
+    for mod, tree in _modules():
+        for call in ast.walk(tree):
+            if not (
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "slice"
+                and len(call.args) >= 2
+            ):
+                continue
+            start = call.args[1]
+            if (
+                isinstance(start, ast.BinOp)
+                and isinstance(start.op, ast.Add)
+                and isinstance(start.left, ast.Name)
+                and isinstance(start.right, ast.Constant)
+                and start.right.value == 2
+                and mod != "text/dedup.py"
+            ):
+                hits.append(f"{mod}:{call.lineno}")
+    assert hits == [], "expand pairs with text.dedup.cell_pair_rows"
+
+
+# names a registry module may still import from a sibling other than
+# plans.queries; a ratchet — each moves to the library or queries.py and
+# leaves this set
+_CROSS_REGISTRY_ALLOWED = {
+    "_TOKENIZER_VOCAB",
+    "_TOKENIZER_VOCAB_SQL",
+    "_DSIR_DIM",
+    "_DSIR_SALT",
+    "_host_rank_df",
+    "_host_rank_parts",
+    "_il",
+    "_MIXED_SENTENCES",
+    "_SPACEFREE_RE2_CLS",
+    "_UNI_CASE",
+    "_UNI_TOKEN_RE2",
+}
+
+
+def test_registry_modules_import_only_from_queries():
+    hits = []
+    for mod, tree in _modules():
+        if not mod.startswith("plans/") or mod == "plans/__init__.py":
+            continue
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            src = node.module or ""
+            if not src.startswith("pharmacodi_spark.plans."):
+                continue
+            if src == "pharmacodi_spark.plans.queries":
+                continue
+            hits += [
+                f"{mod}:{node.lineno} {a.name}"
+                for a in node.names
+                if a.name not in _CROSS_REGISTRY_ALLOWED
+            ]
+    assert hits == [], "import engine code from the library, twins from queries"

@@ -481,13 +481,16 @@ AUDITS: dict[str, list[tuple[str, bool, str]]] = {
     ],
     "winnowing_fingerprints": [
         (r"hashpartitioning\((?!doc_id)", False,
-         "ONE shuffle total — the id-keyed repartition guard doubles as "
-         "the window partitioning; sort, window-min, distinct and the "
-         "per-doc rollup all reuse it"),
-        (r"\bWindow\b", True,
-         "the rightmost-minimal selection is a per-doc sliding frame "
-         "(min(struct(h,-pos))) — embarrassingly parallel, no "
-         "corpus-global state"),
+         "no exchange but the doc_id repartition guard — the per-doc "
+         "rollup reuses its partitioning"),
+        (r"(?s)\bExchange \(\d+\).*\bExchange \(\d+\)", False,
+         "ONE shuffle total: the selection and its distinct never add an "
+         "exchange"),
+        (r"\bWindow\b", False,
+         "the rightmost-minimal selection is a row-local array projection "
+         "(array_min of struct(h,-pos) over each window's slice of the "
+         "per-doc hash array, then array_distinct) — no Window operator, "
+         "no corpus-global state"),
         (r"SortMergeJoin", False, "fingerprint selection is join-free"),
     ],
     "winnow_near_pairs": [
@@ -942,9 +945,12 @@ AUDITS: dict[str, list[tuple[str, bool, str]]] = {
          "pair dots are one GEMM per triangle block inside the Arrow "
          "worker — the pair blowup never reaches an exchange, only id "
          "pairs leave"),
-        (r"BroadcastHashJoin", True,
-         "the triangle guard's cell-count side broadcasts — the vector "
-         "frame shuffles ONCE, keyed by (cell, block)"),
+        (r"(?s)\bExchange \(\d+\).*\bExchange \(\d+\)", False,
+         "the vector frame shuffles ONCE: the triangle guard's cell count "
+         "is a count(*) OVER (PARTITION BY cell) on the exchange the "
+         "blocking needs anyway — no count table, no join back"),
+        (r"hashpartitioning\(cell#", True,
+         "that one exchange is keyed by the cell"),
         (r"SortMergeJoin", False, "no sort-merge anywhere"),
     ],
     "kmv_overlap": [
