@@ -3,7 +3,7 @@
 operators a 100 TB event pipeline needs that Spark lacks as primitives,
 built per the custom-operator policy as compositions of DataFrame ops).
 
-Oracle-checked plan twins: plans/extensions2.py::asof_join / range_join.
+Oracle-checked plan twins: plans/tabular_q.py::asof_join / range_join.
 """
 
 from __future__ import annotations

@@ -1,10 +1,20 @@
 from pharmacodi_spark.plans.queries import QUERIES, spark_queries, oracle_queries
-import pharmacodi_spark.plans.extensions  # noqa: F401  (registers extension queries)
-import pharmacodi_spark.plans.extensions2  # noqa: F401  (registers second batch)
+# one registry module per operator family; importing each registers its rows
+import pharmacodi_spark.plans.series_q  # noqa: F401
+import pharmacodi_spark.plans.tabular_q  # noqa: F401
+import pharmacodi_spark.plans.dedup_q  # noqa: F401
+import pharmacodi_spark.plans.winnow_q  # noqa: F401
+import pharmacodi_spark.plans.lm_q  # noqa: F401
+import pharmacodi_spark.plans.corpus_q  # noqa: F401
+import pharmacodi_spark.plans.quality_q  # noqa: F401
+import pharmacodi_spark.plans.selection_q  # noqa: F401
+import pharmacodi_spark.plans.similarity_q  # noqa: F401
+import pharmacodi_spark.plans.embedding_q  # noqa: F401
+import pharmacodi_spark.plans.graph_q  # noqa: F401
+import pharmacodi_spark.plans.web_q  # noqa: F401
+import pharmacodi_spark.plans.sketches_q  # noqa: F401
 import pharmacodi_spark.plans.pipeline_q  # noqa: F401  (registers pipeline composition)
 import pharmacodi_spark.plans.analytics  # noqa: F401  (registers subquery/decorrelation kit)
-import pharmacodi_spark.plans.extensions3  # noqa: F401  (registers selection/observability batch)
-import pharmacodi_spark.plans.extensions4  # noqa: F401  (registers composed-prior/topic batch)
 
 from pyspark.sql import DataFrame, SparkSession
 

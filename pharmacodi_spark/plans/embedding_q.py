@@ -1,0 +1,1034 @@
+"""Embedding-structure rows: semantic dedup, k-means, ABTT, drift (text/similarity, text/embeddings)."""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from pharmacodi_spark.functions.scalar import local_df
+from pharmacodi_spark.plans.queries import q, _t, _rnd
+
+
+# ---------------------------------------------------------------------------
+# Semantic dedup E2E (embedding space; SemDeDup-style cell blocking)
+# ---------------------------------------------------------------------------
+
+
+@q(
+    "semantic_dedup_pipeline",
+    """
+    WITH RECURSIVE
+    q AS (
+      SELECT vec_id,
+             list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qe
+      FROM embeddings
+    ),
+    cents AS (SELECT vec_id AS cid, qe AS cqe FROM q
+              WHERE vec_id < greatest(16, (SELECT count(*) FROM q) // 256)),
+    assign AS (
+      SELECT vec_id, cid FROM (
+        SELECT q.vec_id, c.cid,
+               row_number() OVER (PARTITION BY q.vec_id ORDER BY
+                 list_sum(list_transform(list_zip(q.qe, c.cqe),
+                                         s -> (s[1]-s[2])*(s[1]-s[2]))), c.cid) AS rn
+        FROM q CROSS JOIN cents c) WHERE rn = 1
+    ),
+    norms AS (
+      SELECT vec_id, list_sum(list_transform(qe, x -> x*x)) AS n2 FROM q
+    ),
+    pairs AS (
+      SELECT a.vec_id AS u, b.vec_id AS v
+      FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
+      JOIN q qa ON a.vec_id = qa.vec_id JOIN q qb ON b.vec_id = qb.vec_id
+      JOIN norms na ON a.vec_id = na.vec_id
+      JOIN norms nb ON b.vec_id = nb.vec_id
+      WHERE CAST(list_sum(list_transform(list_zip(qa.qe, qb.qe),
+                                         s -> s[1]*s[2])) AS DOUBLE)
+            / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) >= 0.40
+    ),
+    edges AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
+    reach(node, lab) AS (
+      SELECT vec_id, vec_id FROM q
+      UNION
+      SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
+    ),
+    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)
+    SELECT CAST(node AS BIGINT) AS vec_id,
+           CAST(component AS BIGINT) AS component,
+           component = node AS keep
+    FROM comp
+    """,
+)
+def semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space semantic dedup E2E (the SemDeDup-style sibling of
+    fuzzy_dedup_pipeline): IVF-cell blocking (text/similarity.py::
+    ivf_assign over deterministic seed centroids) → within-cell quantized
+    cosine pairs (≥ 0.40; integer dot/norms, ONE IEEE division+sqrt per
+    pair — bit-identical across engines) → connected components → min-id
+    keeper droplist (text/clusters.py::near_dup_droplist). The quadratic
+    term is bounded per CELL — the blocking that makes embedding dedup
+    feasible at corpus scale (store assignments partitioned by cid and
+    each cell dedups independently); the whole cascade, including the
+    iterative component labelling, is value-checked against the
+    recursive-CTE oracle.
+
+    Production blocking recipe (r12): swap ``seeded_cell_assign`` for
+    text/similarity.py::trained_cell_assign (k-means|| centroids →
+    broadcast-centroid-table assign) — the lowest-id seeding stays HERE
+    because it is SQL-reproducible (the oracle contract), but at corpus
+    scale cell BALANCE bounds the quadratic within-cell term and
+    arbitrary-sample seeds concentrate misaligned cluster mass into
+    giant cells (tests/test_trained_blocking.py: an 800-vector blob far
+    from every seed lands in ONE cell — trained centroids cut the max
+    cell >3×, and the planted-duplicate droplist is preserved since
+    identical vectors share a Voronoi cell under any seeding).
+
+    Hot-cell skew guard: the within-cell pair join runs through
+    text/dedup.py::triangle_blocks with ``max_cell_size=256`` (the same
+    cap the simhash twin settled on) — a cell of m vectors re-splits into
+    ceil(m/256) subgroups and its m^2/2 pair checks spread over s*(s+1)/2
+    bounded tasks instead of one straggler. The decomposition is EXACT
+    (each pair generated exactly once; guard-on ≡ guard-off proven by the
+    dim-256 pytest and the SCALING.md skew fixture). 256 is deliberate:
+    capping at 20 made the sf0.1 pair stage ~35% slower (28 blocks per
+    125-vector cell of sub-task overhead) while 256²/2 ≈ 33k checks per
+    task stays bounded at any scale — the guard should engage under SKEW,
+    not on every healthy cell."""
+    from pharmacodi_spark.text.clusters import near_dup_droplist
+    from pharmacodi_spark.text.similarity import (
+        cell_cosine_pairs,
+        seeded_cell_assign,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding", lambda x: _rnd(x.cast("double") * 10000)
+        ).alias("qe"),
+    )
+    # centroid count scales with the corpus (k = max(16, n div 256)) so
+    # the within-cell candidate-pair mass stays ~n·256 (linear) — see the
+    # text_semantic_dedup comment for the r10 sf1 evidence; at
+    # sf0.01/sf0.1 the expression still yields 16 (oracle unchanged)
+    n_k = max(16, qe.count() // 256)
+    from pharmacodi_spark.barrier import stage_barrier
+
+    # pin the argmin: cell_cosine_pairs consumes its input three
+    # times (dim probe, triangle-guard cell counts, pair expansion) — see
+    # the text_semantic_dedup twin for the r10 sf1 profile.
+    # seeded_cell_assign feeds the seed frame to the broadcast-centroid-
+    # table path: nothing is collected to the driver at any k (r11,
+    # VERDICT r10 item 1)
+    assigned = stage_barrier(
+        seeded_cell_assign(qe, n_k, vec_col="qe", out_col="cid"),
+        name="semdedup_assigned",
+    )
+    # pair scoring: cell_cosine_pairs picks the flattened straight-line-
+    # codegen dot at 64-dim (its Arrow GEMM path takes over past 128)
+    pairs = cell_cosine_pairs(
+        assigned,
+        vec_col="qe",
+        id_col="vec_id",
+        cell_col="cid",
+        threshold=0.40,
+        max_cell_size=256,
+    )
+    out = near_dup_droplist(
+        qe.select("vec_id"), pairs, id_col="vec_id", edges_canonical=True
+    )
+    return out.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("component").cast("long").alias("component"),
+        "keep",
+    )
+
+
+@q(
+    "embedding_encode_stats",
+    """
+    WITH t AS (
+      SELECT doc_id,
+             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
+    h AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5('e' || w), 1, 15)) AS BIGINT) % 16 AS j,
+             CASE WHEN CAST(('0x' || substr(md5('s' || w), 1, 15)) AS BIGINT)
+                       % 2 = 0 THEN 1 ELSE -1 END AS s
+      FROM tok
+    ),
+    d AS (SELECT doc_id, j, CAST(sum(s) AS BIGINT) AS v FROM h GROUP BY 1, 2),
+    per AS (
+      SELECT doc_id,
+             CAST(count(*) FILTER (WHERE v <> 0) AS BIGINT) AS nnz,
+             CAST(coalesce(sum(abs(v)), 0) AS BIGINT) AS l1,
+             CAST(coalesce(sum(v * v), 0) AS BIGINT) AS sumsq,
+             CAST(coalesce(max(abs(v)), 0) AS BIGINT) AS max_abs
+      FROM d GROUP BY doc_id
+    )
+    SELECT t.doc_id,
+           coalesce(per.nnz, 0) AS nnz,
+           coalesce(per.l1, 0) AS l1,
+           coalesce(per.sumsq, 0) AS sumsq,
+           coalesce(per.max_abs, 0) AS max_abs
+    FROM t LEFT JOIN per USING (doc_id)
+    """,
+)
+def embedding_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embedding-GENERATION seam, oracle-verified end-to-end (VERDICT
+    r9 item 5): documents encode to 16-dim vectors through
+    text/embeddings.py::encode_documents — a real ``mapInPandas`` Arrow
+    pass running the injected-encoder contract with the deterministic
+    signed-feature-hashing stand-in — and the per-document vector stats
+    (nnz / L1 / sum-of-squares / max-abs, all integers) are computed
+    NATIVELY from the returned ``array<float>`` column. The DuckDB twin
+    restates the stand-in encoder in closed form, so a batching, dtype,
+    ordering, or null-handling defect anywhere in the Arrow plumbing
+    breaks the value hash.
+
+    Scale shape: the encode pass is shuffle-free (documents never leave
+    their scan partitions; a real model adapter drops in via
+    ``encoder=``); the stats projection is per-row native array algebra —
+    zero joins, zero explode. The int64 accumulator lambda folds the
+    float32 cells exactly (per-doc magnitudes ≪ 2^24)."""
+    from pharmacodi_spark.text.embeddings import encode_documents
+
+    d = _t(spark, sf_dir, "documents")
+    enc = encode_documents(d, dim=16, content_col="text", id_col="doc_id")
+    v = F.col("embedding")
+    as_long = lambda c: c.cast("long")  # noqa: E731
+    return enc.select(
+        "doc_id",
+        F.size(F.filter(v, lambda x: x != 0)).cast("long").alias("nnz"),
+        F.aggregate(
+            v, F.lit(0).cast("long"), lambda acc, x: acc + as_long(F.abs(x))
+        ).alias("l1"),
+        F.aggregate(
+            v,
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + as_long(x) * as_long(x),
+        ).alias("sumsq"),
+        F.array_max(F.transform(v, lambda x: as_long(F.abs(x)))).alias(
+            "max_abs"
+        ),
+    )
+
+
+@q(
+    "text_semantic_dedup",
+    """
+    WITH RECURSIVE
+    t AS (
+      SELECT doc_id,
+             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
+    hh AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5('e' || w), 1, 15)) AS BIGINT) % 32 AS j,
+             CASE WHEN CAST(('0x' || substr(md5('s' || w), 1, 15)) AS BIGINT)
+                       % 2 = 0 THEN 1 ELSE -1 END AS s
+      FROM tok
+    ),
+    vecs AS (SELECT doc_id, j, CAST(sum(s) AS BIGINT) AS v
+             FROM hh GROUP BY 1, 2),
+    g AS (SELECT doc_id, list({'j': j, 'v': v}) AS cells
+          FROM vecs GROUP BY doc_id),
+    q AS (
+      SELECT t.doc_id AS vec_id,
+             list_transform(generate_series(1, 32), jj ->
+               coalesce(list_sum(list_transform(
+                 list_filter(g.cells, c -> c.j = jj - 1), c -> c.v)), 0))
+               AS qe
+      FROM t LEFT JOIN g USING (doc_id)
+    ),
+    cents AS (SELECT vec_id AS cid, qe AS cqe FROM q
+              WHERE vec_id < greatest(16, (SELECT count(*) FROM q) // 256)),
+    assign AS (
+      SELECT vec_id, cid FROM (
+        SELECT q.vec_id, c.cid,
+               row_number() OVER (PARTITION BY q.vec_id ORDER BY
+                 list_sum(list_transform(list_zip(q.qe, c.cqe),
+                   s -> (s[1]-s[2])*(s[1]-s[2]))), c.cid) AS rn
+        FROM q CROSS JOIN cents c) WHERE rn = 1
+    ),
+    norms AS (
+      SELECT vec_id, list_sum(list_transform(qe, x -> x*x)) AS n2 FROM q
+    ),
+    pairs AS (
+      SELECT a.vec_id AS u, b.vec_id AS v
+      FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
+      JOIN q qa ON a.vec_id = qa.vec_id JOIN q qb ON b.vec_id = qb.vec_id
+      JOIN norms na ON a.vec_id = na.vec_id
+      JOIN norms nb ON b.vec_id = nb.vec_id
+      WHERE na.n2 > 0 AND nb.n2 > 0
+        AND CAST(list_sum(list_transform(list_zip(qa.qe, qb.qe),
+                                         s -> s[1]*s[2])) AS DOUBLE)
+            / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) >= 0.85
+    ),
+    edges AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
+    reach(node, lab) AS (
+      SELECT vec_id, vec_id FROM q
+      UNION
+      SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
+    ),
+    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)
+    SELECT CAST(node AS BIGINT) AS vec_id,
+           CAST(component AS BIGINT) AS component,
+           component = node AS keep
+    FROM comp
+    """,
+)
+def text_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TEXT-in → droplist-out semantic dedup — the r10 capstone closing
+    VERDICT r9 item 5 at the driver level: raw documents encode to 32-dim
+    vectors through text/embeddings.py::encode_documents (the Arrow
+    mapInPandas encoder seam, deterministic stand-in), and the UNCHANGED
+    semantic_dedup_pipeline stages consume the output — IVF-cell blocking
+    over the first-16-docs seed centroids, within-cell integer-quantized
+    cosine (≥ 0.85; integer dot/norms, ONE IEEE division+sqrt per pair —
+    bit-identical across engines), connected components, min-id keeper.
+    The oracle nests the closed-form encoder as the head CTE of the same
+    recursive-CC SQL (the curation_select_pipeline nesting precedent).
+
+    Scale notes beyond the fixture-backed sibling: the encoded frame is
+    STAGE-BARRIER-PINNED immediately after the Python stage — the pair
+    stage self-joins its input and the droplist re-reads it, and lazily
+    composed each consumer would re-run the (model-inference-heavy in
+    production) encode per reference (the r5 lesson, here at its most
+    expensive). Zero-norm vectors (empty documents) are excluded from the
+    pair stage EXPLICITLY on both sides: Spark compares ``0/0 = NaN`` as
+    greater-than-everything while the droplist still carries the doc as
+    its own singleton component — the guard keeps the engines aligned
+    without dropping rows."""
+    from pharmacodi_spark.barrier import stage_barrier
+    from pharmacodi_spark.text.clusters import near_dup_droplist
+    from pharmacodi_spark.text.embeddings import encode_documents
+    from pharmacodi_spark.text.similarity import (
+        cell_cosine_pairs,
+        seeded_cell_assign,
+    )
+
+    d = _t(spark, sf_dir, "documents")
+    enc = stage_barrier(
+        encode_documents(d, dim=32), name="text_semdedup_enc"
+    )
+    qe = enc.select(
+        F.col("doc_id").alias("vec_id"),
+        F.transform("embedding", lambda x: x.cast("long")).alias("qe"),
+    )
+    # centroid count SCALES with the corpus: k = max(16, n div 256) keeps
+    # the average cell near the triangle-guard block size, so within-cell
+    # candidate-pair mass stays ~n·256 (linear) instead of n²/16 — the r10
+    # sf1 pair measured the fixed-16 version at 25× wall for 10× data,
+    # exactly that quadratic term. At sf0.01 (the driver's correctness
+    # scale) the expression still yields 16, so oracle rows are unchanged;
+    # sf0.1 gets 19 centroids. (Assignment is the broadcast centroid
+    # TABLE at every k, so its plan does not grow with n_k.)
+    n_k = max(16, qe.count() // 256)
+    # seeded_cell_assign feeds the seed frame to the broadcast-centroid-
+    # table path as a DataFrame: NOTHING is collected to the driver at
+    # any k (r11, VERDICT r10 item 1). Production runs
+    # trained_cell_assign instead (k-means|| seeds — cell balance bounds
+    # the quadratic within-cell term; r12, tests/test_trained_blocking.py);
+    # lowest-id seeding stays here because it is the SQL-reproducible
+    # oracle recipe.
+    assigned = seeded_cell_assign(qe, n_k, vec_col="qe", out_col="cid")
+    # the argmin is the E2E's CPU-heavy projection and
+    # cell_cosine_pairs consumes its input THREE times (dim probe, the
+    # triangle guard's cell counts, the pair expansion) — pin it so the
+    # assignment runs once (the r5 lesson; the r10 sf1 profile measured
+    # the unpinned version re-paying ~14s per consumer at 50k docs)
+    nz = stage_barrier(
+        assigned.where(
+            F.aggregate(
+                "qe", F.lit(0).cast("long"), lambda acc, x: acc + x * x
+            )
+            > 0
+        ),
+        name="text_semdedup_assigned",
+    )
+    pairs = cell_cosine_pairs(
+        nz,
+        vec_col="qe",
+        id_col="vec_id",
+        cell_col="cid",
+        threshold=0.85,
+        max_cell_size=256,
+    )
+    out = near_dup_droplist(
+        qe.select("vec_id"), pairs, id_col="vec_id", edges_canonical=True
+    )
+    return out.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("component").cast("long").alias("component"),
+        "keep",
+    )
+
+
+# ---------------------------------------------------------------------------
+# k-means topic structure over the embedding column
+# (text/similarity.py::kmeans_lloyd_int)
+# ---------------------------------------------------------------------------
+
+_KM_K = 8
+_KM_ITERS = 2
+_KM_SCALE = 10000
+
+
+def _kmeans_parts(k: int = _KM_K, iters: int = _KM_ITERS) -> str:
+    """Unrolled Lloyd's CTE chain ending in ``af(vec_id, cid, d2)`` —
+    shared by kmeans_topics and cluster_balanced_sample. Assignment =
+    integer squared-L2 argmin (ties → lower centroid id), update =
+    per-dimension ``sum // count`` (DuckDB ``//`` truncates toward zero —
+    the exact Spark ``div`` / Python
+    :func:`~pharmacodi_spark.text.similarity._trunc_div` semantics),
+    empty clusters keep their previous centroid."""
+    parts = [
+        f"""q AS (
+      SELECT vec_id,
+             list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE)*{_KM_SCALE} + 0.5)
+                         AS BIGINT)) AS qe
+      FROM embeddings
+    ),
+    c0 AS (SELECT vec_id AS cid, qe AS cqe FROM q WHERE vec_id < {k})"""
+    ]
+    for i in range(iters):
+        parts.append(
+            f"""d{i} AS (
+      SELECT q.vec_id, c.cid,
+             list_sum(list_transform(list_zip(q.qe, c.cqe),
+                                     s -> (s[1]-s[2])*(s[1]-s[2]))) AS d2
+      FROM q CROSS JOIN c{i} c
+    ),
+    a{i} AS (
+      SELECT vec_id, cid FROM (
+        SELECT vec_id, cid,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY d2, cid) AS rn
+        FROM d{i})
+      WHERE rn = 1
+    ),
+    e{i} AS (
+      SELECT a.cid, generate_subscripts(q.qe, 1) AS pos, unnest(q.qe) AS x
+      FROM a{i} a JOIN q USING (vec_id)
+    ),
+    s{i} AS (
+      SELECT cid, pos, sum(x) AS sx, count(*) AS n
+      FROM e{i} GROUP BY 1, 2
+    ),
+    u{i} AS (
+      SELECT cid, list(sx // n ORDER BY pos) AS cqe FROM s{i} GROUP BY 1
+    ),
+    c{i + 1} AS (
+      SELECT c{i}.cid, coalesce(u{i}.cqe, c{i}.cqe) AS cqe
+      FROM c{i} LEFT JOIN u{i} USING (cid)
+    )"""
+        )
+    parts.append(
+        f"""df AS (
+      SELECT q.vec_id, c.cid,
+             list_sum(list_transform(list_zip(q.qe, c.cqe),
+                                     s -> (s[1]-s[2])*(s[1]-s[2]))) AS d2
+      FROM q CROSS JOIN c{iters} c
+    ),
+    af AS (
+      SELECT vec_id, cid, d2 FROM (
+        SELECT vec_id, cid, d2,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY d2, cid) AS rn
+        FROM df)
+      WHERE rn = 1
+    )"""
+    )
+    return "WITH " + ",\n    ".join(parts)
+
+
+def _kmeans_sql(k: int = _KM_K, iters: int = _KM_ITERS) -> str:
+    return (
+        _kmeans_parts(k, iters)
+        + """
+    SELECT CAST(cid AS BIGINT) AS cid,
+           CAST(count(*) AS BIGINT) AS n_vecs,
+           CAST(sum(d2) AS BIGINT) AS inertia,
+           CAST(min(vec_id) AS BIGINT) AS min_vec_id
+    FROM af GROUP BY 1
+    """
+    )
+
+
+@q("kmeans_topics", _kmeans_sql())
+def kmeans_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus topic structure via integer Lloyd's k-means over the
+    embedding column (text/similarity.py::kmeans_lloyd_int, k=8, 2
+    iterations, seeds = the k lowest-id vectors): the clustering
+    primitive behind SemDeDup-style semantic pruning and cluster-balanced
+    sampling — per-cluster size, exact integer inertia, and the min-id
+    exemplar. Every step engine-deterministic: quantized integer vectors,
+    exact squared-L2 argmin with lower-index tie-break, per-dimension
+    ``sum div count`` centroid updates (truncate-toward-zero in BOTH
+    engines), empty clusters keep their previous centroid.
+
+    Scale shape: centroids are index metadata (k·dim longs, driver-side
+    like ivf_topk's coarse quantizer); each Lloyd step is ONE corpus scan
+    + a map-side-combining (cid, dim)-keyed aggregate of k·dim rows;
+    vectors never pair and never shuffle. The quantized frame is
+    stage-barrier-pinned — every iteration re-reads it."""
+    from pharmacodi_spark.barrier import stage_barrier
+    from pharmacodi_spark.text.similarity import kmeans_lloyd_int
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: (_rnd(x.cast("double") * _KM_SCALE)).cast("long"),
+        ).alias("qe"),
+    )
+    qe = stage_barrier(qe, name="kmeans_qe")
+    assigned, _cents = kmeans_lloyd_int(
+        qe, k=_KM_K, iterations=_KM_ITERS, vec_col="qe", id_col="vec_id"
+    )
+    return assigned.groupBy(F.col("cid").cast("long").alias("cid")).agg(
+        F.count("*").cast("long").alias("n_vecs"),
+        F.sum("d2").cast("long").alias("inertia"),
+        F.min("vec_id").cast("long").alias("min_vec_id"),
+    )
+
+
+_CBS_QUOTA = 16
+
+
+def _cluster_balanced_sql() -> str:
+    return (
+        _kmeans_parts()
+        + f"""
+    SELECT CAST(vec_id AS BIGINT) AS vec_id,
+           CAST(cid AS BIGINT) AS cid,
+           CAST(d2 AS BIGINT) AS d2,
+           CAST(rk AS BIGINT) AS rk
+    FROM (
+      SELECT vec_id, cid, d2,
+             row_number() OVER (PARTITION BY cid
+                                ORDER BY d2, vec_id) AS rk
+      FROM af)
+    WHERE rk <= {_CBS_QUOTA}
+    """
+    )
+
+
+@q("cluster_balanced_sample", _cluster_balanced_sql())
+def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster-balanced subset selection: the k-means topic structure
+    (kmeans_lloyd_int, same k/iterations/seeds as kmeans_topics) feeding
+    a per-cluster prototypicality quota — up to _CBS_QUOTA most-central
+    vectors per cluster (ascending exact integer distance to the final
+    centroid, ties → lower id). The diversity-preserving sampler a
+    mixture pipeline runs AFTER dedup: proportional sampling over-serves
+    the head topic, a balanced quota keeps every region of embedding
+    space represented (the SemDeDup / DDS complement to
+    prototypicality's outlier pruning).
+
+    Scale shape: identical to kmeans_topics through the final assignment
+    (pinned quantized frame, metadata centroids, vectors never pair);
+    the quota is ONE ranking window keyed by cid — k partitions, each
+    heap-bounded; at 100 TB the cid-keyed exchange carries (vec_id, cid,
+    d2) triples, never the vectors."""
+    from pyspark.sql import Window
+
+    from pharmacodi_spark.barrier import stage_barrier
+    from pharmacodi_spark.text.similarity import kmeans_lloyd_int
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: (_rnd(x.cast("double") * _KM_SCALE)).cast("long"),
+        ).alias("qe"),
+    )
+    qe = stage_barrier(qe, name="cbs_qe")
+    assigned, _cents = kmeans_lloyd_int(
+        qe, k=_KM_K, iterations=_KM_ITERS, vec_col="qe", id_col="vec_id"
+    )
+    w = Window.partitionBy("cid").orderBy(F.asc("d2"), F.asc("vec_id"))
+    return (
+        assigned.select("vec_id", "cid", "d2")
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= _CBS_QUOTA)
+        .select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            F.col("cid").cast("long").alias("cid"),
+            F.col("d2").cast("long").alias("d2"),
+            F.col("rk").cast("long").alias("rk"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# All-but-the-top: corpus dominant-direction projection
+# (text/similarity.py::top_component_projection)
+# ---------------------------------------------------------------------------
+
+_ABTT_SCALE = 1 << 10
+_ABTT_SHIFT = 1 << 16
+_ABTT_ITERS = 2
+
+
+def _abtt_sql(iters: int = _ABTT_ITERS) -> str:
+    """Long-form (pos-keyed) twin of the integer power iteration: mean =
+    per-dim ``sum // n``, start = the lowest-id centered row, each
+    iteration ``d = c·v`` → downshift → per-dim ``w = Σ c·d'`` →
+    ∞-norm rescale to 2^scale_bits — every division truncating."""
+    parts = [
+        """un AS (
+      SELECT vec_id,
+             CAST(floor(CAST(unnest(embedding) AS DOUBLE)*10000 + 0.5)
+                  AS BIGINT) AS x,
+             generate_subscripts(embedding, 1) AS pos
+      FROM embeddings
+    ),
+    mu AS (SELECT pos, sum(x) // count(*) AS m FROM un GROUP BY 1),
+    cent AS (
+      SELECT vec_id, un.pos, CAST(x - m AS BIGINT) AS c
+      FROM un JOIN mu USING (pos)
+    ),
+    v0 AS (
+      SELECT pos, c AS v FROM cent
+      WHERE vec_id = (SELECT min(vec_id) FROM cent)
+    )"""
+    ]
+    for i in range(1, iters + 1):
+        parts.append(
+            f"""d{i} AS (
+      SELECT vec_id, sum(c * v) AS d
+      FROM cent JOIN v{i - 1} USING (pos) GROUP BY 1
+    ),
+    w{i} AS (
+      SELECT pos, sum(c * (d // {_ABTT_SHIFT})) AS w
+      FROM cent JOIN d{i} USING (vec_id) GROUP BY 1
+    ),
+    v{i} AS (
+      SELECT pos,
+             (w * {_ABTT_SCALE}) // (SELECT max(abs(w)) FROM w{i}) AS v
+      FROM w{i}
+    )"""
+        )
+    parts.append(
+        f"""p AS (
+      SELECT vec_id, sum(c * v) AS d
+      FROM cent JOIN v{iters} USING (pos) GROUP BY 1
+    )"""
+    )
+    return (
+        "WITH "
+        + ",\n    ".join(parts)
+        + f"""
+    SELECT vec_id, CAST(d // {_ABTT_SCALE} AS BIGINT) AS proj_q FROM p
+    """
+    )
+
+
+@q("embedding_top_component", _abtt_sql())
+def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-but-the-top anisotropy audit (Mu & Viswanath 2018): every
+    vector's projection onto the corpus's dominant direction, found by
+    integer power iteration (text/similarity.py::top_component_projection
+    — 2 iterations, ∞-norm rescale to 2^10, truncating divisions only).
+    Embedding columns are anisotropic out of every encoder; the common
+    direction carries no retrieval signal, and removing it (subtract
+    mu, subtract proj·v) measurably improves cosine retrieval — this
+    query is the audit that decides whether to run the removal, and
+    ``proj_q`` is exactly the coefficient the removal needs.
+
+    Scale shape: mean + component are dim-length driver metadata; each
+    iteration is one scan of the pinned centered frame + a per-dim
+    map-side-combining aggregate (dim rows exchanged); vectors never
+    pair, never shuffle. ``shift_bits`` is the int64 headroom knob —
+    the library docstring gives the exact bound to raise it with n."""
+    from pharmacodi_spark.text.similarity import top_component_projection
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: (_rnd(x.cast("double") * _KM_SCALE)).cast("long"),
+        ).alias("qe"),
+    )
+    proj, _v, _mu = top_component_projection(
+        qe, iterations=_ABTT_ITERS, scale_bits=10, shift_bits=16
+    )
+    return proj.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("proj_q").cast("long").alias("proj_q"),
+    )
+
+
+_ABTT_PROBE = 42
+_ABTT_TOPK = 10
+
+
+def _abtt_corrected_sql() -> str:
+    """Extends the power-iteration CTE chain with the CORRECTION and a
+    probe retrieval. Exact integer ABTT removal with per-component floor
+    quantization: ``c' = (c·|v|² − (c·v)·v) div |v|²`` — subtracting each
+    vector's share of the common direction and truncating back to the
+    centered-quantized magnitude (every engine computes the identical
+    division); then exact integer dot top-k against the corrected
+    probe."""
+    return (
+        _abtt_sql().rsplit("SELECT vec_id", 1)[0]
+        + f""",
+    vv2 AS (SELECT sum(v * v) AS s2 FROM v{_ABTT_ITERS}),
+    corr AS (
+      SELECT cent.vec_id, cent.pos,
+             (cent.c * vv2.s2 - p.d * v{_ABTT_ITERS}.v) // vv2.s2 AS cc
+      FROM cent
+      JOIN p USING (vec_id)
+      JOIN v{_ABTT_ITERS} USING (pos)
+      CROSS JOIN vv2
+    ),
+    probe AS (SELECT pos, cc AS pc FROM corr WHERE vec_id = {_ABTT_PROBE})
+    SELECT c.vec_id,
+           CAST(sum(c.cc * probe.pc) AS BIGINT) AS dot
+    FROM corr c JOIN probe USING (pos)
+    WHERE c.vec_id <> {_ABTT_PROBE}
+    GROUP BY 1
+    ORDER BY dot DESC, c.vec_id
+    LIMIT {_ABTT_TOPK}
+    """
+    )
+
+
+@q("abtt_corrected_topk", _abtt_corrected_sql())
+def abtt_corrected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-but-the-top CORRECTED retrieval — the E2E that closes the
+    anisotropy story: audit (embedding_top_component) → correction →
+    exact top-k by corrected dot against a fixed probe (vec_id 42, ties
+    → lower id). The correction is the Mu & Viswanath 2018 removal in
+    exact integer arithmetic: ``c' = (c·|v|² − (c·v)·v) div |v|²`` —
+    each vector loses its share of the common direction, floor-quantized
+    per component back to centered-quantized magnitude (int64-safe: the
+    pre-division numerator peaks ~2^41 on this fixture; the library
+    docstring's shift_bits bound governs the power iteration itself).
+
+    Scale shape: mean/component/|v|²/probe are dim-length (or scalar)
+    literals; the correction + projection fuse into ONE codegen'd
+    zero-shuffle pass over each row (no join back to the audit output —
+    ``c·v`` recomputes in-row from the same literals); top-k is
+    TakeOrderedAndProject. Zero corpus shuffle end to end."""
+    from pharmacodi_spark.text.similarity import top_component_projection
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: (_rnd(x.cast("double") * _KM_SCALE)).cast("long"),
+        ).alias("qe"),
+    )
+    _proj, v, mu = top_component_projection(
+        qe, iterations=_ABTT_ITERS, scale_bits=10, shift_bits=16
+    )
+    from pharmacodi_spark.functions.scalar import int_array_lit
+
+    vv2 = sum(x * x for x in v)
+    # single-node literals (r12, guide §1.2 — see int_array_lit)
+    mu_arr = int_array_lit(mu)
+    v_arr = int_array_lit(v)
+    cent = qe.select(
+        "vec_id",
+        F.zip_with(
+            F.transform("qe", lambda x: x.cast("long")),
+            mu_arr,
+            lambda x, m: x - m,
+        ).alias("c"),
+    )
+    dot_v = F.aggregate(
+        F.zip_with("c", v_arr, lambda c, vv: c * vv),
+        F.lit(0).cast("long"),
+        lambda acc, t: acc + t,
+    )
+
+    def _trunc_div_col(num, den: int):
+        # truncate-toward-zero via (num - num % den) / den: Spark % takes
+        # the dividend's sign, the difference divides exactly, and the
+        # double division of an exactly-divisible value < 2^53 is exact
+        return ((num - num % F.lit(den)) / F.lit(den)).cast("long")
+
+    from pharmacodi_spark.barrier import stage_barrier
+
+    corrected = stage_barrier(
+        cent.withColumn("__dv", dot_v).select(
+            "vec_id",
+            F.zip_with(
+                "c",
+                v_arr,
+                lambda c, vv: _trunc_div_col(
+                    c * F.lit(vv2) - F.col("__dv") * vv, vv2
+                ),
+            ).alias("cc"),
+        ),
+        name="abtt_corrected",
+    )
+    probe_row = corrected.where(F.col("vec_id") == _ABTT_PROBE).collect()[0]
+    p_arr = int_array_lit(probe_row["cc"])
+    dot_p = F.aggregate(
+        F.zip_with("cc", p_arr, lambda c, pp: c * pp),
+        F.lit(0).cast("long"),
+        lambda acc, t: acc + t,
+    )
+    return (
+        corrected.where(F.col("vec_id") != _ABTT_PROBE)
+        .select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            dot_p.cast("long").alias("dot"),
+        )
+        .orderBy(F.desc("dot"), F.asc("vec_id"))
+        .limit(_ABTT_TOPK)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Embedding snapshot drift: mean shift + dominant-direction rotation
+# ---------------------------------------------------------------------------
+
+
+def _abtt_chain(sfx: str, pred: str, iters: int = _ABTT_ITERS) -> list[str]:
+    """The power-iteration CTE chain with suffixed names and a row
+    filter — lets one statement run the iteration over two corpus
+    snapshots (embedding_drift) without colliding with the unsuffixed
+    chain _abtt_sql builds."""
+    parts = [
+        f"""un{sfx} AS (
+      SELECT vec_id,
+             CAST(floor(CAST(unnest(embedding) AS DOUBLE)*10000 + 0.5)
+                  AS BIGINT) AS x,
+             generate_subscripts(embedding, 1) AS pos
+      FROM embeddings WHERE {pred}
+    ),
+    mu{sfx} AS (SELECT pos, sum(x) // count(*) AS m FROM un{sfx} GROUP BY 1),
+    cent{sfx} AS (
+      SELECT vec_id, un{sfx}.pos, CAST(x - m AS BIGINT) AS c
+      FROM un{sfx} JOIN mu{sfx} USING (pos)
+    ),
+    v0{sfx} AS (
+      SELECT pos, c AS v FROM cent{sfx}
+      WHERE vec_id = (SELECT min(vec_id) FROM cent{sfx})
+    )"""
+    ]
+    for i in range(1, iters + 1):
+        parts.append(
+            f"""d{i}{sfx} AS (
+      SELECT vec_id, sum(c * v) AS d
+      FROM cent{sfx} JOIN v{i - 1}{sfx} USING (pos) GROUP BY 1
+    ),
+    w{i}{sfx} AS (
+      SELECT pos, sum(c * (d // {_ABTT_SHIFT})) AS w
+      FROM cent{sfx} JOIN d{i}{sfx} USING (vec_id) GROUP BY 1
+    ),
+    v{i}{sfx} AS (
+      SELECT pos,
+             (w * {_ABTT_SCALE}) // (SELECT max(abs(w)) FROM w{i}{sfx}) AS v
+      FROM w{i}{sfx}
+    )"""
+        )
+    return parts
+
+
+def _drift_sql() -> str:
+    vo = f"v{_ABTT_ITERS}_o"
+    vn = f"v{_ABTT_ITERS}_n"
+    return (
+        "WITH "
+        + ",\n    ".join(
+            _abtt_chain("_o", "vec_id % 2 = 0")
+            + _abtt_chain("_n", "vec_id % 2 = 1")
+        )
+        + f""",
+    met AS (
+      SELECT
+        (SELECT count(DISTINCT vec_id) FROM un_o) AS n_old,
+        (SELECT count(DISTINCT vec_id) FROM un_n) AS n_new,
+        (SELECT sum((a.m - b.m) * (a.m - b.m))
+         FROM mu_o a JOIN mu_n b USING (pos)) AS mean_shift2,
+        (SELECT sum(a.v * b.v)
+         FROM {vo} a JOIN {vn} b USING (pos)) AS dd,
+        (SELECT sum(v * v) FROM {vo}) AS no2,
+        (SELECT sum(v * v) FROM {vn}) AS nn2
+    )
+    SELECT CAST(n_old AS BIGINT) AS n_old,
+           CAST(n_new AS BIGINT) AS n_new,
+           CAST(mean_shift2 AS BIGINT) AS mean_shift2,
+           CAST(dd // {_ABTT_SCALE} AS BIGINT) AS comp_dot_q,
+           CAST((CASE WHEN dd < 0 THEN -1 ELSE 1 END)
+                * (((dd // {_ABTT_SCALE}) * (dd // {_ABTT_SCALE}) * 1000000)
+                   // ((no2 // {_ABTT_SCALE}) * (nn2 // {_ABTT_SCALE})))
+                AS BIGINT) AS cos2_ppm_signed
+    FROM met
+    """
+    )
+
+
+@q("embedding_drift", _drift_sql())
+def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding snapshot drift audit: split the corpus into two
+    deterministic snapshots (even/odd ids — the fixture stand-in for
+    old-encoder vs re-encoded, or last-month vs this-month), run the
+    integer power iteration on each, and report the drift a pipeline
+    alarms on before trusting cross-snapshot ANN/dedup: exact integer
+    mean shift ``Σ(µo−µn)²`` and the dominant-direction rotation as a
+    signed squared-cosine in ppm (both components ∞-norm-scaled to
+    2^10, the dot downshifted before squaring to stay in int64 —
+    deterministic, same truncations in both engines). The re-encode /
+    re-index trigger next to corpus_drift_psi's token-space twin.
+
+    Scale shape: both snapshot iterations are pinned-frame scans with
+    dim-row metadata aggregates (the top_component_projection shape);
+    the drift combine is pure driver metadata math over two dim-length
+    vectors — the emitted row is scalars only."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pharmacodi_spark.barrier import stage_barrier
+    from pharmacodi_spark.text.similarity import (
+        _trunc_div,
+        top_component_projection,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: (_rnd(x.cast("double") * _KM_SCALE)).cast("long"),
+        ).alias("qe"),
+    )
+    # r12 (guide §2.6 + §5): ONE pin of the quantized frame — both
+    # snapshot chains and their counts re-read the pin instead of
+    # re-scanning parquet + re-quantizing per job
+    qe = stage_barrier(qe, name="drift_qe")
+    old = qe.where(F.col("vec_id") % 2 == 0)
+    new = qe.where(F.col("vec_id") % 2 == 1)
+
+    # r12 (guide §2.6): the two snapshot power iterations are mutually
+    # independent driver-collect chains — overlap them so the second
+    # chain's jobs back-fill the first's stragglers. Results are
+    # byte-identical: each chain's integer math is untouched, threads
+    # share nothing but the SparkSession (actions are thread-safe).
+    def _chain(snap):
+        _p, v, mu = top_component_projection(snap, iterations=_ABTT_ITERS)
+        return v, mu, snap.count()
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fo = pool.submit(_chain, old)
+        fn_ = pool.submit(_chain, new)
+        vo, muo, n_old = fo.result()
+        vn, mun, n_new = fn_.result()
+    mean_shift2 = sum((a - b) * (a - b) for a, b in zip(muo, mun))
+    dd = sum(a * b for a, b in zip(vo, vn))
+    no2 = sum(x * x for x in vo)
+    nn2 = sum(x * x for x in vn)
+    dq = _trunc_div(dd, _ABTT_SCALE)
+    denom = _trunc_div(no2, _ABTT_SCALE) * _trunc_div(nn2, _ABTT_SCALE)
+    cos2 = (-1 if dd < 0 else 1) * ((dq * dq * 1000000) // denom)
+    return local_df(
+        spark,
+        [(n_old, n_new, mean_shift2, dq, cos2)],
+        ["n_old", "n_new", "mean_shift2", "comp_dot_q", "cos2_ppm_signed"],
+        types=["long"] * 5,
+    )
+
+
+def _cluster_purity_sql() -> str:
+    return (
+        _kmeans_parts()
+        + """,
+    lab AS (
+      SELECT af.cid, e.label, count(*) AS c
+      FROM af JOIN embeddings e USING (vec_id)
+      GROUP BY 1, 2
+    ),
+    tot AS (SELECT cid, sum(c) AS n FROM lab GROUP BY 1),
+    top AS (
+      SELECT cid, label AS top_label, c AS top_c FROM (
+        SELECT cid, label, c,
+               row_number() OVER (PARTITION BY cid
+                                  ORDER BY c DESC, label) AS rn
+        FROM lab)
+      WHERE rn = 1
+    )
+    SELECT CAST(t.cid AS BIGINT) AS cid,
+           CAST(t.n AS BIGINT) AS n_vecs,
+           CAST(top.top_label AS BIGINT) AS top_label,
+           CAST(top.top_c AS BIGINT) AS top_c,
+           CAST((top.top_c * 1000000) // t.n AS BIGINT) AS purity_ppm
+    FROM tot t JOIN top USING (cid)
+    """
+    )
+
+
+@q("cluster_purity", _cluster_purity_sql())
+def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster label-purity report — the eval that closes the topic
+    family the way knn_label_eval closes the embedding family: after the
+    k-means assignment (same seeds/iterations as kmeans_topics), each
+    cluster reports its size, majority label (ties → lower label,
+    deterministic), and purity in ppm. Low purity on a labeled probe set
+    is the signal that the embedding space (or k) doesn't support
+    topic-balanced sampling yet.
+
+    Scale shape: identical to kmeans_topics through the final assignment
+    (pinned quantized frame, metadata centroids); the purity rollup is a
+    (cid,label)-keyed aggregate collapsing map-side to k·|labels| rows,
+    then a k-row window. The label join probes the pinned assignment by
+    id — at corpus scale write the assignment partitioned by cid and
+    this is a metadata-scale report."""
+    from pyspark.sql import Window
+
+    from pharmacodi_spark.barrier import stage_barrier
+    from pharmacodi_spark.text.similarity import kmeans_lloyd_int
+
+    e = _t(spark, sf_dir, "embeddings")
+    qe = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: (_rnd(x.cast("double") * _KM_SCALE)).cast("long"),
+        ).alias("qe"),
+    )
+    qe = stage_barrier(qe, name="purity_qe")
+    assigned, _cents = kmeans_lloyd_int(
+        qe, k=_KM_K, iterations=_KM_ITERS, vec_col="qe", id_col="vec_id"
+    )
+    # the pinned assignment has no stats, so the label attach would fall
+    # to sort-merge — hint it hash (the near_dup_droplist lesson); the
+    # total and the majority pick are two windows over the SAME cid
+    # partitioning, sharing one exchange (no tot⋈top self-join, no
+    # second label scan)
+    lab = (
+        assigned.select("vec_id", "cid")
+        .join(e.select("vec_id", "label").hint("shuffle_hash"), "vec_id")
+        .groupBy("cid", "label")
+        .agg(F.count("*").alias("c"))
+    )
+    w_tot = Window.partitionBy("cid")
+    w_rank = Window.partitionBy("cid").orderBy(F.desc("c"), F.asc("label"))
+    return (
+        lab.withColumn("n", F.sum("c").over(w_tot))
+        .withColumn("rn", F.row_number().over(w_rank))
+        .where(F.col("rn") == 1)
+        .select(
+            F.col("cid").cast("long").alias("cid"),
+            F.col("n").cast("long").alias("n_vecs"),
+            F.col("label").cast("long").alias("top_label"),
+            F.col("c").cast("long").alias("top_c"),
+            F.expr("(c * 1000000) div n").cast("long").alias("purity_ppm"),
+        )
+    )

@@ -1,0 +1,1193 @@
+"""Text-statistics and quality/language gate rows (text/analysis, text/cleaning)."""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from pharmacodi_spark.functions.scalar import local_df
+from pharmacodi_spark.operators.partitioning import fan_out
+from pharmacodi_spark.plans.queries import (
+    q,
+    _t,
+    _rnd,
+    _minhash_sql_select,
+    _il,
+)
+
+
+# ---------------------------------------------------------------------------
+# Text analysis (north star)
+# ---------------------------------------------------------------------------
+
+_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "for", "on", "with"]
+
+
+@q(
+    "text_stats",
+    """
+    SELECT doc_id, lang, n_chars,
+           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+           floor((CAST(n_chars AS DOUBLE) / len(string_split(text, ' '))) * 10000 + 0.5) / 10000
+             AS chars_per_token
+    FROM documents
+    """,
+)
+def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token counting + quality features (length ratios) — whitespace
+    tokenizer, all native expressions inside one codegen stage."""
+    d = _t(spark, sf_dir, "documents")
+    n_tokens = F.size(F.split("text", " ")).cast("long")
+    return d.select(
+        "doc_id",
+        "lang",
+        "n_chars",
+        n_tokens.alias("n_tokens"),
+        _rnd(F.col("n_chars").cast("double") / n_tokens, 4).alias("chars_per_token"),
+    )
+
+
+@q(
+    "lang_stopword_score",
+    f"""
+    SELECT doc_id, lang,
+           CAST(sum(CASE WHEN token IN ({", ".join(repr(s) for s in _STOPWORDS)})
+                         THEN 1 ELSE 0 END) AS BIGINT) AS stop_hits,
+           count(*) AS n_tokens,
+           floor((CAST(sum(CASE WHEN token IN ({", ".join(repr(s) for s in _STOPWORDS)})
+                              THEN 1 ELSE 0 END) AS DOUBLE) / count(*)) * 10000 + 0.5) / 10000
+             AS stop_ratio
+    FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token FROM documents)
+    GROUP BY doc_id, lang
+    """,
+)
+def lang_stopword_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID heuristic: English stopword hit-rate per document (the
+    n-gram/stopword scoring family; ratio ≥ threshold ⇒ classify). Integer
+    hit counts → exact double ratio."""
+    d = _t(spark, sf_dir, "documents")
+    tokens = d.select(
+        "doc_id", "lang", F.explode(F.split("text", " ")).alias("token")
+    )
+    hit = F.col("token").isin(_STOPWORDS).cast("int")
+    return tokens.groupBy("doc_id", "lang").agg(
+        F.sum(hit).cast("long").alias("stop_hits"),
+        F.count("*").alias("n_tokens"),
+        _rnd(F.sum(hit).cast("double") / F.count("*"), 4).alias("stop_ratio"),
+    )
+
+
+@q(
+    "quality_score",
+    """
+    SELECT doc_id,
+           CAST(length(regexp_replace(text, '[^.!?,;]', '', 'g')) AS BIGINT) AS n_punct,
+           CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digit,
+           CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS BIGINT) AS n_upper,
+           floor((CAST(length(regexp_replace(text, '[^.!?,;]', '', 'g')) AS DOUBLE) / n_chars
+                  + 2.0 * CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / n_chars
+                  + 0.5 * CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE) / n_chars)
+                 * 10000 + 0.5) / 10000 AS noise_score
+    FROM documents
+    """,
+)
+def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document quality scoring: punctuation / digit / uppercase densities
+    composed into a noise score (high ⇒ boilerplate/tables/code, the
+    C4/Gopher-rule family). Counts via regexp_replace+length — pure codegen,
+    one pass over the scan, exact integer-ratio doubles."""
+    d = _t(spark, sf_dir, "documents")
+
+    def cnt(pat: str) -> F.Column:
+        return F.length(F.regexp_replace("text", pat, ""))
+
+    n_punct, n_digit, n_upper = cnt(r"[^.!?,;]"), cnt(r"[^0-9]"), cnt(r"[^A-Z]")
+    nc = F.col("n_chars").cast("double")
+    noise = n_punct / nc + 2.0 * n_digit / nc + 0.5 * n_upper / nc
+    return d.select(
+        "doc_id",
+        n_punct.cast("long").alias("n_punct"),
+        n_digit.cast("long").alias("n_digit"),
+        n_upper.cast("long").alias("n_upper"),
+        _rnd(noise, 4).alias("noise_score"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Corpus cleaning (text/cleaning.py): repeated-span stats, PII redaction
+# ---------------------------------------------------------------------------
+
+
+@q(
+    "repeated_spans",
+    """
+    WITH toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
+    idx AS (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 4, 1))) AS i
+            FROM toks),
+    spans AS (SELECT doc_id, array_to_string(t[i:i+4], ' ') AS span FROM idx),
+    dfreq AS (SELECT span, count(DISTINCT doc_id) AS span_df FROM spans GROUP BY span),
+    shared AS (SELECT span FROM dfreq WHERE span_df >= 2)
+    SELECT s.doc_id,
+           count(*) AS n_spans,
+           CAST(sum(CASE WHEN sh.span IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_shared,
+           CAST(sum(CASE WHEN sh.span IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+             / count(*) AS shared_frac
+    FROM spans s LEFT JOIN shared sh ON s.span = sh.span
+    GROUP BY s.doc_id
+    """,
+)
+def repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-document repeated-span stats (text/cleaning.py::
+    repeated_span_stats, span_len=5): the exact-substring duplication signal
+    for contamination checks / boilerplate scoring. Counting runs on md5
+    span hashes (the shuffle never carries span text); the oracle re-derives
+    by span string — identical grouping, value-checked. Integer counts and
+    one exact long/long division."""
+    from pharmacodi_spark.text.cleaning import repeated_span_stats
+
+    d = _t(spark, sf_dir, "documents")
+    return repeated_span_stats(fan_out(d, "doc_id"), span_len=5, min_df=2)
+
+
+@q(
+    "span_scrub",
+    """
+    WITH toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
+    idx AS (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 4, 1))) AS s
+            FROM toks),
+    spans AS (SELECT doc_id, s, array_to_string(t[s:s+4], ' ') AS span FROM idx),
+    shared AS (
+      SELECT span FROM (
+        SELECT span, count(DISTINCT doc_id) AS span_df FROM spans GROUP BY span
+      ) WHERE span_df >= 2
+    ),
+    covered AS (
+      SELECT DISTINCT sp.doc_id, sp.s + u.o AS pos
+      FROM spans sp JOIN shared USING (span),
+           UNNEST(generate_series(0, 4)) AS u(o)
+    ),
+    tok AS (SELECT doc_id, s AS pos, t[s] AS tok
+            FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS s
+                  FROM toks)),
+    kept AS (SELECT doc_id, pos, tok FROM tok ANTI JOIN covered USING (doc_id, pos)),
+    agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS scrubbed,
+                   count(*) AS n_kept
+            FROM kept GROUP BY doc_id),
+    tot AS (SELECT doc_id, count(*) AS n_tokens FROM tok GROUP BY doc_id)
+    SELECT d.doc_id,
+           coalesce(a.scrubbed, '') AS scrubbed,
+           CAST(coalesce(t.n_tokens, 0) AS BIGINT) AS n_tokens,
+           CAST(coalesce(t.n_tokens, 0) - coalesce(a.n_kept, 0) AS BIGINT)
+             AS n_masked
+    FROM (SELECT doc_id FROM documents) d
+    LEFT JOIN agg a USING (doc_id)
+    LEFT JOIN tot t USING (doc_id)
+    """,
+)
+def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-substring scrubbing (text/cleaning.py::scrub_shared_spans,
+    span_len=5, min_df=2): every token covered by a cross-document repeated
+    5-gram is removed, the rest of the document survives in order — the
+    span-mask edit built on the ``repeated_spans`` signal. Spark side masks
+    by md5 span hash (shuffles carry hashes and (id, pos, token) rows, never
+    bodies); the oracle re-derives by span string — identical grouping,
+    value-checked including the reassembled text."""
+    from pharmacodi_spark.text.cleaning import scrub_shared_spans
+
+    d = _t(spark, sf_dir, "documents")
+    return scrub_shared_spans(fan_out(d, "doc_id"), span_len=5, min_df=2)
+
+
+_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
+_PII_PHONE = r"\+?\d{3}[- .]\d{3}[- .]\d{4}"
+_PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
+
+
+@q(
+    "pii_redact",
+    f"""
+    WITH synth AS (
+      SELECT doc_id,
+             'contact doc' || CAST(doc_id AS VARCHAR) || '@example.com or 555-000-'
+               || lpad(CAST(doc_id AS VARCHAR), 4, '0') || ' ip 10.0.0.'
+               || CAST(doc_id % 256 AS VARCHAR) || ' ' || text AS s
+      FROM documents
+    )
+    SELECT doc_id,
+           regexp_replace(
+             regexp_replace(
+               regexp_replace(s, '{_PII_EMAIL}', '[EMAIL]', 'g'),
+               '{_PII_PHONE}', '[PHONE]', 'g'),
+             '{_PII_IP}', '[IP]', 'g') AS text_redacted,
+           CAST(len(regexp_extract_all(s, '{_PII_EMAIL}'))
+                + len(regexp_extract_all(s, '{_PII_PHONE}'))
+                + len(regexp_extract_all(s, '{_PII_IP}')) AS BIGINT)
+             AS n_redactions
+    FROM synth
+    """,
+)
+def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII redaction (text/cleaning.py::redact_pii): deterministic
+    email/phone/IP strings synthesized per doc (the fixture corpus carries
+    none), redacted with the shared Java-regex/RE2-subset patterns; match
+    counts tallied against the original text as the library does. Pure
+    regexp_replace/regexp_count codegen — no UDF."""
+    from pharmacodi_spark.text.cleaning import redact_pii
+
+    d = _t(spark, sf_dir, "documents")
+    synth = d.select(
+        "doc_id",
+        F.concat(
+            F.lit("contact doc"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or 555-000-"),
+            F.lpad(F.col("doc_id").cast("string"), 4, "0"),
+            F.lit(" ip 10.0.0."),
+            (F.col("doc_id") % 256).cast("string"),
+            F.lit(" "),
+            F.col("text"),
+        ).alias("text"),
+    )
+    out = redact_pii(synth)
+    return out.select(
+        "doc_id",
+        F.col("text_redacted"),
+        F.col("n_redactions"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Round-5 LLM-pipeline additions: repetition quality gates (library
+# twins in text/analysis.py)
+# ---------------------------------------------------------------------------
+
+
+@q(
+    "gopher_repetition",
+    """
+    WITH t AS (
+      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    g2 AS (
+      SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
+                                           i -> toks[i] || ' ' || toks[i+1])) AS gram
+      FROM t WHERE len(toks) >= 2
+    ),
+    g3 AS (
+      SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
+               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
+      FROM t WHERE len(toks) >= 3
+    ),
+    c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY 1, 2),
+    c3 AS (SELECT doc_id, gram, count(*) AS c FROM g3 GROUP BY 1, 2),
+    top AS (SELECT doc_id, max(c) AS top_cnt FROM c2 GROUP BY 1),
+    dup AS (SELECT doc_id, sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_occ,
+                   sum(c) AS n_grams
+            FROM c3 GROUP BY 1),
+    n AS (SELECT doc_id, len(toks) AS n_tokens FROM t)
+    SELECT n.doc_id,
+           CAST(n_tokens AS BIGINT) AS n_tokens,
+           CAST(coalesce(top_cnt, 0) AS BIGINT) AS top_cnt,
+           CAST(coalesce(dup_occ, 0) AS BIGINT) AS dup_occ,
+           CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
+           CASE WHEN n_tokens > 0
+                THEN CAST(2 * coalesce(top_cnt, 0) AS DOUBLE) / n_tokens
+                ELSE 0.0 END AS top_frac,
+           CASE WHEN coalesce(n_grams, 0) > 0
+                THEN CAST(coalesce(dup_occ, 0) AS DOUBLE) / n_grams
+                ELSE 0.0 END AS dup_frac,
+           (200 * coalesce(top_cnt, 0) <= 20 * n_tokens
+            AND 100 * coalesce(dup_occ, 0) <= 30 * coalesce(n_grams, 0)) AS keep
+    FROM n LEFT JOIN top USING (doc_id) LEFT JOIN dup USING (doc_id)
+    """,
+)
+def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher/RefinedWeb repetition gates (text/analysis.py::
+    repetition_metrics): most-frequent-2-gram fraction + duplicated-3-gram
+    occurrence fraction per doc, keep-flag via integer cross-multiplication
+    (exact in every engine). Two (id, gram) count pipelines — shuffle keys
+    never exceed (id, gram); no corpus-global state."""
+    from pharmacodi_spark.text.analysis import repetition_metrics
+
+    d = _t(spark, sf_dir, "documents")
+    return repetition_metrics(d)
+
+
+@q(
+    "source_quality_rollup",
+    """
+    WITH t AS (
+      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    g2 AS (
+      SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
+                                           i -> toks[i] || ' ' || toks[i+1])) AS gram
+      FROM t WHERE len(toks) >= 2
+    ),
+    g3 AS (
+      SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
+               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
+      FROM t WHERE len(toks) >= 3
+    ),
+    c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY 1, 2),
+    c3 AS (SELECT doc_id, gram, count(*) AS c FROM g3 GROUP BY 1, 2),
+    topg AS (SELECT doc_id, max(c) AS top_cnt FROM c2 GROUP BY 1),
+    dupg AS (SELECT doc_id, sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_occ,
+                    sum(c) AS n_grams FROM c3 GROUP BY 1),
+    k AS (
+      SELECT t.doc_id, len(toks) AS n_tokens,
+             (200 * coalesce(top_cnt, 0) <= 20 * len(toks)
+              AND 100 * coalesce(dup_occ, 0) <= 30 * coalesce(n_grams, 0))
+               AS keep
+      FROM t LEFT JOIN topg USING (doc_id) LEFT JOIN dupg USING (doc_id)
+    )
+    SELECT d.source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+           CAST((sum(CASE WHEN keep THEN 1 ELSE 0 END) * 1000000)
+                // count(*) AS BIGINT) AS keep_ppm,
+           sum(CASE WHEN keep THEN 1 ELSE 0 END) * 1000000
+             >= 500000 * count(*) AS source_ok
+    FROM documents d JOIN k USING (doc_id)
+    GROUP BY 1
+    """,
+)
+def source_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Domain-level quality rollup (text/analysis.py::
+    source_quality_rollup): the per-doc Gopher repetition gate aggregated
+    to each document's SOURCE with an integer keep-ppm and an ok flag —
+    the RefinedWeb/C4 origin-level filter. One aggregate keyed by source
+    after the per-doc gates; the source table is domain-cardinality, and
+    source_level_filter applies it as a broadcast semi-join (corpus never
+    shuffles)."""
+    from pharmacodi_spark.text.analysis import source_quality_rollup
+
+    d = _t(spark, sf_dir, "documents")
+    return source_quality_rollup(d)
+
+
+@q(
+    "quality_classifier_score",
+    """
+    WITH t AS (
+      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    tok AS (SELECT doc_id, unnest(toks) AS token FROM t),
+    w AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5('w' ||
+               CAST(CAST(('0x' || substr(md5('q' || token), 1, 15)) AS BIGINT)
+                    % 4096 AS VARCHAR)), 1, 15)) AS BIGINT) % 2001 - 1000
+               AS wt
+      FROM tok
+    ),
+    s AS (SELECT doc_id, CAST(sum(wt) AS BIGINT) AS score FROM w GROUP BY 1)
+    SELECT t.doc_id,
+           CAST(len(t.toks) AS BIGINT) AS n_tokens,
+           coalesce(s.score, 0) AS score_centi,
+           CASE WHEN len(t.toks) > 0
+                THEN 100 * coalesce(s.score, 0) >= 0 * len(t.toks)
+                ELSE FALSE END AS keep
+    FROM t LEFT JOIN s USING (doc_id)
+    """,
+)
+def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Model-based quality filter (text/analysis.py::hashed_linear_score):
+    a linear classifier over hashing-trick bag-of-words features — the
+    fasttext/DCLM quality-classifier shape — run as a native per-document
+    fold (no explode, no join, no shuffle to score; the corpus never
+    leaves its scan partitions). The derived-weight mode keeps the whole
+    path oracle-expressible; production swaps in exported fasttext or
+    logistic-regression weights via the ``weights`` array (one broadcast
+    literal, element_at per token)."""
+    from pharmacodi_spark.text.analysis import hashed_linear_score
+
+    d = _t(spark, sf_dir, "documents")
+    return hashed_linear_score(d, weights=None, dim=4096, salt="q")
+
+
+# ---------------------------------------------------------------------------
+# Language confusion audit (text/analysis.py::lang_confusion)
+# ---------------------------------------------------------------------------
+
+_LC_SW = {
+    "en": ["the", "a", "of", "and", "to", "in", "is", "for", "on", "with"],
+    "es": ["el", "la", "de", "y", "en", "que", "los", "un", "por", "con"],
+    "de": ["der", "die", "das", "und", "in", "den", "von", "zu", "mit", "ist"],
+    "fr": ["le", "la", "de", "et", "les", "des", "en", "un", "du", "une"],
+}
+_LC_HITS = ",\n             ".join(
+    f"sum(CASE WHEN token IN ({', '.join(repr(s) for s in sws)}) "
+    f"THEN 1 ELSE 0 END) AS h_{lang}"
+    for lang, sws in _LC_SW.items()
+)
+
+
+@q(
+    "lang_confusion",
+    f"""
+    WITH tok AS (
+      SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS token
+      FROM documents
+    ),
+    h AS (
+      SELECT doc_id, lang,
+             {_LC_HITS}
+      FROM tok GROUP BY doc_id, lang
+    ),
+    p AS (
+      SELECT lang,
+             CASE WHEN greatest(h_en, h_es, h_de, h_fr) = 0 THEN 'unknown'
+                  WHEN h_en >= h_es AND h_en >= h_de AND h_en >= h_fr
+                    THEN 'en'
+                  WHEN h_es >= h_de AND h_es >= h_fr THEN 'es'
+                  WHEN h_de >= h_fr THEN 'de'
+                  ELSE 'fr' END AS pred_lang
+      FROM h
+    ),
+    r AS (
+      SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
+      FROM p GROUP BY 1, 2
+    )
+    SELECT lang, pred_lang, n_docs,
+           CAST((n_docs * 1000000) //
+                sum(n_docs) OVER (PARTITION BY lang) AS BIGINT) AS share_ppm
+    FROM r
+    """,
+)
+def lang_confusion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Claimed-vs-detected language confusion (text/analysis.py::
+    lang_confusion): the stopword detector's argmax (dict-order
+    tie-break, zero hits → 'unknown') rolled into per-claimed-label ppm
+    shares — mislabeled-crawl audit. Detector is explode-free; the
+    rollup and share window run on label-cardinality² rows. The fixture's
+    'zh' rows (no detector coverage) surface as an 'unknown' block, not
+    silent pollution."""
+    from pharmacodi_spark.text.analysis import lang_confusion
+
+    d = _t(spark, sf_dir, "documents")
+    return lang_confusion(d)
+
+
+# ---------------------------------------------------------------------------
+# Source boilerplate stripping (text/cleaning.py::strip_source_boilerplate)
+# ---------------------------------------------------------------------------
+
+
+@q(
+    "source_boilerplate_strip",
+    """
+    WITH t AS (
+      SELECT doc_id, source, text,
+             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    b AS (
+      SELECT doc_id, source, text, toks,
+             array_to_string(toks[1:1], ' ') AS pfx
+      FROM t
+    ),
+    c AS (SELECT source, pfx, CAST(count(*) AS BIGINT) AS c
+          FROM b GROUP BY 1, 2),
+    top AS (
+      SELECT source, pfx AS bp FROM (
+        SELECT source, pfx, c,
+               row_number() OVER (PARTITION BY source
+                                  ORDER BY c DESC, pfx) AS rn,
+               sum(c) OVER (PARTITION BY source) AS n
+        FROM c
+      ) WHERE rn = 1 AND c * 1000000 >= 100000 * n
+    )
+    SELECT b.doc_id, b.source,
+           CASE WHEN top.bp IS NOT NULL AND b.pfx = top.bp
+                THEN array_to_string(toks[2:len(toks)], ' ')
+                ELSE b.text END AS stripped_text,
+           (top.bp IS NOT NULL AND b.pfx = top.bp) AS boilerplate_stripped
+    FROM b LEFT JOIN top USING (source)
+    """,
+)
+def source_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source boilerplate prefix removal (text/cleaning.py::
+    strip_source_boilerplate, prefix=1 token, share ≥ 10%): the dominant
+    opening prefix of an origin is its site template — strip it from the
+    matching documents. Prefixes are scan-projection slices (no explode);
+    one (source, prefix) count collapses map-side; the winning-prefix
+    table is domain-cardinality and broadcasts back. On the fixture,
+    sources split both ways across the 10% gate (8–16% dominance)."""
+    from pharmacodi_spark.text.cleaning import strip_source_boilerplate
+
+    d = _t(spark, sf_dir, "documents")
+    return strip_source_boilerplate(
+        d, prefix_tokens=1, min_share_ppm=100_000
+    ).select("doc_id", "source", "stripped_text", "boilerplate_stripped")
+
+
+# ---------------------------------------------------------------------------
+# Per-doc token entropy gate (text/analysis.py::token_entropy)
+# ---------------------------------------------------------------------------
+
+_ENT_MIN = 2 << 10  # gate: per-token entropy >= 2.0 bits
+
+
+@q(
+    "token_entropy_gate",
+    f"""
+    WITH tok AS (
+      SELECT doc_id,
+             unnest(list_filter(string_split(text, ' '), x -> x <> ''))
+               AS token
+      FROM documents
+    ),
+    c AS (SELECT doc_id, token, count(*) AS c FROM tok GROUP BY 1, 2),
+    d AS (
+      SELECT doc_id, sum(c) AS n_tokens, count(*) AS n_distinct,
+             sum(c * {_il("c")}) AS s
+      FROM c GROUP BY 1
+    ),
+    e AS (
+      SELECT doc_id, n_tokens, n_distinct,
+             (n_tokens * {_il("n_tokens")} - s) AS entropy_fp
+      FROM d
+    )
+    SELECT doc.doc_id,
+           CAST(coalesce(e.n_tokens, 0) AS BIGINT) AS n_tokens,
+           CAST(coalesce(e.n_distinct, 0) AS BIGINT) AS n_distinct,
+           CAST(coalesce(e.entropy_fp, 0) AS BIGINT) AS entropy_fp,
+           (coalesce(e.n_tokens, 0) > 0 AND
+            coalesce(e.entropy_fp, 0) >= {_ENT_MIN} * coalesce(e.n_tokens, 0))
+             AS keep
+    FROM documents doc LEFT JOIN e ON doc.doc_id = e.doc_id
+    """,
+)
+def token_entropy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document unigram Shannon entropy gate
+    (text/analysis.py::token_entropy): ``entropy_fp = N·il(N) − Σ c·il(c)``
+    in 10-frac-bit fixed point, gate = integer cross-multiplication
+    ``entropy_fp ≥ 2.0·2^10·N`` (per-token entropy ≥ 2 bits — flags
+    keyboard-mash/template-loop docs the n-gram repetition gates miss).
+    Scale shape: (id, token) count with map-side partials → per-doc
+    aggregate; `il` applied post-agg; no corpus-global state."""
+    from pharmacodi_spark.text.analysis import token_entropy
+
+    d = _t(spark, sf_dir, "documents")
+    return token_entropy(d, min_bits_fp=_ENT_MIN)
+
+
+# ---------------------------------------------------------------------------
+# Phrase blocklist gate (text/cleaning.py::phrase_blocklist_hits)
+# ---------------------------------------------------------------------------
+
+_BLOCK_PHRASES = ["table part", "fast merge", "lorem ipsum dolor"]
+
+
+@q(
+    "phrase_blocklist_gate",
+    "\n    SELECT doc_id,\n"
+    + "           CAST("
+    + " + ".join(
+        f"(length(text) - length(replace(text, '{p}', ''))) // {len(p)}"
+        for p in _BLOCK_PHRASES
+    )
+    + " AS BIGINT) AS n_hits,\n"
+    + "           CAST("
+    + " + ".join(
+        f"(CASE WHEN length(text) <> length(replace(text, '{p}', '')) "
+        "THEN 1 ELSE 0 END)"
+        for p in _BLOCK_PHRASES
+    )
+    + " AS BIGINT) AS n_phrases_hit,\n"
+    + "           ("
+    + " + ".join(
+        f"(length(text) - length(replace(text, '{p}', ''))) // {len(p)}"
+        for p in _BLOCK_PHRASES
+    )
+    + ") = 0 AS keep\n"
+    + "    FROM documents\n",
+)
+def phrase_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Literal-phrase blocklist gate
+    (text/cleaning.py::phrase_blocklist_hits): non-overlapping occurrence
+    counts via the replace-diff identity — no regex dialect surface, one
+    zero-shuffle projection over the scan, fully codegen'd. The
+    synthetic-contamination filter ("as an AI language model",
+    cookie-banner templates) of a curation cascade."""
+    from pharmacodi_spark.text.cleaning import phrase_blocklist_hits
+
+    d = _t(spark, sf_dir, "documents")
+    return phrase_blocklist_hits(d, _BLOCK_PHRASES)
+
+
+@q(
+    "phrase_blocklist_ac",
+    # the ORACLE is the replace-diff form: proving the automaton against it
+    # on the shared phrase list is the parity contract (VERDICT r6 item 3)
+    "\n    SELECT doc_id,\n"
+    + "           CAST("
+    + " + ".join(
+        f"(length(text) - length(replace(text, '{p}', ''))) // {len(p)}"
+        for p in _BLOCK_PHRASES
+    )
+    + " AS BIGINT) AS n_hits,\n"
+    + "           CAST("
+    + " + ".join(
+        f"(CASE WHEN length(text) <> length(replace(text, '{p}', '')) "
+        "THEN 1 ELSE 0 END)"
+        for p in _BLOCK_PHRASES
+    )
+    + " AS BIGINT) AS n_phrases_hit,\n"
+    + "           ("
+    + " + ".join(
+        f"(length(text) - length(replace(text, '{p}', ''))) // {len(p)}"
+        for p in _BLOCK_PHRASES
+    )
+    + ") = 0 AS keep\n"
+    + "    FROM documents\n",
+)
+def phrase_blocklist_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Aho–Corasick blocklist gate
+    (text/cleaning.py::phrase_blocklist_hits_ac): the 10^3–10^5-phrase
+    scale path — ONE broadcast automaton pass per document inside a
+    zero-shuffle ``mapInPandas``, per-doc cost O(len + matches) regardless
+    of list size. Count semantics are exactly the replace-diff form's
+    (per-phrase non-overlapping, leftmost-greedy), so this row's oracle IS
+    the replace-diff SQL on the shared small list; the 10k-phrase case is
+    pytest-pinned against str.count (tests/test_phrase_blocklist.py)."""
+    from pharmacodi_spark.text.cleaning import phrase_blocklist_hits_ac
+
+    d = _t(spark, sf_dir, "documents")
+    return phrase_blocklist_hits_ac(d, _BLOCK_PHRASES)
+
+
+# ---------------------------------------------------------------------------
+# Fasttext-shaped hashed lang-ID head -> confusion rollup
+# (text/analysis.py::hashed_lang_id + lang_confusion(scored=...))
+# ---------------------------------------------------------------------------
+
+_LID_LANGS = ["de", "en", "es", "fr", "zh"]
+
+
+@q(
+    "hashed_lang_confusion",
+    f"""
+    WITH tokidx AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5('lid' || token), 1, 15)) AS BIGINT)
+               % 4096 AS idx
+      FROM (SELECT doc_id, unnest(list_filter(string_split(text, ' '),
+                                              x -> x <> '')) AS token
+            FROM documents)
+    ),
+    cand AS (SELECT unnest({_LID_LANGS!r}) AS cand),
+    scores AS (
+      SELECT doc_id, cand, sum(w) AS score
+      FROM (
+        SELECT doc_id, cand,
+               CAST(('0x' || substr(md5('w' || cand || ':'
+                                        || CAST(idx AS VARCHAR)), 1, 15))
+                    AS BIGINT) % 2001 - 1000 AS w
+        FROM tokidx CROSS JOIN cand
+      ) GROUP BY 1, 2
+    ),
+    pred AS (
+      SELECT doc_id, cand AS pred_lang
+      FROM (
+        SELECT doc_id, cand,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY score DESC, cand) AS rn
+        FROM scores
+      ) WHERE rn = 1
+    ),
+    scored AS (
+      SELECT d.lang, coalesce(p.pred_lang, 'und') AS pred_lang
+      FROM documents d LEFT JOIN pred p ON p.doc_id = d.doc_id
+    ),
+    roll AS (
+      SELECT lang, pred_lang, count(*) AS n_docs
+      FROM scored GROUP BY 1, 2
+    )
+    SELECT lang, pred_lang,
+           CAST(n_docs AS BIGINT) AS n_docs,
+           CAST((n_docs * 1000000)
+                // sum(n_docs) OVER (PARTITION BY lang) AS BIGINT)
+             AS share_ppm
+    FROM roll
+    """,
+)
+def hashed_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Claimed-vs-detected confusion under the fasttext-shaped lang head
+    (text/analysis.py::hashed_lang_id feeding lang_confusion's scored
+    seam, VERDICT r7 item 6): a multi-class LINEAR classifier over
+    hashing-trick features — one weight vector per language, argmax with
+    deterministic ties — replacing the fixed-stopword heuristic. Here the
+    weights are the deterministic index-hash stand-ins so the whole path
+    (token → feature idx → per-lang fold → argmax → rollup) is
+    oracle-checked end to end; production injects exported model weights
+    through the same seam. Explode-free scoring (one md5 per token into a
+    materialized index array, |langs| native folds per row, zero
+    shuffles), then one metadata-scale (claimed, predicted) aggregate."""
+    from pharmacodi_spark.text.analysis import hashed_lang_id, lang_confusion
+
+    d = _t(spark, sf_dir, "documents")
+    scored = hashed_lang_id(d, langs=_LID_LANGS)
+    return lang_confusion(d, claimed_col="lang", scored=scored)
+
+
+# ---------------------------------------------------------------------------
+# Unicode tokenization (text/analysis.py::unicode_tokens) — VERDICT r8 item 3
+# ---------------------------------------------------------------------------
+
+#: mixed-script fixture sentences (index = doc_id % 4): Han, Thai+Latin,
+#: Japanese (Hiragana/Katakana/Han), pure-Latin control. Shared verbatim by
+#: the Spark literal array and the DuckDB CASE so the fixture can't diverge.
+_MIXED_SENTENCES = [
+    "深度学习模型的训练数据质量很重要",
+    "ทดสอบการตัดคำภาษาไทย with a latin tail",
+    "日本語のテキスト処理パイプライン test",
+    "plain ascii words only here",
+]
+
+#: RE2 (DuckDB) twins of analysis._SPACEFREE_JAVA / the \p{L}\p{M}\p{N}
+#: extraction class — same Unicode semantics, different property syntax
+_SPACEFREE_RE2_CLS = r"([\p{Han}\p{Hiragana}\p{Katakana}\p{Thai}])"
+_UNI_TOKEN_RE2 = r"[\p{L}\p{M}\p{N}]+"
+
+_UNI_CASE = (
+    "CASE CAST(doc_id % 4 AS INT) "
+    + " ".join(
+        f"WHEN {i} THEN '{s}'" for i, s in enumerate(_MIXED_SENTENCES)
+    )
+    + " END"
+)
+
+
+@q(
+    "unicode_token_stats",
+    f"""
+    WITH fixture AS (
+      SELECT doc_id,
+             CAST(doc_id % 4 AS BIGINT) AS bucket,
+             'doc ' || CAST(doc_id AS VARCHAR) || ' ' || {_UNI_CASE} AS text
+      FROM documents
+    ),
+    tok AS (
+      SELECT bucket,
+             len(list_filter(str_split(text, ' '), x -> x <> ''))
+               AS n_ws,
+             len(regexp_extract_all(
+               regexp_replace(text, '{_SPACEFREE_RE2_CLS}', ' \\1 ', 'g'),
+               '{_UNI_TOKEN_RE2}')) AS n_uni
+      FROM fixture
+    )
+    SELECT bucket,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_ws) AS BIGINT) AS sum_ws_tokens,
+           CAST(sum(n_uni) AS BIGINT) AS sum_uni_tokens,
+           CAST(min(n_uni) AS BIGINT) AS min_uni_tokens,
+           CAST(max(n_uni) AS BIGINT) AS max_uni_tokens
+    FROM tok
+    GROUP BY bucket
+    """,
+)
+def unicode_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unicode/multilingual tokenization audit (text/analysis.py::
+    unicode_tokens, VERDICT r8 item 3): a mixed-script fixture (Han,
+    Thai, Japanese, Latin-control sentences keyed by doc_id % 4)
+    tokenized two ways — the historical split-on-space convention vs the
+    script-aware tokenizer (space-free-script chars padded into
+    char-level tokens, then \\p{{L}}\\p{{M}}\\p{{N}} runs extracted).
+    The per-bucket rollup makes the failure mode measurable: CJK/Thai
+    buckets report ~3-5 whitespace "words" per doc (the whole sentence
+    collapses to one token) but 15-25 unicode tokens, while the Latin
+    control bucket agrees under both tokenizers. Two native regex
+    projections + one map-side-combining aggregate — zero joins, zero
+    UDFs; the DuckDB twin runs the same two regexes in RE2 syntax."""
+    from pharmacodi_spark.text.analysis import unicode_tokens
+
+    d = _t(spark, sf_dir, "documents")
+    sent = F.element_at(
+        F.lit(_MIXED_SENTENCES), (F.col("doc_id") % 4).cast("int") + 1
+    )
+    fixture = d.select(
+        (F.col("doc_id") % 4).cast("long").alias("bucket"),
+        F.concat(
+            F.lit("doc "), F.col("doc_id").cast("string"), F.lit(" "), sent
+        ).alias("text"),
+    )
+    tok = fixture.select(
+        "bucket",
+        F.size(
+            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        ).alias("n_ws"),
+        F.size(unicode_tokens("text")).alias("n_uni"),
+    )
+    return tok.groupBy("bucket").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_ws").cast("long").alias("sum_ws_tokens"),
+        F.sum("n_uni").cast("long").alias("sum_uni_tokens"),
+        F.min("n_uni").cast("long").alias("min_uni_tokens"),
+        F.max("n_uni").cast("long").alias("max_uni_tokens"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# CJK near-dup through the unchanged MinHash family
+# (text/analysis.py::normalize_spacefree as the stage-0 projection)
+# ---------------------------------------------------------------------------
+
+#: raw UNSPACED Han documents in SIZE-BOUNDED near-dup classes: docs 2k and
+#: 2k+1 share a class whose body is the class id's md5 rendered in Han
+#: chars (translate hex → 16 Han numerals — unique per class, so classes
+#: never share shingles and the planted pair count grows LINEARLY with the
+#: corpus; the first fixture keyed classes on doc_id mods, whose sizes grew
+#: with sf and made the sf1 pair list quadratic — 104x wall at 10x data).
+#: The odd member appends one extra char, so the pair is a NEAR-dup, not an
+#: exact one. split-on-space still sees ~2 tokens per document until
+#: normalize_spacefree pads the chars apart.
+_CJK_HEX_HAN = "零一二三四五六七八九甲乙丙丁戊己"
+
+
+def _unicode_minhash_sql() -> str:
+    raw = (
+        "'语料' || translate(md5(CAST(doc_id // 2 AS VARCHAR)), "
+        f"'0123456789abcdef', '{_CJK_HEX_HAN}') || "
+        "CASE WHEN doc_id % 2 = 1 THEN '变' ELSE '' END"
+    )
+    norm = (
+        "trim(regexp_replace(regexp_replace(" + raw + ", "
+        r"'([\p{Han}\p{Hiragana}\p{Katakana}\p{Thai}])', ' \1 ', 'g'), "
+        r"'\s+', ' ', 'g'))"
+    )
+    return f"""
+    WITH fixture AS (
+      SELECT doc_id, {norm} AS text FROM documents
+    ),
+    sh AS (
+      SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS shingle
+      FROM (SELECT doc_id, toks,
+                   unnest(generate_series(1, greatest(len(toks)-4, 1))) AS i
+            FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                  FROM fixture))
+    ),
+    sig AS (
+      SELECT doc_id, {_minhash_sql_select(4)} FROM sh GROUP BY doc_id
+    ),
+    bands AS (
+      SELECT doc_id, 0 AS band, h0 AS v1, h1 AS v2 FROM sig
+      UNION ALL
+      SELECT doc_id, 1 AS band, h2 AS v1, h3 AS v2 FROM sig
+    )
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.v1 = b.v1 AND a.v2 = b.v2
+    WHERE a.doc_id < b.doc_id
+    """
+
+
+@q("unicode_minhash_pairs", _unicode_minhash_sql())
+def unicode_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CJK near-dup candidate pairs through the UNCHANGED MinHash-LSH
+    family (r9): the fixture documents are raw unspaced Han text —
+    size-bounded planted near-dup classes (docs 2k/2k+1 share a
+    class-unique md5-derived Han body; the odd member differs by one
+    char), on which split-on-space sees ~2 tokens per document and every
+    shingle detector silently degenerates (the VERDICT r8 multilingual
+    gap). text/analysis.py::normalize_spacefree runs as a stage-0
+    projection (each space-free-script char padded into its own token,
+    whitespace collapsed), after which the existing
+    shingle→md5→minhash→band→bucket pipeline works verbatim — proving
+    the dedup family is multilingual via ONE zero-shuffle pre-stage, not
+    a parallel CJK implementation. Same scale shape as
+    minhash_band_pairs: one explode + one signature groupBy, bucket-local
+    pair expansion under the triangle hot-cell guard, no self-join; the
+    planted pair count grows LINEARLY with the corpus (classes never
+    share shingles), so the sf1 wall tracks data, not pairs². The oracle
+    runs the identical normalization + pipeline in RE2/DuckDB syntax."""
+    from pharmacodi_spark.text.analysis import normalize_spacefree
+    from pharmacodi_spark.text.dedup import md5_band_pairs, md5_signature
+
+    d = _t(spark, sf_dir, "documents")
+    body = F.concat(
+        F.lit("语料"),
+        F.translate(
+            F.md5(F.expr("cast(doc_id div 2 as string)")),
+            "0123456789abcdef",
+            _CJK_HEX_HAN,
+        ),
+        F.when(F.col("doc_id") % 2 == 1, F.lit("变")).otherwise(F.lit("")),
+    )
+    fixture = d.select(
+        "doc_id", normalize_spacefree(body).alias("text")
+    )
+    return md5_band_pairs(md5_signature(fixture))
+
+
+# ---------------------------------------------------------------------------
+# Classifier calibration / agreement table (hashed linear scorer)
+# ---------------------------------------------------------------------------
+
+
+@q(
+    "classifier_calibration",
+    """
+    WITH t AS (
+      SELECT doc_id,
+             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ),
+    tok AS (SELECT doc_id, unnest(toks) AS token FROM t),
+    w AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5('w' ||
+               CAST(CAST(('0x' || substr(md5('q' || token), 1, 15)) AS BIGINT)
+                    % 4096 AS VARCHAR)), 1, 15)) AS BIGINT) % 2001 - 1000
+               AS wt
+      FROM tok
+    ),
+    s AS (SELECT doc_id, CAST(sum(wt) AS BIGINT) AS score FROM w GROUP BY 1),
+    per AS (
+      SELECT t.doc_id,
+             CAST(len(t.toks) AS BIGINT) AS n_tokens,
+             coalesce(s.score, 0) AS score
+      FROM t LEFT JOIN s USING (doc_id)
+    ),
+    b AS (
+      SELECT score // 5000 AS bucket,
+             CASE WHEN score >= 0 THEN 1 ELSE 0 END AS keep,
+             CASE WHEN n_tokens >= 30 THEN 1 ELSE 0 END AS ref
+      FROM per
+    )
+    SELECT CAST(bucket AS BIGINT) AS bucket,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(keep) AS BIGINT) AS n_keep,
+           CAST(sum(ref) AS BIGINT) AS n_ref_keep,
+           CAST(sum(CASE WHEN keep = ref THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_agree,
+           CAST((sum(CASE WHEN keep = ref THEN 1 ELSE 0 END) * 1000000)
+                // count(*) AS BIGINT) AS agree_ppm
+    FROM b GROUP BY bucket
+    """,
+)
+def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Score-bucket calibration/agreement table for the model-based
+    quality filter (r9): documents bin by hashed-linear score (the
+    quality_classifier_score scorer, 5000-centi-point buckets via
+    truncating integer division — Spark ``div`` and DuckDB integer ``//``
+    both truncate toward zero, so the binning is exact for every int64
+    score with no shift bound to outgrow), and each bucket reports how
+    the classifier verdict
+    agrees with an independent reference gate (the ≥30-token length
+    prior) — the standard reliability table a pipeline inspects before
+    trusting a filter at a new threshold (monotone agreement by bucket ⇒
+    the score is calibrated against the prior; a flat band locates
+    scores the filter should abstain on).
+
+    Scale shape: scoring is the same zero-join per-document fold as
+    quality_classifier_score (the corpus never leaves its scan
+    partitions); the calibration rollup is ONE map-side-collapsing
+    aggregate to bucket cardinality. The oracle restates the scorer and
+    the binning in closed form."""
+    from pharmacodi_spark.text.analysis import hashed_linear_score
+
+    d = _t(spark, sf_dir, "documents")
+    scored = hashed_linear_score(d, weights=None, dim=4096, salt="q")
+    b = scored.select(
+        # Spark `div` and DuckDB integer `//` BOTH truncate toward zero
+        # (verified: duckdb -7 // 2 = -3, not -4 — `//` floors only the
+        # r9 code's assumed way for nothing; floats aren't even integer-
+        # divided). So plain truncating division agrees between the
+        # engines for every int64 score — the r9 "+10M shift" (which
+        # silently broke past 10k-token documents, ADVICE r9) is dropped
+        # rather than re-bounded.
+        F.expr("score_centi div 5000").alias("bucket"),
+        F.when(F.col("score_centi") >= 0, 1).otherwise(0).alias("keep"),
+        F.when(F.col("n_tokens") >= 30, 1).otherwise(0).alias("ref"),
+    )
+    agg = b.groupBy("bucket").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("keep").cast("long").alias("n_keep"),
+        F.sum("ref").cast("long").alias("n_ref_keep"),
+        F.sum(F.when(F.col("keep") == F.col("ref"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_agree"),
+    )
+    return agg.select(
+        F.col("bucket").cast("long").alias("bucket"),
+        "n_docs",
+        "n_keep",
+        "n_ref_keep",
+        "n_agree",
+        F.expr("(n_agree * 1000000) div n_docs")
+        .cast("long")
+        .alias("agree_ppm"),
+    )
+
+
+@q(
+    "unicode_bigram_surprisal",
+    f"""
+    WITH fixture AS (
+      SELECT doc_id,
+             'doc ' || CAST(doc_id AS VARCHAR) || ' ' || {_UNI_CASE} AS text
+      FROM documents
+    ),
+    t AS (
+      SELECT doc_id,
+             regexp_extract_all(
+               regexp_replace(text, '{_SPACEFREE_RE2_CLS}', ' \\1 ', 'g'),
+               '{_UNI_TOKEN_RE2}') AS toks
+      FROM fixture
+    ),
+    tr AS (
+      SELECT doc_id,
+             unnest(list_transform(generate_series(1, len(toks) - 1),
+               i -> {{'x': toks[i], 'y': toks[i+1]}})) AS g
+      FROM t WHERE len(toks) >= 2
+    ),
+    tt AS (SELECT doc_id, g.x AS x, g.y AS y FROM tr),
+    c2 AS (SELECT x, y, count(*) AS c2 FROM tt GROUP BY 1, 2),
+    c1 AS (SELECT x, sum(c2) AS c1 FROM c2 GROUP BY 1),
+    b AS (
+      SELECT tt.doc_id,
+             length(bin(c1 // c2)) - 1 + 20 AS bits
+      FROM tt JOIN c2 USING (x, y) JOIN c1 USING (x)
+    )
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_transitions,
+           CAST(sum(bits) AS BIGINT) AS sum_bits,
+           CAST(sum(bits) AS DOUBLE) / count(*) AS mean_bits
+    FROM b GROUP BY doc_id
+    """,
+)
+def unicode_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The r10 ``tokens_col=`` seam sweep, driver-verified E2E (VERDICT r9
+    item 4): the mixed-script fixture (Han / Thai / Japanese / Latin
+    sentences keyed by doc_id % 4) runs through the UNCHANGED
+    text/corpus.py::bigram_surprisal with ``tokens_col=unicode_tokens`` —
+    under the old split-on-space contract every CJK document is ONE token
+    and the transition LM emits no row for 3 of the 4 buckets; through
+    the seam each document contributes a real per-char transition stream
+    and the integer-log2 surprisal is bit-exact against the oracle's RE2
+    restatement of the tokenizer plus the same closed-form bigram LM.
+
+    Scale shape: identical to bigram_surprisal (the seam swaps ONE
+    projection): one tokenize+explode collapsed to pinned per-doc
+    occurrence counts, vocabulary-scale count tables, scoring joins
+    against pins only."""
+    from pharmacodi_spark.text.analysis import unicode_tokens
+    from pharmacodi_spark.text.corpus import bigram_surprisal
+
+    d = _t(spark, sf_dir, "documents")
+    sent = F.element_at(
+        F.lit(_MIXED_SENTENCES), (F.col("doc_id") % 4).cast("int") + 1
+    )
+    fixture = d.select(
+        "doc_id",
+        F.concat(
+            F.lit("doc "), F.col("doc_id").cast("string"), F.lit(" "), sent
+        ).alias("text"),
+    ).withColumn("toks", unicode_tokens("text"))
+    return bigram_surprisal(fixture, tokens_col="toks")
+
+
+# ---------------------------------------------------------------------------
+# Unicode decontamination E2E (round 11: the tokens_col seam on the
+# HIGHEST-stakes space-split op — VERDICT r10 item 4's lead case)
+# ---------------------------------------------------------------------------
+
+
+def _unicode_decontam_sql() -> str:
+    def tokify(src: str) -> str:
+        return (
+            f"regexp_extract_all(regexp_replace({src}, "
+            f"'{_SPACEFREE_RE2_CLS}', ' " + "\\1"
+            f" ', 'g'), '{_UNI_TOKEN_RE2}')"
+        )
+    return f"""
+    WITH fixture AS (
+      SELECT doc_id, CAST(doc_id % 4 AS BIGINT) AS bucket,
+             'doc ' || CAST(doc_id AS VARCHAR) || ' ' || {_UNI_CASE} AS text
+      FROM documents
+    ),
+    tr AS (
+      SELECT doc_id, bucket, {tokify('text')} AS toks
+      FROM fixture
+    ),
+    trg AS (
+      SELECT DISTINCT doc_id, md5(array_to_string(toks[i:i+12], ' ')) AS gh
+      FROM (SELECT doc_id, toks,
+                   unnest(generate_series(1, len(toks)-12)) AS i
+            FROM tr WHERE len(toks) >= 13)
+    ),
+    ev AS (SELECT {tokify(f"'{_MIXED_SENTENCES[0]}'")} AS toks),
+    evg AS (
+      SELECT DISTINCT md5(array_to_string(toks[i:i+12], ' ')) AS gh
+      FROM (SELECT toks, unnest(generate_series(1, len(toks)-12)) AS i
+            FROM ev WHERE len(toks) >= 13)
+    ),
+    hits AS (
+      SELECT doc_id, count(*) AS n_collisions
+      FROM trg WHERE gh IN (SELECT gh FROM evg)
+      GROUP BY doc_id
+    )
+    SELECT f.bucket,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN coalesce(h.n_collisions, 0) > 0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
+           CAST(sum(coalesce(h.n_collisions, 0)) AS BIGINT)
+             AS sum_collisions
+    FROM fixture f LEFT JOIN hits h USING (doc_id)
+    GROUP BY f.bucket
+    """
+
+
+@q("unicode_decontam", _unicode_decontam_sql())
+def unicode_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CJK benchmark decontamination through the UNCHANGED 13-gram rule
+    (r11, VERDICT r10 item 4's highest-stakes case): on split-on-space an
+    unspaced Han line is ONE "token", 13-grams never form, and benchmark
+    contamination passes SILENTLY — the exact r8 silent-degradation
+    class. The mixed-script fixture (Han/Thai/Japanese/Latin sentences
+    keyed by doc_id % 4, the unicode_token_stats fixture) plants the
+    bucket-0 Han sentence as the "benchmark"; through
+    ``tokens_col=unicode_tokens`` every bucket-0 document yields exactly
+    4 colliding 13-grams (the 16-char run's windows) while the other
+    buckets stay clean. The oracle runs the identical tokenize→13-gram→
+    md5→semi-join cascade in RE2/DuckDB syntax.
+
+    Same scale shape as decontaminate_against's default path: eval grams
+    collapse to a DISTINCT sidecar hash set, train ships (id, 32-byte
+    hash) pairs, bodies never shuffle; the bucket rollup replaces the
+    per-doc droplist so the driver row stays 4 rows at any sf."""
+    from pharmacodi_spark.text.analysis import unicode_tokens
+    from pharmacodi_spark.text.cleaning import decontaminate_against
+
+    d = _t(spark, sf_dir, "documents")
+    sent = F.element_at(
+        F.array(*[F.lit(s) for s in _MIXED_SENTENCES]),
+        (F.col("doc_id") % 4 + 1).cast("int"),
+    )
+    train = d.select(
+        "doc_id",
+        F.concat(
+            F.lit("doc "), F.col("doc_id").cast("string"), F.lit(" "), sent
+        ).alias("text"),
+    ).withColumn("toks", unicode_tokens("text"))
+    ev = local_df(
+        spark, [(0, _MIXED_SENTENCES[0])], ["doc_id", "text"],
+        types=["long", "string"],
+    ).withColumn("toks", unicode_tokens("text"))
+    flags = decontaminate_against(train, ev, n=13, tokens_col="toks")
+    return flags.groupBy(
+        (F.col("doc_id") % 4).cast("long").alias("bucket")
+    ).agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum(F.col("contaminated").cast("int"))
+        .cast("long")
+        .alias("n_contaminated"),
+        F.sum("n_collisions").cast("long").alias("sum_collisions"),
+    )

@@ -161,6 +161,155 @@ def _sim_sql(bits: int = 16, out_col: str = "simhash16") -> str:
       )"""
 
 
+# DuckDB twins of text/retrieval.py::ilog2_fp, the fixed-point log2 of the
+# entropy, surprisal and selection rows
+
+_FP = 1 << 10  # 10 fractional bits, shared with retrieval.FP_BITS
+
+
+def _il(x: str) -> str:
+    """DuckDB twin of retrieval.ilog2_fp (10 fractional bits): exponent via
+    length(bin(x))-1, linear mantissa via shifted division by 2^e.
+    Valid for x < 2^53 (mantissa·1024 must fit int64); use :func:`_il_g`
+    for full-domain inputs like 60-bit hash draws."""
+    e = f"(length(bin({x})) - 1)"
+    return (
+        f"(({e} * {_FP}) + "
+        f"((({x} - (CAST(1 AS BIGINT) << {e})) * {_FP}) >> {e}))"
+    )
+
+
+def _il_g(x: str) -> str:
+    """Full-int64-domain DuckDB twin of retrieval.ilog2_fp: the same
+    shift-first overflow guard as the Spark column version (shift the
+    mantissa excess out BEFORE scaling when e > frac_bits — exact, since
+    floor(m·2^s/2^e) = floor(m/2^(e−s)))."""
+    e = f"(length(bin({x})) - 1)"
+    m = f"({x} - (CAST(1 AS BIGINT) << {e}))"
+    frac = (
+        f"(CASE WHEN {e} <= 10 THEN ({m} << (10 - {e})) "
+        f"ELSE ({m} >> ({e} - 10)) END)"
+    )
+    return f"(({e} * {_FP}) + {frac})"
+
+
+# ---------------------------------------------------------------------------
+# Host link graph -> PageRank quality prior
+# (text/html.py::extract_links + urls.url_host + operators/graph.py)
+# ---------------------------------------------------------------------------
+
+
+def _host_rank_parts(iters: int = 6) -> list[str]:
+    """The CTE list behind web_q's :func:`_host_rank_sql` — also reused as
+    the rank-prior sub-derivation of the authority_gate and
+    rank_weighted_select oracles.
+
+    Every CTE is ``AS MATERIALIZED`` (r13): each ``r{{i}}`` references
+    ``r{{i-1}}`` TWICE (contribution join + dangling-mass subquery), so
+    DuckDB's default CTE inlining re-evaluated the chain 2^iters times —
+    the authority_gate oracle alone took 280 s at sf0.01 (measured; the
+    r12 entry-22 "vanilla-session planning sensitivity" was in fact
+    mostly THIS, oracle-side). Materialized: 0.04 s, rows identical."""
+    n_nodes = "(SELECT count(*) FROM nodes)"
+    base = "(SELECT (15000000000 // (100 * count(*))) FROM nodes)"
+    parts = [
+        """sn AS MATERIALIZED (
+      SELECT DISTINCT lower(source) AS sh,
+             CAST(substr(source, 4) AS INT) AS n
+      FROM documents
+    ),
+    edges AS MATERIALIZED (
+      SELECT sh || '.example.com' AS src,
+             'src' || CAST(n % 5 AS VARCHAR) || '.example.com' AS dst
+      FROM sn
+      UNION
+      SELECT sh || '.example.com',
+             'src' || CAST((n * n) % 11 AS VARCHAR) || '.example.com'
+      FROM sn
+      UNION
+      SELECT sh || '.example.com', 'hub.example.com'
+      FROM sn WHERE n % 3 = 0
+    )""",
+        "nodes AS MATERIALIZED (SELECT DISTINCT v FROM "
+        "(SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges))",
+        "outdeg AS MATERIALIZED (SELECT src, count(*) AS od FROM edges GROUP BY src)",
+        "r0 AS MATERIALIZED (SELECT v, (SELECT 1000000000 // count(*) FROM nodes) AS r "
+        "FROM nodes)",
+    ]
+    for i in range(1, iters + 1):
+        dang = (
+            f"(SELECT coalesce(sum(r2.r), 0) FROM r{i - 1} r2 "
+            f"WHERE r2.v NOT IN (SELECT src FROM outdeg))"
+        )
+        parts.append(
+            f"""r{i} AS MATERIALIZED (
+      SELECT n.v,
+             CAST({base}
+                  + (85 * (coalesce(s.s, 0) + {dang} // {n_nodes})) // 100
+                  AS BIGINT) AS r
+      FROM nodes n LEFT JOIN (
+        SELECT e.dst AS v, sum(r.r // o.od) AS s
+        FROM edges e
+        JOIN r{i - 1} r ON e.src = r.v
+        JOIN outdeg o ON e.src = o.src
+        GROUP BY e.dst
+      ) s ON n.v = s.v)"""
+        )
+    return parts
+
+
+_LINK_PAGE_EXPR = r"""
+concat(
+  '<html><head><title>Doc ', doc_id,
+  '</title><script>var s = "<a href=\"http://fake.example.com/\">x</a>";',
+  '</script></head><body>',
+  '<p>See <a href="http://src', CAST(substring(source, 4) AS INT) % 5,
+  '.example.com/p/', doc_id, '">a related page</a> and ',
+  '<a href="http://src',
+  (CAST(substring(source, 4) AS INT) * CAST(substring(source, 4) AS INT))
+    % 11,
+  '.example.com/q/', doc_id, '">another</a> for details.</p>',
+  CASE WHEN CAST(substring(source, 4) AS INT) % 3 = 0
+       THEN concat('<p>Also <a href=''http://hub.example.com/h/',
+                   doc_id, '''>the hub</a>.</p>')
+       ELSE '' END,
+  '</body></html>'
+)
+"""
+
+
+def _host_rank_df(
+    spark: SparkSession, sf_dir: str, iterations: int = 6
+) -> DataFrame:
+    """The host_link_rank dataflow with the iteration count exposed —
+    host_link_rank keeps its published 6-iteration contract while cheaper
+    consumers (rank_weighted_select's 2-iteration prior, whose DuckDB twin
+    must stay affordable: the 6-iteration CTE runs minutes at sf0.01 per
+    the ROADMAP note) reuse the identical edge derivation."""
+    from pharmacodi_spark.operators.graph import pagerank_int
+    from pharmacodi_spark.text.html import extract_links
+    from pharmacodi_spark.text.urls import url_host
+
+    d = _t(spark, sf_dir, "documents")
+    pages = d.select(
+        "doc_id",
+        F.concat(F.lower(F.col("source")), F.lit(".example.com")).alias(
+            "src_host"
+        ),
+        F.expr(_LINK_PAGE_EXPR).alias("html"),
+    )
+    links = extract_links(pages, "html", id_col="doc_id").join(
+        pages.select("doc_id", "src_host"), "doc_id"
+    )
+    edges = links.select(
+        F.col("src_host").alias("src"), url_host("href").alias("dst")
+    ).distinct()
+    out = pagerank_int(edges, iterations=iterations, dangling="redistribute")
+    return out.select(
+        F.col("v").alias("host"), F.col("r").cast("long").alias("rank_e9")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Aggregations (SURVEY §2.4) + scalar kit (§2.9)
 # ---------------------------------------------------------------------------

@@ -5,7 +5,7 @@ the designated surface).
 Design: every op is a pure transform on a (possibly streaming) DataFrame
 with an event-time ``ts`` timestamp column, so the SAME function works in
 batch mode (where its semantics are oracle-checked — see
-plans/extensions.py window_tumbling / sessionization) and under
+plans/series_q.py window_tumbling / sessionization) and under
 ``readStream`` with watermarks. That batch/stream unification is the whole
 point of Structured Streaming's model.
 
@@ -196,7 +196,7 @@ def tumbling_window_agg(
     events: DataFrame, width: str = "10 minutes", watermark: str = "30 minutes"
 ) -> DataFrame:
     """count/sum per (tumbling window, event_type) with late-data tolerance.
-    Batch twin: plans/extensions.py::window_tumbling."""
+    Batch twin: plans/series_q.py::window_tumbling."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", width).alias("w"), "event_type")
@@ -235,7 +235,7 @@ def session_window_agg(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "60 minutes"
 ) -> DataFrame:
     """Per-user session windows (gap-merged). Batch twin (lag+cumsum):
-    plans/extensions.py::sessionization — same session count semantics."""
+    plans/series_q.py::sessionization — same session count semantics."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")

@@ -494,10 +494,11 @@ def md5_band_pairs(sig: DataFrame) -> DataFrame:
     buckets past the cap are re-split into bounded parallel tasks — the
     pair SET is unchanged (oracle-exact), only the work distribution.
 
-    The signature frame is barrier-pinned first (id + 4 longs per doc):
-    the shingle+md5+groupBy subplan runs at pin time and the band explode
-    reads the pin."""
-    sig = stage_barrier(sig, name="minhash_sig_cells")
+    The signature frame is not pinned: the band explode is its only
+    consumer, because the triangle guard counts cells with a window on the
+    blocking's own exchange (:func:`triangle_blocks`) instead of a join
+    back to the cells, so the shingle+md5+groupBy subplan runs once, inside
+    the pair job."""
     return pairs_from_cells(md5_band_cells(sig), max_cell_size=256)
 
 
@@ -980,7 +981,7 @@ def estimate_jaccard(
     engine-exact — so a threshold gate needs no float comparison.
 
     At 100 TB this is the referee that lets exact Jaccard
-    (:mod:`jaccard re-verification <pharmacodi_spark.plans.extensions>`)
+    (:mod:`jaccard re-verification <pharmacodi_spark.plans.dedup_q>`)
     run on only the estimator's survivors: the estimate costs two
     broadcast/hash joins of metadata-scale frames (pairs carry 2 ids;
     signatures carry id + k longs — bodies are never touched).

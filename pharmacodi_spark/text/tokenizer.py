@@ -30,7 +30,7 @@ annotation parsing, e.g. PharmacoDI/build_cellosaurus.py record splits);
 this is north-star extension surface for LLM-corpus budgeting.
 
 Greedy semantics (both the Python encoder and the DuckDB oracle in
-plans/extensions2.py::vocab_token_count implement exactly this):
+plans/lm_q.py::vocab_token_count implement exactly this):
   pos := 0; while pos < len(word):
     p := longest vocab piece s.t. word[pos:pos+len(p)] == p
     if p exists: pos += len(p)            # one vocab token

@@ -71,7 +71,7 @@ def test_barrier_dir_conf_fallback(spark, durable_barriers):
 
 
 def test_curation_pipeline_durable_matches_local(spark, durable_barriers):
-    from pharmacodi_spark.plans.extensions2 import curation_pipeline
+    from pharmacodi_spark.plans.selection_q import curation_pipeline
 
     sf = "/root/testdata/sf0.001"
     local = _rows(curation_pipeline(spark, sf))

@@ -193,7 +193,7 @@ def test_curation_pipeline_html_stage0(spark):
     """curation_pipeline(html_col=...) on HTML-wrapped docs ==
     curation_pipeline on the plain corpus: stage 0 recovers the prose, the
     five gates then run unchanged."""
-    from pharmacodi_spark.plans.extensions2 import curation_pipeline
+    from pharmacodi_spark.plans.selection_q import curation_pipeline
 
     sf = "/root/testdata/sf0.001"
     plain = {

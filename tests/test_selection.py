@@ -558,7 +558,7 @@ def test_window_mix_entropy_orders_windows_correctly(spark):
     scores exactly 0 (c·(il(N)−il(N)))."""
     from pyspark.sql import functions as F
 
-    from pharmacodi_spark.plans.extensions3 import window_mix_entropy
+    from pharmacodi_spark.plans.series_q import window_mix_entropy
 
     # build two windows directly on a temp events-shaped frame
     rows = []

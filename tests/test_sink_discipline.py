@@ -246,40 +246,68 @@ def test_pair_expansion_only_in_dedup_library():
     assert hits == [], "expand pairs with text.dedup.cell_pair_rows"
 
 
-# names a registry module may still import from a sibling other than
-# plans.queries; a ratchet — each moves to the library or queries.py and
-# leaves this set
-_CROSS_REGISTRY_ALLOWED = {
-    "_TOKENIZER_VOCAB",
-    "_TOKENIZER_VOCAB_SQL",
-    "_DSIR_DIM",
-    "_DSIR_SALT",
-    "_host_rank_df",
-    "_host_rank_parts",
-    "_il",
-    "_MIXED_SENTENCES",
-    "_SPACEFREE_RE2_CLS",
-    "_UNI_CASE",
-    "_UNI_TOKEN_RE2",
-}
-
-
 def test_registry_modules_import_only_from_queries():
+    # a registry module reads shared twins and fixtures from plans.queries
+    # alone; a sibling import couples two families and their import order
     hits = []
     for mod, tree in _modules():
         if not mod.startswith("plans/") or mod == "plans/__init__.py":
             continue
         for node in ast.walk(tree):
-            if not isinstance(node, ast.ImportFrom):
-                continue
-            src = node.module or ""
-            if not src.startswith("pharmacodi_spark.plans."):
-                continue
-            if src == "pharmacodi_spark.plans.queries":
+            if isinstance(node, ast.ImportFrom):
+                srcs = [node.module or ""]
+            elif isinstance(node, ast.Import):
+                srcs = [a.name for a in node.names]
+            else:
                 continue
             hits += [
-                f"{mod}:{node.lineno} {a.name}"
-                for a in node.names
-                if a.name not in _CROSS_REGISTRY_ALLOWED
+                f"{mod}:{node.lineno} {src}"
+                for src in srcs
+                if src.startswith("pharmacodi_spark.plans.")
+                and src != "pharmacodi_spark.plans.queries"
             ]
     assert hits == [], "import engine code from the library, twins from queries"
+
+
+# one module per family; a family past this splits again
+_REGISTRY_MODULE_MAX_LINES = 1500
+
+
+def test_registry_modules_stay_family_sized():
+    hits = []
+    for path in sorted((ENGINE / "plans").glob("*.py")):
+        n = len(path.read_text().splitlines())
+        if n > _REGISTRY_MODULE_MAX_LINES:
+            hits.append(f"{path.name}: {n} lines")
+    assert hits == [], "split the family module"
+
+
+def test_registry_not_edited_at_import():
+    # a row's oracle is fixed where it registers: a QUERIES[...] read or
+    # rewrite elsewhere only works in one import order
+    allowed = {"plans/queries.py", "plans/__init__.py"}
+    hits = []
+    for mod, tree in _modules():
+        if mod in allowed:
+            continue
+        aliases = {"QUERIES"}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                aliases |= {
+                    a.asname for a in node.names if a.name == "QUERIES" and a.asname
+                }
+            elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Name):
+                if node.value.id in aliases:
+                    aliases |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+        hits += [
+            f"{mod}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Subscript)
+            and (
+                isinstance(node.value, ast.Name)
+                and node.value.id in aliases
+                or isinstance(node.value, ast.Attribute)
+                and node.value.attr == "QUERIES"
+            )
+        ]
+    assert hits == [], "register the oracle with its @q row"

@@ -1,6 +1,6 @@
 """Unit tests for the temporal operators (as-of / range join) and the
 fact-scale dense surrogate key path — the parameterized library twins of the
-oracle-checked plans in plans/extensions2.py."""
+oracle-checked plans in plans/tabular_q.py."""
 
 from __future__ import annotations
 

@@ -30,6 +30,8 @@ N_SEEDED_CLUSTER = 400   # ids 0..399: spread cluster near the origin
 N_FAR_BLOB = 800         # ids 400..1199: tight blob FAR from every seed
 N_PLANTED = 20           # ids 1200..1219: exact twins of existing rows
 N_K = 16
+# the suite's default core count (tests/conftest.py: SPARK_GRAFT_CPUS=8)
+FIXTURE_SLICES = 8
 
 
 def _fixture_rows():
@@ -73,7 +75,13 @@ def _run(assigned, ids_df):
 
 def test_trained_blocking_preserves_droplist_and_balances_cells(spark):
     rows, planted = _fixture_rows()
-    qe = spark.createDataFrame(rows, "vec_id long, qe array<double>")
+    # k-means|| seeds from per-partition samples, so the trained cells
+    # depend on how the fixture is sliced: a fixed slice count (not the
+    # machine's defaultParallelism) gives every core count the same cells
+    qe = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, FIXTURE_SLICES),
+        "vec_id long, qe array<double>",
+    )
     ids_df = qe.select("vec_id")
 
     seeded = seeded_cell_assign(qe, N_K, vec_col="qe", out_col="cid")

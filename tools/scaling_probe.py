@@ -180,9 +180,10 @@ def ops(spark, mult: int) -> dict[str, float]:
     )
 
     # curation E2E (stage-barrier composition): gates → decontam →
-    # passage dedup → exact dedup → mixture, with survivor-id
-    # localCheckpoints between stages (the shape that prevents the
-    # combinatorial lazy-composition blowup — see plans/extensions2.py)
+    # passage dedup → exact dedup → mixture, with survivor-id stage
+    # barriers between stages (the shape that prevents the combinatorial
+    # lazy-composition blowup — see
+    # pipelines/curation_stream.py::curation_cascade)
     from pharmacodi_spark.text.corpus import unigram_surprisal
 
     def curation():
