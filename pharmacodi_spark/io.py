@@ -64,8 +64,6 @@ def load(
     path: str | list[str],
     fmt: str | None = None,
     schema: T.StructType | str | None = None,
-    na_value: str = "NA",
-    infer_sampling: float | None = None,
     **options,
 ) -> DataFrame:
     """Lazy multi-format reader (S1).
@@ -78,31 +76,27 @@ def load(
 
     Scale note: schemaless CSV/JSON inference reads the data TWICE (one
     inference pass, one real scan) — fine for metadata-scale sheets, wrong
-    for corpus-scale inputs. Pass ``schema`` for anything large; as a
-    middle ground, ``infer_sampling=0.01`` caps the inference pass to a
-    sample (Spark's ``samplingRatio``). A schemaless large read emits a
-    warning rather than silently paying the double scan.
+    for corpus-scale inputs. Pass ``schema`` for anything large. A
+    schemaless CSV/JSON read emits a warning rather than silently paying
+    the double scan.
     """
     first = path if isinstance(path, str) else path[0]
     fmt = fmt or infer_format(first)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    elif fmt in ("csv", "json") and infer_sampling is None:
+    elif fmt in ("csv", "json"):
         import warnings
 
         warnings.warn(
             f"io.load({first!r}): schemaless {fmt} read infers types with a "
-            "full extra pass over the data; pass schema=... (preferred) or "
-            "infer_sampling=... for large inputs",
+            "full extra pass over the data; pass schema=... for large inputs",
             stacklevel=2,
         )
     if fmt == "csv":
-        opts = {"header": "true", "nullValue": na_value}
+        opts = {"header": "true", "nullValue": "NA"}
         if schema is None:
             opts["inferSchema"] = "true"
-            if infer_sampling is not None:
-                opts["samplingRatio"] = str(infer_sampling)
         opts.update({k: str(v) for k, v in options.items()})
         reader = reader.options(**opts)
     elif options:
@@ -115,65 +109,25 @@ def load_table_all_shards(
     spark: SparkSession,
     name: str,
     data_dir: str,
-    schema: T.StructType | None = None,
-    dedup: bool = True,
-    key_columns: list[str] | None = None,
 ) -> DataFrame:
     """Glob-union loader (S3/S4): read every ``{dir}/*/*_{name}.parquet``
     shard as ONE scan, union-by-name with missing-column tolerance, dedupe.
 
     Re-expresses load_table / fread_table_for_all_psets
     (combine_pset_tables.py:213-271: glob → regex filter → rbind(force=True)
-    → dedupe). ``rbind(force=True)`` ≡ ``unionByName(allowMissingColumns)``;
-    with a declared schema we instead read all shards in one
-    ``spark.read.schema(...)`` pass (missing columns become nulls via
-    parquet schema merging), keeping a single partition-parallel scan node.
+    → dedupe). ``rbind(force=True)`` ≡ ``unionByName(allowMissingColumns)``:
+    all shards are read in one merged-schema parquet pass (missing columns
+    become nulls), keeping a single partition-parallel scan node.
     """
     pattern = os.path.join(data_dir, "*", f"*_{name}.parquet")
-    reader = spark.read
-    if schema is not None:
-        df = reader.schema(schema).parquet(pattern)
-    else:
-        df = reader.option("mergeSchema", "true").parquet(pattern)
-    if key_columns:
-        # first-per-key (S4: combine_pset_tables.py:266-270)
-        df = df.dropDuplicates(key_columns)
-    elif dedup:
-        df = df.dropDuplicates()
-    return df
+    return spark.read.option("mergeSchema", "true").parquet(pattern).dropDuplicates()
 
 
-def union_by_name(dfs: list[DataFrame]) -> DataFrame:
-    """U1: rbind(force=True) ≡ unionByName(allowMissingColumns=True)
-    (combine_pset_tables.py:229-230, build_target_tables.py:73-74)."""
-    if not dfs:
-        raise ValueError("union_by_name of empty list")
-    out = dfs[0]
-    for other in dfs[1:]:
-        out = out.unionByName(other, allowMissingColumns=True)
-    return out
-
-
-def save(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    sort_by: list[str] | None = None,
-) -> None:
-    """Table sink (S10/S11/S12). Parquet replaces `.jay`
-    (write_pset_table.py:34-39); ``partition_by`` replaces the
-    per-PSet-subdirectory convention (write_pset_table.py:20-33) so reads
-    prune partitions. ``sort_by`` clusters rows within files
-    (combine_pset_tables.py:207-208 write-time sort) without forcing a
-    single output partition."""
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.format(fmt).save(path)
+def save(df: DataFrame, path: str) -> None:
+    """Table sink (S10/S11/S12): overwrite ``path`` with parquet, which
+    replaces `.jay` (write_pset_table.py:34-39). Partitioned, bucketed and
+    sorted layouts go through ``save_canonical``."""
+    df.write.mode("overwrite").format("parquet").save(path)
 
 
 # Canonical physical layouts for the combine-phase output tables
@@ -484,7 +438,6 @@ def read_pset_catalog(
     spark: SparkSession,
     pset_dir: str,
     schemas: Mapping[str, T.StructType | str] | None = None,
-    infer_sampling: float | None = None,
 ) -> dict[str, DataFrame]:
     """Directory→catalog scan (S2): list a PSet export directory, split each
     filename on ``$`` into its slot path, strip ``.*@|.csv(.gz)?$|.parquet$|
@@ -500,7 +453,7 @@ def read_pset_catalog(
     slots with a contract skip CSV/JSON type inference entirely, so the
     scan reads the data once (VERDICT r6 item 8 — without this the
     engine's own double-scan warning fires on its own catalog reads).
-    Unknown slots fall back to ``infer_sampling``-bounded inference.
+    Unknown slots fall back to inference.
     """
     schemas = schemas or {}
     catalog: dict[str, DataFrame] = {}
@@ -513,6 +466,5 @@ def read_pset_catalog(
             spark,
             os.path.join(pset_dir, fname),
             schema=schemas.get(key),
-            infer_sampling=infer_sampling,
         )
     return catalog

@@ -277,9 +277,9 @@ def wav_feature_decoder(payload: bytes) -> list[float]:
     return [float(nch), float(fr), 1000.0 * n / fr, *rms, *mean]
 
 
-def png_dhash(data: bytes, hash_size: int = 8) -> int:
-    """Perceptual difference-hash of a PNG: decode, luma, nearest-neighbor
-    downsample to (hash_size+1)×hash_size, emit one bit per horizontal
+def png_dhash(data: bytes) -> int:
+    """Perceptual 64-bit difference-hash of a PNG: decode, luma,
+    nearest-neighbor downsample to 9×8, emit one bit per horizontal
     gradient (left < right) — near-identical images (recompression, small
     edits, 1-px noise) land within a few Hamming bits, the standard
     image-near-dup fingerprint.  Pure integers end to end (luma =
@@ -296,6 +296,7 @@ def png_dhash(data: bytes, hash_size: int = 8) -> int:
             return (299 * px[i] + 587 * px[i + 1] + 114 * px[i + 2]) // 1000
         return px[i]  # gray / gray+alpha: first channel is luma
 
+    hash_size = 8
     gw, gh = hash_size + 1, hash_size
     grid = [
         [luma(min(x * width // gw, width - 1), min(y * height // gh, height - 1))

@@ -12,7 +12,7 @@ rows degrading to ``decode_ok=False``. Swap in PIL/torchaudio/ffmpeg the
 same way without touching the plan.
 
 Scale notes: binary payloads are the widest rows in the pipeline —
-``target_rows_per_batch`` bounds Arrow batch memory; decode runs
+``_ROWS_PER_CHUNK`` bounds Arrow batch memory; decode runs
 executor-side so 1000 executors decode 1000 partitions concurrently; outputs
 carry features + metadata only (payloads dropped ASAP so downstream shuffles
 stay narrow).
@@ -43,6 +43,9 @@ FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, feat array<float>, decode_ok boolean"
 )
 
+# payloads per decoder/hasher slice of an Arrow batch
+_ROWS_PER_CHUNK = 64
+
 
 def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in for a real decode→feature step: byte-histogram
@@ -55,7 +58,6 @@ def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes], list[float]] | None = None,
-    target_rows_per_batch: int = 64,
 ) -> DataFrame:
     """Decode/feature-extract over binary payloads with ``mapInPandas``.
 
@@ -67,8 +69,8 @@ def extract_features(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_rows_per_batch):
-                chunk = pdf.iloc[start : start + target_rows_per_batch]
+            for start in range(0, len(pdf), _ROWS_PER_CHUNK):
+                chunk = pdf.iloc[start : start + _ROWS_PER_CHUNK]
                 feats, oks = [], []
                 for payload in chunk["payload"]:
                     try:
@@ -93,8 +95,9 @@ def extract_features(
     return media.select(*cols).mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per (media_id, frame_ts).
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: one output row per (media_id, frame_ts),
+    one frame a second.
     The timestamp grid is computed natively from duration metadata
     (sequence + explode) so the expensive decode fans out over frames, not
     videos — partition by frame for even load. Decode of each frame then
@@ -107,21 +110,21 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                 F.sequence(
                     F.lit(0),
                     F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
+                    F.lit(1000),
                 )
             ).alias("frame_ts_ms"),
         )
     )
 
 
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
+def resize_plan(media: DataFrame) -> DataFrame:
     """Resize planning: compute target dims natively from metadata (aspect-
-    preserving clamp to ``max_side``); the pixel work happens in the injected
+    preserving clamp to 256 px a side); the pixel work happens in the injected
     decoder. Keeping geometry in the plan lets Catalyst prune undecodable
     rows (null dims) before any Python runs."""
     w, h = F.col("width"), F.col("height")
     scale = F.least(
-        F.lit(1.0), F.lit(max_side) / F.greatest(w, h).cast("double")
+        F.lit(1.0), F.lit(256) / F.greatest(w, h).cast("double")
     )
     return media.withColumns(
         {
@@ -137,7 +140,6 @@ PHASH_SCHEMA = "media_id long, phash long, decode_ok boolean"
 def perceptual_hashes(
     media: DataFrame,
     hasher: Callable[[bytes], int],
-    target_rows_per_batch: int = 64,
 ) -> DataFrame:
     """Perceptual fingerprints over binary media via the same injected-
     decoder seam as :func:`extract_features` — ``hasher(payload) -> int``
@@ -152,8 +154,8 @@ def perceptual_hashes(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_rows_per_batch):
-                chunk = pdf.iloc[start : start + target_rows_per_batch]
+            for start in range(0, len(pdf), _ROWS_PER_CHUNK):
+                chunk = pdf.iloc[start : start + _ROWS_PER_CHUNK]
                 hashes, oks = [], []
                 for payload in chunk["payload"]:
                     try:

@@ -121,10 +121,9 @@ def bloom_prefilter_semi_join(
     fact_key: str,
     dim_key: str,
     n_bits: int = 1 << 20,
-    n_hashes: int = 3,
     exact: bool = True,
 ) -> DataFrame:
-    """Semi join fact→dim with a bloom prefilter: fact rows failing ANY of
+    """Semi join fact→dim with a 3-hash bloom prefilter: fact rows failing ANY of
     the k bit tests are dropped inside the scan (guaranteed non-matches);
     with ``exact=True`` the survivors then left-semi join the real dim keys,
     making the result exactly the plain semi join (the equivalence the
@@ -136,10 +135,10 @@ def bloom_prefilter_semi_join(
     per-seed constant, so without the explicit ``isNotNull`` guard a null
     key could pass all k bit tests and pollute the approximate candidate
     set (harmless in exact mode, contract-breaking in approximate mode)."""
-    words = build_bloom_bitmap(dim, dim_key, n_bits, n_hashes)
+    words = build_bloom_bitmap(dim, dim_key, n_bits, 3)
     cand = fact.where(
         F.col(fact_key).isNotNull()
-        & bloom_condition(words, F.col(fact_key), n_hashes)
+        & bloom_condition(words, F.col(fact_key), 3)
     )
     if not exact:
         return cand

@@ -22,15 +22,15 @@ from pyspark.sql import functions as F
 def morton_key(
     df: DataFrame,
     cols: list[str],
-    bits: int = 16,
     out_col: str = "__morton",
 ) -> DataFrame:
     """Add an interleaved-bit (Morton / Z-order) key over numeric ``cols``.
 
-    Each column is min-max scaled to a ``bits``-bit integer rank (bounds
-    from one driver-side agg — index metadata, like any clustering's zone
-    map), then bit j of dimension i lands at position ``j*len(cols)+i`` of
-    the key. ``bits * len(cols)`` must stay < 63."""
+    Each column is min-max scaled to a 16-bit integer rank (bounds from one
+    driver-side agg — index metadata, like any clustering's zone map), then
+    bit j of dimension i lands at position ``j*len(cols)+i`` of the key.
+    ``16 * len(cols)`` must stay < 63."""
+    bits = 16
     assert bits * len(cols) < 63, "interleaved key must fit a signed long"
     bounds = df.agg(
         *[F.min(c).cast("double").alias(f"__min_{c}") for c in cols],
@@ -61,13 +61,12 @@ def zorder_repartition(
     df: DataFrame,
     cols: list[str],
     n_partitions: int,
-    bits: int = 16,
 ) -> DataFrame:
     """Range-partition + sort by the Morton key: each output partition (→
     output file on write) covers a compact hyper-rectangle of the clustered
     dimensions, so parquet min/max stats prune reads that filter on ANY of
     them. Drop-in before ``.write.parquet``; the helper column is removed."""
-    keyed = morton_key(df, cols, bits)
+    keyed = morton_key(df, cols)
     return (
         keyed.repartitionByRange(n_partitions, F.col("__morton"))
         .sortWithinPartitions("__morton")

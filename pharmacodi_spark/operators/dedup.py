@@ -34,8 +34,8 @@ def first_per_group(df: DataFrame, keys: list[str], order_by: list[str]) -> Data
     )
 
 
-def distinct_dim(df: DataFrame, col: str, out_name: str = "name") -> DataFrame:
+def distinct_dim(df: DataFrame, col: str) -> DataFrame:
     """A4: unique values of one column as a 1-column dim table
     (``pd.unique``, build_primary_pset_tables.py:60-67). Column pruning
     pushes the single-column projection into the scan."""
-    return df.select(F.col(col).alias(out_name)).where(F.col(out_name).isNotNull()).distinct()
+    return df.select(F.col(col).alias("name")).where(F.col("name").isNotNull()).distinct()

@@ -15,12 +15,12 @@ from pyspark.sql import functions as F
 
 
 def broadcast_left_join(
-    df: DataFrame, dim: DataFrame, on: str | list[str], how: str = "left"
+    df: DataFrame, dim: DataFrame, on: str | list[str]
 ) -> DataFrame:
     """J1/J3: enrich a fact with dim attributes; dim side broadcast so the
     fact never shuffles (reference keyed joins, build_experiment_tables.py:
     68-69, combine_pset_tables.py:296-330)."""
-    return df.join(F.broadcast(dim), on=on, how=how)
+    return df.join(F.broadcast(dim), on=on, how="left")
 
 
 def update_join(
@@ -28,7 +28,6 @@ def update_join(
     patch: DataFrame,
     on: str | list[str],
     update_cols: dict[str, str],
-    only_if_matched: bool = True,
 ) -> DataFrame:
     """J5/J6: overwrite columns from a joined table's namespace —
     ``df[:, update(c=g.c), join(patch)]`` (utilities.py:54-83 and the
@@ -36,8 +35,8 @@ def update_join(
     :199-207).
 
     ``update_cols`` maps target column in ``df`` → source column in
-    ``patch``. With ``only_if_matched`` the old value is kept for unmatched
-    rows (``coalesce(new, old)``); otherwise unmatched rows get null. Pure
+    ``patch``. Unmatched rows keep the old value (``coalesce(new, old)``);
+    a target not yet in ``df`` is null on them. Pure
     transform: Tungsten fuses the join and projection into one stage — the
     reference's by-reference mutation buys nothing here.
     """
@@ -49,35 +48,34 @@ def update_join(
     joined = df.join(F.broadcast(patch_proj), on=on_cols, how="left")
     for target, src in update_cols.items():
         new = F.col(f"__patch_{src}")
-        if only_if_matched and target in df.columns:
+        if target in df.columns:
             new = F.coalesce(new, F.col(target))
         joined = joined.withColumn(target, new)
     return joined.drop(*[f"__patch_{s}" for s in src_cols])
 
 
-def lookup_map(df: DataFrame, col: str, mapping: dict, out_col: str | None = None, default=None) -> DataFrame:
+def lookup_map(df: DataFrame, col: str, mapping: dict, out_col: str | None = None) -> DataFrame:
     """J11: dict-lookup applied to a column (``dataset_map[x]`` .apply,
-    build_synonym_tables.py:74-82). For literal dicts this folds to a CASE
-    WHEN chain — fully codegen'd, no join, no UDF."""
+    build_synonym_tables.py:74-82); unmapped values become null. For
+    literal dicts this folds to a CASE WHEN chain — fully codegen'd, no
+    join, no UDF."""
     out_col = out_col or col
-    expr: Column = F.lit(default)
+    expr: Column = F.lit(None)
     items = list(mapping.items())
     if items:
         expr = F.when(F.col(col) == F.lit(items[0][0]), F.lit(items[0][1]))
         for k, v in items[1:]:
             expr = expr.when(F.col(col) == F.lit(k), F.lit(v))
-        expr = expr.otherwise(F.lit(default))
+        expr = expr.otherwise(F.lit(None))
     return df.withColumn(out_col, expr)
 
 
-def clamp(df: DataFrame, col: str, upper: float | None = None, lower: float | None = None) -> DataFrame:
+def clamp(df: DataFrame, col: str, upper: float | None = None) -> DataFrame:
     """P8: conditional-update clamp — the IC50 ≤ 1e54 overflow guard
-    (combine_pset_tables.py:173) as ``least``/``greatest``."""
+    (combine_pset_tables.py:173) as ``least``."""
     c = F.col(col)
     if upper is not None:
         c = F.least(c, F.lit(upper))
-    if lower is not None:
-        c = F.greatest(c, F.lit(lower))
     return df.withColumn(col, c)
 
 
@@ -141,7 +139,6 @@ def auto_salted_join(
     how: str = "inner",
     target_rows_per_task: int = 1_000_000,
     max_salts: int = 64,
-    top_k: int = 10,
 ) -> DataFrame:
     """Diagnose-then-act skew join: profile the left side's key with
     :func:`pharmacodi_spark.operators.profile.skew_profile`, and pick the
@@ -154,7 +151,7 @@ def auto_salted_join(
       right-side replication cost dominates and the caller should
       restructure instead).
 
-    The profile collects at most ``top_k`` rows (bounded driver traffic:
+    The profile collects at most 10 rows (bounded driver traffic:
     the decision needs only the HEAVIEST keys — if the worst key fits a
     task, so does every other). For the supported modes (inner / left /
     left_semi / left_anti) result rows are identical to the plain join —
@@ -173,7 +170,7 @@ def auto_salted_join(
         )
 
     prof = skew_profile(
-        left, on, top_k=top_k, target_rows_per_task=target_rows_per_task
+        left, on, top_k=10, target_rows_per_task=target_rows_per_task
     ).collect()
     worst = max((r["salt_factor"] for r in prof), default=1)
     if worst <= 1:

@@ -91,7 +91,6 @@ def remap_fk(
     fk: str,
     id_col: str = "id",
     on_miss: Literal["drop", "keep", "error"] = "drop",
-    validate_unique: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Rewrite natural key ``fk`` to the dim's surrogate id (J3/J4).
 
@@ -104,14 +103,13 @@ def remap_fk(
     reference's log-and-swallow (SURVEY §5 invariants; we surface, not log).
 
     Scale notes:
-    - dims are deduped first (``validate_unique``) because datatable's keyed
-      join is last-key-wins while Spark's left join would duplicate fact rows
+    - dims are deduped first because datatable's keyed join is
+      last-key-wins while Spark's left join would duplicate fact rows
       on dup dim keys (SURVEY §7.3 item 3) — a semantic AND row-count hazard;
     - the dim side is broadcast: the 10⁸-row fact never shuffles.
     """
     keyed = dim.select(F.col(id_col).alias("__remap_id"), F.col(fk))
-    if validate_unique:
-        keyed = keyed.dropDuplicates([fk])
+    keyed = keyed.dropDuplicates([fk])
 
     joined = df.join(F.broadcast(keyed), on=fk, how="left")
     unmatched = (
@@ -133,13 +131,12 @@ def remap_fk(
 def remap_fk_cascade(
     df: DataFrame,
     dims: dict[str, DataFrame],
-    on_miss: Literal["drop", "keep", "error"] = "drop",
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """FK-remap loop over declared FKs — the reference's ``load_join_write``
-    inner loop (combine_pset_tables.py:200-210). All dims broadcast; the fact
-    table flows through N broadcast-hash joins in a single stage with no
-    shuffle."""
+    inner loop (combine_pset_tables.py:200-210); unmatched fact rows are
+    dropped. All dims broadcast; the fact table flows through N
+    broadcast-hash joins in a single stage with no shuffle."""
     audits: dict[str, DataFrame] = {}
     for fk, dim in dims.items():
-        df, audits[fk] = remap_fk(df, dim, fk, on_miss=on_miss)
+        df, audits[fk] = remap_fk(df, dim, fk)
     return df, audits

@@ -20,7 +20,6 @@ def melt_wide(
     value_prefix: str,
     var_name: str = "var_id",
     value_name: str = "value",
-    drop_null: bool = True,
 ) -> DataFrame:
     """R1: wide→long for columns named ``{prefix}{N}`` (dose1..doseN).
 
@@ -38,9 +37,7 @@ def melt_wide(
         *[F.col(f"`{c}`") for c in id_vars],
         F.expr(f"stack({len(matches)}, {pairs}) as ({var_name}, {value_name})"),
     )
-    if drop_null:
-        stacked = stacked.where(F.col(value_name).isNotNull())
-    return stacked
+    return stacked.where(F.col(value_name).isNotNull())
 
 
 def melt_columns(
@@ -82,18 +79,13 @@ def group_concat_pivot(
     group_col: str,
     pivot_col: str,
     value_col: str,
-    sep: str = "|||",
-    pivot_values: list[str] | None = None,
 ) -> DataFrame:
     """R6/A7: rows of (entry, code, value) → one wide row per entry with
-    values group-concatenated per code — the Cellosaurus record assembly
+    values ``|||``-concatenated per code — the Cellosaurus record assembly
     (build_cellosaurus.py:26-30,53-63).
 
     ``collect_list`` order is nondeterministic under parallelism, so values
     are sorted before joining — deterministic output at any partition count.
-    Passing ``pivot_values`` avoids the extra distinct-values job at scale.
     """
-    agg = F.array_join(F.array_sort(F.collect_list(value_col)), sep)
-    gp = df.groupBy(group_col)
-    piv = gp.pivot(pivot_col, pivot_values) if pivot_values else gp.pivot(pivot_col)
-    return piv.agg(agg)
+    agg = F.array_join(F.array_sort(F.collect_list(value_col)), "|||")
+    return df.groupBy(group_col).pivot(pivot_col).agg(agg)

@@ -90,25 +90,21 @@ def hash_split(
 def temperature_mixture_sample(
     df: DataFrame,
     group_col: str,
-    budget_frac: float = 0.5,
-    alpha: float = 0.5,
     key_cols: list[str] | None = None,
     salt: str = "",
 ) -> DataFrame:
-    """Multi-source corpus mixing with temperature: source ``s`` with
-    ``n_s`` rows is kept at rate ``min(1, budget_frac · (N/n_s)^(1-alpha))``
-    — expected kept rows ∝ ``n_s^alpha``, i.e. alpha < 1 flattens the
-    source distribution (down-samples head domains, keeps the tail), the
-    standard pretraining-mixture reweighting. Row selection reuses the
+    """Multi-source corpus mixing with temperature 0.5: source ``s`` with
+    ``n_s`` rows is kept at rate ``min(1, 0.5 · sqrt(N/n_s))`` — expected
+    kept rows ∝ ``sqrt(n_s)``, which flattens the source distribution
+    (down-samples head domains, keeps the tail), the standard
+    pretraining-mixture reweighting. Row selection reuses the
     deterministic md5 draw of :func:`weighted_sample`, so membership is
     reproducible on any engine/partitioning.
 
-    alpha = 0.5 (default) computes the rate with sqrt/multiply/divide only
-    — all correctly-rounded IEEE ops, so the rate is BIT-IDENTICAL across
-    engines (no order-dependent double summation anywhere: per-source
-    counts are integers, and N is their integer window-sum over the counts
-    frame). Other alphas route through ``pow``, which is fast but not
-    portably rounded — fine for production, not for oracle comparison.
+    The rate uses sqrt/multiply/divide only — all correctly-rounded IEEE
+    ops, so it is BIT-IDENTICAL across engines (no order-dependent double
+    summation anywhere: per-source counts are integers, and N is their
+    integer window-sum over the counts frame).
 
     Scale shape: one count aggregate per source, then N as a global window
     over the COUNTS frame — single-partition, but over #sources rows
@@ -121,13 +117,10 @@ def temperature_mixture_sample(
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__n"))
     n = F.col("__n").cast("double")
     N = F.sum("__n").over(Window.partitionBy()).cast("double")
-    if alpha == 0.5:
-        ratio = F.sqrt(N) / F.sqrt(n)
-    else:
-        ratio = F.pow(N / n, F.lit(1.0 - alpha))
+    ratio = F.sqrt(N) / F.sqrt(n)
     rates = counts.select(
         group_col,
-        F.least(F.lit(1.0), F.lit(budget_frac) * ratio).alias("rate"),
+        F.least(F.lit(1.0), F.lit(0.5) * ratio).alias("rate"),
     )
     joined = df.join(F.broadcast(rates), group_col)
     keys = list(key_cols) if key_cols else [group_col]

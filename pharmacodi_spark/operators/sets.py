@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_all(dfs: list[DataFrame], allow_missing: bool = True) -> DataFrame:
+def union_all(dfs: list[DataFrame]) -> DataFrame:
     """U1: rbind/concat of N tables by column name
     (combine_pset_tables.py:229-230; rbind(force=True) tolerates missing
     columns → ``allowMissingColumns``)."""
@@ -13,7 +13,7 @@ def union_all(dfs: list[DataFrame], allow_missing: bool = True) -> DataFrame:
         raise ValueError("union_all of empty list")
     out = dfs[0]
     for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=allow_missing)
+        out = out.unionByName(df, allowMissingColumns=True)
     return out
 
 

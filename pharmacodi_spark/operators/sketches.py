@@ -6,7 +6,7 @@ bounded-memory alternative: build per-partition/per-slice sketches once,
 store the binary sketch alongside each partition of a table, and answer
 corpus-wide distinct questions by merging the (KB-sized) sketches — no
 rescan. These helpers wrap that pattern; estimates are within ~2% at
-default lgk=12.
+lgk=12.
 
 The NATIVE path has no oracle query: DataSketches binaries are
 engine-specific (DuckDB's approx_count_distinct is a different sketch),
@@ -29,12 +29,11 @@ def distinct_sketch(
     df: DataFrame,
     col: str,
     by: list[str] | None = None,
-    lgk: int = 12,
     sketch_col: str = "sketch",
 ) -> DataFrame:
-    """Per-group (or global) HLL sketch of ``col`` — store these per
-    table-partition/date-slice as the distinct-count index."""
-    agg = F.hll_sketch_agg(F.col(col), lgk).alias(sketch_col)
+    """Per-group (or global) HLL sketch (lgk 12) of ``col`` — store these
+    per table-partition/date-slice as the distinct-count index."""
+    agg = F.hll_sketch_agg(F.col(col), 12).alias(sketch_col)
     return df.groupBy(*(by or [])).agg(agg)
 
 
@@ -214,7 +213,6 @@ def hll_md5_distinct(
     df: DataFrame,
     col: str,
     by: list[str] | None = None,
-    salt: str = "h",
 ) -> DataFrame:
     """Per-group approximate distinct count, engine-deterministic:
     ``(by..., n_hit, v_empty, n_est)``.
@@ -239,7 +237,7 @@ def hll_md5_distinct(
     map-side (max is idempotent), so the sketch is also
     replay/append-friendly: union register tables and re-max to merge.
     """
-    regs = hll_md5_registers(df, col, by=by, salt=salt)
+    regs = hll_md5_registers(df, col, by=by)
     return hll_md5_estimate(regs, by=by)
 
 
@@ -247,7 +245,6 @@ def hll_md5_registers(
     df: DataFrame,
     col: str,
     by: list[str] | None = None,
-    salt: str = "h",
 ) -> DataFrame:
     """The sketch STATE: per-group register table ``(by..., __j, __m)``
     — ≤ 2^HLL_P rows per group after the map-side combine. Persist these
@@ -258,7 +255,7 @@ def hll_md5_registers(
     keys = by or []
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{salt}:"), F.col(col).cast("string"))),
+            F.md5(F.concat(F.lit("h:"), F.col(col).cast("string"))),
             1,
             15,
         ),
@@ -617,10 +614,10 @@ KMV_BITS = 60  #: md5 15-hex-char slice → uniform on [0, 2^60)
 KMV_K = 256  #: default sketch size (σ ≈ 1/√(k−2) ≈ 6.3% on distincts)
 
 
-def _kmv_hash(col: str, salt: str) -> Column:
+def _kmv_hash(col: str) -> Column:
     return F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{salt}:"), F.col(col).cast("string"))),
+            F.md5(F.concat(F.lit("kmv:"), F.col(col).cast("string"))),
             1,
             15,
         ),
@@ -634,7 +631,6 @@ def kmv_sketch(
     col: str,
     k: int = KMV_K,
     by: list[str] | None = None,
-    salt: str = "kmv",
     fan_in: int = 16,
 ) -> DataFrame:
     """The sketch STATE: ``(by..., __kmv array<long>)`` — the k smallest
@@ -657,7 +653,7 @@ def kmv_sketch(
     keys = by or []
     hashed = (
         df.where(F.col(col).isNotNull())
-        .select(*keys, _kmv_hash(col, salt).alias("__h"))
+        .select(*keys, _kmv_hash(col).alias("__h"))
         .withColumn("__lane", F.pmod(F.col("__h"), F.lit(fan_in)))
     )
     lanes = hashed.groupBy(*keys, "__lane").agg(

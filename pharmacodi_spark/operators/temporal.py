@@ -18,7 +18,6 @@ def asof_join(
     on: list[str],
     order_col: str,
     right_cols: list[str],
-    prefix: str = "asof_",
 ) -> DataFrame:
     """As-of join: each left row picks up the most recent right row with
     ``right[order_col] <= left[order_col]`` per ``on`` group (exact ties:
@@ -33,7 +32,7 @@ def asof_join(
     O(|L|·|R|) candidate blowup, skew handled by AQE like any sort.
 
     Left-only payload columns survive; right values arrive as
-    ``{prefix}{col}`` (null when no prior right row exists).
+    ``asof_{col}`` (null when no prior right row exists).
     """
     lpay = [c for c in left.columns if c not in on and c != order_col]
     l = left.select(
@@ -64,12 +63,12 @@ def asof_join(
         *[
             F.last(F.when(~F.col("__left"), F.col(c)), ignorenulls=True)
             .over(w)
-            .alias(f"{prefix}{c}")
+            .alias(f"asof_{c}")
             for c in right_cols
         ],
     )
     return filled.where("__left").select(
-        *on, order_col, *lpay, *[f"{prefix}{c}" for c in right_cols]
+        *on, order_col, *lpay, *[f"asof_{c}" for c in right_cols]
     )
 
 
@@ -80,7 +79,6 @@ def bucketed_range_join(
     bucket_width: float,
     lo_col: str = "lo",
     hi_col: str = "hi",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Range (interval) join: rows of ``df`` matched to intervals with
     ``lo <= value < hi``, via the bucketed-interval pattern.
@@ -88,9 +86,10 @@ def bucketed_range_join(
     A naive theta join is a nested-loop over |df|·|intervals|. Instead:
     explode each interval into the fixed-width buckets it overlaps, tag each
     row with its bucket, EQUI-join on the bucket, then apply the residual
-    range predicate. Equi-join means hash partitioning / broadcast-hash —
-    O(|df| + Σ buckets-per-interval) — the standard interval-join rewrite
-    (Spark can't derive it; its range-join support is heuristic). Pick
+    range predicate. The exploded intervals broadcast, so ``df`` never
+    shuffles — O(|df| + Σ buckets-per-interval) — the standard
+    interval-join rewrite (Spark can't derive it; its range-join support is
+    heuristic). Pick
     ``bucket_width`` near the median interval width so most intervals
     explode into ~1-2 buckets.
     """
@@ -103,8 +102,7 @@ def bucketed_range_join(
             )
         ).alias("__ibucket"),
     )
-    if broadcast_intervals:
-        b = F.broadcast(b)
+    b = F.broadcast(b)
     e = df.withColumn(
         "__bucket", F.floor(F.col(value_col) / bucket_width).cast("long")
     )

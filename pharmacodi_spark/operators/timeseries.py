@@ -48,12 +48,11 @@ def fill_gaps(
     bucket_col: str = "bucket",
     zero_fill: dict[str, float | int] | None = None,
     carry_forward: list[str] | None = None,
-    carry_suffix: str = "_filled",
 ) -> DataFrame:
     """Densify a resampled frame: for each key, generate every bucket from
     its min to its max (``sequence`` + ``explode``), left-join the observed
     rows back, fill ``zero_fill`` columns with their given constants, and
-    add ``{col}{carry_suffix}`` last-observation-carried-forward columns for
+    add ``{col}_filled`` last-observation-carried-forward columns for
     ``carry_forward`` (running ``last(ignorenulls)`` per key in bucket
     order). Observed columns stay null in gap rows unless listed."""
     grid = (
@@ -79,7 +78,7 @@ def fill_gaps(
     )
     for col in carry_forward or []:
         joined = joined.withColumn(
-            f"{col}{carry_suffix}", F.last(col, ignorenulls=True).over(w)
+            f"{col}_filled", F.last(col, ignorenulls=True).over(w)
         )
     for col, const in (zero_fill or {}).items():
         joined = joined.withColumn(col, F.coalesce(col, F.lit(const)))

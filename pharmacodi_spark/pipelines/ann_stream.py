@@ -49,14 +49,13 @@ def prepare_ann_index(
     n_centroids: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 7,
 ) -> list[list[float]]:
     """Train the frozen coarse quantizer on the snapshot corpus, persist it
     as the ``centroids`` sidecar, and write the snapshot's assignments as
     the initial index table (partitioned by cell). Returns the centroids.
     """
     cents = train_ivf_centroids(
-        corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed
+        corpus, n_centroids=n_centroids, vec_col=vec_col
     )
     local_df(
         spark,

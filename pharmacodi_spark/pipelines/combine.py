@@ -68,7 +68,6 @@ def combine_experiment(
             "tissue_id": keyed_or_self(tissue_dim, "tissue_id"),
             "dataset_id": keyed_or_self(dataset_dim, "dataset_id"),
         },
-        on_miss="drop",
     )
     remapped = surrogate_key(
         remapped, order_by=["dataset_id_id", "experiment_id"], dense_global=dense_global

@@ -147,7 +147,7 @@ def curation_cascade(
     q4 = docs.join(s4, "doc_id")
     final = temperature_mixture_sample(
         q4.select("doc_id", "source"), "source",
-        budget_frac=0.5, alpha=0.5, key_cols=["doc_id"], salt="cur",
+        key_cols=["doc_id"], salt="cur",
     )
     stages = [
         ("quality", s1),
@@ -375,21 +375,17 @@ def streaming_curation(
 def incremental_curation_batch(
     spark: SparkSession,
     docs: DataFrame,
-    stats_docs: DataFrame | None = None,
-    eval_docs: DataFrame | None = None,
     content_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """The batch twin: gates 1-5 over the whole corpus in one pass, with
     the SAME semantics the stream reproduces — surprisal against the
-    ``stats_docs`` LM (default: the corpus itself), decontam against
-    ``eval_docs`` (default: the ``doc_id % 97 == 0`` slice), first-owner
-    passage dedup, min-id exact dedup. Returns the curated rows."""
-    stats_docs = docs if stats_docs is None else stats_docs
-    if eval_docs is None:
-        eval_docs = docs.where(F.col(id_col) % 97 == 0)
-        docs = docs.where(F.col(id_col) % 97 != 0)
-    lm = unigram_lm(stats_docs, content_col, id_col)
+    corpus's own LM, decontam against the ``doc_id % 97 == 0`` slice,
+    first-owner passage dedup, min-id exact dedup. Returns the curated
+    rows."""
+    lm = unigram_lm(docs, content_col, id_col)
+    eval_docs = docs.where(F.col(id_col) % 97 == 0)
+    docs = docs.where(F.col(id_col) % 97 != 0)
     eval_grams = (
         ngram_hash_rows(eval_docs, content_col, id_col, _NGRAM, None)
         .select("gh")

@@ -40,19 +40,15 @@ def freeze_eval_signatures(
     base_dir: str,
     content_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_len: int = 5,
-    sig_fn=None,
 ) -> None:
-    """Compute the benchmark-side signatures once and persist the frozen
-    sidecar (id + h0..h{k-1}; benchmark-suite-sized — KBs, not corpus)."""
+    """Compute the benchmark-side signatures (16 hashes over 5-shingles)
+    once and persist the frozen sidecar (id + h0..h15; benchmark-suite-sized
+    — KBs, not corpus)."""
     from pharmacodi_spark.text.dedup import minhash_signatures
 
-    if sig_fn is None:
-        sig_fn = lambda d: minhash_signatures(  # noqa: E731
-            d, content_col, id_col, num_hashes, shingle_len
-        )
-    sig_fn(eval_df).write.mode("overwrite").parquet(_sig_path(base_dir))
+    minhash_signatures(eval_df, content_col, id_col).write.mode(
+        "overwrite"
+    ).parquet(_sig_path(base_dir))
 
 
 def decontam_stream_batch(

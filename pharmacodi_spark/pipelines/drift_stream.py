@@ -50,6 +50,7 @@ from pharmacodi_spark.functions.scalar import local_df
 from pharmacodi_spark.io import write_batch_partition
 from pharmacodi_spark.streaming.ops import drain_foreach_batch
 from pharmacodi_spark.text.similarity import (
+    PROJ_SCALE_BITS,
     _trunc_div,
     top_component_projection,
 )
@@ -59,14 +60,13 @@ def prepare_drift_reference(
     spark: SparkSession,
     base_dir: str,
     ref_vecs: DataFrame,
-    iterations: int = 2,
     vec_col: str = "qe",
     id_col: str = "vec_id",
 ) -> tuple[list[int], list[int]]:
     """Run the integer power iteration on the reference snapshot and
     persist ``(pos, mu, v)`` as the frozen sidecar. Returns (mu, v)."""
     _proj, v, mu = top_component_projection(
-        ref_vecs, iterations=iterations, vec_col=vec_col, id_col=id_col
+        ref_vecs, vec_col=vec_col, id_col=id_col
     )
     local_df(
         spark,
@@ -97,17 +97,16 @@ def batch_drift_stats(
     df: DataFrame,
     mu: list[int],
     v: list[int],
-    scale_bits: int = 10,
     vec_col: str = "qe",
 ) -> DataFrame:
     """The pointwise-additive reduction both the stream and its batch twin
     run: 1 row of ``(n, sum_proj_q, sum_abs_proj_q)`` — each row's
     projection onto the frozen component, centered on the frozen mean,
-    truncated by ``div 2^scale_bits`` exactly like
+    truncated by ``div 2^PROJ_SCALE_BITS`` exactly like
     top_component_projection's output units."""
     from pharmacodi_spark.functions.scalar import int_array_lit
 
-    scale = 1 << scale_bits
+    scale = 1 << PROJ_SCALE_BITS
     # single-node literals (r12, guide §1.2 — see int_array_lit)
     mu_arr = int_array_lit(mu)
     v_arr = int_array_lit(v)
@@ -157,7 +156,6 @@ def streaming_embedding_drift(
     stream: DataFrame,
     base_dir: str,
     checkpoint_dir: str,
-    scale_bits: int = 10,
     vec_col: str = "qe",
 ):
     """Reduce an incoming embedding stream against the frozen reference
@@ -168,9 +166,7 @@ def streaming_embedding_drift(
     mu, v = load_drift_reference(stream.sparkSession, base_dir)
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
-        stats = batch_drift_stats(
-            batch, mu, v, scale_bits=scale_bits, vec_col=vec_col
-        )
+        stats = batch_drift_stats(batch, mu, v, vec_col=vec_col)
         shift2 = batch_mean_shift2(batch, mu, vec_col=vec_col)
         write_batch_partition(
             stats.withColumn("mean_shift2", F.lit(int(shift2)).cast("long")),

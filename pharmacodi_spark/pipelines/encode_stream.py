@@ -27,9 +27,7 @@ prefix-ordered curation contract.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame
 
 from pharmacodi_spark.io import merge_upsert
@@ -41,7 +39,6 @@ def streaming_encode(
     stream: DataFrame,
     base_dir: str,
     checkpoint_dir: str,
-    encoder: Callable[[Sequence[str]], np.ndarray] | None = None,
     dim: int = 64,
     content_col: str = "text",
     id_col: str = "doc_id",
@@ -52,8 +49,7 @@ def streaming_encode(
 
     def do_batch(batch: DataFrame, _batch_id: int) -> None:
         vecs = encode_documents(
-            batch, encoder=encoder, dim=dim,
-            content_col=content_col, id_col=id_col,
+            batch, dim=dim, content_col=content_col, id_col=id_col
         )
         path = os.path.join(base_dir, "embeddings")
         merge_upsert(batch.sparkSession, path, vecs, key_cols=[id_col])

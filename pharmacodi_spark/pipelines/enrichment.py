@@ -20,7 +20,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pharmacodi_spark.operators.joins import broadcast_left_join
 from pharmacodi_spark.operators.keys import surrogate_key
 from pharmacodi_spark.operators.reshape import melt_columns
 from pharmacodi_spark.sources.record_text import parse_record_text
@@ -37,7 +36,6 @@ def build_synonym_table(
     dataset: DataFrame,
     id_suffix: str,
     fk_name: str,
-    dataset_names: list[str] | None = None,
 ) -> DataFrame:
     """Generic synonym-table builder (reference build_synonym_tables.py —
     build_cell/tissue/compound_synonym_df share this exact shape, 3×
@@ -60,9 +58,6 @@ def build_synonym_table(
         for c in meta.columns
         if re.match(rf".*{id_suffix}$", c) and c != unique_col
     ]
-    if dataset_names is not None:
-        pat = re.compile("|".join(dataset_names))
-        cols = [c for c in cols if pat.match(c)]
     long = (
         melt_columns(
             meta, [unique_col], cols, var_name="dataset_col", value_name="synonym"

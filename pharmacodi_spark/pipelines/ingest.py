@@ -91,7 +91,6 @@ def _dedup_stages(
     content_col: str,
     id_col: str,
     policy: str,
-    max_cell_size: int | None = None,
     **lsh,
 ) -> tuple[DataFrame, DataFrame]:
     """Steps 1-3 of :func:`dedup_batch`, plus the pinned (id, band, bucket)
@@ -126,7 +125,7 @@ def _dedup_stages(
     # 2. within-batch near-dup: pairs → components → min-id keeper. The
     # dropped ids are the non-minimum members of each component; ids with
     # no pair are singletons and keep themselves.
-    pairs = pairs_from_cells(cells, id_col, max_cell_size)
+    pairs = pairs_from_cells(cells, id_col)
     comp = connected_components(pairs, edges_canonical=True)
     dropped = comp.where(F.col("node") != F.col("component"))
     survivors = survivors.join(
@@ -165,19 +164,13 @@ def dedup_batch(
     content_col: str = "text",
     id_col: str = "doc_id",
     policy: str = "drop",
-    max_cell_size: int | None = None,
     **lsh,
 ) -> DataFrame:
     """Steps 1-3: the batch's accepted rows (plus ``near_dup_candidate``
     under ``policy='flag'``). No state I/O; pins two batch-bounded stages
-    (exact survivors, LSH cells) on the way.
-
-    ``max_cell_size`` arms the exact hot-bucket skew guard on the
-    within-batch pair expansion (text/dedup.py::pairs_from_cells) — same
-    accepted set, bounded per-task work when one LSH bucket is degenerate."""
+    (exact survivors, LSH cells) on the way."""
     return _dedup_stages(
-        new, corpus_hashes, corpus_buckets, content_col, id_col, policy,
-        max_cell_size, **lsh,
+        new, corpus_hashes, corpus_buckets, content_col, id_col, policy, **lsh
     )[0]
 
 

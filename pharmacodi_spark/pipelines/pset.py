@@ -234,8 +234,7 @@ def build_all_pset_tables(
     spark, catalog: dict[str, DataFrame], pset_name: str
 ) -> dict[str, DataFrame]:
     """Orchestrate the per-PSet phase (build_all_pset_tables.py:30-78) —
-    returns the dict of lazy per-dataset tables; the caller writes them
-    (io.save with partition_by=['dataset_id'])."""
+    returns the dict of lazy per-dataset tables; the caller writes them."""
     cell_raw = catalog["cell"]
     drug_raw = catalog["drug"]
 

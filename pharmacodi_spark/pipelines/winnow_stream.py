@@ -80,7 +80,6 @@ def streaming_winnow_ingest(
     checkpoint_dir: str,
     k: int = 5,
     w: int = 4,
-    min_shared: int = 2,
     content_col: str = "text",
     id_col: str = "doc_id",
 ):
@@ -105,9 +104,7 @@ def streaming_winnow_ingest(
             idx = spark.read.parquet(idx_path).where(
                 F.col("batch_id") < int(batch_id)
             )
-            flags = winnow_incremental_flags(
-                fp, idx, id_col=id_col, min_shared=min_shared
-            )
+            flags = winnow_incremental_flags(fp, idx, id_col=id_col)
             merge_upsert(spark, os.path.join(base_dir, "flags"), flags, [id_col])
         merge_upsert(
             spark,

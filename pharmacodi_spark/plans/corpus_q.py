@@ -80,7 +80,7 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus sizes ≥ ~2150 docs under ANSI arithmetic
         return F.expr(f"(CAST({n_docs} AS BIGINT) * 1000000) div df_count")
 
-    out = tfidf_top_terms(fan_out(d, "doc_id"), k=3, idf_fn=int_idf)
+    out = tfidf_top_terms(fan_out(d, "doc_id"), idf_fn=int_idf)
     return out.select(
         "doc_id", "token", "tf", F.col("score").cast("long").alias("score")
     )
@@ -106,7 +106,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.corpus import top_ngrams
 
     d = _t(spark, sf_dir, "documents")
-    return top_ngrams(fan_out(d, "doc_id"), n=2, k=20)
+    return top_ngrams(fan_out(d, "doc_id"), k=20)
 
 
 @q(
@@ -327,7 +327,7 @@ def phrase_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.corpus import detect_phrases
 
     d = _t(spark, sf_dir, "documents")
-    return detect_phrases(d, min_count=5, threshold_fp=100)
+    return detect_phrases(d, min_count=5)
 
 
 # ---------------------------------------------------------------------------
@@ -402,4 +402,4 @@ def ngram_diversity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.corpus import ngram_diversity
 
     d = _t(spark, sf_dir, "documents")
-    return ngram_diversity(fan_out(d, "doc_id"), n=2)
+    return ngram_diversity(fan_out(d, "doc_id"))

@@ -650,8 +650,8 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: mean + component are dim-length driver metadata; each
     iteration is one scan of the pinned centered frame + a per-dim
     map-side-combining aggregate (dim rows exchanged); vectors never
-    pair, never shuffle. ``shift_bits`` is the int64 headroom knob —
-    the library docstring gives the exact bound to raise it with n."""
+    pair, never shuffle. The library docstring gives the int64 headroom
+    bound of its 2^16 per-iteration downshift."""
     from pharmacodi_spark.text.similarity import top_component_projection
 
     e = _t(spark, sf_dir, "embeddings")
@@ -663,7 +663,7 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qe"),
     )
     proj, _v, _mu = top_component_projection(
-        qe, iterations=_ABTT_ITERS, scale_bits=10, shift_bits=16
+        qe, iterations=_ABTT_ITERS
     )
     return proj.select(
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -717,7 +717,7 @@ def abtt_corrected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     each vector loses its share of the common direction, floor-quantized
     per component back to centered-quantized magnitude (int64-safe: the
     pre-division numerator peaks ~2^41 on this fixture; the library
-    docstring's shift_bits bound governs the power iteration itself).
+    docstring's headroom bound governs the power iteration itself).
 
     Scale shape: mean/component/|v|²/probe are dim-length (or scalar)
     literals; the correction + projection fuse into ONE codegen'd
@@ -735,7 +735,7 @@ def abtt_corrected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qe"),
     )
     _proj, v, mu = top_component_projection(
-        qe, iterations=_ABTT_ITERS, scale_bits=10, shift_bits=16
+        qe, iterations=_ABTT_ITERS
     )
     from pharmacodi_spark.functions.scalar import int_array_lit
 

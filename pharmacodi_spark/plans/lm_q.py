@@ -140,7 +140,7 @@ def vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.tokenizer import train_vocab
 
     d = _t(spark, sf_dir, "documents")
-    return train_vocab(d, vocab_size=50, max_piece_len=6)
+    return train_vocab(d, vocab_size=50)
 
 
 @q(

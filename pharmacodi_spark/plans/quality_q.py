@@ -139,7 +139,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated-span stats (text/cleaning.py::
-    repeated_span_stats, span_len=5): the exact-substring duplication signal
+    repeated_span_stats, 5-token spans): the exact-substring duplication signal
     for contamination checks / boilerplate scoring. Counting runs on md5
     span hashes (the shuffle never carries span text); the oracle re-derives
     by span string — identical grouping, value-checked. Integer counts and
@@ -147,7 +147,7 @@ def repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.cleaning import repeated_span_stats
 
     d = _t(spark, sf_dir, "documents")
-    return repeated_span_stats(fan_out(d, "doc_id"), span_len=5, min_df=2)
+    return repeated_span_stats(fan_out(d, "doc_id"))
 
 
 @q(
@@ -187,7 +187,7 @@ def repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring scrubbing (text/cleaning.py::scrub_shared_spans,
-    span_len=5, min_df=2): every token covered by a cross-document repeated
+    5-token spans in ≥ 2 docs): every token covered by a cross-document repeated
     5-gram is removed, the rest of the document survives in order — the
     span-mask edit built on the ``repeated_spans`` signal. Spark side masks
     by md5 span hash (shuffles carry hashes and (id, pos, token) rows, never
@@ -196,7 +196,7 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.cleaning import scrub_shared_spans
 
     d = _t(spark, sf_dir, "documents")
-    return scrub_shared_spans(fan_out(d, "doc_id"), span_len=5, min_df=2)
+    return scrub_shared_spans(fan_out(d, "doc_id"))
 
 
 _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"

@@ -136,7 +136,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     return temperature_mixture_sample(
-        d, "source", budget_frac=0.5, alpha=0.5, key_cols=["doc_id"], salt="mix"
+        d, "source", key_cols=["doc_id"], salt="mix"
     )
 
 
@@ -836,7 +836,7 @@ def token_budget_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pharmacodi_spark.text.selection import token_budget_report
 
     d = _t(spark, sf_dir, "documents")
-    return token_budget_report(d, budget_frac=0.5)
+    return token_budget_report(d)
 
 
 # ---------------------------------------------------------------------------
@@ -1322,4 +1322,4 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     train = d.where(F.col("doc_id") % 97 != 0)
     ev = d.where(F.col("doc_id") % 97 == 0)
-    return bloom_decontaminate_against(train, ev, n=13)
+    return bloom_decontaminate_against(train, ev)

@@ -430,7 +430,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     query = list(qe.where(F.col("vec_id") == 42).collect()[0].qe)
     out = ivf_pq_topk(
-        qe, centroids, codebooks, query, k=10, nprobe=2, shortlist=50,
+        qe, centroids, codebooks, query, k=10, shortlist=50,
         vec_col="qe",
     )
     return out.select("vec_id", F.col("dot").cast("long").alias("dot"))
@@ -706,7 +706,7 @@ def hybrid_rrf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     weights = [((p * 7) % 13) - 6 for p in range(1, 65)]
     return hybrid_rrf_topk(
-        d, e, ["table", "scan", "window", "merge"], weights, k=10, cand=50
+        d, e, ["table", "scan", "window", "merge"], weights, cand=50
     )
 
 

@@ -500,13 +500,13 @@ def multimodal_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(80) + F.col("doc_id") % 1000).cast("int").alias("height"),
         (F.col("n_chars") * 7).alias("duration_ms"),
     )
-    frames = frame_sample_plan(media, every_ms=1000).select(
+    frames = frame_sample_plan(media).select(
         "media_id",
         F.lit("frame").alias("item"),
         F.col("frame_ts_ms").cast("long").alias("a"),
         F.lit(None).cast("long").alias("b"),
     )
-    resized = resize_plan(media, max_side=256).select(
+    resized = resize_plan(media).select(
         "media_id",
         F.lit("resize").alias("item"),
         F.col("target_w").cast("long").alias("a"),

@@ -411,7 +411,7 @@ def anchor_text_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = d.select(
         "doc_id", "source", F.expr(_LINK_PAGE_EXPR).alias("html")
     )
-    return anchor_term_rollup(pages, "html", k=3)
+    return anchor_term_rollup(pages, "html")
 
 
 # ---------------------------------------------------------------------------

@@ -273,7 +273,7 @@ def winnow_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fp = winnow_fp_rows(fps)
     pairs = winnow_overlap_pairs(
-        fp, min_shared=2, max_cell_size=256, hashes_distinct=True
+        fp, max_cell_size=256, hashes_distinct=True
     )
     nf = fps.select("doc_id", F.size("hs").alias("n"))
     na = nf.alias("na")
@@ -351,7 +351,7 @@ def incremental_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_fp = fp.where(F.col("doc_id") % 11 == 0)
     idx_fp = fp.where(F.col("doc_id") % 11 != 0)
     return winnow_incremental_flags(
-        new_fp, idx_fp, min_shared=2, hashes_distinct=True
+        new_fp, idx_fp, hashes_distinct=True
     )
 
 
@@ -490,7 +490,7 @@ def detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_fp_sets(toks, k=_WIN_K, w=_WIN_W, tokens_col="__tk")
     )
     wn = winnow_overlap_pairs(
-        fp, min_shared=2, max_cell_size=256, hashes_distinct=True
+        fp, max_cell_size=256, hashes_distinct=True
     ).select(
         "doc_a", "doc_b", F.lit(0).alias("m"), F.lit(0).alias("s"),
         F.lit(1).alias("w"),
@@ -565,7 +565,7 @@ def winnow_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pairs = winnow_overlap_pairs(
-        fp, min_shared=2, max_cell_size=256, hashes_distinct=True
+        fp, max_cell_size=256, hashes_distinct=True
     ).select("doc_a", "doc_b")
     return near_dup_droplist(
         d.select("doc_id"), pairs, edges_canonical=True

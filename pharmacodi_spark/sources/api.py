@@ -20,14 +20,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+MAX_RETRIES = 3  #: fetch attempts per chunk or URL before the error surfaces
+
 
 def fetch_batched(
     ids: DataFrame,
     fetcher: Callable[[list], pd.DataFrame],
     out_schema: T.StructType | str,
     batch_size: int = 50,
-    num_partitions: int | None = None,
-    max_retries: int = 3,
 ) -> DataFrame:
     """Fan an injected ``fetcher(batch_of_ids) -> pd.DataFrame`` out over the
     cluster. ``ids`` must be a single-column DataFrame.
@@ -38,8 +38,6 @@ def fetch_batched(
     frames conforming to ``out_schema``.
     """
     id_col = ids.columns[0]
-    if num_partitions:
-        ids = ids.repartition(num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -47,7 +45,7 @@ def fetch_batched(
             for i in range(0, len(values), batch_size):
                 chunk = values[i : i + batch_size]
                 last_err: Exception | None = None
-                for _attempt in range(max_retries):
+                for _attempt in range(MAX_RETRIES):
                     try:
                         yield fetcher(chunk)
                         last_err = None

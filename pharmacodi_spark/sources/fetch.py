@@ -27,6 +27,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from pharmacodi_spark.sources.api import MAX_RETRIES
+
 FETCH_REPORT_SCHEMA = (
     "relpath string, n_bytes long, sha256 string, ok boolean, err string"
 )
@@ -41,8 +43,6 @@ def fetch_manifest(
     url_col: str = "url",
     relpath_col: str = "relpath",
     checksum_col: str | None = None,
-    max_retries: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """S8 — distributed bulk download: for every manifest row, call the
     injected ``fetcher(url) -> bytes`` on an executor, write the payload
@@ -51,7 +51,7 @@ def fetch_manifest(
 
     If ``checksum_col`` names a manifest column, the downloaded sha256 is
     validated against it and a mismatch marks ``ok = false`` (file is
-    still staged for inspection).  Failed fetches (after ``max_retries``)
+    still staged for inspection).  Failed fetches (after ``MAX_RETRIES``)
     report ``ok = false`` with the error string instead of failing the
     job — the caller anti-joins ``ok`` rows against the manifest for the
     retry loop (ref behavior: wget -c resumes; here: re-run on the
@@ -59,8 +59,6 @@ def fetch_manifest(
     """
     cols = [url_col, relpath_col] + ([checksum_col] if checksum_col else [])
     slim = manifest.select(*cols)
-    if num_partitions:
-        slim = slim.repartition(num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -76,7 +74,7 @@ def fetch_manifest(
                 pdf[url_col].tolist(), pdf[relpath_col].tolist(), wants
             ):
                 payload, err = None, None
-                for _attempt in range(max_retries):
+                for _attempt in range(MAX_RETRIES):
                     try:
                         payload = fetcher(url)
                         err = None
@@ -113,10 +111,7 @@ def fetch_manifest(
 def scrape_tables(
     pages: DataFrame,
     fetcher: Callable[[str], str],
-    row_pattern: str = r"<tr[^>]*>(.*?)</tr>",
-    cell_pattern: str = r"<t[dh][^>]*>(.*?)</t[dh]>",
     url_col: str = "url",
-    max_retries: int = 3,
 ) -> DataFrame:
     """X6 — page-table scrape: for every URL, call the injected
     ``fetcher(url) -> html`` (production: a headless browser's rendered
@@ -132,8 +127,8 @@ def scrape_tables(
     """
     import re
 
-    rx_row = re.compile(row_pattern, re.S | re.I)
-    rx_cell = re.compile(cell_pattern, re.S | re.I)
+    rx_row = re.compile(r"<tr[^>]*>(.*?)</tr>", re.S | re.I)
+    rx_cell = re.compile(r"<t[dh][^>]*>(.*?)</t[dh]>", re.S | re.I)
     rx_tag = re.compile(r"<[^>]+>")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -141,7 +136,7 @@ def scrape_tables(
             out = []
             for url in pdf[url_col].tolist():
                 last_err = None
-                for _attempt in range(max_retries):
+                for _attempt in range(MAX_RETRIES):
                     try:
                         html = fetcher(url)
                         last_err = None

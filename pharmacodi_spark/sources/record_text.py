@@ -24,8 +24,6 @@ corpus scale comes from many files, not one monolith. Entry ids are
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,9 +34,6 @@ def parse_record_text(
     spark: SparkSession,
     path: str,
     header_lines: int = 55,
-    entry_delim: str = "//",
-    code_value_sep: str = "   ",
-    concat_sep: str = "|||",
     codes: list[str] | None = None,
     include_file: bool = False,
 ) -> DataFrame:
@@ -59,9 +54,7 @@ def parse_record_text(
     # skip header, split the body on exact delimiter lines ((?m)^//$ — the
     # full-line match the reference's `line == '//'` test implies)
     body_lines = F.slice(F.split("value", "\n"), header_lines + 1, _MAX_LEN)
-    entries_arr = F.split(
-        F.array_join(body_lines, "\n"), f"(?m)^{re.escape(entry_delim)}$"
-    )
+    entries_arr = F.split(F.array_join(body_lines, "\n"), "(?m)^//$")
     entries = files.select(
         "__file", F.posexplode(entries_arr).alias("entry_id", "__etext")
     )
@@ -78,7 +71,7 @@ def parse_record_text(
         "entry_id",
         "__line_pos",
         F.substring("line", 1, 2).alias("code"),
-        F.regexp_replace("line", f"^..{code_value_sep}", "").alias("val"),
+        F.regexp_replace("line", "^..   ", "").alias("val"),
     ).where(F.length("line") > 2)
 
     # deterministic in-entry order: sort values by line position before join
@@ -88,7 +81,7 @@ def parse_record_text(
                 F.array_sort(F.collect_list(F.struct("__line_pos", "val"))),
                 lambda s: s["val"],
             ),
-            concat_sep,
+            "|||",
         ).alias("joined")
     )
     grouped = per_code.groupBy("__file", "entry_id")

@@ -38,7 +38,6 @@ def read_event_stream(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int = 10,
-    max_bytes_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source event stream with the driver's events schema (json or
     parquet directory being appended to). For parquet fixtures with
@@ -46,14 +45,12 @@ def read_event_stream(
     nanosAsLong.
 
     Rate limiting: ``max_files_per_trigger`` bounds ingest per micro-batch
-    by file count, ``max_bytes_per_trigger`` by soft byte budget — the
-    admission control that keeps micro-batch state/shuffle sizes flat when
-    a backlog (or bulk backfill) lands in the source directory."""
+    by file count — the admission control that keeps micro-batch
+    state/shuffle sizes flat when a backlog (or bulk backfill) lands in the
+    source directory."""
     reader = spark.readStream.schema(EVENT_SCHEMA).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )
-    if max_bytes_per_trigger is not None:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
     return reader.json(path)
 
 
@@ -61,8 +58,6 @@ def event_stream_source(
     spark: SparkSession,
     kind: str = "files",
     path: str | None = None,
-    max_files_per_trigger: int = 10,
-    max_bytes_per_trigger: int | None = None,
     rows_per_second: int = 100,
     num_partitions: int | None = None,
     kafka_bootstrap: str | None = None,
@@ -80,7 +75,7 @@ def event_stream_source(
 
     - ``files``: the production fixture path — delegates to
       :func:`read_event_stream` (json directory, per-trigger admission
-      control by file count / byte budget).
+      control by file count).
     - ``rate``: Spark's built-in rate source projected deterministically
       into the event contract (event_id = the monotone value, user_id /
       event_type / value derived from it) — the in-environment smoke and
@@ -93,7 +88,7 @@ def event_stream_source(
     - ``socket``: the built-in line-based socket source (JSON per line),
       parsed identically — the local debugging transport.
 
-    Scale shape: per-trigger admission (files/bytes for the file source,
+    Scale shape: per-trigger admission (files for the file source,
     rows/sec × partitions for rate, Kafka's maxOffsetsPerTrigger knob —
     pass via ``spark.readStream`` options upstream if needed) bounds
     micro-batch state and shuffle size; parsing is one native from_json
@@ -101,9 +96,7 @@ def event_stream_source(
     if kind == "files":
         if path is None:
             raise ValueError("event_stream_source(kind='files') needs path=")
-        return read_event_stream(
-            spark, path, max_files_per_trigger, max_bytes_per_trigger
-        )
+        return read_event_stream(spark, path)
     if kind == "rate":
         reader = spark.readStream.format("rate").option(
             "rowsPerSecond", rows_per_second
@@ -192,14 +185,17 @@ def events_ns_to_ts(df: DataFrame, ns_col: str = "ts") -> DataFrame:
     return df.withColumn(ns_col, F.timestamp_micros(F.expr(f"{ns_col} div 1000")))
 
 
-def tumbling_window_agg(
-    events: DataFrame, width: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
+# event-time window width and late-data horizon of the windowed aggregates
+_WIDTH = "10 minutes"
+_WATERMARK = "30 minutes"
+
+
+def tumbling_window_agg(events: DataFrame) -> DataFrame:
     """count/sum per (tumbling window, event_type) with late-data tolerance.
     Batch twin: plans/series_q.py::window_tumbling."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", _WIDTH).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -211,16 +207,12 @@ def tumbling_window_agg(
     )
 
 
-def sliding_window_agg(
-    events: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding event-time window: each event lands in width/slide windows."""
+def sliding_window_agg(events: DataFrame) -> DataFrame:
+    """Sliding event-time window: each event lands in the two windows
+    (width 10 minutes, slide 5) that cover it."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", _WIDTH, "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -231,14 +223,13 @@ def sliding_window_agg(
     )
 
 
-def session_window_agg(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "60 minutes"
-) -> DataFrame:
-    """Per-user session windows (gap-merged). Batch twin (lag+cumsum):
-    plans/series_q.py::sessionization — same session count semantics."""
+def session_window_agg(events: DataFrame) -> DataFrame:
+    """Per-user session windows (merged across 30-minute gaps). Batch twin
+    (lag+cumsum): plans/series_q.py::sessionization — same session count
+    semantics."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "60 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -284,11 +275,11 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def session_totals_with_timeout(events: DataFrame, gap_secs: int = 1800) -> DataFrame:
+def session_totals_with_timeout(events: DataFrame) -> DataFrame:
     """Custom stateful sessionization via ``applyInPandasWithState`` with
     EVENT-TIME TIMEOUT: per-user state accumulates (start, last_ts, count);
-    when the watermark passes last_ts + gap the state times out and the
-    CLOSED session is emitted — the arbitrary-state twin of
+    when the watermark passes last_ts + the 30-minute gap the state times
+    out and the CLOSED session is emitted — the arbitrary-state twin of
     ``session_window`` for semantics the built-in can't express (e.g.
     emit-once-on-close, session-scoped counters, abandonment triggers).
 
@@ -298,7 +289,7 @@ def session_totals_with_timeout(events: DataFrame, gap_secs: int = 1800) -> Data
     import pandas as pd  # local: keep module import light
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_ms = gap_secs * 1000
+    gap_ms = 1800 * 1000
 
     def emit(user, sessions):
         return pd.DataFrame(
@@ -397,13 +388,13 @@ def counters_with_ttl(events: DataFrame, ttl_secs: int = 3600) -> DataFrame:
 
 
 def dedup_within_watermark(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "30 minutes"
+    events: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
     """Streaming dedup with bounded state: drop repeats of ``keys`` arriving
     within the watermark horizon (exactly-once-per-key semantics without
     unbounded state — the streaming twin of exact_dedup)."""
     keys = keys or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 def drain_foreach_batch(
@@ -427,7 +418,6 @@ def upsert_sink(
     path: str,
     key_cols: list[str],
     checkpoint_dir: str,
-    partition_by: str | None = None,
     order_col: str | None = None,
 ):
     """Streaming keyed sink: maintain a parquet table as the LATEST row per
@@ -435,8 +425,7 @@ def upsert_sink(
     merge (io.py::merge_upsert, which also seeds the table on the first
     batch). Each micro-batch is first collapsed to one row per key (max
     ``order_col`` wins — arrival order inside an unordered batch is not a
-    merge policy), then merged; with ``partition_by`` only affected
-    partitions rewrite.
+    merge policy), then merged.
 
     Checkpointing gives effectively-once table maintenance: replayed
     batches re-merge the same keys idempotently. Returns the started
@@ -455,9 +444,7 @@ def upsert_sink(
             )
         else:
             batch = batch.dropDuplicates(key_cols)
-        merge_upsert(
-            batch.sparkSession, path, batch, key_cols, partition_by=partition_by
-        )
+        merge_upsert(batch.sparkSession, path, batch, key_cols)
 
     return drain_foreach_batch(stream, do_merge, checkpoint_dir)
 

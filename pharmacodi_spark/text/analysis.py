@@ -63,31 +63,14 @@ DEFAULT_STOPWORDS = {
 }
 
 
-def token_counts(
-    df: DataFrame, content_col: str = "text", unicode_aware: bool = False
-) -> DataFrame:
+def token_counts(df: DataFrame, content_col: str = "text") -> DataFrame:
     """Whitespace + BPE-ish token counting: word tokens, subword-ish units
-    (runs of letters/digits/punctuation — a regex approximation of byte-pair
-    pretokenization), chars. ``unicode_aware=True`` swaps the ASCII token
-    classes for :func:`unicode_tokens` words and ``\\p{L}/\\p{N}``
-    subword classes (CJK/Thai chars tokenize char-level instead of
-    collapsing a line to one word); the default keeps the historical
-    ASCII contract the fixture oracles state."""
-    if unicode_aware:
-        words = unicode_tokens(content_col)
-        padded = F.regexp_replace(
-            F.col(content_col), f"([{_SPACEFREE_JAVA}])", r" $1 "
-        )
-        subwords = F.regexp_extract_all(
-            padded,
-            F.lit(r"[\p{L}\p{M}]+|[\p{N}]+|[^\p{L}\p{M}\p{N}\s]"),
-            0,
-        )
-    else:
-        words = F.split(F.col(content_col), r"\s+")
-        subwords = F.regexp_extract_all(
-            F.col(content_col), F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0
-        )
+    (runs of ASCII letters/digits/punctuation — a regex approximation of
+    byte-pair pretokenization), chars."""
+    words = F.split(F.col(content_col), r"\s+")
+    subwords = F.regexp_extract_all(
+        F.col(content_col), F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0
+    )
     return df.withColumns(
         {
             "n_words": F.size(words).cast("long"),
@@ -122,12 +105,12 @@ def text_features(df: DataFrame, content_col: str = "text") -> DataFrame:
 def language_scores(
     df: DataFrame,
     content_col: str = "text",
-    stopwords: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Language-ID heuristic: per-language stopword hit-rate over tokens +
-    argmax prediction. One pass: tokens stay in an array; each language
-    score is a filtered array size — no explode, no shuffle."""
-    stopwords = stopwords or DEFAULT_STOPWORDS
+    """Language-ID heuristic: per-language ``DEFAULT_STOPWORDS`` hit-rate
+    over tokens + argmax prediction. One pass: tokens stay in an array;
+    each language score is a filtered array size — no explode, no
+    shuffle."""
+    stopwords = DEFAULT_STOPWORDS
     words = F.split(F.lower(F.col(content_col)), r"\s+")
     n = F.greatest(F.size(words), F.lit(1))
     out = df
@@ -148,22 +131,17 @@ def repetition_metrics(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    top_gram: int = 2,
-    dup_gram: int = 3,
-    max_top_frac: float = 0.20,
-    max_dup_frac: float = 0.30,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Gopher/RefinedWeb-style repetition quality gates, per document:
 
-    - ``top{n}_cnt`` / ``top_frac``: occurrences of the single most frequent
-      ``top_gram``-gram; fraction = ``top_gram * top_cnt / n_tokens``
-      (boilerplate headers, SEO keyword stuffing);
-    - ``dup{n}_occ`` / ``dup_frac``: fraction of ``dup_gram``-gram
-      OCCURRENCES whose gram appears more than once in the doc
-      (template/loop repetition);
-    - ``keep``: both fractions under their caps — evaluated as INTEGER
-      cross-multiplications so the gate is exact in every engine.
+    - ``top_cnt`` / ``top_frac``: occurrences of the single most frequent
+      2-gram; fraction = ``2 * top_cnt / n_tokens`` (boilerplate headers,
+      SEO keyword stuffing);
+    - ``dup_occ`` / ``dup_frac``: fraction of 3-gram OCCURRENCES whose
+      gram appears more than once in the doc (template/loop repetition);
+    - ``keep``: ``top_frac ≤ 0.20`` and ``dup_frac ≤ 0.30`` — evaluated as
+      INTEGER cross-multiplications so the gate is exact in every engine.
 
     Scale shape (r12): ZERO exchanges — every metric is a per-document
     function of the doc's own gram multiset, so both counts run inside one
@@ -180,6 +158,7 @@ def repetition_metrics(
     default collapses space-free scripts to one token per line); the
     default keeps the fixture-oracle contract.
     """
+    top_gram, dup_gram = 2, 3
     toks = (
         F.col(tokens_col)
         if tokens_col is not None
@@ -272,9 +251,9 @@ def repetition_metrics(
             )
         ).alias("__m"),
     ).select(id_col, "__m.*")
-    # integer cross-multiplied gates: frac <= cap without fp comparison
-    top_scale = int(round(max_top_frac * 100))
-    dup_scale = int(round(max_dup_frac * 100))
+    # integer cross-multiplied gates: frac <= cap (in percent) without fp
+    # comparison
+    top_scale, dup_scale = 20, 30
     return out.select(
         "*",
         F.when(
@@ -308,7 +287,6 @@ def source_quality_rollup(
     group_col: str = "source",
     content_col: str = "text",
     id_col: str = "doc_id",
-    min_keep_ppm: int = 500_000,
 ) -> DataFrame:
     """Source/domain-level quality aggregation — the RefinedWeb/C4 idea
     that document filters should also roll up to their ORIGIN: a source
@@ -318,7 +296,7 @@ def source_quality_rollup(
 
     Per ``group_col``: ``n_docs``, ``n_kept`` (the Gopher repetition
     gate), ``keep_ppm`` (integer parts-per-million), mean token count,
-    and ``source_ok`` = ``keep_ppm ≥ min_keep_ppm`` (integer
+    and ``source_ok`` = ``keep_ppm ≥ 500000`` (integer
     cross-multiplication — engine-exact). Feed the flagged sources to an
     anti-join to apply the rollup (:func:`source_level_filter`).
 
@@ -348,7 +326,7 @@ def source_quality_rollup(
             ),
             (
                 F.col("n_kept") * 1_000_000
-                >= F.lit(int(min_keep_ppm)) * F.col("n_docs")
+                >= F.lit(500_000) * F.col("n_docs")
             ).alias("source_ok"),
         )
     )
@@ -371,7 +349,6 @@ def hashed_linear_score(
     weights: list[int] | None = None,
     dim: int = 4096,
     salt: str = "q",
-    threshold_centi: int = 0,
     content_col: str = "text",
     id_col: str = "doc_id",
     tokens_col: str | None = None,
@@ -384,8 +361,8 @@ def hashed_linear_score(
 
     Each token maps to feature ``idx = md5(salt‖token) mod dim``; the
     document score is the mean feature weight over token occurrences
-    (integer centi-units), and ``keep`` = ``mean ≥ threshold_centi/100``
-    evaluated as the integer cross-multiplication ``100·sum ≥ t·n``.
+    (integer centi-units), and ``keep`` = ``mean ≥ 0`` evaluated as the
+    integer cross-multiplication ``100·sum ≥ 0·n``.
 
     ``weights``: the trained weight vector (length ``dim``, centi-unit
     ints) — rides as ONE array literal, indexed per token with
@@ -457,7 +434,7 @@ def hashed_linear_score(
         F.when(
             F.col("n_tokens") > 0,
             100 * F.col("score_centi")
-            >= F.lit(int(threshold_centi)) * F.col("n_tokens"),
+            >= F.lit(0) * F.col("n_tokens"),
         )
         .otherwise(F.lit(False))
         .alias("keep"),
@@ -469,7 +446,6 @@ def hashed_lang_id(
     langs: list[str],
     weights: dict[str, list[int]] | None = None,
     dim: int = 4096,
-    salt: str = "lid",
     content_col: str = "text",
     id_col: str = "doc_id",
     tokens_col: str | None = None,
@@ -483,7 +459,7 @@ def hashed_lang_id(
     (:func:`language_scores`): coverage is whatever the injected weights
     were trained on, not a hand-curated stopword table.
 
-    Each token maps to feature ``idx = md5(salt‖token) mod dim`` ONCE
+    Each token maps to feature ``idx = md5('lid'‖token) mod dim`` ONCE
     (materialized as an int array — not re-hashed per language);
     per language, the score is the sum of its weights at those indices
     (integer centi-units). ``weights``: ``{lang: [w_0..w_{dim-1}]}`` —
@@ -535,7 +511,7 @@ def hashed_lang_id(
         toks,
         lambda t: (
             F.conv(
-                F.substring(F.md5(F.concat(F.lit(salt), t)), 1, 15), 16, 10
+                F.substring(F.md5(F.concat(F.lit("lid"), t)), 1, 15), 16, 10
             ).cast("long")
             % dim
         ).cast("int"),
@@ -594,7 +570,6 @@ def hashed_lang_id(
 
 def tokenizer_fertility(
     df: DataFrame,
-    token_pattern: str = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]",
     group_col: str = "source",
     content_col: str = "text",
     tokens_col: str | None = None,
@@ -614,7 +589,9 @@ def tokenizer_fertility(
     size; the token arrays never leave the scan), then ONE aggregate keyed
     by the domain-cardinality group — no explode, no fact-scale shuffle.
     """
-    toks = F.regexp_extract_all(content_col, F.lit(token_pattern), 0)
+    toks = F.regexp_extract_all(
+        content_col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0
+    )
     # tokens_col: pre-tokenized WORD array seam (CJK via unicode_tokens);
     # the denominator of tokens_per_100_words is whitespace-degenerate on
     # unspaced scripts (1 "word" per doc inflates fertility ∞-ward)
@@ -657,7 +634,6 @@ def lang_confusion(
     df: DataFrame,
     claimed_col: str = "lang",
     content_col: str = "text",
-    stopwords: dict[str, list[str]] | None = None,
     scored: DataFrame | None = None,
 ) -> DataFrame:
     """Claimed-vs-detected language confusion rollup: run the stopword
@@ -685,9 +661,7 @@ def lang_confusion(
     # emitting malformed SQL (the r5 skew_profile interpolation lesson)
     assert claimed_col.isidentifier(), claimed_col
     if scored is None:
-        scored = language_scores(
-            df, content_col=content_col, stopwords=stopwords
-        )
+        scored = language_scores(df, content_col=content_col)
     roll = scored.groupBy(F.col(claimed_col), F.col("pred_lang")).agg(
         F.count("*").cast("long").alias("n_docs")
     )

@@ -23,22 +23,26 @@ PII_PATTERNS: list[tuple[str, str]] = [
     (r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "[IP]"),
 ]
 
+# the boilerplate and shared-span filters: a line or span is shared once it
+# occurs in this many documents; spans are this many tokens long
+_MIN_DF = 2
+_SPAN_LEN = 5
+
 
 def redact_pii(
     df: DataFrame,
     content_col: str = "text",
     out_col: str | None = None,
-    patterns: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """Replace PII matches with typed placeholders; adds ``{out_col}`` and a
-    ``n_redactions`` count (pre/post length is not a reliable count, so the
-    count comes from tallying matches before replacement). Pure
+    """Replace ``PII_PATTERNS`` matches with typed placeholders; adds
+    ``{out_col}`` and a ``n_redactions`` count (pre/post length is not a
+    reliable count, so the count comes from tallying matches before
+    replacement). Pure
     ``regexp_replace``/``regexp_count`` chain — codegen, no UDF."""
     out_col = out_col or f"{content_col}_redacted"
-    pats = patterns if patterns is not None else PII_PATTERNS
     redacted = F.col(content_col)
     n = F.lit(0).cast("long")
-    for pat, repl in pats:
+    for pat, repl in PII_PATTERNS:
         n = n + F.regexp_count(F.col(content_col), F.lit(pat))
         redacted = F.regexp_replace(redacted, pat, repl)
     return df.withColumn(out_col, redacted).withColumn("n_redactions", n)
@@ -48,10 +52,8 @@ def strip_repeated_lines(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    min_df: int = 2,
-    line_sep: str = "\n",
 ) -> DataFrame:
-    """Remove lines that appear (identically) in ≥ ``min_df`` documents —
+    """Remove lines that appear (identically) in ≥ ``_MIN_DF`` documents —
     the line-level boilerplate filter. Returns (id, cleaned, n_removed).
 
     Shape: explode lines with position → md5 line-hash → cross-doc distinct
@@ -60,7 +62,7 @@ def strip_repeated_lines(
     aggregation. No global window, no Python."""
     lines = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(content_col), line_sep)).alias("pos", "line"),
+        F.posexplode(F.split(F.col(content_col), "\n")).alias("pos", "line"),
     ).withColumn("h", F.md5("line"))
     # only the FREQUENT lines (the boilerplate set — tiny relative to the
     # corpus) are broadcast; broadcasting the full line vocabulary would not
@@ -70,7 +72,7 @@ def strip_repeated_lines(
         .distinct()
         .groupBy("h")
         .agg(F.count("*").alias("line_df"))
-        .where(F.col("line_df") >= min_df)
+        .where(F.col("line_df") >= _MIN_DF)
     )
     tagged = lines.join(F.broadcast(boiler), "h", "left")
     kept = tagged.where(F.col("line_df").isNull())
@@ -81,7 +83,7 @@ def strip_repeated_lines(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s["line"],
             ),
-            line_sep,
+            "\n",
         ).alias("cleaned")
     )
     n_removed = removed.groupBy(id_col).agg(F.count("*").alias("n_removed"))
@@ -99,13 +101,11 @@ def strip_repeated_lines(
 
 def scrub_shared_spans(
     df: DataFrame,
-    span_len: int = 5,
-    min_df: int = 2,
     content_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact-substring scrubbing: remove every token covered by a span
-    (``span_len``-gram) that also occurs in ≥ ``min_df`` documents, keeping
+    (``_SPAN_LEN``-gram) that also occurs in ≥ ``_MIN_DF`` documents, keeping
     the rest of the document intact — the suffix-automaton-free substring
     dedup (the ``repeated_span_stats`` signal turned into an edit). Returns
     (id, scrubbed, n_tokens, n_masked).
@@ -122,6 +122,7 @@ def scrub_shared_spans(
     (id, pos, token) stream twice: the anti-join and the collect_list
     reassembly). Guide §2.3/§2.4 + §8 (decide with small rows — hashes
     and starts; never move the payload)."""
+    span_len = _SPAN_LEN
     toks_expr = F.split(F.col(content_col), r"\s+")
     # spread a single-split scan before the span-hash work (no-op at
     # corpus scale, §2.5); the identical exchange under the three docs
@@ -143,7 +144,7 @@ def scrub_shared_spans(
         docs.select(F.col(id_col), F.explode(F.array_distinct(span_arr)).alias("h"))
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("span_df"))
-        .where(F.col("span_df") >= min_df)
+        .where(F.col("span_df") >= _MIN_DF)
         .select("h")
     )
     # per-doc hit starts: spans that are shared, as ONE array per doc
@@ -185,13 +186,11 @@ def scrub_shared_spans(
 
 def repeated_span_stats(
     df: DataFrame,
-    span_len: int = 5,
-    min_df: int = 2,
     content_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Per-document count/fraction of token spans (``span_len``-grams) that
-    also occur in ≥ ``min_df`` documents — the exact-substring duplication
+    """Per-document count/fraction of token spans (``_SPAN_LEN``-grams) that
+    also occur in ≥ ``_MIN_DF`` documents — the exact-substring duplication
     signal used for contamination checks and boilerplate scoring when the
     corpus has no line structure. All counting on md5 span hashes.
 
@@ -208,16 +207,16 @@ def repeated_span_stats(
         df.select(F.col(id_col), F.col(content_col)), id_col
     ).select(
         F.col(id_col),
-        F.transform(ngram_col(content_col, span_len), F.md5).alias("__hs"),
+        F.transform(ngram_col(content_col, _SPAN_LEN), F.md5).alias("__hs"),
     )
-    # shared spans only (df ≥ min_df); joined by shuffle, not broadcast —
+    # shared spans only (df ≥ _MIN_DF); joined by shuffle, not broadcast —
     # unlike line boilerplate, the shared-span set of a web corpus can be
     # a large fraction of the span vocabulary
     shared = (
         docs.select(F.col(id_col), F.explode(F.array_distinct("__hs")).alias("h"))
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("span_df"))
-        .where(F.col("span_df") >= min_df)
+        .where(F.col("span_df") >= _MIN_DF)
         .select("h")
     )
     hits = (
@@ -360,7 +359,6 @@ def bloom_decontaminate_against(
     eval_df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 13,
     tokens_col: str | None = None,
     n_bits: int = 1 << 20,
     n_hashes: int = 3,
@@ -389,7 +387,7 @@ def bloom_decontaminate_against(
     ``load_bloom_bitmap`` output to reuse the persisted sidecar instead
     of re-aggregating the eval grams per corpus refresh (build once
     when the benchmark suite changes, screen every refresh); it MUST
-    have been built over the same ``n``-gram md5 hashes
+    have been built over the same 13-gram md5 hashes
     (``ngram_hash_rows`` of the same eval set), since a mismatched
     bitmap silently filters the wrong key space."""
     from pharmacodi_spark.operators.bloom import (
@@ -398,7 +396,7 @@ def bloom_decontaminate_against(
     )
 
     eval_grams = (
-        _spread_gram_rows(eval_df, content_col, id_col, n, tokens_col)
+        _spread_gram_rows(eval_df, content_col, id_col, 13, tokens_col)
         .select("gh")
         .distinct()
     )
@@ -410,7 +408,7 @@ def bloom_decontaminate_against(
     # distinct (same rows — the id rides every row), so under the bloom
     # prefilter NO full gram exchange remains at all
     cand = _spread_gram_rows(
-        train, content_col, id_col, n, tokens_col, distinct_per_doc=True
+        train, content_col, id_col, 13, tokens_col, distinct_per_doc=True
     ).where(bloom_condition(words, F.col("gh"), n_hashes))
     hits = (
         cand

@@ -374,7 +374,6 @@ def contamination_safe_splits(
     id_col: str = "doc_id",
     src: str = "doc_a",
     dst: str = "doc_b",
-    salt: str = "split",
     edges_canonical: bool = False,
 ) -> list[DataFrame]:
     """Train/val/test splits that near-dup clusters can never straddle:
@@ -392,7 +391,7 @@ def contamination_safe_splits(
         edges_canonical=edges_canonical,
     )
     keyed = df.join(comp.select(id_col, "component"), id_col)
-    return hash_split(keyed, "component", fractions, salt)
+    return hash_split(keyed, "component", fractions, "split")
 
 
 def dup_cluster_histogram(

@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 
 from pharmacodi_spark.operators.partitioning import spread_small_scan
 
+# surprisal scores floor(log2(ratio · 2^20)): the ratio's fixed-point scale
+SURPRISAL_SCALE_BITS = 20
+# Kneser–Ney absolute discount D = 3/4, as (numerator, denominator)
+_KN_DISCOUNT = (3, 4)
+
 
 def _tokens(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     # NO spread guard (r12, measured): split+explode into a map-side
@@ -69,12 +74,11 @@ def idf_table(
 
 def tfidf_top_terms(
     df: DataFrame,
-    k: int = 3,
     content_col: str = "text",
     id_col: str = "doc_id",
     idf_fn=None,
 ) -> DataFrame:
-    """(id, token, tf, score) — each document's top-``k`` terms by
+    """(id, token, tf, score) — each document's top-3 terms by
     tf·idf, ties broken lexicographically for determinism. The idf join is
     a broadcast (vocabulary ≪ corpus); the per-doc top-k is a window over
     (doc, score) — partitioned by doc, so no global single-task window.
@@ -97,7 +101,7 @@ def tfidf_top_terms(
     w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("token"))
     return (
         scored.withColumn("__rank", F.row_number().over(w))
-        .where(F.col("__rank") <= k)
+        .where(F.col("__rank") <= 3)
         .drop("__rank")
     )
 
@@ -111,14 +115,13 @@ def ngram_col(content_col: str, n: int) -> Column:
 
 def top_ngrams(
     df: DataFrame,
-    n: int = 2,
     k: int = 20,
     content_col: str = "text",
 ) -> DataFrame:
-    """Corpus top-``k`` n-grams by occurrence count (ties broken
+    """Corpus top-``k`` bigrams by occurrence count (ties broken
     lexicographically). Compiles to explode → partial-count → shuffle of
     (ngram, partial) pairs → TakeOrderedAndProject."""
-    grams = df.select(F.explode(ngram_col(content_col, n)).alias("ngram"))
+    grams = df.select(F.explode(ngram_col(content_col, 2)).alias("ngram"))
     counts = grams.groupBy("ngram").agg(F.count("*").alias("n_occurrences"))
     return counts.orderBy(F.col("n_occurrences").desc(), F.col("ngram")).limit(k)
 
@@ -158,13 +161,12 @@ def unigram_surprisal(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    scale_bits: int = 20,
     tokens_col: str | None = None,
     lm: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document unigram surprisal — the corpus-LM quality filter (the
     CCNet-style perplexity gate, with the corpus itself as the language
-    model): each token scores ``floor(log2(N_tokens·2^scale_bits /
+    model): each token scores ``floor(log2(N_tokens·2^20 /
     count(token)))`` bits (integer log2 via ``length(bin(x)) − 1`` — exact
     in every engine, unlike libm ``ln``), and a document reports
     (n_words, sum_bits, mean_bits). High mean ⇒ rare-token-heavy documents
@@ -218,7 +220,7 @@ def unigram_surprisal(
             (
                 F.length(F.bin(F.expr("n div coalesce(c, 1L)")))
                 - 1
-                + scale_bits
+                + SURPRISAL_SCALE_BITS
             ).alias("bits"),
         )
     )
@@ -376,12 +378,11 @@ def bigram_surprisal(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    scale_bits: int = 20,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Bigram-LM conditional surprisal — one order deeper than
     :func:`unigram_surprisal` (the corpus as a first-order Markov LM):
-    each transition ``x→y`` scores ``floor(log2(c(x)·2^scale_bits /
+    each transition ``x→y`` scores ``floor(log2(c(x)·2^20 /
     c(x,y)))`` bits (``-log2 p̂(y|x)``, integer log2 via
     ``length(bin(·))−1`` — exact in every engine); a document reports
     ``(n_transitions, sum_bits, mean_bits)`` over its adjacent pairs.
@@ -450,7 +451,7 @@ def bigram_surprisal(
             # shift-free form (c1 >= c2 >= 1 — prefix count bounds the
             # bigram count), same overflow guard as unigram_surprisal
             (
-                F.length(F.bin(F.expr("c1 div c2"))) - 1 + scale_bits
+                F.length(F.bin(F.expr("c1 div c2"))) - 1 + SURPRISAL_SCALE_BITS
             ).alias("bits"),
         )
     )
@@ -468,7 +469,6 @@ def source_signature_terms(
     k: int = 5,
     group_col: str = "source",
     content_col: str = "text",
-    frac_bits: int = 10,
 ) -> DataFrame:
     """Class-TF-IDF signature terms (the BERTopic c-TF-IDF shape): the k
     most DISTINCTIVE terms per origin — high frequency inside the group,
@@ -494,9 +494,7 @@ def source_signature_terms(
     tf = toks.groupBy(group_col, "term").agg(F.count("*").alias("tf"))
     sf = tf.groupBy("term").agg(F.count("*").alias("sf"))
     n_groups = df.select(group_col).distinct().count()
-    idf = ilog2_fp(F.lit(int(n_groups)), frac_bits) - ilog2_fp(
-        F.col("sf"), frac_bits
-    )
+    idf = ilog2_fp(F.lit(int(n_groups))) - ilog2_fp(F.col("sf"))
     scored = tf.join(sf, "term").select(
         group_col,
         "term",
@@ -581,9 +579,7 @@ def corpus_report(
 def detect_phrases(
     df: DataFrame,
     min_count: int = 2,
-    threshold_fp: int = 100,
     content_col: str = "text",
-    scale: int = 100,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Collocation detection (Mikolov et al. 2013 phrases): score every
@@ -591,9 +587,9 @@ def detect_phrases(
     ``min_count`` — pairs scoring above threshold are phrases worth
     merging into single tokens before training ("new york" → "new_york").
 
-    The gate is evaluated as the integer cross-multiplication
-    ``(c_ab − δ)·N·scale ≥ threshold_fp·c_a·c_b`` — engine-exact, no
-    division; ``score_fp`` (×scale, floor) ships for inspection.
+    The gate score ≥ 1 is evaluated as the integer cross-multiplication
+    ``(c_ab − δ)·N·100 ≥ 100·c_a·c_b`` — engine-exact, no division;
+    ``score_fp`` (×100, floor) ships for inspection.
 
     Scale shape: token/bigram counts collapse map-side (the two
     fact-scale shuffles are keyed by token and pair); N rides as a 1-row
@@ -642,12 +638,12 @@ def detect_phrases(
         "c_ab",
         "c_a",
         "c_b",
-        F.expr(f"((c_ab - {d}) * n * {int(scale)}) div (c_a * c_b)")
+        F.expr(f"((c_ab - {d}) * n * 100) div (c_a * c_b)")
         .cast("long")
         .alias("score_fp"),
         (
-            (F.col("c_ab") - d) * F.col("n") * int(scale)
-            >= int(threshold_fp) * F.col("c_a") * F.col("c_b")
+            (F.col("c_ab") - d) * F.col("n") * 100
+            >= 100 * F.col("c_a") * F.col("c_b")
         ).alias("is_phrase"),
     )
 
@@ -657,7 +653,6 @@ def apply_phrases(
     phrases: list[tuple[str, str]],
     content_col: str = "text",
     out_col: str = "phrased_text",
-    joiner: str = "_",
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Merge detected collocations into single tokens, greedy
@@ -691,7 +686,7 @@ def apply_phrases(
                 merged,
                 F.concat(
                     acc["out"],
-                    F.array(F.concat(acc["pend"], F.lit(joiner), tok)),
+                    F.array(F.concat(acc["pend"], F.lit("_"), tok)),
                 ),
             )
             .when(acc["pend"] == "", acc["out"])
@@ -765,11 +760,10 @@ def vocab_coverage(
 
 def ngram_diversity(
     df: DataFrame,
-    n: int = 2,
     content_col: str = "text",
     group_col: str = "source",
 ) -> DataFrame:
-    """Per-group n-gram type/token ratio — the cross-document diversity
+    """Per-group bigram type/token ratio — the cross-document diversity
     signal (a source whose crawl is template-stamped repeats the same
     n-grams everywhere and scores a low ``diversity_ppm``; Gopher's
     repetition gates catch this WITHIN a document, this catches it ACROSS
@@ -782,7 +776,7 @@ def ngram_diversity(
     ppm is a double floor-div, exact cross-engine below 2⁵³ occurrences."""
     grams = df.select(
         F.col(group_col),
-        F.explode(ngram_col(content_col, n)).alias("ngram"),
+        F.explode(ngram_col(content_col, 2)).alias("ngram"),
     )
     per = (
         grams.select(group_col, F.md5("ngram").alias("gh"))
@@ -970,13 +964,11 @@ def kneser_ney_scores(
     scored: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    discount_num: int = 3,
-    discount_den: int = 4,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Kneser–Ney bigram LM scoring (Kneser & Ney 1995; the smoothing step
     up from :func:`stupid_backoff_scores` — VERDICT r6 item 4): absolute
-    discounting ``D = discount_num/discount_den`` (default 3/4) with the
+    discounting ``D = 3/4`` (``_KN_DISCOUNT``) with the
     CONTINUATION-count unigram backoff that makes KN the reference
     smoother — a word's backoff mass is how many distinct contexts it
     follows (type count), not how often it occurs (token count), so
@@ -1011,8 +1003,6 @@ def kneser_ney_scores(
     """
     from pharmacodi_spark.barrier import stage_barrier
     from pharmacodi_spark.text.retrieval import ilog2_fp
-
-    assert 0 < discount_num < discount_den
 
     def toks(d: DataFrame) -> DataFrame:
         # tokens_col: pre-tokenized array seam (CJK via unicode_tokens);
@@ -1059,7 +1049,7 @@ def kneser_ney_scores(
         bigrams(toks(scored)), name="kn_occ"
     )  # feeds distinct + score-back
     dt = occ.select("w1", "w2").distinct()
-    num, den = F.lit(int(discount_num)), F.lit(int(discount_den))
+    num, den = (F.lit(x) for x in _KN_DISCOUNT)
     scored_b = (
         dt.join(bi, ["w1", "w2"], "left")
         .join(ctx, "w1", "left")
@@ -1120,8 +1110,6 @@ def kneser_ney3_scores(
     scored: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    discount_num: int = 3,
-    discount_den: int = 4,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Trigram Kneser–Ney LM scoring (VERDICT r7 item 4) — the standard
@@ -1160,8 +1148,6 @@ def kneser_ney3_scores(
     """
     from pharmacodi_spark.barrier import stage_barrier
     from pharmacodi_spark.text.retrieval import ilog2_fp
-
-    assert 0 < discount_num < discount_den
 
     def toks(d: DataFrame) -> DataFrame:
         # tokens_col: pre-tokenized array seam (CJK via unicode_tokens);
@@ -1215,7 +1201,7 @@ def kneser_ney3_scores(
 
     occ = stage_barrier(trigrams(toks(scored)), name="kn3_occ")
     dt = occ.select("w1", "w2", "w3").distinct()
-    num, den = F.lit(int(discount_num)), F.lit(int(discount_den))
+    num, den = (F.lit(x) for x in _KN_DISCOUNT)
     p_cont = ilog2_fp(F.coalesce(F.col("ncont"), F.lit(0)) + 1) - ilog2_fp(
         F.col("t_types") + 1
     )

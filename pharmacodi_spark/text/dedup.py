@@ -101,20 +101,19 @@ def minhash_near_dup_pairs(
     content_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 16,
-    bands: int = 4,
-    shingle_len: int = 5,
     max_cell_size: int | None = None,
 ) -> DataFrame:
-    """LSH candidate near-dup pairs (doc_a < doc_b): band the signature,
-    bucket by (band, hash of the band's rows), expand ordered pairs within
-    each bucket array — no self-join, one signature computation, one
-    shuffle (see :func:`md5_band_pairs` for the physical rationale).
+    """LSH candidate near-dup pairs (doc_a < doc_b) over 5-shingle
+    signatures in 4 bands: band the signature, bucket by (band, hash of the
+    band's rows), expand ordered pairs within each bucket array — no
+    self-join, one signature computation, one shuffle (see
+    :func:`md5_band_pairs` for the physical rationale).
     ``max_cell_size`` arms the exact hot-bucket guard (see
     :func:`cell_pair_rows`)."""
-    assert num_hashes % bands == 0, "num_hashes must divide into bands"
-    sig = minhash_signatures(df, content_col, id_col, num_hashes, shingle_len)
+    assert num_hashes % 4 == 0, "num_hashes must divide into 4 bands"
+    sig = minhash_signatures(df, content_col, id_col, num_hashes)
     return pairs_from_cells(
-        band_cells(sig, id_col, num_hashes, bands), id_col, max_cell_size
+        band_cells(sig, id_col, num_hashes, 4), id_col, max_cell_size
     )
 
 
@@ -971,7 +970,6 @@ def estimate_jaccard(
     id_col: str = "doc_id",
     src: str = "doc_a",
     dst: str = "doc_b",
-    scale_ppm: int = 1_000_000,
 ) -> DataFrame:
     """The MinHash Jaccard ESTIMATOR — the step between LSH candidate
     generation and an (expensive) exact verify: for each candidate pair,
@@ -1006,7 +1004,7 @@ def estimate_jaccard(
             src,
             dst,
             "n_equal",
-            F.expr(f"(n_equal * {int(scale_ppm)}) div {int(num_hashes)}")
+            F.expr(f"(n_equal * 1000000) div {int(num_hashes)}")
             .cast("long")
             .alias("est_ppm"),
         )
@@ -1065,11 +1063,9 @@ def source_overlap_minhash(
     group_col: str = "source",
     content_col: str = "text",
     num_hashes: int = 32,
-    shingle_len: int = 5,
-    salt: str = "so",
 ) -> DataFrame:
     """Corpus-level overlap matrix: MinHash-estimated Jaccard similarity
-    between the shingle SETS of every pair of origins — the
+    between the 5-shingle SETS of every pair of origins — the
     are-these-two-sources-mirrors diagnostic (a high off-diagonal entry
     means one "source" largely re-hosts another, and per-source token
     budgets double-count it).
@@ -1104,13 +1100,13 @@ def source_overlap_minhash(
     shing = (
         base.select(
             F.col(group_col),
-            F.explode(_shingle_col(content_col, shingle_len)).alias("sh"),
+            F.explode(_shingle_col(content_col, 5)).alias("sh"),
         )
         # digest in its own projection: g1/g2 reference it twice, and
         # CollapseProject keeps non-cheap expressions single-evaluated
         .select(
             group_col,
-            F.md5(F.concat(F.lit(f"{salt}:"), F.col("sh"))).alias("m"),
+            F.md5(F.concat(F.lit("so:"), F.col("sh"))).alias("m"),
         )
         .select(
             group_col,

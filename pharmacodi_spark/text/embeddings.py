@@ -51,12 +51,11 @@ def _md5_60(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def hashed_signed_bow(
-    texts: Sequence[str], dim: int, salt: str = "e", sign_salt: str = "s"
-) -> np.ndarray:
+def hashed_signed_bow(texts: Sequence[str], dim: int) -> np.ndarray:
     """Signed feature-hashing bag-of-words over whitespace tokens
     (empty tokens dropped — the corpus-wide convention): token ``w``
-    contributes ``sign(w)`` to ``vec[md5_60(salt||w) % dim]``. Counts are
+    contributes ``sign(w) = ±1 by md5_60('s'||w) parity`` to
+    ``vec[md5_60('e'||w) % dim]``. Counts are
     accumulated in int64 and emitted float32 (exact: per-doc magnitudes
     sit far below 2^24). Non-string/empty cells encode to the zero
     vector."""
@@ -71,20 +70,18 @@ def hashed_signed_bow(
                 continue
             hit = memo.get(w)
             if hit is None:
-                j = _md5_60(salt + w) % dim
-                s = 1 if _md5_60(sign_salt + w) % 2 == 0 else -1
+                j = _md5_60("e" + w) % dim
+                s = 1 if _md5_60("s" + w) % 2 == 0 else -1
                 hit = memo[w] = (j, s)
             row[hit[0]] += hit[1]
     return out.astype(np.float32)
 
 
-def make_hash_encoder(
-    dim: int, salt: str = "e", sign_salt: str = "s"
-) -> Callable[[Sequence[str]], np.ndarray]:
+def make_hash_encoder(dim: int) -> Callable[[Sequence[str]], np.ndarray]:
     """Bind the stand-in into the encoder contract:
     ``encoder(texts) -> float32 ndarray of shape (len(texts), dim)`` —
     the same contract a real model adapter implements."""
-    return lambda texts: hashed_signed_bow(texts, dim, salt, sign_salt)
+    return lambda texts: hashed_signed_bow(texts, dim)
 
 
 def encode_documents(

@@ -32,9 +32,9 @@ Contract (both paths):
    LAST, so double-escaped text stays literal — html.unescape semantics);
    the parser seam decodes the full table.
 4. Whitespace collapses to single spaces, blocks are trimmed.
-5. A block is MAIN CONTENT iff its text length ≥ ``min_block_chars`` AND
-   its link density (chars inside ``<a>`` ÷ block chars) ≤
-   ``max_link_density_pct`` — the classic boilerplate heuristic: nav bars
+5. A block is MAIN CONTENT iff its text length ≥ 20 chars AND its link
+   density (chars inside ``<a>`` ÷ block chars) ≤ 50% — the classic
+   boilerplate heuristic: nav bars
    and footers are short and link-dense.
 6. Kept blocks join with a single space.
 
@@ -60,6 +60,11 @@ _BLOCK_TAGS = (
 )
 
 _BLOCK_SPLIT_RE = r"(?i)</?(?:%s)(?:[\s/][^>]*)?>" % "|".join(_BLOCK_TAGS)
+
+#: main-text blocks keep at least this many chars of text, at most this
+#: percentage of it inside links
+_MIN_BLOCK_CHARS = 20
+_MAX_LINK_DENSITY_PCT = 50
 
 #: entity → replacement, applied in order (&amp; LAST: "&amp;nbsp;" must
 #: decode to the literal "&nbsp;", not to a space — html.unescape parity)
@@ -98,11 +103,7 @@ def strip_html_tags(html) -> Column:
     return _block_text(_scrub(h))
 
 
-def extract_main_text(
-    html,
-    min_block_chars: int = 20,
-    max_link_density_pct: int = 50,
-) -> Column:
+def extract_main_text(html) -> Column:
     """Main-content extraction as ONE native expression (see module
     contract): scrub → split into blocks at block-level tags → per block,
     text + linked-text length → keep long, low-link-density blocks → join.
@@ -134,10 +135,10 @@ def extract_main_text(
     )
     kept = F.filter(
         scored,
-        lambda s: (F.length(s["txt"]) >= F.lit(int(min_block_chars)))
+        lambda s: (F.length(s["txt"]) >= F.lit(_MIN_BLOCK_CHARS))
         & (
             F.lit(100) * s["linked_len"]
-            <= F.lit(int(max_link_density_pct)) * F.length(s["txt"])
+            <= F.lit(_MAX_LINK_DENSITY_PCT) * F.length(s["txt"])
         ),
     )
     return F.array_join(F.transform(kept, lambda s: s["txt"]), " ")
@@ -147,20 +148,11 @@ def html_to_text(
     df: DataFrame,
     html_col: str = "html",
     out_col: str = "text",
-    min_block_chars: int = 20,
-    max_link_density_pct: int = 50,
 ) -> DataFrame:
     """DataFrame form of :func:`extract_main_text` — the optional FIRST
     stage of a curation cascade: crawled pages in, gate-ready prose out,
     one zero-shuffle projection."""
-    return df.withColumn(
-        out_col,
-        extract_main_text(
-            html_col,
-            min_block_chars=min_block_chars,
-            max_link_density_pct=max_link_density_pct,
-        ),
-    )
+    return df.withColumn(out_col, extract_main_text(html_col))
 
 
 # ---------------------------------------------------------------------------
@@ -168,9 +160,7 @@ def html_to_text(
 # ---------------------------------------------------------------------------
 
 
-def _parse_main_text(
-    page: str, min_block_chars: int, max_link_density_pct: int
-) -> str:
+def _parse_main_text(page: str) -> str:
     """Single-page extraction with the stdlib parser — the same contract
     as :func:`extract_main_text`, but attribute-safe and full-entity
     (convert_charrefs handles the whole named/numeric table)."""
@@ -239,8 +229,8 @@ def _parse_main_text(
     kept = [
         txt
         for txt, lnk in p.blocks
-        if len(txt) >= min_block_chars
-        and 100 * len(lnk) <= max_link_density_pct * len(txt)
+        if len(txt) >= _MIN_BLOCK_CHARS
+        and 100 * len(lnk) <= _MAX_LINK_DENSITY_PCT * len(txt)
     ]
     return " ".join(kept)
 
@@ -249,8 +239,6 @@ def extract_main_text_parsed(
     df: DataFrame,
     html_col: str = "html",
     out_col: str = "text",
-    min_block_chars: int = 20,
-    max_link_density_pct: int = 50,
 ) -> DataFrame:
     """Main-content extraction through the stdlib ``html.parser`` seam —
     Arrow-batched ``mapInPandas``, same contract as the native path, for
@@ -269,7 +257,7 @@ def extract_main_text_parsed(
         for pdf in batches:
             pdf = pdf.copy()
             pdf[out_col] = [
-                _parse_main_text(h, min_block_chars, max_link_density_pct)
+                _parse_main_text(h)
                 for h in pdf[html_col].astype("string").fillna("")
             ]
             yield pdf
@@ -282,7 +270,6 @@ def extract_links(
     html_col: str = "html",
     id_col: str = "doc_id",
     out_col: str = "href",
-    absolute_only: bool = True,
 ) -> DataFrame:
     """(id, href) rows: every ``<a href="...">`` / ``<a href='...'>``
     target on the page — the web-graph edge extractor feeding host-level
@@ -290,10 +277,9 @@ def extract_links(
     standard second-order quality signal next to content gates). Native
     ``regexp_extract_all`` over the scrubbed page (script/style/title
     bodies can contain fake anchors), one explode; empty hrefs dropped.
-    ``absolute_only`` (default) keeps only absolute http(s) targets —
-    relative (``/about``) and non-web (``mailto:``, ``javascript:``)
-    hrefs would map to garbage hosts in downstream ``url_host`` edges
-    (ADVICE r8); pass ``False`` to get the raw href stream.
+    Only absolute http(s) targets are kept — relative (``/about``) and
+    non-web (``mailto:``, ``javascript:``) hrefs would map to garbage
+    hosts in downstream ``url_host`` edges (ADVICE r8).
     Pages never shuffle — the output rows are (id, short string)."""
     h = _scrub(F.col(html_col) if isinstance(html_col, str) else html_col)
     links = F.concat(
@@ -307,16 +293,13 @@ def extract_links(
     out = df.select(
         F.col(id_col), F.explode(links).alias(out_col)
     ).where(F.col(out_col) != "")
-    if absolute_only:
-        out = out.where(F.col(out_col).rlike(r"(?i)^https?://"))
-    return out
+    return out.where(F.col(out_col).rlike(r"(?i)^https?://"))
 
 
 def extract_anchor_texts(
     df: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    absolute_only: bool = True,
 ) -> DataFrame:
     """(id, href, anchor) rows: every ``<a href="...">`` /
     ``<a href='...'>`` WITH its rendered anchor text (inline tags
@@ -327,8 +310,8 @@ def extract_anchor_texts(
     anchor rollups ride next to the link-graph rank as curation priors.
     Native ``regexp_extract_all`` per quote style over the scrubbed page
     (href group + text group from the SAME pattern, zipped by position),
-    one explode; empty hrefs dropped. ``absolute_only`` (default) keeps
-    only absolute http(s) targets — relative/``mailto:`` hrefs would
+    one explode; empty hrefs dropped. Only absolute http(s) targets are
+    kept — relative/``mailto:`` hrefs would
     accumulate garbage host keys in the rollup (ADVICE r8)."""
     h = _scrub(F.col(html_col) if isinstance(html_col, str) else html_col)
     dq = r'(?is)<a[\s/][^>]*href\s*=\s*"([^"]*)"[^>]*>(.*?)</a\s*>'
@@ -351,19 +334,15 @@ def extract_anchor_texts(
         )
         .where(F.col("href") != "")
     )
-    if absolute_only:
-        out = out.where(F.col("href").rlike(r"(?i)^https?://"))
-    return out
+    return out.where(F.col("href").rlike(r"(?i)^https?://"))
 
 
 def anchor_term_rollup(
     df: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    k: int = 3,
-    strip_www: bool = True,
 ) -> DataFrame:
-    """Top-``k`` anchor-text terms per TARGET host: what the rest of the
+    """Top-3 anchor-text terms per TARGET host: what the rest of the
     corpus calls each domain — ``(host, token, n, rank)`` with rank by
     (count desc, token asc). The host-level companion to
     :func:`extract_links`' PageRank prior.
@@ -378,7 +357,7 @@ def anchor_term_rollup(
 
     links = extract_anchor_texts(df, html_col, id_col)
     toks = links.select(
-        url_host("href", strip_www=strip_www).alias("host"),
+        url_host("href").alias("host"),
         F.explode(
             F.filter(F.split(F.col("anchor"), " "), lambda x: x != "")
         ).alias("token"),
@@ -389,5 +368,5 @@ def anchor_term_rollup(
     w = Window.partitionBy("host").orderBy(F.desc("n"), F.asc("token"))
     return (
         counts.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= int(k))
+        .where(F.col("rank") <= 3)
     )

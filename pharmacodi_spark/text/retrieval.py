@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.text.similarity import SCORER_BATCH_ROWS, VEC_QUANT
+
 #: fixed-point fractional bits shared by the Spark and oracle twins
 FP_BITS = 10
 
@@ -153,10 +155,7 @@ def hybrid_rrf_topk(
     query_terms: "Sequence[str]",
     query_weights: "Sequence[int]",
     *,
-    k: int = 10,
     cand: int = 50,
-    rrf_k: int = 60,
-    rrf_scale_bits: int = 20,
     id_col: str = "doc_id",
     vec_id_col: str = "vec_id",
 ) -> DataFrame:
@@ -166,7 +165,7 @@ def hybrid_rrf_topk(
     paraphrase; RRF needs no score calibration between the two systems).
 
     Each retriever contributes its top-``cand`` candidates; a document's
-    fused score is ``Σ_systems 2^rrf_scale_bits div (rrf_k + rank)``
+    fused score is ``Σ_systems 2^20 div (60 + rank)``
     (integer fixed point — engine-exact, unlike float 1/(k+r) sums whose
     addition order varies). Documents found by only one system get only
     that term. Ties break (fused desc, id).
@@ -181,7 +180,7 @@ def hybrid_rrf_topk(
 
     from pharmacodi_spark.text.similarity import int8_weighted_topk
 
-    scale = 1 << rrf_scale_bits
+    scale = 1 << 20
     bm = bm25_scores(docs, query_terms, k=cand, id_col=id_col)
     wb = Window.orderBy(F.col("score_fp").desc(), F.col(id_col))
     bm_r = bm.select(
@@ -199,16 +198,16 @@ def hybrid_rrf_topk(
         "vec_rank",
         (
             F.coalesce(
-                F.expr(f"{scale} div ({int(rrf_k)} + text_rank)"), F.lit(0)
+                F.expr(f"{scale} div (60 + text_rank)"), F.lit(0)
             )
             + F.coalesce(
-                F.expr(f"{scale} div ({int(rrf_k)} + vec_rank)"), F.lit(0)
+                F.expr(f"{scale} div (60 + vec_rank)"), F.lit(0)
             )
         )
         .cast("long")
         .alias("rrf_fp"),
     )
-    return fused.orderBy(F.col("rrf_fp").desc(), F.col(id_col)).limit(k)
+    return fused.orderBy(F.col("rrf_fp").desc(), F.col(id_col)).limit(10)
 
 
 def rerank_with_scorer(
@@ -217,7 +216,6 @@ def rerank_with_scorer(
     query_col: str = "query",
     content_col: str = "text",
     id_col: str = "doc_id",
-    batch_size: int = 64,
     k: int | None = None,
 ):
     """Cross-encoder re-rank seam: score (query, document) candidate pairs
@@ -230,7 +228,7 @@ def rerank_with_scorer(
     is a seam, the orchestration is real dataflow).
 
     Runs inside ``mapInPandas`` — model inference happens executor-side
-    in Arrow batches sliced to ``batch_size`` (GPU-friendly), candidate
+    in Arrow batches sliced to ``SCORER_BATCH_ROWS`` (GPU-friendly), candidate
     text never moves to the driver.  Output adds ``ce_score`` (double)
     and, with ``k``, keeps the top-k per query via a per-query window
     (candidate lists are bounded, so the window is metadata-scale).
@@ -249,8 +247,8 @@ def rerank_with_scorer(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for i in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[i : i + batch_size]
+            for i in range(0, len(pdf), SCORER_BATCH_ROWS):
+                chunk = pdf.iloc[i : i + SCORER_BATCH_ROWS]
                 scores = scorer(
                     chunk[query_col].tolist(), chunk[content_col].tolist()
                 )
@@ -275,10 +273,11 @@ def rerank_with_scorer(
     return out
 
 
-def ilog2_fp_py(x: int, frac_bits: int = FP_BITS) -> int:
+def ilog2_fp_py(x: int) -> int:
     """Pure-Python twin of :func:`ilog2_fp` for driver-side metadata
     (rank-discount tables, fixed-point constants): same shift-first
     formula, same floor quantization, exact for any positive int."""
+    frac_bits = FP_BITS
     assert x >= 1
     e = x.bit_length() - 1
     m = x - (1 << e)
@@ -289,15 +288,13 @@ def ilog2_fp_py(x: int, frac_bits: int = FP_BITS) -> int:
     return (e << frac_bits) + frac
 
 
-def ndcg_discounts(k: int, frac_bits: int = FP_BITS) -> list[int]:
+def ndcg_discounts(k: int) -> list[int]:
     """The nDCG rank-discount table ``1/log2(i+1)`` for ranks 1..k in
     fixed point: ``disc[i] = FP² div ilog2_fp(i+1)`` — positive-integer
     truncating division, identical in every engine; ``disc[1] = FP``
     exactly (log2 2 = 1 is exact in the interpolation)."""
-    fp = 1 << frac_bits
-    return [
-        (fp * fp) // ilog2_fp_py(i + 1, frac_bits) for i in range(1, k + 1)
-    ]
+    fp = 1 << FP_BITS
+    return [(fp * fp) // ilog2_fp_py(i + 1) for i in range(1, k + 1)]
 
 
 def retrieval_ndcg(
@@ -305,8 +302,6 @@ def retrieval_ndcg(
     k: int = 10,
     query_mod: int = 23,
     max_probes: int = 100,
-    scale: int = 10000,
-    frac_bits: int = FP_BITS,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
@@ -334,7 +329,7 @@ def retrieval_ndcg(
     the discount/prefix tables are k-length literals."""
     from pyspark.sql import Window
 
-    disc = ndcg_discounts(k, frac_bits)
+    disc = ndcg_discounts(k)
     psum = [0]
     for d in disc:
         psum.append(psum[-1] + d)
@@ -343,7 +338,7 @@ def retrieval_ndcg(
 
     q = F.transform(
         F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast(
+        lambda x: F.floor(x.cast("double") * VEC_QUANT + F.lit(0.5)).cast(
             "long"
         ),
     )

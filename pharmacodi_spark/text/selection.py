@@ -42,7 +42,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pharmacodi_spark.functions.scalar import int_array_lit
-from pharmacodi_spark.operators.partitioning import spread_small_scan
 from pharmacodi_spark.text.retrieval import FP_BITS, ilog2_fp
 
 
@@ -70,7 +69,6 @@ def dsir_train_weights(
     df: DataFrame,
     target: Column,
     dim: int = 1024,
-    frac_bits: int = FP_BITS,
     salt: str = "d",
     content_col: str = "text",
 ) -> list[int]:
@@ -79,7 +77,7 @@ def dsir_train_weights(
     ``target`` is a boolean Column marking the target-domain rows (the
     "high quality seed" — a language, a source allowlist, a curated id
     set).  Returns ``λ[b] = il(ct_b+1) − il(Tt+dim) − il(cr_b+1) +
-    il(Tr+dim)`` for every bucket, fixed-point with ``frac_bits``
+    il(Tr+dim)`` for every bucket, fixed-point with ``FP_BITS``
     fractional bits; unseen buckets get the smoothing-only value.
 
     The collect is bounded: ≤ ``dim`` rows of three longs (same budget
@@ -108,7 +106,7 @@ def dsir_train_weights(
     )
     t_raw = sum(r["cr"] for r in counts) + dim
     t_tgt = sum(r["ct"] for r in counts) + dim
-    il = lambda x: ilog2_fp_int(x, frac_bits)
+    il = ilog2_fp_int
     base = il(t_raw) - il(t_tgt)  # λ of a bucket nothing hashed into
     lam = [base] * dim
     for r in counts:
@@ -156,7 +154,6 @@ def dsir_topk(
     target: Column,
     k: int = 50,
     dim: int = 1024,
-    frac_bits: int = FP_BITS,
     salt: str = "d",
     content_col: str = "text",
     id_col: str = "doc_id",
@@ -165,7 +162,7 @@ def dsir_topk(
     document, keep the k most target-like (ties → lower id; deterministic
     in every engine)."""
     lam = dsir_train_weights(
-        df, target, dim=dim, frac_bits=frac_bits, salt=salt, content_col=content_col
+        df, target, dim=dim, salt=salt, content_col=content_col
     )
     scored = dsir_score(
         df, lam, dim=dim, salt=salt, content_col=content_col, id_col=id_col
@@ -231,7 +228,6 @@ def prototypicality(
     df: DataFrame,
     group_col: str = "label",
     vec_col: str = "embedding",
-    scale: int = 10_000,
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Prototypicality scoring for embedding-space data pruning (Sorscher
@@ -241,7 +237,7 @@ def prototypicality(
     prototypical redundant mass (drop first at high pruning rates).
 
     EXACT cross-engine math: vectors quantize to integers
-    (``floor(x·scale + 0.5)``) and the centroid never materializes as a
+    (``floor(x·VEC_QUANT + 0.5)``) and the centroid never materializes as a
     ratio — the score is ``‖n·q − S‖²`` (n = group size, S = group
     integer sum), an all-integer expansion of n²·‖q − S/n‖², monotone in
     the true distance within each group.
@@ -250,12 +246,13 @@ def prototypicality(
     index metadata, like ANN centroids — collected once and shipped back
     as ONE map literal; scoring is then a ZERO-shuffle native fold (the
     embeddings never leave their scan partitions).  Int64 bound:
-    ``dim·(n·scale)²`` — safe past 10⁸ rows per group at scale=10⁴,
-    dim≤64; shrink ``scale`` beyond that.
+    ``dim·(n·VEC_QUANT)²`` — safe past 10⁸ rows per group at dim≤64.
     """
+    from pharmacodi_spark.text.similarity import VEC_QUANT
+
     q = F.transform(
         F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
+        lambda x: F.floor(x.cast("double") * VEC_QUANT + F.lit(0.5)).cast("long"),
     )
     sums = (
         df.select(F.col(group_col), F.posexplode(q).alias("pos", "qv"))
@@ -348,7 +345,6 @@ def selection_pipeline(
 
 def token_budget_report(
     df: DataFrame,
-    budget_frac: float = 0.5,
     group_col: str = "source",
     content_col: str = "text",
     id_col: str = "doc_id",
@@ -362,7 +358,7 @@ def token_budget_report(
 
     Per group: ``raw_docs``, ``raw_tokens``, ``kept_tokens`` (exact-dedup
     min-id keeper, duplicate tokens attributed to the dropping origin),
-    ``dup_ppm``, ``rate`` = ``min(1, budget_frac·√T/√t_s)`` over KEPT
+    ``dup_ppm``, ``rate`` = ``min(1, 0.5·√T/√t_s)`` over KEPT
     tokens (sqrt/mult/div only — correctly-rounded IEEE, bit-identical
     across engines; the token-weighted ``temperature_mixture_sample``
     law), and ``expected_tokens`` = ``floor(rate·t_s)``.
@@ -394,7 +390,7 @@ def token_budget_report(
     total = F.sum("kept_tokens").over(Window.partitionBy()).cast("double")
     rate = F.least(
         F.lit(1.0),
-        F.lit(float(budget_frac))
+        F.lit(0.5)
         * F.sqrt(total)
         / F.sqrt(F.col("kept_tokens").cast("double")),
     )
@@ -421,7 +417,6 @@ def gumbel_topk_resample(
     score_col: str = "dsir_fp",
     salt: str = "g",
     id_col: str = "doc_id",
-    frac_bits: int = FP_BITS,
 ) -> DataFrame:
     """Importance RESAMPLING via the Gumbel-max trick, all-integer: draw k
     documents without replacement with probability ∝ w (the softmax of the
@@ -446,7 +441,6 @@ def gumbel_topk_resample(
     Scale shape: per-row hashing + fold, then ``TakeOrderedAndProject``
     heaps — zero shuffles.
     """
-    assert frac_bits == 10, "fixed-point layout is tuned for 10 bits"
     u = (
         F.conv(
             F.substring(
@@ -459,8 +453,9 @@ def gumbel_topk_resample(
         ).cast("long")
         + 1
     )
-    a = F.greatest(F.lit(60 << frac_bits) - ilog2_fp(u, frac_bits), F.lit(1))
-    g2 = F.lit(10 << frac_bits) - ilog2_fp(a, frac_bits)
+    # the fixed-point layout is tuned for FP_BITS == 10
+    a = F.greatest(F.lit(60 << FP_BITS) - ilog2_fp(u), F.lit(1))
+    g2 = F.lit(10 << FP_BITS) - ilog2_fp(a)
     return (
         scored.withColumn(
             "gumbel_key", (F.col(score_col) + g2).cast("long")

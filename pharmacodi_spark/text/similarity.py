@@ -237,7 +237,6 @@ def trained_cell_assign(
     n_k: int,
     vec_col: str = "embedding",
     out_col: str = "centroid_id",
-    seed: int = 7,
     max_iter: int = 10,
 ) -> DataFrame:
     """The PRODUCTION blocking recipe for semantic dedup (r12, VERDICT
@@ -264,7 +263,7 @@ def trained_cell_assign(
     of the space keeps them co-located: the blocking RECALL argument is
     seeding-independent, only the cell-size distribution changes."""
     cents = train_ivf_centroids(
-        df, n_centroids=n_k, vec_col=vec_col, seed=seed, max_iter=max_iter
+        df, n_centroids=n_k, vec_col=vec_col, max_iter=max_iter
     )
     return ivf_assign(df, cents, vec_col=vec_col, out_col=out_col)
 
@@ -362,11 +361,10 @@ def train_pq_codebooks(
     m_subspaces: int = 4,
     k_codes: int = 32,
     vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 20,
 ) -> list[list[list[float]]]:
     """Product-quantization index build: split the vector into ``m_subspaces``
-    contiguous subvectors and train one k-means|| codebook per subspace.
+    contiguous subvectors and train one k-means|| codebook per subspace
+    (20 iterations, seed 7 + subspace).
     Returns codebooks[m][k] = centroid subvector — driver-resident index
     metadata (m·k·(dim/m) floats, a few KB), exactly like the IVF coarse
     quantizer. Training is distributed; only centroids come back."""
@@ -384,7 +382,7 @@ def train_pq_codebooks(
             array_to_vector(F.slice(v, m * dsub + 1, dsub)).alias("features")
         )
         model = KMeans(
-            k=k_codes, seed=seed + m, maxIter=max_iter, initMode="k-means||"
+            k=k_codes, seed=7 + m, maxIter=20, initMode="k-means||"
         ).fit(feats)
         books.append([[float(x) for x in c] for c in model.clusterCenters()])
     return books
@@ -470,14 +468,13 @@ def ivf_pq_topk(
     codebooks: list[list[list[float]]],
     query: list[float],
     k: int = 10,
-    nprobe: int = 2,
     shortlist: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ with exact re-rank — the standard production ANN pipeline
     composed from the parts above: (1) the IVF coarse quantizer prunes the
-    corpus to ``nprobe`` cells (pushable predicate → partition pruning);
+    corpus to the 2 nearest cells (pushable predicate → partition pruning);
     (2) PQ asymmetric distances — M table lookups per row, no vector math —
     rank the survivors into a ``shortlist`` (default 5k); (3) only the
     shortlist's full vectors are read again for the exact dot-product
@@ -491,7 +488,7 @@ def ivf_pq_topk(
         (sum((x - y) ** 2 for x, y in zip(c, query)), i)
         for i, c in enumerate(centroids)
     )
-    probes = [i for _, i in ranked[:nprobe]]
+    probes = [i for _, i in ranked[:2]]
     cand = assigned.where(F.col("centroid_id").isin(probes))
     short = pq_adc_topk(
         cand, codebooks, query, k=shortlist, vec_col=vec_col, id_col=id_col
@@ -538,6 +535,13 @@ def lsh_bucket_topk(
 #: zip_with fold at every width measured (SCALING.md r12: 2.1x at dim 256,
 #: 3.4x at 512 on 780k candidate dots).
 CELL_PAIRS_FLATTEN_MAX_DIM = 128
+
+#: embedding components quantize to integers as ``floor(x·VEC_QUANT + 0.5)``
+#: wherever a similarity must be engine-exact
+VEC_QUANT = 10_000
+
+#: rows per call of an injected pair scorer (cross-encoder batch size)
+SCORER_BATCH_ROWS = 64
 
 
 def cell_cosine_pairs(
@@ -871,7 +875,6 @@ def mmr_topk(
     lam_pct: int = 70,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int = 10_000,
 ) -> list[tuple]:
     """Maximal Marginal Relevance (Carbonell & Goldstein 1998): pick k
     results that are RELEVANT to the query but DIVERSE among themselves —
@@ -880,7 +883,7 @@ def mmr_topk(
     near-copies of the same passage; MMR returns one plus four distinct
     angles).
 
-    All-integer: vectors quantize to ints (``floor(x·scale + 0.5)``),
+    All-integer: vectors quantize to ints (``floor(x·VEC_QUANT + 0.5)``),
     relevance and pairwise similarity are integer dot products, the key is
     ``lam_pct·rel − (100−lam_pct)·max_sim`` with ties to the lower id —
     deterministic on any engine/partitioning.
@@ -895,6 +898,7 @@ def mmr_topk(
     (ships onward as a literal filter).
     """
     assert 1 <= lam_pct <= 100 and k >= 1
+    scale = VEC_QUANT
     q = [int(x * scale + 0.5) if x >= 0 else -int(-x * scale + 0.5)
          for x in query_vec]
     qarr = int_array_lit(q)
@@ -947,7 +951,7 @@ def mmr_topk(
     return chosen
 
 
-def jl_sign_matrix(in_dim: int, out_dim: int, salt: str = "jl") -> list[list[int]]:
+def jl_sign_matrix(in_dim: int, out_dim: int) -> list[list[int]]:
     """Deterministic ±1 Achlioptas/JL sign matrix from md5 parity —
     engine-independent (computed once driver-side, embedded as plan
     literals in Spark and as array literals in the SQL oracle)."""
@@ -956,7 +960,7 @@ def jl_sign_matrix(in_dim: int, out_dim: int, salt: str = "jl") -> list[list[int
     return [
         [
             1
-            if int(hashlib.md5(f"{salt}:{i}:{j}".encode()).hexdigest()[0], 16) % 2
+            if int(hashlib.md5(f"jl:{i}:{j}".encode()).hexdigest()[0], 16) % 2
             == 0
             else -1
             for i in range(in_dim)
@@ -970,12 +974,11 @@ def jl_project(
     signs: list[list[int]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int = 10_000,
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection with a ±1 sign matrix
     (Achlioptas 2003): reduce ``in_dim`` float vectors to ``out_dim``
     integer components ``p_j = Σ_i sign_ij · q_i`` (inputs quantized
-    ``floor(x·scale + 0.5)``) — distances are preserved within
+    ``floor(x·VEC_QUANT + 0.5)``) — distances are preserved within
     (1 ± ε) at out_dim = O(log n / ε²), so downstream LSH / clustering /
     dedup blocking runs on 8 ints instead of 64 floats.
 
@@ -986,7 +989,7 @@ def jl_project(
     """
     q = F.transform(
         F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
+        lambda x: F.floor(x.cast("double") * VEC_QUANT + F.lit(0.5)).cast("long"),
     )
     cols = [F.col(id_col)]
     for j, row in enumerate(signs):
@@ -1007,14 +1010,12 @@ def _referee_topk(
     w,
     scorer,
     k: int,
-    pool_factor: int,
-    batch_size: int,
     query_mod: int,
     id_col: str,
     content_col: str | None,
 ) -> DataFrame:
     """The injected-scorer voting neighborhood for :func:`knn_label_eval`:
-    integer-dot recall pool (``pool_factor·k``) → Arrow-batched scorer
+    integer-dot recall pool (``3·k``) → Arrow-batched scorer
     referee → top ``k`` by ``ce_score`` (ties on id). The pool is bounded
     (queries × pool), so content fetches are broadcast joins against the
     corpus scan and the scorer sees pool-sized batches only. The pool is
@@ -1028,10 +1029,9 @@ def _referee_topk(
     from pyspark.sql import Window
 
     assert content_col is not None, "scorer referee needs content_col"
-    assert pool_factor >= 1
     pool = stage_barrier(
         pairs.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") <= k * pool_factor
+            F.col("__rn") <= k * 3
         ),
         name="referee_pool",
     )
@@ -1047,8 +1047,8 @@ def _referee_topk(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for i in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[i : i + batch_size]
+            for i in range(0, len(pdf), SCORER_BATCH_ROWS):
+                chunk = pdf.iloc[i : i + SCORER_BATCH_ROWS]
                 scores = scorer(
                     chunk["__qtext"].tolist(), chunk["__ctext"].tolist()
                 )
@@ -1078,14 +1078,11 @@ def knn_label_eval(
     df: DataFrame,
     k: int = 10,
     query_mod: int = 23,
-    scale: int = 10000,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
     scorer=None,
     content_col: str | None = None,
-    pool_factor: int = 3,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Embedding-space quality eval: leave-one-out k-NN label consistency
     on a deterministic query sample (``id % query_mod == 0``) — the
@@ -1094,7 +1091,7 @@ def knn_label_eval(
     mining. Returns per-label ``(n_queries, n_correct, acc_ppm)``.
 
     Exactness: vectors quantize once to integers
-    (``floor(x·scale + 0.5)``), dots are integer, neighbor ranking
+    (``floor(x·VEC_QUANT + 0.5)``), dots are integer, neighbor ranking
     tie-breaks on id, majority vote tie-breaks on the smaller label — every
     step engine-deterministic.
 
@@ -1102,7 +1099,7 @@ def knn_label_eval(
     ``rerank_with_scorer``-shaped callable ``(list[str], list[str]) ->
     list[float]`` — production passes a cross-encoder's ``predict``), the
     vote runs over a refereed neighborhood: the integer-dot recall pool
-    (``pool_factor·k`` candidates) is re-scored on
+    (``3·k`` candidates) is re-scored on
     ``(query content, candidate content)`` pairs in an Arrow-batched
     ``mapInPandas`` seam and the top ``k`` by ``ce_score`` (ties on id)
     vote — the recall→precision stack of a retrieval pipeline, refereeing
@@ -1121,7 +1118,7 @@ def knn_label_eval(
     from pyspark.sql import Window
 
     q = F.transform(F.col(vec_col), lambda x: (
-        F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long")
+        F.floor(x.cast("double") * VEC_QUANT + F.lit(0.5)).cast("long")
     ))
     base = df.select(
         F.col(id_col), F.col(label_col), q.alias("__q")
@@ -1153,8 +1150,7 @@ def knn_label_eval(
         )
     else:
         topk = _referee_topk(
-            df, pairs, w, scorer, k, pool_factor, batch_size,
-            query_mod, id_col, content_col,
+            df, pairs, w, scorer, k, query_mod, id_col, content_col
         )
     votes = topk.groupBy("__qid", "__qlabel", label_col).agg(
         F.count("*").alias("__c")
@@ -1297,11 +1293,14 @@ def kmeans_lloyd_int(
     return assigned.withColumn("d2", d2), cents
 
 
+# |v|_inf of the power-iteration component and the divisor of its
+# projections, as a power of two
+PROJ_SCALE_BITS = 10
+
+
 def top_component_projection(
     df: DataFrame,
     iterations: int = 2,
-    scale_bits: int = 10,
-    shift_bits: int = 16,
     vec_col: str = "qe",
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, list[int], list[int]]:
@@ -1317,25 +1316,24 @@ def top_component_projection(
       ≡ DuckDB ``//``), centered vectors pinned by the caller;
     - start vector = the lowest-id centered row (data-derived and
       deterministic; an all-zero start raises);
-    - each iteration computes ``d_i = c_i · v`` per row, downshifts by
-      ``shift_bits`` (``div 2^shift`` — the int64 headroom knob: keep
-      ``log2(n · max|c|² · 2^scale_bits) − shift_bits < 63``), aggregates
+    - each iteration computes ``d_i = c_i · v`` per row, downshifts it by
+      ``div 2^16`` (the int64 headroom: it holds while
+      ``log2(n · max|c|² · 2^10) − 16 < 63``), aggregates
       ``w_p = Σ c_ip · d'_i`` per dimension (dim rows of metadata), and
-      rescales to ``|v|_∞ = 2^scale_bits`` by truncating integer
+      rescales to ``|v|_∞ = 2^PROJ_SCALE_BITS`` by truncating integer
       division — no norms, no sqrt, no floats anywhere;
     - returns ``(projections, component, mu)`` where projections =
-      ``(id_col, proj_q = (c·v) div 2^scale_bits)`` in centered
+      ``(id_col, proj_q = (c·v) div 2^PROJ_SCALE_BITS)`` in centered
       quantized units.
 
     Scale shape (100 TB): the component and mean are dim-length driver
     metadata (the ANN-centroid budget class); each iteration is ONE scan
     of the pinned centered frame + a map-side-combining per-dim aggregate;
     vectors never pair and never shuffle (the per-dim aggregate exchanges
-    dim rows). Raise ``shift_bits`` as n grows — the headroom bound above gives
-    the exact bound.
+    dim rows). The headroom bound above caps n.
     """
-    scale = 1 << scale_bits
-    shift = 1 << shift_bits
+    scale = 1 << PROJ_SCALE_BITS
+    shift = 1 << 16
 
     sums = (
         df.select(F.posexplode(F.col(vec_col)).alias("pos", "x"))
@@ -1392,7 +1390,7 @@ def top_component_projection(
         if m == 0:
             raise ValueError(
                 "top_component_projection: power iteration collapsed to "
-                "zero — raise shift_bits resolution or check the data"
+                "zero — check the data"
             )
         v = [_trunc_div(x * scale, m) for x in w]
 

@@ -111,12 +111,10 @@ def greedy_encode(
     return tokens, unk
 
 
-def build_greedy_encoder(
-    vocab: Iterable[str], byte_fallback: bool = False
-) -> Callable[[str], tuple[int, int]]:
+def build_greedy_encoder(vocab: Iterable[str]) -> Callable[[str], tuple[int, int]]:
     """Bind a vocab into a ``word -> (n_tokens, n_unk)`` encoder."""
     trie = build_trie(vocab)
-    return lambda word: greedy_encode(word, trie, byte_fallback)
+    return lambda word: greedy_encode(word, trie)
 
 
 def vocab_token_counts(
@@ -124,7 +122,6 @@ def vocab_token_counts(
     vocab: Sequence[str],
     content_col: str = "text",
     id_cols: Sequence[str] = ("doc_id",),
-    byte_fallback: bool = False,
 ) -> DataFrame:
     """Per-document model-token counts: ``n_vocab_tokens`` / ``n_unk``.
 
@@ -156,7 +153,7 @@ def vocab_token_counts(
             for w in text.split():
                 hit = memo.get(w)
                 if hit is None:
-                    hit = memo[w] = greedy_encode(w, trie, byte_fallback)
+                    hit = memo[w] = greedy_encode(w, trie)
                 tot += hit[0]
                 unk += hit[1]
             return tot, unk
@@ -288,7 +285,6 @@ def train_bpe(
     content_col: str = "text",
     num_merges: int = 200,
     max_batch: int = 16,
-    max_word_len: int = 64,
     tokens_col: str | None = None,
 ) -> list[tuple[str, str, int]]:
     """True merge-based BPE training: iteratively merge the corpus-wide
@@ -300,7 +296,7 @@ def train_bpe(
 
     1. ONE corpus-scale pass collapses documents to DISTINCT words +
        occurrence counts (Zipf: the word table is tiny vs the token
-       stream); words are truncated to ``max_word_len`` chars (pathological
+       stream); words are truncated to 64 chars (pathological
        mega-tokens contribute no merges from their tail) and split into
        character symbols.
     2. Each round, adjacent-pair frequencies are a distributed
@@ -324,14 +320,14 @@ def train_bpe(
     """
     from pharmacodi_spark.barrier import stage_barrier
 
-    assert num_merges >= 0 and max_batch >= 1 and max_word_len >= 2
+    assert num_merges >= 0 and max_batch >= 1
     words = (
         df.select(F.explode(_word_source(content_col, tokens_col)).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
         .select(
-            F.split(F.substring("w", 1, int(max_word_len)), "").alias("syms"),
+            F.split(F.substring("w", 1, 64), "").alias("syms"),
             "cnt",
         )
     )
@@ -415,7 +411,6 @@ def encode_token_ids(
     content_col: str = "text",
     id_cols: "Sequence[str]" = ("doc_id",),
     out_col: str = "token_ids",
-    unk_id: int = -1,
 ) -> DataFrame:
     """Encode documents to MODEL TOKEN ID arrays — the step that turns a
     curated corpus into trainable sequences (compose with
@@ -424,7 +419,7 @@ def encode_token_ids(
     Greedy longest-prefix matching over the trie (same walk
     :func:`greedy_encode` prices), but emitting the matched piece's id
     (its index in ``vocab``) instead of a count; unmatched characters
-    emit ``unk_id``. One ``mapInPandas`` pass with a per-batch word→ids
+    emit ``-1``. One ``mapInPandas`` pass with a per-batch word→ids
     memo — the same zero-shuffle / Zipf-bounded shape as
     :func:`vocab_token_counts`; the vocab broadcasts once.
     """
@@ -463,7 +458,7 @@ def encode_token_ids(
                     out.append(piece_id[word[pos : pos + best]])
                     pos += best
                 else:
-                    out.append(unk_id)
+                    out.append(-1)
                     pos += 1
             memo[word] = out
             return out
@@ -488,13 +483,12 @@ def decode_token_ids(
     vocab: "Sequence[str]",
     ids_col: str = "token_ids",
     out_col: str = "pieces",
-    unk: str = "<unk>",
 ) -> DataFrame:
     """Inverse of :func:`encode_token_ids`: map id arrays back to their
     vocabulary pieces — the debugging/inspection direction every tokenizer
     ships (verify what the model actually sees; spot-check packed
-    sequences). Out-of-range ids (the encoder's ``unk_id``) decode to
-    ``unk``.
+    sequences). Out-of-range ids (the encoder's ``-1``) decode to
+    ``<unk>``.
 
     Whitespace is NOT reconstructed — the byte-level encoder drops word
     boundaries, so the faithful inverse is the piece sequence, and
@@ -513,7 +507,7 @@ def decode_token_ids(
         F.col(ids_col),
         lambda i: F.when(
             (i >= 0) & (i < n), F.element_at(varr, (i + 1).cast("int"))
-        ).otherwise(F.lit(unk)),
+        ).otherwise(F.lit("<unk>")),
     )
     return df.withColumn(out_col, pieces)
 

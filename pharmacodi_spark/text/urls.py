@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 TRACKING_PARAMS = ("fbclid", "gclid", "ref", "mc_cid", "mc_eid")
 
 
-def canonical_url(url, strip_www: bool = True) -> Column:
+def canonical_url(url) -> Column:
     """The canonical form of a URL column (see module contract). Pure
     native expressions — usable inside any projection."""
     u = F.col(url) if isinstance(url, str) else url
@@ -53,10 +53,9 @@ def canonical_url(url, strip_www: bool = True) -> Column:
     )
     host = F.lower(F.substring_index(authority, "@", -1))
     host = F.substring_index(host, ":", 1)
-    if strip_www:
-        host = F.when(
-            host.startswith("www."), host.substr(F.lit(5), F.length(host))
-        ).otherwise(host)
+    host = F.when(
+        host.startswith("www."), host.substr(F.lit(5), F.length(host))
+    ).otherwise(host)
     # path+query = everything after the authority (starts with '/', '?' or
     # '#'; empty when rest == authority — substr past end yields '');
     # drop the fragment
@@ -108,14 +107,13 @@ def url_host(url, strip_www: bool = True) -> Column:
 def parse_urls(
     df: DataFrame,
     url_col: str = "url",
-    strip_www: bool = True,
 ) -> DataFrame:
     """Adds ``canon_url`` and ``host`` columns — one zero-shuffle
     projection over the scan (the dedup-key preparation step: after this,
     exact URL dedup is ``exact_dedup`` keyed on ``canon_url``)."""
-    return df.withColumn(
-        "host", url_host(url_col, strip_www=strip_www)
-    ).withColumn("canon_url", canonical_url(url_col, strip_www=strip_www))
+    return df.withColumn("host", url_host(url_col)).withColumn(
+        "canon_url", canonical_url(url_col)
+    )
 
 
 def host_suffixes(host) -> Column:
@@ -137,7 +135,6 @@ def domain_gate(
     blocked: DataFrame,
     url_col: str = "url",
     id_col: str = "doc_id",
-    strip_www: bool = True,
 ) -> DataFrame:
     """Domain-blocklist gate with subdomain-suffix semantics: a row is
     blocked iff ANY dot-suffix of its host appears in ``blocked`` (one
@@ -152,7 +149,7 @@ def domain_gate(
     longest hit — no corpus-scale join-back, no sort-merge join anywhere.
     Bodies never shuffle.
     """
-    hosts = df.select(F.col(id_col), url_host(url_col, strip_www=strip_www).alias("host"))
+    hosts = df.select(F.col(id_col), url_host(url_col).alias("host"))
     sufs = hosts.select(
         id_col, "host", F.explode(host_suffixes("host")).alias("domain")
     )
@@ -427,7 +424,6 @@ def robots_gate(
     agent: str = "*",
     url_col: str = "url",
     id_col: str = "doc_id",
-    strip_www: bool = True,
 ) -> DataFrame:
     """Crawl-permission gate: may ``agent`` use each URL, per the robots
     exclusion protocol? ``rules`` is ``(host, agent, allow, prefix)``
@@ -443,7 +439,7 @@ def robots_gate(
     9309 the match target is the PATH INCLUDING the ``?query`` (a rule
     ``Disallow: /search?`` must match ``/search?q=x``); the fragment is
     dropped. Rule hosts get the same normalization as the URL hosts
-    (lowercase + optional ``www.`` strip), so rules fetched from
+    (lowercase + ``www.`` strip), so rules fetched from
     ``www.X`` gate URLs on ``X``. Returns ``(id, host, path,
     matched_prefix, allowed)`` — ``path`` carries path+query.
 
@@ -457,13 +453,12 @@ def robots_gate(
     """
     a = agent.lower()
     rh = F.lower(F.col("host"))
-    if strip_www:
-        # mirror url_host's normalization — a robots body fetched from
-        # 'www.X' must gate URLs whose canonical host is 'X' (ADVICE r8:
-        # an unnormalized rules side silently fails OPEN for such hosts)
-        rh = F.when(
-            rh.startswith("www."), rh.substr(F.lit(5), F.length(rh))
-        ).otherwise(rh)
+    # mirror url_host's normalization — a robots body fetched from
+    # 'www.X' must gate URLs whose canonical host is 'X' (ADVICE r8:
+    # an unnormalized rules side silently fails OPEN for such hosts)
+    rh = F.when(
+        rh.startswith("www."), rh.substr(F.lit(5), F.length(rh))
+    ).otherwise(rh)
     r = rules.select(
         rh.alias("host"),
         F.lower("agent").alias("agent"),
@@ -512,7 +507,7 @@ def robots_gate(
     )
     urls = df.select(
         F.col(id_col),
-        url_host(url_col, strip_www=strip_www).alias("host"),
+        url_host(url_col).alias("host"),
         # RFC 9309 match target: path INCLUDING '?query' (fragment gone);
         # a path-less URL normalizes to '/' (+ its query when present)
         F.when(pathq == "", F.lit("/"))

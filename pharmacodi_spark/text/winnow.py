@@ -42,6 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# a document pair is a positional near-dup once it shares this many
+# distinct fingerprint hashes
+_MIN_SHARED = 2
+
 
 def _gram_hash_arrays(
     df: DataFrame,
@@ -239,12 +243,11 @@ def winnow_fp_rows(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def winnow_overlap_pairs(
     fp: DataFrame,
     id_col: str = "doc_id",
-    min_shared: int = 2,
     max_cell_size: int | None = None,
     hashes_distinct: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b, shared) for every document pair sharing at least
-    ``min_shared`` distinct fingerprint HASHES — positional near-dup /
+    ``_MIN_SHARED`` distinct fingerprint HASHES — positional near-dup /
     plagiarism candidates ranked by overlap mass.
 
     Bucket-local expansion through ``dedup.cell_pair_rows`` keyed by
@@ -268,7 +271,7 @@ def winnow_overlap_pairs(
         cell_pair_rows(d, ["h"], id_col, max_cell_size)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        .where(F.col("shared") >= _MIN_SHARED)
     )
 
 
@@ -276,7 +279,6 @@ def winnow_incremental_flags(
     new_fp: DataFrame,
     index_fp: DataFrame,
     id_col: str = "doc_id",
-    min_shared: int = 2,
     hashes_distinct: bool = False,
 ) -> DataFrame:
     """Ingest-time positional dedup: flag arriving documents whose
@@ -314,7 +316,7 @@ def winnow_incremental_flags(
         .where(F.col("__nid") != F.col("__cid"))
         .groupBy("__nid", "__cid")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        .where(F.col("shared") >= _MIN_SHARED)
     )
     best = (
         shared.groupBy("__nid")

@@ -44,7 +44,7 @@ def _rowmap(df):
 def test_bloom_equals_exact_with_planted_contamination(spark):
     train, ev = _corpus(spark)
     exact = _rowmap(decontaminate_against(train, ev, n=13))
-    bloom = _rowmap(bloom_decontaminate_against(train, ev, n=13))
+    bloom = _rowmap(bloom_decontaminate_against(train, ev))
     assert bloom == exact
     assert sum(1 for _, (_, c) in exact.items() if c) >= 6
 
@@ -56,7 +56,7 @@ def test_bloom_exact_under_fp_flood(spark):
     train, ev = _corpus(spark, seed=71)
     exact = _rowmap(decontaminate_against(train, ev, n=13))
     flooded = _rowmap(
-        bloom_decontaminate_against(train, ev, n=13, n_bits=64, n_hashes=2)
+        bloom_decontaminate_against(train, ev, n_bits=64, n_hashes=2)
     )
     assert flooded == exact
 
@@ -75,7 +75,7 @@ def test_bloom_tokens_col_seam(spark):
     ).withColumn("toks", F.split(F.col("text"), ""))
     exact = _rowmap(decontaminate_against(train, ev, n=13, tokens_col="toks"))
     bloom = _rowmap(
-        bloom_decontaminate_against(train, ev, n=13, tokens_col="toks")
+        bloom_decontaminate_against(train, ev, tokens_col="toks")
     )
     assert bloom == exact
     assert exact[0][1] is True and exact[1][1] is False
@@ -102,8 +102,8 @@ def test_bloom_persisted_sidecar_roundtrip(spark, tmp_path):
     path = str(tmp_path / "decontam_bloom")
     save_bloom_bitmap(spark, words, 3, path)
     loaded = load_bloom_bitmap(spark, path)
-    fresh = _rowmap(bloom_decontaminate_against(train, ev, n=13))
+    fresh = _rowmap(bloom_decontaminate_against(train, ev))
     reused = _rowmap(
-        bloom_decontaminate_against(train, ev, n=13, bitmap=loaded)
+        bloom_decontaminate_against(train, ev, bitmap=loaded)
     )
     assert reused == fresh == _rowmap(decontaminate_against(train, ev, n=13))

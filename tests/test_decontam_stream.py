@@ -44,7 +44,7 @@ def _write_json_batches(rows, src_dir, n_files=3):
 def test_decontam_stream_equals_batch(spark, tmp_path):
     train, ev = _corpus(spark)
     base = str(tmp_path / "state")
-    freeze_eval_signatures(ev, base, num_hashes=16)
+    freeze_eval_signatures(ev, base)
 
     rows = [(r["doc_id"], r["text"]) for r in train.collect()]
     src = str(tmp_path / "incoming")
@@ -74,7 +74,7 @@ def test_decontam_stream_equals_batch(spark, tmp_path):
 def test_decontam_stream_replay_idempotent(spark, tmp_path):
     train, ev = _corpus(spark)
     base = str(tmp_path / "state")
-    freeze_eval_signatures(ev, base, num_hashes=16)
+    freeze_eval_signatures(ev, base)
     rows = train.collect()
     half = len(rows) // 2
     b1 = spark.createDataFrame(rows[:half], train.schema)
@@ -103,7 +103,7 @@ def test_refreeze_changes_verdicts(spark, tmp_path):
                 "and shuffle partitions in a long sentence")],
         ["doc_id", "text"],
     )
-    freeze_eval_signatures(ev0, base, num_hashes=16)
+    freeze_eval_signatures(ev0, base)
     decontam_stream_batch(spark, base, train, batch_id=0, **KW)
     [v0] = read_decontam_verdicts(spark, base).collect()
     assert v0["keep"] is True
@@ -111,7 +111,7 @@ def test_refreeze_changes_verdicts(spark, tmp_path):
     ev1 = ev0.unionByName(
         spark.createDataFrame([(2000, text)], ["doc_id", "text"])
     )
-    freeze_eval_signatures(ev1, base, num_hashes=16)
+    freeze_eval_signatures(ev1, base)
     decontam_stream_batch(spark, base, train, batch_id=0, **KW)  # replay
     [v1] = read_decontam_verdicts(spark, base).collect()
     assert v1["keep"] is False and v1["matched_eval_id"] == 2000

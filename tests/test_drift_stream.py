@@ -53,7 +53,7 @@ def _setup(spark, tmp_path, rows):
         [(r["vec_id"], r["qe"]) for r in rows], SCHEMA
     )
     base = str(tmp_path / "state")
-    mu, v = prepare_drift_reference(spark, base, ref, iterations=2)
+    mu, v = prepare_drift_reference(spark, base, ref)
     return base, mu, v
 
 

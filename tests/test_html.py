@@ -97,7 +97,7 @@ def test_native_contract_cases(spark):
 
 def test_parser_contract_cases():
     for h, want in CASES:
-        assert _parse_main_text(h, 20, 50) == want, (h, want)
+        assert _parse_main_text(h) == want, (h, want)
 
 
 def test_parser_seam_dataframe(spark):
@@ -128,7 +128,7 @@ def test_parser_handles_quoted_gt_in_attributes():
         "quoted attribute value.</p>"
     )
     assert (
-        _parse_main_text(h, 20, 50)
+        _parse_main_text(h)
         == "This paragraph survives even with a tricky quoted attribute "
         "value."
     )
@@ -138,7 +138,7 @@ def test_parser_full_entity_table():
     # html.unescape covers entities the native 6-entry table does not
     h = "<p>Copyright &copy; owners &hellip; and &eacute;tude on prose.</p>"
     assert (
-        _parse_main_text(h, 20, 50)
+        _parse_main_text(h)
         == "Copyright © owners … and étude on prose."
     )
 

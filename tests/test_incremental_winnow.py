@@ -28,7 +28,7 @@ def test_lifted_paragraph_flags_its_source(spark):
     nfp = winnow_fingerprints(ndf, k=K, w=W)
     flags = {
         r["doc_id"]: r
-        for r in winnow_incremental_flags(nfp, idx, min_shared=2).collect()
+        for r in winnow_incremental_flags(nfp, idx).collect()
     }
     assert 0 in flags and flags[0]["best_match"] == 100
     assert flags[0]["shared"] >= 2
@@ -43,7 +43,6 @@ def test_exact_duplicate_has_full_containment(spark):
     flags = winnow_incremental_flags(
         winnow_fingerprints(ndf, k=K, w=W),
         winnow_fingerprints(cdf, k=K, w=W),
-        min_shared=2,
     ).collect()
     assert len(flags) == 1
     assert flags[0]["containment_ppm"] == 1_000_000

@@ -31,7 +31,7 @@ def test_hashed_linear_score_with_injected_weights(spark):
     out = {
         r.doc_id: (r.n_tokens, r.score_centi, r.keep)
         for r in hashed_linear_score(
-            df, weights=weights, dim=dim, salt=salt, threshold_centi=0
+            df, weights=weights, dim=dim, salt=salt
         ).collect()
     }
 

@@ -95,7 +95,7 @@ def test_hybrid_rrf_fusion_semantics(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     terms = ["table", "scan", "window", "merge"]
     weights = [((p * 7) % 13) - 6 for p in range(1, 65)]
-    out = hybrid_rrf_topk(docs, emb, terms, weights, k=10, cand=20).collect()
+    out = hybrid_rrf_topk(docs, emb, terms, weights, cand=20).collect()
     assert len(out) == 10
     # fused order is non-increasing, ids break ties ascending
     for a, b in zip(out, out[1:]):

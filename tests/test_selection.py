@@ -290,7 +290,7 @@ def test_token_budget_report_invariants(spark):
     for i in range(100, 105):    # small source, unique docs
         rows.append((i, f"tiny unique {i}", "small"))
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r.source: r for r in token_budget_report(df, budget_frac=0.5).collect()}
+    out = {r.source: r for r in token_budget_report(df).collect()}
     big, small = out["big"], out["small"]
     # dedup: 10 copies of the same 3-token doc keep one
     assert big.raw_docs == 40 and big.kept_tokens == big.raw_tokens - 9 * 3
@@ -623,7 +623,7 @@ def test_ngram_diversity_bounds_and_values(spark):
     )
     rows = {
         r.source: (r.distinct_ngrams, r.total_ngrams, r.diversity_ppm)
-        for r in ngram_diversity(df, n=2).collect()
+        for r in ngram_diversity(df).collect()
     }
     assert rows["tmpl"] == (2, 6, 333333)
     assert rows["fresh"] == (3, 3, 1000000)

@@ -14,6 +14,7 @@ string constants, never docstring or comment text.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ENGINE = Path(__file__).resolve().parent.parent / "pharmacodi_spark"
@@ -311,3 +312,199 @@ def test_registry_not_edited_at_import():
             )
         ]
     assert hits == [], "register the oracle with its @q row"
+
+
+# ---------------------------------------------------------------------------
+# Every library default earns its place: a defaulted parameter of a public
+# library function must be given a different value by some caller, or it is
+# a constant in disguise (and any branch only it selects is dead code).
+# ---------------------------------------------------------------------------
+
+REPO = ENGINE.parent
+# every call the guard counts: the library itself, its tests and tools,
+# the benchmark, the driver entry points and the checked-in verify recipe
+_CALLER_DIRS = ("pharmacodi_spark", "tests", "tools", "perfbench")
+_CALLER_FILES = ("bench.py", "__spark_entry__.py")
+_VERIFY_RECIPE = "*/skills/verify/*.py"
+# column-name parameters name the caller's schema, shared across a family
+_COLUMN_PARAM = re.compile(r"(.*_cols?|src|dst|by|keys?|subset)$")
+# deployment settings: where the engine runs, not what it computes
+_DEPLOYMENT = {
+    "session::get_spark(master)",
+    "streaming.ops::event_stream_source(path)",
+    "streaming.ops::event_stream_source(socket_host)",
+}
+
+
+def _caller_trees() -> dict[Path, ast.Module]:
+    paths = [p for d in _CALLER_DIRS for p in sorted((REPO / d).rglob("*.py"))]
+    paths += [REPO / f for f in _CALLER_FILES if (REPO / f).exists()]
+    paths += sorted(REPO.glob(_VERIFY_RECIPE))
+    return {p: ast.parse(p.read_text()) for p in paths}
+
+
+def _module_of(path: Path) -> str | None:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    if parts[0] != ENGINE.name:
+        return None
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _defaults(fn: ast.FunctionDef) -> tuple[list[str], dict[str, str]]:
+    """Positional parameter names, and ``{param: default source}``."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {
+        p.arg: ast.unparse(d)
+        for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)
+    }
+    out.update(
+        {p.arg: ast.unparse(d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d}
+    )
+    return [p.arg for p in pos], out
+
+
+def _never_varied() -> list[str]:
+    """``module::function(param)`` for every defaulted, non-column
+    parameter of a public top-level library function (outside the query
+    registry) that no call passes a value other than its default. A
+    ``x=x`` forward of a parameter that is itself never varied passes that
+    parameter's default, so the scan runs to a fixpoint. Functions reached
+    through ``*args``/``**kwargs`` or ``functools.partial`` are skipped:
+    their callers cannot be read off the source."""
+    trees = _caller_trees()
+    paths = {_module_of(p): p for p in trees if _module_of(p)}
+    funcs = {
+        (mod, node.name): node
+        for mod, path in paths.items()
+        if not mod.startswith(f"{ENGINE.name}.plans")
+        for node in trees[path].body
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
+    }
+    bound: dict[Path, dict] = {}
+
+    def target(mod: str, attr: str):
+        if f"{mod}.{attr}" in paths:
+            return ("mod", f"{mod}.{attr}")
+        if (mod, attr) in funcs:
+            return ("fn", (mod, attr))
+        return bindings(paths[mod]).get(attr) if mod in paths else None
+
+    def bindings(path: Path) -> dict:
+        # names a file binds to library modules and functions (re-exports
+        # through a package __init__ resolve to the defining module)
+        if path in bound:
+            return bound[path]
+        out = bound[path] = {}
+        mod = _module_of(path)
+        out.update({n: ("fn", (m, n)) for m, n in funcs if m == mod})
+        for node in ast.walk(trees[path]):
+            if isinstance(node, ast.ImportFrom):
+                src = node.module or ""
+                if node.level:
+                    base = mod.split(".")[: -1 if path.name != "__init__.py" else None]
+                    base = base[: len(base) - node.level + 1]
+                    src = ".".join(base + ([src] if src else []))
+                if src.split(".")[0] == ENGINE.name:
+                    for a in node.names:
+                        hit = target(src, a.name)
+                        if hit:
+                            out[a.asname or a.name] = hit
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == ENGINE.name:
+                        name = a.asname or ENGINE.name
+                        out[name] = ("mod", a.name if a.asname else ENGINE.name)
+        return out
+
+    def resolve(expr, names: dict):
+        if isinstance(expr, ast.Name):
+            return names.get(expr.id)
+        if isinstance(expr, ast.Attribute):
+            base = resolve(expr.value, names)
+            if base and base[0] == "mod":
+                return target(base[1], expr.attr)
+        if (
+            isinstance(expr, ast.Call)
+            and getattr(expr.func, "id", None) == "__import__"
+            and expr.args
+            and isinstance(expr.args[0], ast.Constant)
+            and expr.args[0].value in paths
+        ):
+            return ("mod", expr.args[0].value)
+        return None
+
+    sites, skipped = [], set()
+
+    def visit(node, chain, names):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            chain = (*chain, node)
+        if isinstance(node, ast.Call):
+            hit = resolve(node.func, names)
+            if hit and hit[0] == "fn":
+                sites.append((hit[1], node, chain))
+                if any(k.arg is None for k in node.keywords) or any(
+                    isinstance(a, ast.Starred) for a in node.args
+                ):
+                    skipped.add(hit[1])
+            fname = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if fname == "partial" and node.args:
+                hit = resolve(node.args[0], names)
+                if hit and hit[0] == "fn":
+                    skipped.add(hit[1])
+        for child in ast.iter_child_nodes(node):
+            visit(child, chain, names)
+
+    for path, tree in trees.items():
+        visit(tree, (), bindings(path))
+
+    owner = {id(fn): key for key, fn in funcs.items()}
+    candidates = {
+        (key, p): d
+        for key, fn in funcs.items()
+        if key not in skipped
+        for p, d in _defaults(fn)[1].items()
+        if not _COLUMN_PARAM.match(p)
+        and f"{key[0][len(ENGINE.name) + 1:]}::{key[1]}({p})" not in _DEPLOYMENT
+    }
+
+    def passed_text(arg, chain, going):
+        # a bare name that forwards an enclosing parameter passes that
+        # parameter's default if it is going, an unknown value otherwise
+        if isinstance(arg, ast.Name):
+            for fn in reversed(chain):
+                a = fn.args
+                names = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+                names += [p.arg for p in (a.vararg, a.kwarg) if p]
+                if arg.id in names:
+                    return going.get((owner.get(id(fn)), arg.id))
+        return ast.unparse(arg)
+
+    going = dict(candidates)
+    while True:
+        varied = set()
+        for key, call, chain in sites:
+            pos = _defaults(funcs[key])[0]
+            passed = [*zip(pos, call.args), *((k.arg, k.value) for k in call.keywords)]
+            varied |= {
+                (key, p)
+                for p, arg in passed
+                if (key, p) in candidates
+                and passed_text(arg, chain, going) != candidates[(key, p)]
+            }
+        if varied.isdisjoint(going):
+            break
+        going = {k: v for k, v in going.items() if k not in varied}
+    return sorted(
+        f"{mod[len(ENGINE.name) + 1:]}::{fn}({p})" for (mod, fn), p in going
+    )
+
+
+def test_every_library_default_is_varied():
+    # a default no caller varies is a constant: write it in the body and
+    # delete the branches only another value would select
+    stale = _never_varied()
+    assert stale == [], (
+        f"{len(stale)} defaults no caller varies — make them constants:\n"
+        + "\n".join(stale)
+    )

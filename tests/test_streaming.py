@@ -97,8 +97,8 @@ def test_session_window_matches_batch(spark, event_dir):
     per-user session counts also match the independent lag/cumsum batch
     sessionization (the oracle-gated twin)."""
     stream = read_event_stream(spark, event_dir, max_files_per_trigger=1)
-    out = _run_stream(spark, session_window_agg(stream, gap="30 minutes"), "session_t")
-    batch = session_window_agg(_batch_events(spark, event_dir), gap="30 minutes")
+    out = _run_stream(spark, session_window_agg(stream), "session_t")
+    batch = session_window_agg(_batch_events(spark, event_dir))
     s = {(r.user_id, r.session_start, r.session_end): (r.n_events, round(r.sum_value, 6))
          for r in out.collect()}
     b = {(r.user_id, r.session_start, r.session_end): (r.n_events, round(r.sum_value, 6))
@@ -371,7 +371,7 @@ def test_session_timeout_matches_session_window(spark, event_dir):
 
     stream = read_event_stream(spark, event_dir, max_files_per_trigger=1)
     out = session_totals_with_timeout(
-        stream.withWatermark("ts", "10 minutes"), gap_secs=1800
+        stream.withWatermark("ts", "10 minutes")
     )
     q = (
         out.writeStream.format("memory")
@@ -385,7 +385,7 @@ def test_session_timeout_matches_session_window(spark, event_dir):
         (r.user_id, r.session_start_ms, r.session_end_ms): r.n_events
         for r in spark.sql("SELECT * FROM sess_timeout_t").collect()
     }
-    batch = session_window_agg(_batch_events(spark, event_dir), gap="30 minutes")
+    batch = session_window_agg(_batch_events(spark, event_dir))
     want = {
         (
             r.user_id,

@@ -54,7 +54,7 @@ def test_minhash_near_dups_catch_exact_dups(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in minhash_near_dup_pairs(d, num_hashes=8, bands=4).collect()
+        for r in minhash_near_dup_pairs(d, num_hashes=8).collect()
     }
     for row in dups:
         ids = sorted(row.ids)
@@ -266,11 +266,11 @@ def test_corpus_idf_tfidf_ngrams(spark):
     # df_count is a per-doc count, not an occurrence count
     assert doc_frequency(d).agg(F.max("df_count")).first()[0] <= n
 
-    top = tfidf_top_terms(d, k=3)
+    top = tfidf_top_terms(d)
     per_doc = top.groupBy("doc_id").count().agg(F.max("count")).first()[0]
     assert per_doc <= 3 and top.count() > 0
 
-    grams = top_ngrams(d, n=2, k=5).collect()
+    grams = top_ngrams(d, k=5).collect()
     assert len(grams) == 5
     assert grams[0].n_occurrences >= grams[-1].n_occurrences
     assert all(" " in g.ngram or g.n_occurrences >= 1 for g in grams)
@@ -288,7 +288,7 @@ def test_strip_repeated_lines_and_redact(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r.doc_id: r for r in strip_repeated_lines(docs, min_df=2).collect()}
+    out = {r.doc_id: r for r in strip_repeated_lines(docs).collect()}
     assert out[1].cleaned == "unique alpha\nunique beta" and out[1].n_removed == 1
     assert out[2].cleaned == "other text"
     assert out[3].cleaned == "" and out[3].n_removed == 1  # fully boilerplate
@@ -364,7 +364,7 @@ def test_ivf_pq_exact_when_wide(spark):
     got = [
         (r.vec_id, r.dot)
         for r in ivf_pq_topk(
-            df, centroids, codebooks, query, k=5, nprobe=2, shortlist=40
+            df, centroids, codebooks, query, k=5, shortlist=40
         ).collect()
     ]
     brute = sorted(
@@ -389,7 +389,7 @@ def test_scrub_shared_spans(spark):
     )
     out = {
         r.doc_id: r
-        for r in scrub_shared_spans(docs, span_len=5, min_df=2).collect()
+        for r in scrub_shared_spans(docs).collect()
     }
     # the shared 5-gram is masked wherever it occurs; the rest survives in order
     assert out[1].scrubbed == "alpha beta gamma" and out[1].n_masked == 5
@@ -480,9 +480,9 @@ def test_multimodal_stub_plumbing(spark):
     again = {r.media_id: r.feat for r in extract_features(media).collect()}
     assert again[2] == feats[2].feat
 
-    frames = frame_sample_plan(media, every_ms=1000)
+    frames = frame_sample_plan(media)
     assert frames.count() == 4  # video only: ts 0,1000,2000,3000
-    resized = resize_plan(media, max_side=256).where(F.col("media_id") == 2).first()
+    resized = resize_plan(media).where(F.col("media_id") == 2).first()
     assert max(resized.target_w, resized.target_h) == 256
 
 
@@ -735,7 +735,7 @@ def test_temperature_mixture_sample_flattens_sources(spark):
         .alias("source"),
     )
     out = temperature_mixture_sample(
-        df, "source", budget_frac=0.5, key_cols=["doc_id"], salt="t"
+        df, "source", key_cols=["doc_id"], salt="t"
     )
     rates = {r.source: r.rate for r in out.select("source", "rate").distinct().collect()}
     # rate formula: min(1, 0.5 * sqrt(N/n_s))
@@ -748,7 +748,7 @@ def test_temperature_mixture_sample_flattens_sources(spark):
     assert 0.4 * 1800 < kept["head"] < 0.65 * 1800
     # deterministic: second run identical
     again = temperature_mixture_sample(
-        df, "source", budget_frac=0.5, key_cols=["doc_id"], salt="t"
+        df, "source", key_cols=["doc_id"], salt="t"
     )
     assert sorted(r.doc_id for r in out.collect()) == sorted(
         r.doc_id for r in again.collect()

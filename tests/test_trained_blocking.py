@@ -86,7 +86,7 @@ def test_trained_blocking_preserves_droplist_and_balances_cells(spark):
 
     seeded = seeded_cell_assign(qe, N_K, vec_col="qe", out_col="cid")
     trained = trained_cell_assign(
-        qe, N_K, vec_col="qe", out_col="cid", seed=7, max_iter=5
+        qe, N_K, vec_col="qe", out_col="cid", max_iter=5
     )
 
     def max_cell(assigned):

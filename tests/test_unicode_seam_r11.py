@@ -227,7 +227,7 @@ def test_phrase_detection_on_cjk(spark):
     uni = {
         (r["a"], r["b"]): r["is_phrase"]
         for r in detect_phrases(
-            df, min_count=2, threshold_fp=100, tokens_col="toks"
+            df, min_count=2, tokens_col="toks"
         ).collect()
     }
     assert ("深", "度") in uni and uni[("深", "度")]

@@ -92,11 +92,11 @@ def test_overlap_pairs_capped_equals_plain(spark):
     fp = winnow_fingerprints(df, k=K, w=W)
     plain = {
         (r["doc_a"], r["doc_b"], r["shared"])
-        for r in winnow_overlap_pairs(fp, min_shared=2).collect()
+        for r in winnow_overlap_pairs(fp).collect()
     }
     capped = {
         (r["doc_a"], r["doc_b"], r["shared"])
-        for r in winnow_overlap_pairs(fp, min_shared=2, max_cell_size=3).collect()
+        for r in winnow_overlap_pairs(fp, max_cell_size=3).collect()
     }
     assert plain == capped and plain, "guard changed the pair multiset"
 

@@ -50,7 +50,7 @@ def _drain(spark, base, src, ckpt):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src)
     )
     q = streaming_winnow_ingest(
-        stream, base, ckpt, k=K, w=W, min_shared=2
+        stream, base, ckpt, k=K, w=W
     )
     q.awaitTermination()
 

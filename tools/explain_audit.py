@@ -1009,6 +1009,38 @@ POST_EXEC_AUDITS: dict[str, list[tuple[str, bool, str]]] = {
 }
 
 
+_HASHPART = re.compile(r"hashpartitioning\(")
+
+
+def _sorted_hash_keys(line: str) -> str:
+    """``line`` with the key expressions of each ``hashpartitioning(k…,
+    n)`` in sorted order (ids ignored; the partition count stays last).
+    Catalyst may emit a multi-key exchange's keys in an order that
+    depends on what the session built earlier, so the evidence sorts them;
+    the audits themselves read the raw plan."""
+    out, pos = [], 0
+    for m in _HASHPART.finditer(line):
+        if m.start() < pos:
+            continue
+        depth, args, start = 1, [], m.end()
+        i = start
+        while depth:
+            ch = line[i]
+            if ch in "([":
+                depth += 1
+            elif ch in ")]":
+                depth -= 1
+            elif ch == "," and depth == 1:
+                args.append(line[start:i].strip())
+                start = i + 1
+            i += 1
+        args.append(line[start : i - 1].strip())
+        keys = sorted(args[:-1], key=lambda a: re.sub(r"#\d+L?", "", a))
+        out += [line[pos : m.end()], ", ".join([*keys, args[-1]]), ")"]
+        pos = i
+    return "".join(out) + line[pos:]
+
+
 def fmt_plan(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -1035,7 +1067,7 @@ def main() -> None:
         tree_end = plan.find("\n\n(1)")
         excerpt = plan[: tree_end if tree_end > 0 else 2000].strip()
         details = [
-            "   " + line.strip()
+            "   " + _sorted_hash_keys(line.strip())
             for line in plan.splitlines()
             if any(
                 k in line
@@ -1058,7 +1090,7 @@ def main() -> None:
             if not ok:
                 failures.append((name, note))
         evidence = [
-            "   " + line.strip()
+            "   " + _sorted_hash_keys(line.strip())
             for line in plan.splitlines()
             if "Reused" in line or "QueryStage" in line
         ][:6]

@@ -92,7 +92,7 @@ def ops(spark, mult: int) -> dict[str, float]:
     li = spark.read.parquet(f"{BASE}/lineitem_{mult}x")
     out: dict[str, float] = {}
     out["exact_dedup"] = timed(lambda: exact_dedup(docs))
-    pairs = minhash_near_dup_pairs(docs, num_hashes=16, bands=4)
+    pairs = minhash_near_dup_pairs(docs, num_hashes=16)
     out["minhash_lsh_pairs"] = timed(pairs)
     out["simhash64_near_pairs"] = timed(
         lambda: simhash_near_pairs(
@@ -174,8 +174,7 @@ def ops(spark, mult: int) -> dict[str, float]:
     )
     out["mixture_sample"] = timed(
         lambda: temperature_mixture_sample(
-            srcd, "source", budget_frac=0.5, alpha=0.5,
-            key_cols=["doc_id"], salt="mix",
+            srcd, "source", key_cols=["doc_id"], salt="mix",
         )
     )
 
@@ -222,7 +221,7 @@ def ops(spark, mult: int) -> dict[str, float]:
         ex = exact_dedup(q3)
         return temperature_mixture_sample(
             ex.select("doc_id", "source"), "source",
-            budget_frac=0.5, alpha=0.5, key_cols=["doc_id"], salt="cur",
+            key_cols=["doc_id"], salt="cur",
         )
 
     out["curation_pipeline"] = timed(curation)
@@ -293,7 +292,7 @@ def ops(spark, mult: int) -> dict[str, float]:
     from pharmacodi_spark.text.selection import token_budget_report
 
     out["token_budget_report"] = timed(
-        lambda: token_budget_report(srctext, budget_frac=0.5)
+        lambda: token_budget_report(srctext)
     )
 
     # round-6 final: Gumbel resampling (zero-shuffle race), UniMax
@@ -347,7 +346,7 @@ def ops(spark, mult: int) -> dict[str, float]:
     )
     out["corpus_report"] = timed(lambda: corpus_report(langd2))
     out["phrase_detection"] = timed(
-        lambda: detect_phrases(docs, min_count=5, threshold_fp=100)
+        lambda: detect_phrases(docs, min_count=5)
     )
 
     # round-6 late family: winnowing fingerprints + overlap pairs (the
@@ -370,7 +369,7 @@ def ops(spark, mult: int) -> dict[str, float]:
     )
     fp = stage_barrier(winnow_fingerprints(docs, k=5, w=4), name="sc_wfp")
     out["winnow_overlap_pairs"] = timed(
-        lambda: winnow_overlap_pairs(fp, min_shared=2, max_cell_size=256)
+        lambda: winnow_overlap_pairs(fp, max_cell_size=256)
     )
     out["token_entropy"] = timed(lambda: token_entropy(docs))
     out["stupid_backoff"] = timed(
@@ -594,13 +593,13 @@ def nodup_control(spark, n_docs: int) -> dict[str, float]:
         docs = spark.read.parquet(f"{BASE}/ctrl_{m}x/documents.parquet")
         sfx = f"_ctrl_{m}x"
         out["minhash_pairs" + sfx] = timed(
-            lambda: minhash_near_dup_pairs(docs, num_hashes=16, bands=4)
+            lambda: minhash_near_dup_pairs(docs, num_hashes=16)
         )
         fp = stage_barrier(
             winnow_fingerprints(docs, k=5, w=4), name=f"ctrl_wfp_{m}x"
         )
         out["winnow_pairs" + sfx] = timed(
-            lambda: winnow_overlap_pairs(fp, min_shared=2, max_cell_size=256)
+            lambda: winnow_overlap_pairs(fp, max_cell_size=256)
         )
         out["gopher_repetition" + sfx] = timed(
             lambda: repetition_metrics(docs)
